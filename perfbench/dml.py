@@ -1,60 +1,61 @@
-"""dml_rw_dbapi: INSERT / UPDATE / DELETE and read-after-write SELECTs
-through `dbapi.connect(engine=...)`.
+"""The DML part of sql_read_wire's set-up: `app_kv` is created and written
+through `dbapi.connect(engine=...)`, and the wire then reads it back.
 
-Each episode starts from a freshly created table (PK, NOT NULL, one UNIQUE
-column) holding the same fixed preload, then runs a fixed-length mix whose
-keys the seed picks; a run is whole episodes. Per-op cost grows with the table's write
-history (snapshot-rewrite DML adds partitions), so fixing the episode length
-keeps runs comparable. Every `rowcount` and every read is checked against
-an in-memory model. Bypasses `server/` and `plans/`.
+The script has one fixed shape — a preload, single-row and multi-row
+INSERTs, UPDATE and DELETE by primary key, and read-after-write SELECTs,
+in one fixed order — and the seed picks its keys. Snapshot-rewrite DML
+adds partitions to the table, and every later read pays for them, so the
+fixed shape keeps runs comparable. Every `rowcount` and every read is
+checked against an in-memory model of the table; the wire's `app_kv`
+statements are checked against the same model. This part bypasses
+`server/` and `plans/`.
 """
 
 from __future__ import annotations
 
-import gc
 import random
 
 import common
 
-TABLE = "kv_bench"
-PRELOAD = 200           # rows, one multi-row INSERT, same in every episode
-# statements per episode, by class, in one fixed order: a read's cost grows
-# with the writes before it, so the seed picks keys but not positions.
-# Reads are the majority, so the median op is a read and the p90 a write.
-EPISODE = (("insert_one", 8), ("insert_multi", 2), ("update_pk", 4),
-           ("delete_pk", 2), ("select_pk", 24))
-COLUMNS = "id, name, code, qty, price"
+TABLE = "app_kv"
+PRELOAD = 20            # rows, one multi-row INSERT
+# statements after the preload, by class, in one fixed order: a read's cost
+# grows with the writes before it, so the seed picks keys but not positions
+SCRIPT = (("insert_one", 2), ("insert_multi", 1), ("update_pk", 1),
+          ("delete_pk", 1), ("select_pk", 3))
+COLUMNS = "k, v, code, qty"
+WIRE_COLUMNS = "k, v, qty"  # what the wire's point lookups select
 
 
 def _row(i: int) -> tuple:
-    return (i, f"name-{i}", f"code-{i:06d}", i % 97, round(i * 0.25, 2))
+    return (i, f"value-{i * 7919 % 1000:03d}", f"code-{i:06d}", i % 97)
 
 
 def _values(rows: list[tuple]) -> str:
-    return ", ".join(f"({i}, '{n}', '{c}', {q}, {p})"
-                     for i, n, c, q, p in rows)
+    return ", ".join(f"({k}, '{v}', '{c}', {q})" for k, v, c, q in rows)
 
 
-def episode_ops(rng: random.Random) -> list[tuple]:
-    """One episode's statements as (class, SQL text, params, expectation),
-    generated against a model of the table; every op succeeds."""
+def script(seed: int) -> tuple[list[tuple], dict[int, tuple]]:
+    """The DML statements as (class, SQL text, params, expectation), and
+    the model of the table after them; every statement succeeds."""
+    rng = random.Random(f"{TABLE}-{seed}")
     model = {r[0]: r for r in map(_row, range(PRELOAD))}
-    next_id = PRELOAD
+    next_k = PRELOAD
     written: list[int] = []
     ops = []
-    slots = [cls for cls, n in EPISODE for _ in range(n)]
+    slots = [cls for cls, n in SCRIPT for _ in range(n)]
     random.Random(0).shuffle(slots)
     for cls in slots:
         if cls == "insert_one":
-            row = _row(next_id)
-            next_id += 1
+            row = _row(next_k)
+            next_k += 1
             model[row[0]] = row
             written.append(row[0])
             ops.append((cls, f"INSERT INTO {TABLE} ({COLUMNS}) "
-                        "VALUES (?, ?, ?, ?, ?)", row, 1))
+                        "VALUES (?, ?, ?, ?)", row, 1))
         elif cls == "insert_multi":
-            rows = [_row(next_id + j) for j in range(3)]
-            next_id += 3
+            rows = [_row(next_k + j) for j in range(3)]
+            next_k += 3
             for row in rows:
                 model[row[0]] = row
                 written.append(row[0])
@@ -62,174 +63,106 @@ def episode_ops(rng: random.Random) -> list[tuple]:
                         + _values(rows), None, 3))
         elif cls == "update_pk":
             key = rng.choice(sorted(model))
-            i, n, c, q, p = model[key]
-            model[key] = (i, n, c, q + 1, round(p + 0.5, 2))
+            k, v, c, q = model[key]
+            model[key] = (k, v, c, q + 1)
             written.append(key)
-            ops.append((cls, f"UPDATE {TABLE} SET qty = qty + 1, "
-                        "price = price + 0.5 WHERE id = ?", (key,), 1))
+            ops.append((cls, f"UPDATE {TABLE} SET qty = qty + 1 WHERE k = ?",
+                        (key,), 1))
         elif cls == "delete_pk":
             key = rng.choice(sorted(model))
             del model[key]
-            ops.append((cls, f"DELETE FROM {TABLE} WHERE id = ?", (key,), 1))
+            ops.append((cls, f"DELETE FROM {TABLE} WHERE k = ?", (key,), 1))
         else:
-            # read-after-write: mostly rows this episode touched
+            # read-after-write: mostly rows this script touched
             pick = written if written and rng.random() < 0.8 else sorted(model)
             key = rng.choice(pick)
             want = [model[key]] if key in model else []
-            ops.append((cls, f"SELECT {COLUMNS} FROM {TABLE} WHERE id = ?",
+            ops.append((cls, f"SELECT {COLUMNS} FROM {TABLE} WHERE k = ?",
                         (key,), want))
-    return ops
+    return ops, model
 
 
-class Dml:
-    name = "dml_rw_dbapi"
-    SCALE = None  # writes its own table; reads no generated data
+def wire_row(model: dict[int, tuple], key: int) -> tuple:
+    k, v, _, q = model[key]
+    return (k, v, q)
 
-    def __init__(self, data_dir: str, seed: int, scale: float,
-                 tracer: common.Tracer):
+
+class AppKvWriter:
+    """Runs the script once through DB-API. `stmts` holds each statement's
+    class, kind and latency; with tracing on, `layer` holds the engine's
+    DML times, jobs per statement, the table's partitions and the DB-API
+    overhead of the reads."""
+
+    def __init__(self, seed: int, tracer: common.Tracer):
         self.tracer = tracer
-        self.rng = random.Random(seed)
-        self.ops: list[dict] = []
+        self.ops, self.model = script(seed)
+        self.stmts: list[dict] = []
         self.layer: dict[str, list[float]] = {}
-        self.excluded_s = 0.0
         self.failures: list[str] = []
-
-    def setup(self, spark) -> dict[str, float]:
-        from go_mysql_server_spark import dbapi
-        from go_mysql_server_spark.engine import Engine
-
-        self.spark = spark
-        self.counter = common.JobCounter(spark)
-        t0 = common.now()
-        self.engine = Engine(spark)
-        init_ms = common.ms(t0, common.now())
-        self.cursor = dbapi.connect(engine=self.engine).cursor()
-        self._fresh_table()
-        return {"engine.init_ms": init_ms}
-
-    def teardown(self) -> None:
-        pass
-
-    def _fresh_table(self) -> None:
-        cur = self.cursor
-        cur.execute(f"DROP TABLE IF EXISTS {TABLE}")
-        cur.execute(f"CREATE TABLE {TABLE} (id BIGINT PRIMARY KEY, "
-                    "name VARCHAR(32) NOT NULL, code VARCHAR(16) UNIQUE, "
-                    "qty BIGINT NOT NULL, price DOUBLE)")
-        cur.execute(f"INSERT INTO {TABLE} ({COLUMNS}) VALUES "
-                    + _values([_row(i) for i in range(PRELOAD)]))
 
     def _add(self, key: str, value: float) -> None:
         self.layer.setdefault(key, []).append(value)
 
-    def _execute(self, op: int, cls: str, sql: str, params) -> float:
+    def write(self, engine, counter: common.JobCounter) -> None:
+        from go_mysql_server_spark import dbapi
+
+        self.engine, self.counter = engine, counter
+        cur = self.cursor = dbapi.connect(engine=engine).cursor()
+        cur.execute(f"CREATE TABLE {TABLE} (k BIGINT PRIMARY KEY, "
+                    "v VARCHAR(32) NOT NULL, code VARCHAR(16) UNIQUE, "
+                    "qty BIGINT NOT NULL)")
+        cur.execute(f"INSERT INTO {TABLE} ({COLUMNS}) VALUES "
+                    + _values([_row(i) for i in range(PRELOAD)]))
+        for n, (cls, sql, params, want) in enumerate(self.ops):
+            latency = self._execute(n, cls, sql, params)
+            if cls == "select_pk":
+                got = [tuple(r) for r in cur.fetchall()]
+            else:
+                got = cur.rowcount
+            if got != want:
+                self.failures.append(f"{cls} {sql!r} {params}: got {got!r}, "
+                                     f"want {want!r}")
+            self.stmts.append({"cls": cls, "ms": latency,
+                               "kind": "read" if cls == "select_pk"
+                               else "write"})
+        if self.tracer.enabled:
+            parts = engine.query(f"SELECT * FROM {TABLE}")
+            self._add("engine.table_partitions",
+                      parts.rdd.getNumPartitions())
+
+    def _execute(self, n: int, cls: str, sql: str, params) -> float:
+        op = f"{TABLE}-{n}"
         if not self.tracer.enabled:
             t0 = common.now()
             self.cursor.execute(sql, params)
             return common.ms(t0, common.now())
         tr, jc = self.tracer, self.counter
         group = jc.new_group("dml")
-        t0 = common.now()
         with tr.span("dbapi.execute", op) as sp:
             self.cursor.execute(sql, params)
-        t1 = common.now()
         if cls == "select_pk":
             self._traced_read(op, sql, params, sp.ms)
         else:
-            verb = cls.split("_")[0]
-            self._add(f"engine.{verb}_ms", sp.ms)
+            self._add(f"engine.{cls.split('_')[0]}_ms", sp.ms)
             self._add("engine.dml_jobs_per_stmt", len(jc.jobs(group)))
-        return common.ms(t0, t1)
+        return sp.ms
 
-    def _traced_read(self, op: int, sql: str, params, execute_ms: float):
-        """Re-run a read on the engine directly, split by layer."""
-        from go_mysql_server_spark.dialect.transpiler import transpile_select
-
-        tr, jc = self.tracer, self.counter
+    def _traced_read(self, op: str, sql: str, params, execute_ms: float):
+        """Re-run a read on the engine directly: what DB-API adds to it."""
         bound = sql.replace("?", str(params[0]))  # the key is an int
-        with tr.span("dialect.transpile", op) as sp:
-            spark_sql = transpile_select(bound)
-        self._add("dialect.transpile_ms", sp.ms)
-        try:
-            self.spark.sql(spark_sql)
-            self._add("engine.retry_ratio", 0)
-        except Exception:  # noqa: BLE001 — analysis failure means a retry
-            self._add("engine.retry_ratio", 1)
-        with tr.span("engine.query", op) as sp:
+        with self.tracer.span("engine.query", op) as sp:
             df = self.engine.query(bound)
         query_ms = sp.ms
-        self._add("engine.query_ms", query_ms)
-        with tr.span("exec.plan", op) as sp:
-            common.executed_plan(df)
-        self._add("exec.plan_ms", sp.ms)
-        with tr.span("exec.run", op) as sp:
-            group = jc.new_group("exec")
-            common.noop_run(df)
-        run_ms = sp.ms
-        self._add("exec.run_ms", run_ms)
-        for k, v in jc.stats(jc.jobs(group)).items():
-            self._add(f"exec.{k}", v)
-        with tr.span("engine.collect", op) as sp:
-            rows = df.collect()
-        self._add("engine.collect_ms", sp.ms)
-        self._add("sink.collect_ms", sp.ms - run_ms)
-        self._add("sink.rows", len(rows))
+        with self.tracer.span("engine.collect", op) as sp:
+            df.collect()
         self._add("dbapi.overhead_ms", execute_ms - query_ms - sp.ms)
 
-    def _episode(self) -> None:
-        for cls, sql, params, want in episode_ops(self.rng):
-            op = len(self.ops)
-            t0 = common.now()
-            with self.tracer.span("op", op):
-                latency = self._execute(op, cls, sql, params)
-            wall_ms = common.ms(t0, common.now())
-            ok = True
-            if cls == "select_pk":
-                got = [tuple(r) for r in self.cursor.fetchall()]
-                ok = got == want
-            elif self.cursor.rowcount != want:
-                ok = False
-                got = self.cursor.rowcount
-            if not ok:
-                self.failures.append(f"{cls} {sql!r} {params}: got {got!r},"
-                                     f" want {want!r}")
-            self.ops.append({"cls": cls, "ms": latency, "ok": ok,
-                             "wall_ms": wall_ms,
-                             "kind": "read" if cls == "select_pk"
-                             else "write"})
-
-    def run(self, seconds: float) -> None:
-        """Whole episodes until `seconds` of op time."""
-        busy = 0.0
-        while True:
-            n = len(self.ops)
-            self._episode()
-            busy += sum(o["ms"] for o in self.ops[n:]) / 1000.0
-            t0 = common.now()
-            if self.tracer.enabled:
-                parts = self.engine.query(f"SELECT * FROM {TABLE}")
-                self._add("engine.table_partitions",
-                          parts.rdd.getNumPartitions())
-            if busy >= seconds:
-                self.excluded_s += common.now() - t0
-                return
-            self._fresh_table()
-            gc.collect()  # frees unpersisted checkpoint blocks
-            self.excluded_s += common.now() - t0
-
-    def check(self) -> list[str]:
-        return self.failures
-
     def extra_metrics(self) -> dict[str, tuple[float, str, int]]:
-        writes = [o["ms"] for o in self.ops if o["kind"] == "write"]
-        reads = [o["ms"] for o in self.ops if o["kind"] == "read"]
-        out = {}
-        if writes:
-            out["write_p50_ms"] = (common.percentile(writes, 50), "ms",
-                                   len(writes))
-            out["write_p90_ms"] = (common.percentile(writes, 90), "ms",
-                                   len(writes))
-        if reads:
-            out["read_p50_ms"] = (common.percentile(reads, 50), "ms",
-                                  len(reads))
-        return out
+        writes = [s["ms"] for s in self.stmts if s["kind"] == "write"]
+        reads = [s["ms"] for s in self.stmts if s["kind"] == "read"]
+        return {"write_p50_ms": (common.percentile(writes, 50), "ms",
+                                 len(writes)),
+                "write_p90_ms": (common.percentile(writes, 90), "ms",
+                                 len(writes)),
+                "read_p50_ms": (common.percentile(reads, 50), "ms",
+                                len(reads))}

@@ -5,10 +5,12 @@ Loads `plans/`, `operators/` and Spark execution; never touches
 `dialect/`, the SELECT path of `engine.py`, `dbapi` or `server`. The seed
 does not change this workload: its inputs are the fixed tables.
 
-A run is whole passes in a fresh JVM, so its first pass is cold: on 4
-cores a cold sf0.1 pass takes ~43 s and a warm one ~27 s, more than the
-run budget allows, hence the sf0.001 tables. At this size the time is
-the per-query fixed cost (jobs, code generation, plan construction).
+A run is one whole pass in a fresh JVM, however long `--seconds` is:
+the pass is cold, and a second, warm pass would mix two distributions in
+the percentiles, in proportions set by how many passes fit. A cold pass
+at sf0.001 takes 20-40 s on 4 cores; at sf0.1 a cold pass takes ~43 s and
+a warm one ~27 s, more than the run budget allows. At this size the time
+is the per-query fixed cost (jobs, code generation, plan construction).
 
 Traced ops split each query into `plans.build` (the builder call, with the
 Spark jobs it launches counted), `exec.plan` (forcing the physical plan),
@@ -125,7 +127,7 @@ class Headline:
         self.results.append((op, name, df.columns, rows))
 
     def run(self, seconds: float) -> None:
-        """Whole passes over the 23 queries until `seconds` of op time.
+        """One pass over the 23 queries; `seconds` does not change it.
 
         A traced run first makes one unrecorded untraced pass: on a cold
         pass the noop run would pay code generation that the collect then
@@ -138,16 +140,11 @@ class Headline:
             self.tracer.enabled = True
             del self.ops[:], self.results[:]
             self.excluded_s += common.now() - t0
-        busy = 0.0
-        while True:
-            for i in range(len(self.names)):
-                self._op(i)
-                busy += self.ops[-1]["ms"] / 1000.0
-                t0 = common.now()
-                gc.collect()  # frees unpersisted checkpoint blocks
-                self.excluded_s += common.now() - t0
-            if busy >= seconds:
-                return
+        for i in range(len(self.names)):
+            self._op(i)
+            t0 = common.now()
+            gc.collect()  # frees unpersisted checkpoint blocks
+            self.excluded_s += common.now() - t0
 
     def check(self) -> list[str]:
         with open(EXPECTED) as fh:

@@ -7,8 +7,9 @@
 Run from the root of a checkout. Workloads (see each module's docstring):
 
 - analytic_headline (headline.py): bench.py's 23 registry builders;
-- sql_read_wire (wire.py): seeded short SELECTs over the MySQL wire;
-- dml_rw_dbapi (dml.py): seeded INSERT/UPDATE/DELETE/SELECT via DB-API.
+- sql_read_wire (wire.py): seeded short SELECTs over the MySQL wire, on
+  tables that include one its set-up writes with seeded INSERT/UPDATE/
+  DELETE/SELECT statements through DB-API (dml.py).
 
 Tables are generated deterministically into `.perfbench/` (datagen.py);
 the seed only chooses SQL text and parameters. Spark runs as
@@ -19,8 +20,8 @@ The last stdout line is one JSON object with `correct`, `attempted`,
 per-layer metrics with `--trace 1`. Lines above it, prefixed `#`, report
 every metric with its unit and sample count, the canary, and with
 `--trace 1` the full per-layer table, each layer's self time and the
-tracing overhead. `--workload all` runs the three in turn and prefixes
-metric names with the workload.
+tracing overhead. `--workload all` runs each workload in turn and
+prefixes metric names with the workload.
 """
 
 from __future__ import annotations
@@ -37,25 +38,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(
 
 import common  # noqa: E402
 import datagen  # noqa: E402
-from dml import Dml  # noqa: E402
 from headline import Headline  # noqa: E402
 from wire import Wire  # noqa: E402
 
-WORKLOADS = {w.name: w for w in (Headline, Wire, Dml)}
+WORKLOADS = {w.name: w for w in (Headline, Wire)}
 
-# End-to-end metrics, printed with --trace 0 (name, unit).
+# End-to-end metrics of the --trace 0 JSON line (name, unit). The timing
+# percentile is the median: a run of analytic_headline has 23 ops, so the
+# median is the highest percentile with ten samples beyond it; a p90 there
+# rests on the three slowest queries and swings with their order.
+# latency_p90_ms is still printed, with its sample count, on the `#` lines.
 END_TO_END = (("setup_s", "s"), ("ops_per_s", "1/s"),
-              ("latency_p50_ms", "ms"), ("latency_p90_ms", "ms"),
-              ("median_sum_s", "s"))
+              ("latency_p50_ms", "ms"), ("median_sum_s", "s"))
 
 # Per-layer metrics: (name, unit, the end-to-end metric and workload it
 # should move). Rows marked `True` are measured on every workload and
 # printed in the --trace 1 JSON line; the rest belong to one or two
 # workloads and are reported on the `#` lines only.
 LAYERS = (
-    ("session.build_ms", "ms", "setup_s on all three", True),
+    ("session.build_ms", "ms", "setup_s on both", True),
     ("session.canary_ms", "ms", "none: health gate", True),
-    ("engine.init_ms", "ms", "setup_s on sql_read_wire, dml_rw_dbapi", False),
+    ("engine.init_ms", "ms", "setup_s on sql_read_wire", False),
     ("plans.build_ms", "ms",
      "median_sum_s, latency_p90_ms on analytic_headline", False),
     ("plans.build_jobs", "count",
@@ -71,21 +74,17 @@ LAYERS = (
     ("sink.collect_ms", "ms", "latency_p50_ms on analytic_headline", True),
     ("sink.rows", "count", "latency_p50_ms on analytic_headline", True),
     ("dialect.transpile_ms", "ms", "latency_p50_ms on sql_read_wire", False),
-    ("engine.query_ms", "ms",
-     "latency_p50/p90_ms on sql_read_wire; read_p50_ms on dml_rw_dbapi",
-     False),
-    ("engine.collect_ms", "ms",
-     "latency_p50/p90_ms on sql_read_wire; read_p50_ms on dml_rw_dbapi",
+    ("engine.query_ms", "ms", "latency_p50/p90_ms on sql_read_wire", False),
+    ("engine.collect_ms", "ms", "latency_p50/p90_ms on sql_read_wire",
      False),
     ("engine.retry_ratio", "ratio", "latency_p90_ms on sql_read_wire", True),
-    ("engine.insert_ms", "ms", "write_p50/p90_ms on dml_rw_dbapi", False),
-    ("engine.update_ms", "ms", "write_p50/p90_ms on dml_rw_dbapi", False),
-    ("engine.delete_ms", "ms", "write_p50/p90_ms on dml_rw_dbapi", False),
-    ("engine.dml_jobs_per_stmt", "count", "write_p50/p90_ms on dml_rw_dbapi",
-     True),
+    ("engine.insert_ms", "ms", "setup_s on sql_read_wire", False),
+    ("engine.update_ms", "ms", "setup_s on sql_read_wire", False),
+    ("engine.delete_ms", "ms", "setup_s on sql_read_wire", False),
+    ("engine.dml_jobs_per_stmt", "count", "setup_s on sql_read_wire", True),
     ("engine.table_partitions", "count",
-     "read_p50_ms, write_p90_ms on dml_rw_dbapi", True),
-    ("dbapi.overhead_ms", "ms", "read_p50_ms on dml_rw_dbapi", False),
+     "latency_p50/p90_ms on sql_read_wire, through app_kv lookups", True),
+    ("dbapi.overhead_ms", "ms", "setup_s on sql_read_wire", False),
     ("server.roundtrip_ms", "ms", "latency_p50/p90_ms on sql_read_wire",
      False),
     ("server.overhead_ms", "ms", "latency_p50/p90_ms on sql_read_wire",
@@ -281,7 +280,8 @@ def main() -> None:
     else:
         r = run_one(args)
         print_report(r)
-        result = {"correct": r["failed"] == 0, "attempted": r["attempted"],
+        result = {"correct": r["failed"] == 0 and not r["failures"],
+                  "attempted": r["attempted"],
                   "failed": r["failed"], "metrics": r["metrics"]}
     print(json.dumps(result), flush=True)
 

@@ -25,6 +25,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1200,15 +1201,47 @@ class Engine:
     def _register(self, ts: TableState, record_version: bool = True) -> None:
         """(Re)bind the table's current snapshot as a temp view and record
         the snapshot in the version history (AS OF support — snapshots are
-        already immutable DataFrames, so 'history' costs one list append)."""
+        already immutable DataFrames, so 'history' costs one list append).
+        A checkpointed snapshot is compacted first (`_compact`)."""
         assert ts.df is not None
+        ts.df = self._compact(ts.df)
         ts.df.createOrReplaceTempView(ts.name)
         if record_version:
             ts.history.append(ts.df)
             ts.history_ts.append(__import__("time").time())
 
+    def _compact(self, df: DataFrame) -> DataFrame:
+        """Narrow-coalesce an eagerly checkpointed snapshot to the
+        partition count a file scan of the same bytes would get
+        (FilePartition.maxSplitBytes: one split per openCostInBytes, at
+        most defaultParallelism). Snapshot-rewriting DML adds partitions
+        with every statement, and every later read pays a task — and a
+        streamed wire result a job — per partition. Coalescing without a
+        shuffle runs no job. The bytes come from the checkpoint's
+        materialized blocks: a LogicalRDD's plan statistics are the
+        unknown-size default. Anything else is returned unchanged."""
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return df
+        rdd = plan.rdd()
+        n = rdd.getNumPartitions()
+        if n <= 1:
+            return df
+        sc = self.spark.sparkContext
+        try:
+            info = sc._jsc.sc().statusStore().rdd(rdd.id())
+        except Py4JJavaError:  # not persisted, or no block reported yet
+            return df
+        if info.numCachedPartitions() < n:
+            return df  # not every block reported yet: keep as is
+        size = info.memoryUsed() + info.diskUsed()
+        open_cost = self.spark._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+        target = min(n, sc.defaultParallelism, max(1, -(-size // open_cost)))
+        return df.coalesce(target) if target < n else df
+
     def _empty_df(self, ts: TableState) -> DataFrame:
-        return self.spark.createDataFrame([], ts.schema)
+        return self._empty_df_for(ts.schema)
 
     # ---- variable substitution --------------------------------------------
 
@@ -4310,7 +4343,13 @@ class Engine:
                 if data else self._empty_df_for(schema))
 
     def _empty_df_for(self, schema) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        """An empty local relation: it has no partitions, so reading it
+        runs no Spark job (`createDataFrame([])` parallelizes an empty
+        list into defaultParallelism empty partitions)."""
+        jss = self.spark._jsparkSession
+        return DataFrame(jss.createDataFrame(
+            self.spark._jvm.java.util.ArrayList(),
+            jss.parseDataType(schema.json())), self.spark)
 
     def _validate(self, ts: TableState, df: DataFrame,
                   lenient: bool = False,

@@ -54,6 +54,7 @@ class Client:
     def __init__(self, host: str, port: int, user: str = "root",
                  database: str = "", timeout: float = 30.0):
         self.sock = socket.create_connection((host, port), timeout)
+        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         greeting = p.read_packet(self.sock)
         if greeting is None or greeting[0] != 0x0A:
             raise MySQLClientError(2013, "HY000", "bad greeting")

@@ -137,17 +137,44 @@ def _read_exact(sock, n: int) -> bytes | None:
     return out
 
 
-def write_packet(sock, payload: bytes, seq: int) -> int:
-    """Write payload as framed packet(s); returns the next sequence id."""
+def frame(payload: bytes, seq: int) -> tuple[bytes, int]:
+    """Payload framed as packet(s), split into 16 MB continuations;
+    returns the framed bytes and the next sequence id."""
+    out = bytearray()
     off = 0
     while True:
         chunk = payload[off:off + 0xFFFFFF]
-        sock.sendall(len(chunk).to_bytes(3, "little")
-                     + bytes([seq & 0xFF]) + chunk)
+        out += len(chunk).to_bytes(3, "little") + bytes([seq & 0xFF]) + chunk
         seq += 1
         off += len(chunk)
         if len(chunk) < 0xFFFFFF:
-            return seq
+            return bytes(out), seq
+
+
+def write_packet(sock, payload: bytes, seq: int) -> int:
+    """Write payload as framed packet(s); returns the next sequence id."""
+    data, seq = frame(payload, seq)
+    sock.sendall(data)
+    return seq
+
+
+SEND_BYTES = 64 * 1024
+
+
+def write_packets(sock, payloads, seq: int) -> int:
+    """Frame a stream of payloads and send them with one `sendall` per
+    at most SEND_BYTES (a larger packet goes alone) plus one at the end,
+    instead of one per packet; returns the next sequence id."""
+    buf = bytearray()
+    for payload in payloads:
+        data, seq = frame(payload, seq)
+        if buf and len(buf) + len(data) > SEND_BYTES:
+            sock.sendall(buf)
+            buf.clear()
+        buf += data
+    if buf:
+        sock.sendall(buf)
+    return seq
 
 
 def ok_packet(affected: int = 0, last_insert_id: int = 0,

@@ -19,11 +19,14 @@ swapped into the engine under the statement lock — the reference builds
 a sql.Session per connection the same way (server/context.go:50
 SessionManager, :74 NewSessionManager).
 
-Resultsets spool to the socket through `DataFrame.toLocalIterator()`
-(partition-at-a-time), never a full driver materialization — the
-analogue of the reference's pull-based RowIter → packet writer
-(server/handler.go:407 doQuery result callback), and the property that
-keeps `SELECT *` over a large table from becoming a driver OOM.
+Resultsets reach the socket holding at most one result partition on the
+driver at a time — the analogue of the reference's pull-based RowIter →
+packet writer (server/handler.go:407 doQuery result callback), and the
+property that keeps `SELECT *` over a large table from becoming a driver
+OOM. The fetch strategy follows the partition count of the statement's
+final RDD, observed at run time: a result of at most one partition is
+fetched with one `collect()` job; a larger one streams partition by
+partition through `DataFrame.toLocalIterator()`.
 """
 
 from __future__ import annotations
@@ -37,6 +40,22 @@ import threading
 
 from ..engine import Engine, OkResult, SqlError
 from . import protocol as p
+
+
+def _result_rows(df):
+    """The rows of a SELECT's DataFrame, holding at most one result
+    partition on the driver at a time.
+
+    The partition count comes from the statement's own QueryExecution:
+    under AQE, `toRdd` runs the shuffle stages once and the action that
+    follows reuses them. A result of at most one partition is fetched
+    with `collect()` — one job, the same Row objects; a larger one
+    streams with `toLocalIterator()`, one job per partition (Shark's
+    partial DAG execution: choose from what run time shows, not from a
+    constant)."""
+    if df._jdf.queryExecution().toRdd().getNumPartitions() <= 1:
+        return df.collect()
+    return df.toLocalIterator()
 
 
 class _ConnSession:
@@ -126,6 +145,7 @@ class MySQLServer:
 
     def _serve_connection(self, sock: socket.socket) -> None:
         sock.settimeout(300)
+        sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         with self._lock:
             conn_id = self._next_conn_id
             self._next_conn_id += 1
@@ -297,11 +317,14 @@ class MySQLServer:
                 return  # an ERR terminates the chain, as in MySQL
 
     def _run_and_reply(self, sock, sess: _ConnSession, sql: str,
-                       status_extra: int = 0) -> bool:
-        """Execute and write one resultset / OK / ERR. Returns False on
+                       status_extra: int = 0, binary: bool = False) -> bool:
+        """Execute and write one resultset / OK / ERR, as a text
+        resultset or, for COM_STMT_EXECUTE, a binary one. Returns False on
         error (for multi-statement chain termination)."""
         try:
             res = self._run(sess, sql)
+            if not isinstance(res, OkResult):
+                rows = _result_rows(res)
         except SqlError as exc:
             p.write_packet(sock, p.err_packet(
                 exc.errno, exc.sqlstate, str(exc)), 1)
@@ -317,18 +340,27 @@ class MySQLServer:
                 status=status, info=res.info), 1)
             return True
         schema = res.schema
-        seq = p.write_packet(sock, p.lenenc_int(len(schema.fields)), 1)
-        for f in schema.fields:
-            seq = p.write_packet(sock, p.column_definition(
-                f.name, f.dataType, f.nullable), seq)
-        seq = p.write_packet(sock, p.eof_packet(), seq)
-        # partition-at-a-time spool: the full resultset never
-        # materializes on the driver (reference streams row-by-row
-        # through the RowIter callback, server/handler.go:407)
-        for r in res.toLocalIterator():
-            seq = p.write_packet(sock, p.text_row(tuple(r)), seq)
-        p.write_packet(sock, p.eof_packet(status=status), seq)
+        encode_row = ((lambda cells: p.binary_row(cells, schema)) if binary
+                      else p.text_row)
+        self._write_resultset(sock, schema, rows, encode_row,
+                              p.eof_packet(status=status))
         return True
+
+    @staticmethod
+    def _write_resultset(sock, schema, rows, encode_row,
+                         eof: bytes) -> None:
+        """Column count, column definitions, EOF, one packet per row,
+        then `eof` — buffered into a few `sendall` calls."""
+        def packets():
+            yield p.lenenc_int(len(schema.fields))
+            for f in schema.fields:
+                yield p.column_definition(f.name, f.dataType, f.nullable)
+            yield p.eof_packet()
+            for r in rows:
+                yield encode_row(tuple(r))
+            yield eof
+
+        p.write_packets(sock, packets(), 1)
 
     # -- binary prepared-statement protocol
     # (reference server/handler.go:126 ComPrepare, :261 ComStmtExecute)
@@ -389,30 +421,7 @@ class MySQLServer:
                 v, pos = p.read_binary_value(body, pos, tcode, unsigned)
                 params.append(v)
         bound = self._bind_params(sql, params) if nparams else sql
-        try:
-            res = self._run(sess, bound)
-        except SqlError as exc:
-            p.write_packet(sock, p.err_packet(
-                exc.errno, exc.sqlstate, str(exc)), 1)
-            return
-        except Exception as exc:  # noqa: BLE001
-            p.write_packet(sock, p.err_packet(
-                1105, "HY000", str(exc)[:500]), 1)
-            return
-        if isinstance(res, OkResult):
-            p.write_packet(sock, p.ok_packet(
-                res.rows_affected, res.last_insert_id or 0,
-                info=res.info), 1)
-            return
-        schema = res.schema
-        seq = p.write_packet(sock, p.lenenc_int(len(schema.fields)), 1)
-        for f in schema.fields:
-            seq = p.write_packet(sock, p.column_definition(
-                f.name, f.dataType, f.nullable), seq)
-        seq = p.write_packet(sock, p.eof_packet(), seq)
-        for r in res.toLocalIterator():
-            seq = p.write_packet(sock, p.binary_row(tuple(r), schema), seq)
-        p.write_packet(sock, p.eof_packet(), seq)
+        self._run_and_reply(sock, sess, bound, binary=True)
 
     @staticmethod
     def _bind_params(sql: str, params: list) -> str:

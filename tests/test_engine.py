@@ -1572,3 +1572,89 @@ def test_ja_collation_order_and_equality(eng):
         "SELECT id FROM jat WHERE s COLLATE utf8mb4_ja_0900_as_cs = "
         "'カラス' COLLATE utf8mb4_ja_0900_as_cs ORDER BY id")) == [
         (2,), (3,)]
+
+
+# -- snapshot compaction: every DML snapshot is narrow-coalesced to the
+# partition count a file scan of its bytes would get
+
+def _partitions(df):
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def test_empty_table_reads_without_partitions(spark):
+    """A freshly created table is an empty local relation: reading it
+    runs at most one task, not one per default-parallelism slice, and
+    the declared nullability survives."""
+    e = Engine(spark)
+    e.query("CREATE TABLE fresh (k BIGINT PRIMARY KEY, "
+            "v VARCHAR(8) NOT NULL, n BIGINT)")
+    df = e.query("SELECT * FROM fresh")
+    assert _partitions(df) <= 1
+    assert rows(df) == []
+    assert [f.nullable for f in df.schema.fields] == [False, False, True]
+    e.query("INSERT INTO fresh VALUES (1, 'a', NULL)")
+    assert rows(e.query("SELECT * FROM fresh")) == [(1, "a", None)]
+
+
+def test_dml_snapshots_compact_to_one_partition(spark):
+    """Each single-row INSERT adds a partition to the checkpointed
+    snapshot; a small table is compacted back to one, keeping the row
+    order of an unordered scan and every AS OF version."""
+    e = Engine(spark)
+    e.query("CREATE TABLE cmp (k BIGINT PRIMARY KEY, v VARCHAR(16) NOT NULL)")
+    for k in range(30):
+        e.query(f"INSERT INTO cmp VALUES ({k}, 'v{k}')")
+    e.query("UPDATE cmp SET v = 'updated' WHERE k = 5")
+    e.query("DELETE FROM cmp WHERE k = 7")
+    df = e.query("SELECT * FROM cmp")
+    assert _partitions(df) == 1
+    # the order the uncompacted snapshots scanned in: insertion order,
+    # the UPDATE in place
+    assert rows(df) == [(k, "updated" if k == 5 else f"v{k}")
+                        for k in range(30) if k != 7]
+    # version 0 is the CREATE, n the n-th INSERT, 31 the UPDATE, 32 the
+    # DELETE
+    for version in range(31):
+        assert rows(e.query(
+            f"SELECT COUNT(*) AS c FROM cmp AS OF {version}")) == [
+            (version,)]
+    assert rows(e.query("SELECT v FROM cmp AS OF 30 WHERE k = 5")) == [
+        ("v5",)]
+    assert rows(e.query("SELECT v FROM cmp AS OF 31 WHERE k = 5")) == [
+        ("updated",)]
+    assert rows(e.query("SELECT COUNT(*) AS c FROM cmp AS OF 32")) == [
+        (29,)]
+
+
+def test_large_insert_select_keeps_parallel_partitions(spark, monkeypatch):
+    """Compaction follows the bytes: after an INSERT ... SELECT of sf0.1
+    lineitem (600k rows) the table keeps min(defaultParallelism,
+    checkpoint partitions) partitions, so it still scans in parallel."""
+    import os
+
+    from tests.conftest import SF_DIR
+
+    seen = []
+    compact = Engine._compact
+
+    def spy(self, df):
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            seen.append(plan.rdd().getNumPartitions())
+        return compact(self, df)
+
+    monkeypatch.setattr(Engine, "_compact", spy)
+    spark.read.parquet(os.path.join(
+        os.path.dirname(SF_DIR), "sf0.1", "lineitem.parquet")
+    ).createOrReplaceTempView("lineitem_sf01")
+    e = Engine(spark)
+    e.query("CREATE TABLE li (l_orderkey BIGINT, l_partkey BIGINT, "
+            "l_quantity DOUBLE, l_returnflag VARCHAR(1))")
+    e.query("INSERT INTO li SELECT l_orderkey, l_partkey, l_quantity, "
+            "l_returnflag FROM lineitem_sf01")
+    df = e.query("SELECT * FROM li")
+    assert seen and seen[-1] > 1
+    assert _partitions(df) == min(spark.sparkContext.defaultParallelism,
+                                  seen[-1])
+    assert rows(e.query("SELECT COUNT(*) AS c FROM li")) == [(600000,)]
+    e.query("DROP TABLE li")

@@ -147,9 +147,10 @@ def test_session_isolation_between_connections(srv):
 
 
 def test_large_resultset_streams_without_collect(srv, cli, monkeypatch):
-    """The wire front must spool resultsets partition-at-a-time
-    (toLocalIterator), never a full driver collect() — the reference
-    streams rows through a pull-based RowIter (server/handler.go:407)."""
+    """A result of more than one partition must stream partition-at-a-time
+    (toLocalIterator), never through a full driver collect(): at most one
+    result partition is held on the driver — the reference streams rows
+    through a pull-based RowIter (server/handler.go:407)."""
     from pyspark.sql import DataFrame
 
     def _boom(self):
@@ -161,6 +162,48 @@ def test_large_resultset_streams_without_collect(srv, cli, monkeypatch):
     assert len(rs.rows) == 120000
     assert rs.rows[0] == ("0", "0")
     assert rs.rows[-1] == ("119999", "239998")
+
+
+@pytest.mark.parametrize("sql, want_rows", [
+    ("SELECT i, s FROM wt WHERE i = 1", [("1", "one")]),
+    # a shuffle that AQE coalesces to one partition: the partition-count
+    # probe runs its map stage, and collect() must reuse it
+    ("SELECT x.id % 2 AS k, COUNT(*) AS n FROM RANGE(100) x "
+     "GROUP BY x.id % 2", [("0", "50"), ("1", "50")]),
+])
+def test_one_partition_result_runs_as_many_jobs_as_collect(
+        srv, cli, monkeypatch, request, sql, want_rows):
+    """A one-partition wire result is fetched with the jobs of one
+    collect(), not through a streamed iterator. Jobs are counted by job
+    group: the server thread runs without one, the reference collect()
+    inside its own."""
+    from pyspark.sql import DataFrame
+
+    eng = srv.engine
+    sc = eng.spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    assert eng.query(sql)._jdf.queryExecution().toRdd() \
+        .getNumPartitions() == 1
+    group = request.node.name
+    sc.setJobGroup(group, group)
+    try:
+        eng.query(sql).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    drain()
+    want = len(tracker.getJobIdsForGroup(group))
+
+    def _boom(self, *args, **kwargs):
+        raise AssertionError("one-partition result streamed")
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", _boom)
+    before = set(tracker.getJobIdsForGroup(None))
+    assert sorted(cli.query(sql).rows) == want_rows
+    drain()
+    got = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert want >= 1
+    assert got == want
 
 
 def test_multi_statement_com_query(cli):

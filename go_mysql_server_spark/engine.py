@@ -25,7 +25,6 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1219,7 +1218,12 @@ class Engine:
         streamed wire result a job — per partition. Coalescing without a
         shuffle runs no job. The bytes come from the checkpoint's
         materialized blocks: a LogicalRDD's plan statistics are the
-        unknown-size default. Anything else is returned unchanged."""
+        unknown-size default. They are read from the block manager
+        master, which every task tells about its block before it ends,
+        so the checkpoint job has reported them all by the time it
+        returns; the status store hears of blocks later, through the
+        asynchronous listener bus, and would make the outcome depend on
+        timing. Anything else is returned unchanged."""
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
             return df
@@ -1228,16 +1232,22 @@ class Engine:
         if n <= 1:
             return df
         sc = self.spark.sparkContext
-        try:
-            info = sc._jsc.sc().statusStore().rdd(rdd.id())
-        except Py4JJavaError:  # not persisted, or no block reported yet
-            return df
-        if info.numCachedPartitions() < n:
-            return df  # not every block reported yet: keep as is
-        size = info.memoryUsed() + info.diskUsed()
+        bm = sc._jsc.sc().env().blockManager()
+        master, host = bm.master(), bm.blockManagerId().host()
+        block_id = self.spark._jvm.org.apache.spark.storage.RDDBlockId
         open_cost = self.spark._jsparkSession.sessionState().conf() \
             .filesOpenCostInBytes()
-        target = min(n, sc.defaultParallelism, max(1, -(-size // open_cost)))
+        cap = min(n, sc.defaultParallelism)
+        size = 0
+        for i in range(n):
+            found = master.getLocationsAndStatus(block_id(rdd.id(), i), host)
+            if found.isEmpty():
+                return df  # not persisted, or a block was dropped
+            status = found.get().status()
+            size += status.memSize() + status.diskSize()
+            if size >= cap * open_cost:
+                break  # the target is `cap` whatever the remaining blocks
+        target = min(cap, max(1, -(-size // open_cost)))
         return df.coalesce(target) if target < n else df
 
     def _empty_df(self, ts: TableState) -> DataFrame:

@@ -60,10 +60,6 @@ def ci_key_sql(expr: str) -> str:
     return f"translate(lower({expr}), '{ACCENT_SRC}', '{ACCENT_DST}')"
 
 
-def ci_eq(a, b) -> Column:
-    return ci_key(a) == ci_key(b)
-
-
 def register_sql(spark: SparkSession) -> None:
     """Expose the fold to SQL text as mysql_ci_key(s) — a Spark 4 SQL UDF,
     inlined by Catalyst (no Python round-trip)."""

@@ -270,11 +270,6 @@ def full_weights() -> dict:
     return _FULL
 
 
-def zh_weight_of(ch: str) -> int:
-    w = full_weights().get(ch)
-    return w if w is not None else ord(ch) + FALLBACK_OFFSET
-
-
 def register_wide_udf(spark: SparkSession) -> None:
     """mysql_zh_key_wide(s) → ARRAY<INT>: the full-block collation key
     as an Arrow-batched UDF with the weight dict in the closure. Used

@@ -132,8 +132,16 @@ def mask_literals(sql: str) -> tuple[str, list[str]]:
     """Replace quoted regions ('...', "...", `...`) with \\x00N\\x00
     placeholders so regex rewrites can't touch literal/identifier content.
     Handles doubled-quote ('') and backslash escapes inside strings."""
-    out: list[str] = []
     lits: list[str] = []
+    return mask_into(sql, lits), lits
+
+
+def mask_into(sql: str, lits: list[str]) -> str:
+    """mask_literals into an existing table: quoted regions of `sql` are
+    appended to `lits`; placeholders already in `sql` pass through. A
+    pass over masked text uses it for the SQL it generates, so inserted
+    values stay hidden from later rewrites."""
+    out: list[str] = []
     i, n = 0, len(sql)
     while i < n:
         c = sql[i]
@@ -156,11 +164,18 @@ def mask_literals(sql: str) -> tuple[str, list[str]]:
         else:
             out.append(c)
             i += 1
-    return "".join(out), lits
+    return "".join(out)
 
 
 def unmask_literals(sql: str, lits: list[str]) -> str:
     return _PH_RE.sub(lambda m: lits[int(m.group(1))], sql)
+
+
+def on_text(fn, sql: str) -> str:
+    """Run a pass over masked text, fn(masked, lits) -> masked, on plain
+    `sql`."""
+    masked, lits = mask_literals(sql)
+    return unmask_literals(fn(masked, lits), lits)
 
 
 def _literal_of(arg: str, lits: list[str]) -> str | None:
@@ -323,10 +338,6 @@ def rewrite_numeric_literals(sql: str) -> str:
     return unmask_literals(sql, lits)
 
 _CAST_CALL = re.compile(r"\bCAST\s*\(", re.IGNORECASE)
-
-# single-element mutable flag (set by the engine on SET sql_mode):
-# True → `||` is string concatenation, not logical OR
-PIPES_AS_CONCAT = [False]
 
 _PIPE_ATOM = (r"(?:CONCAT\((?:[^()]|\([^()]*\))*\)|"
               r"\((?:[^()]|\([^()]*\))*\)|\x00\d+\x00|[\w.`]+)")
@@ -1521,10 +1532,12 @@ def _rewrite_tuple_compare(sql: str) -> str:
     return _TUPLE_CMP.sub(repl, sql)
 
 
-def wrap_truthy_if(sql: str) -> str:
+# Retry-only rewrites (the engine's analysis-retry table) take masked text
+# and return masked text; wrap_truthy_operands also reads the literals.
+
+def wrap_truthy_if(masked: str) -> str:
     """MySQL truthiness in IF(cond, a, b)'s first argument (`IF(1, x, y)`)
     — wrap it as CAST(cond AS DOUBLE) <> 0. Retry-only."""
-    masked, lits = mask_literals(sql)
     pat = re.compile(r"\bIF\s*\(", re.IGNORECASE)
     pos = 0
     while True:
@@ -1541,16 +1554,15 @@ def wrap_truthy_if(sql: str) -> str:
                 f"{args[1]},{args[2]})")
         masked = masked[:m.start()] + repl + masked[close + 1:]
         pos = m.start() + len(repl)
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def wrap_truthy_case(sql: str) -> str:
+def wrap_truthy_case(masked: str) -> str:
     """MySQL truthiness in searched-CASE conditions (`CASE WHEN COUNT(*)
     THEN ...`): wrap each WHEN body of a SEARCHED case (no subject between
     CASE and the first WHEN) as CAST(body AS DOUBLE) <> 0. Value-form
     CASE x WHEN v compares, not tests — left untouched. Retry-only,
     like wrap_truthy_filters."""
-    masked, lits = mask_literals(sql)
 
     def one_pass(text: str):
         toks = list(re.finditer(r"\b(CASE|END|WHEN|THEN)\b", text, re.I))
@@ -1585,15 +1597,14 @@ def wrap_truthy_case(sql: str) -> str:
     changed = True
     while changed:
         masked, changed = one_pass(masked)
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def wrap_truthy_operands(sql: str) -> str:
+def wrap_truthy_operands(masked: str, lits: list[str]) -> str:
     """MySQL truthiness inside boolean operators: `NOT col`,
     `0.000 AND true`. Wraps the ATOM operand of NOT and bare numeric
     literals adjacent to AND/OR as CAST(x AS DOUBLE) <> 0. Retry-only,
     like the other truthiness wraps."""
-    masked, lits = mask_literals(sql)
     atom = r"`?\w+`?(?:\.`?\w+`?)*|[-+]?\d+\.?\d*"
 
     def wrap(s):
@@ -1684,10 +1695,10 @@ def wrap_truthy_operands(sql: str) -> str:
     masked2 = masked
     masked = re.sub(rf"\b(AND|OR)\b\s*({_ATOM})(?![\w.])", lit_after,
                     masked, flags=re.IGNORECASE)
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def wrap_truthy_filters(sql: str) -> str:
+def wrap_truthy_filters(masked: str) -> str:
     """MySQL accepts any expression as a filter (`WHERE 1`, `WHERE col`):
     non-zero is true, 0/NULL is false. Spark's analyzer requires BOOLEAN
     and raises FILTER_NOT_BOOLEAN — the engine retries the statement
@@ -1695,7 +1706,6 @@ def wrap_truthy_filters(sql: str) -> str:
     `CAST((body) AS DOUBLE) <> 0.0` (valid for boolean and numeric
     operands alike). Retry-only: the wrap defeats parquet filter pushdown,
     so it must never run on statements whose filters are already boolean."""
-    masked, lits = mask_literals(sql)
 
     def spans(text: str) -> list[tuple[int, int]]:
         out = []
@@ -1734,21 +1744,33 @@ def wrap_truthy_filters(sql: str) -> str:
                       + masked[end:])
             changed = True
             break
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def transpile_select(sql: str) -> str:
-    """MySQL SELECT → Spark SQL SELECT. All rewrites run on literal-masked
-    text so quoted strings and backtick identifiers pass through verbatim."""
-    # charset introducers on identity charsets are no-ops on our
-    # utf8-native strings (_utf8mb4'x', _latin1'x', _ascii'x'); BEFORE
-    # masking so the literal masks normally afterwards
+def fold_literal_prefixes(sql: str) -> str:
+    """The literal spellings masking would hide: charset introducers on
+    identity charsets are no-ops on our utf8-native strings (_utf8mb4'x',
+    _latin1'x', _ascii'x'), and bit-value literals (b'101') become
+    decimal. Runs BEFORE masking."""
     sql = re.sub(r"\b_(?:utf8mb4|utf8mb3|utf8|latin1|ascii|binary)(?=')",
                  "", sql, flags=re.IGNORECASE)
-    # bit-value literals (b'101' / 0b101) → decimal, BEFORE masking (the
-    # quoted part would otherwise be hidden as a string placeholder)
-    sql = _BIT_LITERAL.sub(lambda m: str(int(m.group(1), 2)), sql)
-    sql, lits = mask_literals(sql)
+    return _BIT_LITERAL.sub(lambda m: str(int(m.group(1), 2)), sql)
+
+
+def transpile_select(sql: str, *, pipes_as_concat: bool = False) -> str:
+    """MySQL SELECT → Spark SQL SELECT. All rewrites run on literal-masked
+    text so quoted strings and backtick identifiers pass through verbatim.
+    `pipes_as_concat` is the sql_mode PIPES_AS_CONCAT (or ANSI) flag."""
+    masked, lits = mask_literals(fold_literal_prefixes(sql))
+    return unmask_literals(
+        transpile_masked(masked, lits, pipes_as_concat=pipes_as_concat),
+        lits)
+
+
+def transpile_masked(sql: str, lits: list[str], *,
+                     pipes_as_concat: bool = False) -> str:
+    """transpile_select over masked text and its literal table; returns
+    masked text (new literals are appended to `lits`)."""
     sql = _0B_LITERAL.sub(lambda m: str(int(m.group(1), 2)), sql)
     # MySQL hex literals (0x41) used in numeric context → decimal; Spark
     # has no 0x spelling (its x'41' form is a binary string, which wouldn't
@@ -1917,9 +1939,8 @@ def transpile_select(sql: str) -> str:
     # masked, so these can't hit string contents; `!=` is protected by
     # the lookahead. The NOT spelling keeps MySQL truthiness via the
     # engine's wrap_truthy_filters retry (NOT over a numeric operand).
-    # Under sql_mode PIPES_AS_CONCAT (or ANSI) `||` stays Spark concat —
-    # the engine flips the module flag on SET sql_mode.
-    if not PIPES_AS_CONCAT[0]:
+    # Under sql_mode PIPES_AS_CONCAT (or ANSI) `||` stays Spark concat.
+    if not pipes_as_concat:
         sql = re.sub(r"\|\|", " OR ", sql)
     else:
         sql = _pipes_concat_rewrite(sql)
@@ -2023,8 +2044,7 @@ def transpile_select(sql: str) -> str:
                  r"CAST(\1 AS BINARY)", sql)
     sql = sql.replace("\x01BINCAST\x01", "")  # unmatched → drop operator
     sql = sql.replace("\x01BINARY\x01", "BINARY")
-    sql = _unquote_numeric_args(sql, lits)
-    return unmask_literals(sql, lits)
+    return _unquote_numeric_args(sql, lits)
 
 
 def _top_level_match(text: str, pat: str):
@@ -2065,7 +2085,9 @@ def _rewrite_having_no_group(sql: str) -> str:
             f"{tail}")
 
 
-def flatten_correlated_in(sql: str) -> str:
+# More retry-only rewrites: masked text in, masked text out.
+
+def flatten_correlated_in(masked: str) -> str:
     """Reduce correlation depth of `X IN (SELECT c FROM t WHERE c = K)`
     to `(X = K AND X IN (SELECT c FROM t))` — first-order equivalent
     (the subquery returns c's equal to K, so membership means X = K and
@@ -2074,7 +2096,6 @@ def flatten_correlated_in(sql: str) -> str:
     nested-IN tests); Spark's analyzer only reaches one scope up, so a
     two-level correlation fails UNRESOLVED_COLUMN — after this rewrite K
     sits one level closer. Retry-only."""
-    masked, lits = mask_literals(sql)
     pat = re.compile(
         r"(\w+(?:\.\w+)?)\s+IN\s*\(\s*SELECT\s+(\w+)\s+FROM\s+(\w+)\s+"
         r"WHERE\s+(\w+)\s*=\s*(\w+(?:\.\w+)?)\s*\)", re.IGNORECASE)
@@ -2089,19 +2110,18 @@ def flatten_correlated_in(sql: str) -> str:
     while prev != masked:
         prev = masked
         masked = pat.sub(repl, masked)
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def resolve_projection_alias_in_subquery(sql: str) -> str:
+def resolve_projection_alias_in_subquery(masked: str) -> str:
     """MySQL lets a scalar subquery in the select list reference a
     sibling projection alias (`SELECT 1 AS a, (SELECT a) AS b`); Spark
     resolves subqueries against relations only. Inline the alias's
     expression for the exact shape `(SELECT <alias>)`. Retry-only."""
-    masked, lits = mask_literals(sql)
     m = re.match(r"\s*SELECT\s+(.*?)\s+FROM\s", masked,
                  re.IGNORECASE | re.DOTALL)
     if not m:
-        return sql
+        return masked
     aliases: dict[str, str] = {}
     for item in _split_args(m.group(1)):
         am = re.match(r"(.+?)\s+AS\s+[`]?(\w+)[`]?\s*$", item.strip(),
@@ -2109,7 +2129,7 @@ def resolve_projection_alias_in_subquery(sql: str) -> str:
         if am and "(" not in am.group(1):
             aliases.setdefault(am.group(2).lower(), am.group(1).strip())
     if not aliases:
-        return sql
+        return masked
 
     def repl(sm: re.Match) -> str:
         expr = aliases.get(sm.group(1).lower())
@@ -2117,21 +2137,20 @@ def resolve_projection_alias_in_subquery(sql: str) -> str:
 
     masked = re.sub(r"\(\s*SELECT\s+[`]?(\w+)[`]?\s*\)", repl, masked,
                     flags=re.IGNORECASE)
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def wrap_ungrouped_any_value(sql: str) -> str:
+def wrap_ungrouped_any_value(masked: str) -> str:
     """MySQL without ONLY_FULL_GROUP_BY (and always when grouping by a
     unique key) lets the select list / ORDER BY name ungrouped columns —
     the engine picks a value per group (reference analyzer
     check_constraints + MySQL ANY_VALUE docs). Spark raises
     MISSING_AGGREGATION; the retry wraps each ungrouped bare column in
     any_value(). Retry-only."""
-    masked, lits = mask_literals(sql)
     sm = re.match(r"(\s*SELECT\s+(?:DISTINCT\s+)?)(.*?)(\s+FROM\s.*)$",
                   masked, re.IGNORECASE | re.DOTALL)
     if not sm:
-        return sql
+        return masked
     head, sel, rest = sm.groups()
     gm = _top_level_match(rest, r"\bGROUP\s+BY\b")
     group_keys: set[str] = set()
@@ -2204,8 +2223,8 @@ def wrap_ungrouped_any_value(sql: str) -> str:
         rest = (rest[:om.end()] + " " + ", ".join(new_items)
                 + (otail[oe.start():] if oe else ""))
     if not changed:
-        return sql
-    return unmask_literals(head + ", ".join(new_sel) + rest, lits)
+        return masked
+    return head + ", ".join(new_sel) + rest
 
 
 def lax_numeric_minmax(sql: str) -> str:
@@ -2235,11 +2254,10 @@ def lax_numeric_minmax(sql: str) -> str:
         pos = m.start() + len(repl)
 
 
-def boolean_if_branches_to_int(sql: str) -> str:
+def boolean_if_branches_to_int(masked: str) -> str:
     """IF(cond, TRUE, intcol) mixes boolean/int branch types — MySQL's
     TRUE is just 1, Spark's is typed. Replace standalone TRUE/FALSE
     appearing as IF() branch arguments with 1/0. Retry-only."""
-    masked, lits = mask_literals(sql)
     pat = re.compile(r"\bIF\s*\(", re.IGNORECASE)
     pos = 0
     while True:
@@ -2263,19 +2281,18 @@ def boolean_if_branches_to_int(sql: str) -> str:
                 pos = m.end() + len(body)
                 continue
         pos = close
-    return unmask_literals(masked, lits)
+    return masked
 
 
-def order_by_expr_to_alias(sql: str) -> str:
+def order_by_expr_to_alias(masked: str) -> str:
     """`SELECT DISTINCT t1.id AS id ... ORDER BY t1.id`: MySQL orders by
     the underlying expression of a selected alias; Spark's DISTINCT
     output hides t1.id. Replace a top-level ORDER BY item that textually
     equals a select item's expression with that item's alias. Retry-only."""
-    masked, lits = mask_literals(sql)
     sm = re.match(r"(\s*SELECT\s+(?:DISTINCT\s+)?)(.*?)(\s+FROM\s.*)$",
                   masked, re.IGNORECASE | re.DOTALL)
     if not sm:
-        return sql
+        return masked
     head, sel, rest = sm.groups()
     expr_alias: dict[str, str] = {}
     for item in _split_args(sel):
@@ -2284,10 +2301,10 @@ def order_by_expr_to_alias(sql: str) -> str:
         if am:
             expr_alias[am.group(1).strip().lower()] = am.group(2)
     if not expr_alias:
-        return sql
+        return masked
     om = _top_level_match(rest, r"\bORDER\s+BY\b")
     if not om:
-        return sql
+        return masked
     otail = rest[om.end():]
     oe = _top_level_match(otail, r"\b(LIMIT|UNION|EXCEPT|INTERSECT)\b")
     obody = otail[:oe.start()] if oe else otail
@@ -2304,10 +2321,10 @@ def order_by_expr_to_alias(sql: str) -> str:
         else:
             new_items.append(it)
     if not changed:
-        return sql
+        return masked
     rest = (rest[:om.end()] + " " + ", ".join(new_items)
             + (otail[oe.start():] if oe else ""))
-    return unmask_literals(head + sel + rest, lits)
+    return head + sel + rest
 
 
 def _rewrite_any_value_nogroup(sql: str) -> str:

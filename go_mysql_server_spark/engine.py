@@ -29,8 +29,10 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dialect import transpiler as tp
 from .dialect.transpiler import _find_close as _find_close_paren
-from .dialect.transpiler import transpile_select
+from .dialect.transpiler import (mask_into, mask_literals, on_text,
+                                 transpile_select, unmask_literals)
 from .session import tune_session
 
 
@@ -305,7 +307,6 @@ def _check_clause_mysql(ts, expr: str) -> str:
 
     # Mask string literals first so words inside them — CHECK
     # (status IN ('new','old')) — are never backticked.
-    from .dialect.transpiler import mask_literals, unmask_literals
     masked, lits = mask_literals(expr)
     out = re.sub(r"\b[A-Za-z_]\w*\b(?!\s*\()", tick, masked)
     return f"({unmask_literals(out, lits)})"
@@ -452,14 +453,14 @@ def _default_display(c) -> str | None:
     return d
 
 
-def _default_col(c) -> "F.Column":
+def _default_col(c, pipes_as_concat: bool) -> "F.Column":
     """Column expression for a declared default, with MySQL's insert-time
     conversion: numeric-string defaults ROUND into integer columns
     ('1.999' -> 2), not truncate (reference sql/types/number.go rounding
     on convert). The expression text is MySQL dialect — route it through
     the transpiler so defaults like JSON_OBJECT() resolve."""
-    from .dialect.transpiler import transpile_select
-    expr = F.expr(transpile_select(_normalize_default(c.default)))
+    expr = F.expr(transpile_select(_normalize_default(c.default),
+                                   pipes_as_concat=pipes_as_concat))
     if c.int_bounds is not None:
         return F.round(expr.cast("double")).cast(c.spark_type)
     return expr.cast(c.spark_type)
@@ -483,7 +484,6 @@ def _default_references(c, colnames: set) -> bool:
     table (so it must evaluate against the row, after simpler defaults)."""
     if not c.default or not c.default.strip().startswith("("):
         return False
-    from .dialect.transpiler import mask_literals
     masked, _ = mask_literals(c.default)
     for m in re.finditer(r"\b([A-Za-z_]\w*)\b(?!\s*\()", masked):
         if m.group(1).lower() in colnames:
@@ -642,6 +642,11 @@ class Engine:
             "collation_server": "utf8mb4_0900_bin",
         }
         self.last_insert_id: int | None = None
+        # uuid() DEFAULT materialized by this session's last INSERT
+        # (reference last_insert_uuid.go)
+        self.last_insert_uuid: str | None = None
+        self._last_select_df: DataFrame | None = None  # for FOUND_ROWS()
+        self._found_rows_n: int | None = None
         self.triggers: dict[str, list] = {}       # table → [Trigger]
         self.procedures: dict[str, object] = {}   # name → Procedure
         self.functions: dict[str, str] = {}       # stored SQL functions (DDL)
@@ -737,7 +742,7 @@ class Engine:
             fx.view = f"__ft_{ts.name}_{fx.name}"
             fx.postings.createOrReplaceTempView(fx.view)
 
-    def _rewrite_json_table(self, sql: str) -> str:
+    def _rewrite_json_table(self, masked: str, lits: list[str]) -> str:
         """SQL-text JSON_TABLE(expr, 'path' COLUMNS(...)) [AS] alias →
         LATERAL subquery over the generic __json_table_rows UDTF
         (reference sql/plan/json_table.go; exec rowexec/rel.go). The
@@ -745,13 +750,7 @@ class Engine:
         column names and MySQL types; NESTED PATH, FOR ORDINALITY,
         EXISTS PATH, and DEFAULT ... ON EMPTY are encoded in a colspec
         JSON the UDTF interprets."""
-        if not re.search(r"\bJSON_TABLE\s*\(", sql, re.I):
-            return sql
         import json as _json
-
-        from .dialect.transpiler import (_find_close, mask_literals,
-                                         unmask_literals)
-        masked, lits = mask_literals(sql)
 
         def lit_text(tok: str) -> str:
             tok = tok.strip()
@@ -769,7 +768,7 @@ class Engine:
                 nm = re.match(r"NESTED\s+(?:PATH\s+)?(\x00\d+\x00)\s+"
                               r"COLUMNS\s*\(", it, re.I)
                 if nm:
-                    close = _find_close(it, nm.end() - 1)
+                    close = _find_close_paren(it, nm.end() - 1)
                     out.append({
                         "kind": "nested", "path": lit_text(nm.group(1)),
                         "cols": parse_cols(it[nm.end():close], state)})
@@ -796,35 +795,23 @@ class Engine:
                 state["proj"].append((cname, dtype.simpleString(), slot))
                 spec = {"kind": "exists" if exists else "path",
                         "path": lit_text(pathtok), "slot": slot}
-                dm = re.search(r"DEFAULT\s+(\x00\d+\x00|[\w.+-]+)"
-                               r"\s+ON\s+EMPTY", opts, re.I)
-                if dm:
-                    dflt = lit_text(dm.group(1))
-                    try:  # DEFAULT takes a JSON literal ('"N/A"', '42')
-                        dflt_v = _json.loads(dflt)
-                    except ValueError:
-                        dflt_v = dflt
-                    spec["on_empty"] = ["default",
-                                        None if dflt_v is None
-                                        else str(dflt_v)]
-                elif re.search(r"ERROR\s+ON\s+EMPTY", opts, re.I):
-                    spec["on_empty"] = ["error"]
-                em2 = re.search(r"DEFAULT\s+(\x00\d+\x00|[\w.+-]+)"
-                                r"\s+ON\s+ERROR", opts, re.I)
-                if em2:
-                    dflt = lit_text(em2.group(1))
-                    try:
-                        dflt_v = _json.loads(dflt)
-                    except ValueError:
-                        dflt_v = dflt
-                    spec["on_error"] = ["default",
-                                        None if dflt_v is None
-                                        else str(dflt_v)]
+                for when in ("EMPTY", "ERROR"):
+                    dm = re.search(r"DEFAULT\s+(\x00\d+\x00|[\w.+-]+)"
+                                   rf"\s+ON\s+{when}", opts, re.I)
+                    if dm:
+                        dflt = lit_text(dm.group(1))
+                        try:  # DEFAULT takes a JSON literal ('"N/A"', '42')
+                            dflt = _json.loads(dflt)
+                        except ValueError:
+                            pass
+                        spec[f"on_{when.lower()}"] = [
+                            "default", None if dflt is None else str(dflt)]
+                    elif re.search(rf"ERROR\s+ON\s+{when}", opts, re.I):
+                        spec[f"on_{when.lower()}"] = ["error"]
+                if "on_error" in spec:
                     spec["sqltype"] = dtype.simpleString()
-                if re.search(r"ERROR\s+ON\s+ERROR", opts, re.I):
-                    state["error_on_error"] = True
-                    spec["on_error"] = ["error"]
-                    spec["sqltype"] = dtype.simpleString()
+                    if spec["on_error"] == ["error"]:
+                        state["error_on_error"] = True
                 out.append(spec)
             return out
 
@@ -832,9 +819,7 @@ class Engine:
             m = re.search(r"\bJSON_TABLE\s*\(", masked, re.I)
             if not m:
                 break
-            close = _find_close(masked, m.end() - 1)
-            if close < 0:
-                break
+            close = _find_close_paren(masked, m.end() - 1)
             body = masked[m.end():close]
             parts = _split_top_level(body)
             if len(parts) < 2:
@@ -845,7 +830,7 @@ class Engine:
             if not pm:
                 break
             rest = ",".join(parts[1:])
-            ccl = _find_close(rest, pm.end() - 1)
+            ccl = _find_close_paren(rest, pm.end() - 1)
             root = lit_text(pm.group(1))
             state = {"width": 0, "proj": [], "error_on_error": False}
             cols = parse_cols(rest[pm.end():ccl], state)
@@ -862,10 +847,10 @@ class Engine:
             projs = ", ".join(
                 f"CAST(cells[{slot}] AS {typ}) AS `{name}`"
                 for name, typ, slot in state["proj"])
-            doc_sql = unmask_literals(doc_expr, lits)
-            sub = (f"(SELECT {projs} FROM __json_table_rows("
-                   f"CAST(({doc_sql}) AS STRING), '{root}', '{spec_lit}'))"
-                   f" AS {alias or '__jt'}")
+            sub = mask_into(
+                f"(SELECT {projs} FROM __json_table_rows("
+                f"CAST(({doc_expr}) AS STRING), '{root}', '{spec_lit}'))"
+                f" AS {alias or '__jt'}", lits)
             before = masked[:m.start()].rstrip()
             # only a doc expression referencing the preceding FROM items
             # needs LATERAL; a literal doc joins as a plain derived table
@@ -874,7 +859,7 @@ class Engine:
             if correlated and re.search(r"(,|\bJOIN)\s*$", before, re.I):
                 sub = "LATERAL " + sub
             masked = masked[:m.start()] + sub + masked[end:]
-        return unmask_literals(masked, lits)
+        return masked
 
 
     def _ungrouped_selects_allowed(self, sql: str) -> bool:
@@ -895,7 +880,7 @@ class Engine:
         pk = [c.lower() for c in ts.primary_key]
         return bool(pk) and all(c in keys for c in pk)
 
-    def _rewrite_match_against(self, sql: str) -> str:
+    def _rewrite_match_against(self, masked: str, lits: list[str]) -> str:
         """MATCH(col, ...) AGAINST('query' [IN NATURAL LANGUAGE MODE |
         IN BOOLEAN MODE]) (reference sql/expression/matchagainst.go).
 
@@ -909,11 +894,6 @@ class Engine:
 
         Fallback: no index → the on-the-fly tokenize expression (same
         relevance model, corpus-scanning)."""
-        if not re.search(r"\bMATCH\b", sql, re.I):
-            return sql
-        from .dialect.transpiler import (_find_close, mask_literals,
-                                         unmask_literals)
-        masked, lits = mask_literals(sql)
         pat = re.compile(
             r"\bMATCH\s*\(([^()]+)\)\s+AGAINST\s*\(", re.I)
         _from_pat = re.compile(
@@ -951,9 +931,7 @@ class Engine:
             m = pat.search(masked)
             if not m:
                 break
-            close = _find_close(masked, m.end() - 1)
-            if close < 0:
-                break
+            close = _find_close_paren(masked, m.end() - 1)
             ts, corr_qual = _bind_from(m.start())
             body = masked[m.end():close]
             bm = re.match(
@@ -1011,8 +989,9 @@ class Engine:
                         r"|UNION\b|;|$)", after, re.I)))
             if bare:
                 expr = f"(({expr}) > 0)"
-            masked = masked[:m.start()] + expr + masked[close + 1:]
-        return unmask_literals(masked, lits)
+            masked = (masked[:m.start()] + mask_into(expr, lits)
+                      + masked[close + 1:])
+        return masked
 
     def _ft_match_expr(self, ts, match_cols: tuple[str, ...], qtext: str,
                        boolean_mode: bool,
@@ -1110,13 +1089,6 @@ class Engine:
         head = (_mh.group(0).upper() if _mh
                 else ("(" if sql.startswith("(") else ""))
         self._query_count += 1
-        # sync the || dialect flag to THIS session's sql_mode (the
-        # transpiler is stateless otherwise; single-threaded engines)
-        from .dialect import transpiler as _tp
-        _mode = str(self.sys_vars.get("sql_mode", "")).upper()
-        _tp.PIPES_AS_CONCAT[0] = ("PIPES_AS_CONCAT" in _mode
-                                  or re.search(r"\bANSI\b", _mode)
-                                  is not None)
         handler = {
             "SELECT": self._q_select, "WITH": self._q_select,
             "TABLE": self._q_select, "VALUES": self._q_select,
@@ -1261,28 +1233,25 @@ class Engine:
     _SYS_VAR = re.compile(
         r"@@(?:session\.|global\.)?(\w+(?:\.\w+)?)", re.I)
 
-    def _substitute_vars(self, sql: str) -> str:
-        # Literal-aware: mask '...'/"..."/`...` first so @ inside a string
-        # (emails, handles) is never rewritten (r1 judge finding).
-        from .dialect.transpiler import mask_literals, unmask_literals
-
+    def _substitute_vars(self, masked: str, lits: list[str]) -> str:
+        # Literal-aware: runs on masked text so @ inside a string (emails,
+        # handles) is never rewritten (r1 judge finding).
         def sys_repl(m: re.Match) -> str:
             name = m.group(1).lower()
             if name in self.sys_vars:
-                return self._lit(self.sys_vars.get(name))
+                return self._put(self.sys_vars.get(name), lits)
             if "." in name:
                 head = name.split(".", 1)[0]
                 if head in self.sys_vars:  # @@var.field: var then field
-                    return (self._lit(self.sys_vars.get(head))
+                    return (self._put(self.sys_vars.get(head), lits)
                             + name[len(head):])
-            return self._lit(self.sys_vars.get(name))
+            return self._put(self.sys_vars.get(name), lits)
 
         def user_repl(m: re.Match) -> str:
-            return self._lit(self.user_vars.get(m.group(1)))
+            return self._put(self.user_vars.get(m.group(1)), lits)
 
-        masked, lits = mask_literals(sql)
-        masked = self._USER_VAR.sub(user_repl, self._SYS_VAR.sub(sys_repl, masked))
-        return unmask_literals(masked, lits)
+        return self._USER_VAR.sub(user_repl,
+                                  self._SYS_VAR.sub(sys_repl, masked))
 
     @staticmethod
     def _lit(v: Any) -> str:
@@ -1298,51 +1267,91 @@ class Engine:
             return f"CAST({v!r} AS DOUBLE)"
         return "'" + str(v).replace("'", "''") + "'"
 
+    @classmethod
+    def _put(cls, v: Any, lits: list[str]) -> str:
+        """_lit(v) as masked text: a quoted value becomes a new literal, so
+        later rewrites can't touch it (a variable holding LIKE stays LIKE)."""
+        return mask_into(cls._lit(v), lits)
+
+    # session functions (reference sql/expression/function/version.go,
+    # connection_id.go, row_count.go, last_insert_uuid.go): values of this
+    # session, substituted as literals. A thunk runs only when its name
+    # occurs — FOUND_ROWS() may count the previous result.
+    _SESSION_FNS = {
+        "LAST_INSERT_ID": lambda e: e.last_insert_id or 0,
+        "LAST_INSERT_UUID": lambda e: e.last_insert_uuid,
+        "DATABASE": lambda e: e.current_db,
+        "SCHEMA": lambda e: e.current_db,
+        "VERSION": lambda e: str(e.sys_vars.get("version", "")),
+        "CONNECTION_ID": lambda e: e.connection_id,
+        "ROW_COUNT": lambda e: e.last_row_count,
+        "FOUND_ROWS": lambda e: e._found_rows(),
+    }
+    _SESSION_FN = re.compile(rf"\b({'|'.join(_SESSION_FNS)})\s*\(\s*\)",
+                             re.I)
+
+    def _session_fns(self, masked: str, lits: list[str]) -> str:
+        vals: dict[str, str] = {}
+
+        def repl(m: re.Match) -> str:
+            name = m.group(1).upper()
+            if name not in vals:
+                vals[name] = self._put(self._SESSION_FNS[name](self), lits)
+            return vals[name]
+
+        return self._SESSION_FN.sub(repl, masked)
+
+    def _found_rows(self) -> int:
+        """FOUND_ROWS(): row count of the previous SELECT — post-LIMIT
+        normally, pre-LIMIT when it was SQL_CALC_FOUND_ROWS (reference
+        sql/expression/function/found_rows.go). The previous result is
+        kept as an (uncollected) DataFrame; the count runs on demand."""
+        if self._found_rows_n is not None:
+            return self._found_rows_n
+        prev = self._last_select_df
+        return prev.count() if prev is not None else 0
+
+    @property
+    def _pipes_as_concat(self) -> bool:
+        """sql_mode PIPES_AS_CONCAT (or ANSI): `||` concatenates. Read from
+        this engine's own sql_mode, so engines never share the flag."""
+        mode = str(self.sys_vars.get("sql_mode", "")).upper()
+        return ("PIPES_AS_CONCAT" in mode
+                or re.search(r"\bANSI\b", mode) is not None)
+
+    def _transpile(self, sql: str) -> str:
+        return transpile_select(sql, pipes_as_concat=self._pipes_as_concat)
+
     # ---- SELECT ------------------------------------------------------------
 
     def _q_select(self, sql: str) -> DataFrame | OkResult:
-        # FOUND_ROWS(): row count of the previous SELECT — post-LIMIT
-        # normally, pre-LIMIT when it was SQL_CALC_FOUND_ROWS (reference
-        # sql/expression/function/found_rows.go). The previous result is
-        # kept as an (uncollected) DataFrame; the count runs on demand.
-        if re.search(r"\bFOUND_ROWS\s*\(\s*\)", sql, re.I):
-            n = getattr(self, "_found_rows_n", None)
-            if n is None:
-                prev = getattr(self, "_last_select_df", None)
-                n = prev.count() if prev is not None else 0
-            from .dialect.transpiler import mask_literals, unmask_literals
-            masked, lits = mask_literals(sql)
-            masked = re.sub(r"\bFOUND_ROWS\s*\(\s*\)", str(n), masked,
-                            flags=re.I)
-            sql = unmask_literals(masked, lits)
-        calc = re.search(r"\bSQL_CALC_FOUND_ROWS\s+", sql, re.I)
+        """Literals are masked once; every later step works on (masked,
+        lits): the clause peels, the passes of `_PASSES` whose trigger
+        occurs, transpile, and analysis with the `_RETRIES` table."""
+        masked, lits = mask_literals(tp.fold_literal_prefixes(sql))
+        calc = re.search(r"\bSQL_CALC_FOUND_ROWS\s+", masked, re.I)
         if calc:
-            sql = sql[:calc.start()] + sql[calc.end():]
-            nolimit = re.sub(r"\bLIMIT\s+\d+(?:\s*,\s*\d+|\s+OFFSET\s+"
-                             r"\d+)?\s*$", "", sql, flags=re.I)
-            res = self._q_select(sql)
-            if isinstance(res, DataFrame):
-                # found_rows() reads the PRE-limit count
-                self._last_select_df = self._q_select_inner(nolimit)
-                self._found_rows_n = None
-            return res
-        df_or_ok = self._q_select_inner(sql)
-        if isinstance(df_or_ok, DataFrame):
-            self._last_select_df = df_or_ok
+            masked = masked[:calc.start()] + masked[calc.end():]
+            calc_lits = list(lits)
+        res = self._select_masked(masked, lits)
+        if isinstance(res, DataFrame):
+            # found_rows() reads the PRE-limit count after SQL_CALC_FOUND_ROWS
+            self._last_select_df = res if not calc else self._select_masked(
+                re.sub(r"\bLIMIT\s+\d+(?:\s*,\s*\d+|\s+OFFSET\s+\d+)?\s*$",
+                       "", masked, flags=re.I), calc_lits)
             self._found_rows_n = None
-        return df_or_ok
+        return res
 
-    def _q_select_inner(self, sql: str) -> DataFrame | OkResult:
+    def _select_masked(self, masked: str,
+                       lits: list[str]) -> DataFrame | OkResult:
         # WITH ... DELETE / WITH ... UPDATE route here via the WITH head:
-        # peel the CTE list (balanced parens, literal-masked) and
-        # dispatch the tail to the DML handler with the prefix threaded
-        if re.match(r"\s*WITH\b", sql, re.I):
-            from .dialect.transpiler import mask_literals as _mw
-            _mk, _ = _mw(sql)
+        # peel the CTE list (balanced parens) and dispatch the tail to the
+        # DML handler with the prefix threaded
+        if re.match(r"\s*WITH\b", masked, re.I):
             depth = 0
             for mkw in re.finditer(
                     r"[()]|\b(DELETE|UPDATE|SELECT|INSERT|REPLACE|TABLE"
-                    r"|VALUES)\b", _mk, re.I):
+                    r"|VALUES)\b", masked, re.I):
                 tok = mkw.group(0)
                 if tok == "(":
                     depth += 1
@@ -1352,86 +1361,35 @@ class Engine:
                     # first depth-0 statement verb after the CTE list
                     verb = mkw.group(1).upper()
                     if verb in ("DELETE", "UPDATE"):
-                        cte_prefix = sql[:mkw.start()].rstrip()
-                        tail = sql[mkw.start():]
-                        if verb == "DELETE":
-                            return self._q_delete(tail,
-                                                  cte_prefix=cte_prefix)
-                        return self._q_update(tail, cte_prefix=cte_prefix)
+                        handler = (self._q_delete if verb == "DELETE"
+                                   else self._q_update)
+                        return handler(
+                            unmask_literals(masked[mkw.start():], lits),
+                            cte_prefix=unmask_literals(
+                                masked[:mkw.start()], lits).rstrip())
                     break
         # INTO @vars must be peeled off before user-var substitution rewrites
         # the very @names we need to assign. MySQL accepts the clause both
         # at statement end and between the select list and FROM
         # (reference sql/plan/into.go).
-        # searched on literal-masked text: a string literal containing
-        # " INTO @a FROM " must not be excised from the statement
-        from .dialect.transpiler import mask_literals as _mask, \
-            unmask_literals as _unmask
-        _masked0, _lits0 = _mask(sql)
-        into_vars = re.search(r"\bINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s*$",
-                              _masked0, re.I)
-        if not into_vars:
-            into_vars = re.search(
-                r"\bINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s+(?=FROM\b)",
-                _masked0, re.I)
-        if into_vars:
-            # drop only the INTO clause (it may sit mid-statement)
-            sql = _unmask(_masked0[:into_vars.start()]
-                          + _masked0[into_vars.end():], _lits0)
-        sql = self._substitute_vars(sql)
-        from .dialect.transpiler import mask_literals, unmask_literals
-        masked, lits = mask_literals(sql)
-        masked = re.sub(r"\bLAST_INSERT_ID\s*\(\s*\)",
-                        self._lit(self.last_insert_id or 0), masked, flags=re.I)
-        if re.search(r"\bLAST_INSERT_UUID\s*\(\s*\)", masked, re.I):
-            from .functions import wkb_fns
-            masked = re.sub(r"\bLAST_INSERT_UUID\s*\(\s*\)",
-                            self._lit(wkb_fns.LAST_INSERT_UUID[0]),
-                            masked, flags=re.I)
-        masked = re.sub(r"\b(?:DATABASE|SCHEMA)\s*\(\s*\)",
-                        self._lit(self.current_db), masked, flags=re.I)
-        # session introspection functions (reference
-        # sql/expression/function/version.go, connection_id.go,
-        # row_count.go): constants of this session, substituted as literals
-        masked = re.sub(r"\bVERSION\s*\(\s*\)",
-                        self._lit(str(self.sys_vars.get("version", ""))),
-                        masked, flags=re.I)
-        masked = re.sub(r"\bCONNECTION_ID\s*\(\s*\)",
-                        self._lit(self.connection_id), masked, flags=re.I)
-        masked = re.sub(r"\bROW_COUNT\s*\(\s*\)",
-                        self._lit(self.last_row_count), masked, flags=re.I)
-        masked = self._rewrite_unix_timestamp(masked)
-        # validate_password_strength reads the validate_password.* policy
-        # vars — thread the session's current values as extra literals
-        if re.search(r"\bVALIDATE_PASSWORD_STRENGTH\s*\(", masked, re.I):
-            from .dialect.transpiler import _find_close as _fc
-            pat = re.compile(r"\bVALIDATE_PASSWORD_STRENGTH\s*\(", re.I)
-            pos = 0
-            while True:
-                mm = pat.search(masked, pos)
-                if not mm:
-                    break
-                close = _fc(masked, mm.end() - 1)
-                if close < 0:
-                    break
-                arg = masked[mm.end():close]
-                vals = ", ".join(str(int(self.sys_vars.get(
-                    f"validate_password.{k}", d))) for k, d in (
-                    ("length", 8), ("number_count", 1),
-                    ("mixed_case_count", 1), ("special_char_count", 1)))
-                repl = (f"validate_password_strength_policy({arg}, {vals})")
-                masked = masked[:mm.start()] + repl + masked[close + 1:]
-                pos = mm.start() + len(repl)
-        sql = unmask_literals(masked, lits)
-        sql = self._rewrite_information_schema(sql)
-        sql = self._rewrite_cross_db(sql)
-        sql = self._rewrite_lax_temporal(sql)
-        sql = self._rewrite_as_of(sql)
-        sql = self._rewrite_json_table(sql)
-        sql = self._rewrite_match_against(sql)
+        into_vars = (re.search(r"\bINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s*$",
+                               masked, re.I)
+                     or re.search(r"\bINTO\s+(@\w+(?:\s*,\s*@\w+)*)\s+"
+                                  r"(?=FROM\b)", masked, re.I))
+        if into_vars:  # drop only the INTO clause (it may sit mid-statement)
+            masked = masked[:into_vars.start()] + masked[into_vars.end():]
+        outfile = re.search(r"\bINTO\s+OUTFILE\s+\x00(\d+)\x00", masked, re.I)
+        path = outfile and re.fullmatch(r"'([^']+)'",
+                                        lits[int(outfile.group(1))])
+        if path:  # SELECT ... INTO OUTFILE (reference sql/plan/into.go)
+            masked = masked[:outfile.start()] + masked[outfile.end():]
+        for _name, trigger, rewrite in self._PASSES:
+            if trigger.search(masked):
+                masked = rewrite(self, masked, lits)
+        df = self._analyze(tp.transpile_masked(
+            masked, lits, pipes_as_concat=self._pipes_as_concat), lits)
         if into_vars:  # SELECT ... INTO @a, @b (reference sql/plan/into.go:1-135)
             names = [v.strip().lstrip("@") for v in into_vars.group(1).split(",")]
-            df = self.spark.sql(transpile_select(sql))
             results = df.take(2)
             if len(results) != 1:
                 raise SqlError(
@@ -1443,166 +1401,144 @@ class Engine:
             for name, value in zip(names, row):
                 self.user_vars[name] = value
             return OkResult(1)
-        m = re.search(r"\bINTO\s+OUTFILE\s+'([^']+)'", sql, re.I)
-        if m:  # SELECT ... INTO OUTFILE (reference sql/plan/into.go)
-            path = m.group(1)
-            inner = sql[:m.start()] + sql[m.end():]
-            df = self.spark.sql(transpile_select(inner))
-            df.coalesce(1).write.mode("overwrite").option("header", "false").csv(path)
-            return OkResult(df.count(), info=f"wrote {path}")
-        sql = self._rewrite_enum_order(sql)
-        sql = self._rewrite_enum_arith(sql)
-        final = transpile_select(sql)
+        if path:
+            df.coalesce(1).write.mode("overwrite").option("header", "false") \
+                .csv(path.group(1))
+            return OkResult(df.count(), info=f"wrote {path.group(1)}")
+        return df
+
+    # Analysis retries, in order: (name, applies(eng, msg, final),
+    # rewrite(eng, masked, lits), hard). An entry whose predicate matches
+    # the original Spark error rewrites the statement and analyzes it once
+    # more. A soft entry's failed retry falls through to the next entry; a
+    # hard entry's retry error propagates, and when its rewrite changes
+    # nothing the original error is raised.
+    _AGG_CALL = re.compile(r"\b(?:SUM|AVG|COUNT|MIN|MAX|STDDEV\w*|VAR\w+|"
+                           r"COLLECT_LIST|COLLECT_SET)\s*\(", re.I)
+    _RETRIES = (
+        # mixed aggregate + non-aggregate projection without GROUP BY —
+        # MySQL (sans ONLY_FULL_GROUP_BY functional-dependency
+        # satisfaction) evaluates the non-aggregates via ANY_VALUE over
+        # the single implicit group
+        ("ungrouped_any_value",
+         lambda e, m, f: ("MISSING_GROUP_BY" in m
+                          and e._ungrouped_selects_allowed(f)),
+         lambda e, s, lits: tp.wrap_ungrouped_any_value(s), False),
+        # aggregate query with no GROUP BY produces ONE row; MySQL accepts
+        # (and ignores) an ORDER BY on a source column Spark can no longer
+        # resolve — drop the clause
+        ("aggregate_order_by",
+         lambda e, m, f: ("UNRESOLVED_COLUMN" in m
+                          and re.search(r"\bORDER\s+BY\b", f, re.I)
+                          and not re.search(r"\bGROUP\s+BY\b", f, re.I)
+                          and e._AGG_CALL.search(f)),
+         lambda e, s, lits: re.sub(
+             r"\bORDER\s+BY\s+[^()]*?(?=\bLIMIT\b|\bINTO\b|;|$)", "", s,
+             flags=re.I | re.S), False),
+        # MySQL accepts ungrouped columns only when sql_mode lacks
+        # ONLY_FULL_GROUP_BY, or when the group keys cover the table's
+        # PRIMARY KEY (functional dependency — reference analyzer
+        # validate_group_by); otherwise the Spark error IS the MySQL error
+        ("missing_aggregation",
+         lambda e, m, f: (("MISSING_AGGREGATION" in m
+                           or ("UNRESOLVED_COLUMN" in m and re.search(
+                               r"\bGROUP\s+BY\b|\bany_value\s*\(", f, re.I)))
+                          and e._ungrouped_selects_allowed(f)),
+         lambda e, s, lits: tp.wrap_ungrouped_any_value(s), False),
+        ("distinct_order_alias",
+         lambda e, m, f: ("UNRESOLVED_COLUMN" in m
+                          and re.search(r"\bDISTINCT\b", f, re.I)),
+         lambda e, s, lits: tp.order_by_expr_to_alias(s), False),
+        ("lax_minmax",
+         lambda e, m, f: ("DATA_DIFF_TYPES" in m and re.search(
+             r"\b(?:GREATEST|LEAST)\s*\(", f, re.I)),
+         lambda e, s, lits: tp.lax_numeric_minmax(s), False),
+        ("if_int_branches",
+         lambda e, m, f: ("DATA_DIFF_TYPES" in m
+                          and re.search(r"\bIF\s*\(", f, re.I)),
+         lambda e, s, lits: tp.boolean_if_branches_to_int(s), True),
+        # MySQL resolves two scopings Spark's analyzer doesn't: correlation
+        # more than one scope deep, and projection aliases referenced from
+        # sibling scalar subqueries (reference join_queries.go nested-IN
+        # tests, column_alias_queries.go)
+        ("correlation",
+         lambda e, m, f: "UNRESOLVED_COLUMN" in m,
+         lambda e, s, lits: tp.resolve_projection_alias_in_subquery(
+             tp.flatten_correlated_in(s)), True),
+        # WITH RECURSIVE ... UNION (DISTINCT): Spark's native recursion is
+        # UNION ALL-only — run our driver-side fixpoint with per-round
+        # dedup instead (operators/recursive_cte.py; reference
+        # sql/plan/recursive_cte.go deduplicating union)
+        ("recursive_union",
+         lambda e, m, f: "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in m,
+         lambda e, s, lits: e._run_recursive_union(s, lits), True),
+        # MySQL truthiness: non-boolean WHERE/HAVING, a numeric
+        # searched-CASE or IF condition, or a non-boolean AND/OR/NOT operand
+        ("truthiness",
+         lambda e, m, f: (
+             "FILTER_NOT_BOOLEAN" in m
+             or ("UNEXPECTED_INPUT_TYPE" in m
+                 and ("CASE WHEN" in m or '"(IF(' in m or '"(NOT ' in m
+                      or " OR " in m or " AND " in m))
+             or (("BINARY_OP_DIFF_TYPES" in m or "BINARY_OP_WRONG_TYPE" in m)
+                 and (" AND " in m or " OR " in m))),
+         lambda e, s, lits: tp.wrap_truthy_operands(tp.wrap_truthy_if(
+             tp.wrap_truthy_case(tp.wrap_truthy_filters(s))), lits), True),
+    )
+
+    def _analyze(self, out: str, lits: list[str]) -> DataFrame:
+        """spark.sql of the transpiled masked text `out`, through the
+        `_RETRIES` table when the analyzer rejects it."""
+        final = unmask_literals(out, lits)
         try:
             return self.spark.sql(final)
-        except Exception as exc:
-            # MySQL truthiness retry: non-boolean WHERE/HAVING or a
-            # numeric searched-CASE condition — rewrite and re-run once
-            msg = str(exc)
-            retryable = (
-                "FILTER_NOT_BOOLEAN" in msg
-                or ("UNEXPECTED_INPUT_TYPE" in msg
-                    and ("CASE WHEN" in msg or '"(IF(' in msg
-                         or '"(NOT ' in msg
-                         or " OR " in msg or " AND " in msg))
-                or ("BINARY_OP_DIFF_TYPES" in msg
-                    and (" AND " in msg or " OR " in msg))
-                or ("BINARY_OP_WRONG_TYPE" in msg
-                    and (" AND " in msg or " OR " in msg))
-            )
-            if "MISSING_GROUP_BY" in msg:
-                # mixed aggregate + non-aggregate projection without GROUP
-                # BY — MySQL (sans ONLY_FULL_GROUP_BY functional-dependency
-                # satisfaction) evaluates the non-aggregates via ANY_VALUE
-                # over the single implicit group
-                if self._ungrouped_selects_allowed(final):
-                    from .dialect.transpiler import wrap_ungrouped_any_value
-                    rewritten = wrap_ungrouped_any_value(final)
-                    if rewritten != final:
-                        try:
-                            return self.spark.sql(rewritten)
-                        except Exception:  # noqa: BLE001
-                            pass
-            if ("UNRESOLVED_COLUMN" in msg
-                    and re.search(r"\bORDER\s+BY\b", final, re.I)
-                    and not re.search(r"\bGROUP\s+BY\b", final, re.I)
-                    and re.search(r"\b(?:SUM|AVG|COUNT|MIN|MAX|STDDEV\w*|"
-                                  r"VAR\w+|COLLECT_LIST|COLLECT_SET)\s*\(",
-                                  final, re.I)):
-                # aggregate query with no GROUP BY produces ONE row; MySQL
-                # accepts (and ignores) an ORDER BY on a source column
-                # Spark can no longer resolve — drop the clause
-                stripped = re.sub(
-                    r"\bORDER\s+BY\s+[^()]*?(?=\bLIMIT\b|\bINTO\b|;|$)",
-                    "", final, flags=re.I | re.S)
-                if stripped != final:
-                    try:
-                        return self.spark.sql(stripped)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "MISSING_AGGREGATION" in msg or (
-                    "UNRESOLVED_COLUMN" in msg
-                    and re.search(r"\bGROUP\s+BY\b|\bany_value\s*\(",
-                                  final, re.I)):
-                # MySQL accepts ungrouped columns only when sql_mode lacks
-                # ONLY_FULL_GROUP_BY, or when the group keys cover the
-                # table's PRIMARY KEY (functional dependency — reference
-                # analyzer validate_group_by); otherwise the Spark error
-                # IS the MySQL error
-                if self._ungrouped_selects_allowed(final):
-                    from .dialect.transpiler import wrap_ungrouped_any_value
-                    rewritten = wrap_ungrouped_any_value(final)
-                    if rewritten != final:
-                        try:
-                            return self.spark.sql(rewritten)
-                        except Exception:  # noqa: BLE001 — fall through
-                            pass           # to the correlation retries
-            if "UNRESOLVED_COLUMN" in msg and re.search(
-                    r"\bDISTINCT\b", final, re.I):
-                from .dialect.transpiler import order_by_expr_to_alias
-                rewritten = order_by_expr_to_alias(final)
-                if rewritten != final:
-                    try:
-                        return self.spark.sql(rewritten)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "DATA_DIFF_TYPES" in msg and re.search(
-                    r"\b(?:GREATEST|LEAST)\s*\(", final, re.I):
-                from .dialect.transpiler import lax_numeric_minmax
-                rewritten = lax_numeric_minmax(final)
-                if rewritten != final:
-                    try:
-                        return self.spark.sql(rewritten)
-                    except Exception:  # noqa: BLE001
-                        pass
-            if "DATA_DIFF_TYPES" in msg and re.search(r"\bIF\s*\(",
-                                                      final, re.I):
-                from .dialect.transpiler import boolean_if_branches_to_int
-                rewritten = boolean_if_branches_to_int(final)
-                if rewritten != final:
-                    return self.spark.sql(rewritten)
-            if "UNRESOLVED_COLUMN" in msg:
-                # MySQL resolves two scopings Spark's analyzer doesn't:
-                # correlation more than one scope deep, and projection
-                # aliases referenced from sibling scalar subqueries
-                # (reference join_queries.go nested-IN tests,
-                # column_alias_queries.go). Retry with the semantic-
-                # preserving rewrites; re-raise the original on no change.
-                from .dialect.transpiler import (
-                    flatten_correlated_in,
-                    resolve_projection_alias_in_subquery)
-                rewritten = resolve_projection_alias_in_subquery(
-                    flatten_correlated_in(final))
-                if rewritten != final:
-                    return self.spark.sql(rewritten)
-                raise
-            if "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in msg:
-                # WITH RECURSIVE ... UNION (DISTINCT): Spark's native
-                # recursion is UNION ALL-only — run our driver-side
-                # fixpoint with per-round dedup instead
-                # (operators/recursive_cte.py; reference
-                # sql/plan/recursive_cte.go deduplicating union)
-                out = self._run_recursive_union(final)
-                if out is not None:
-                    return out
-                raise
-            if not retryable:
-                raise
-            from .dialect.transpiler import (wrap_truthy_case,
-                                             wrap_truthy_filters,
-                                             wrap_truthy_if,
-                                             wrap_truthy_operands)
-            return self.spark.sql(wrap_truthy_operands(
-                wrap_truthy_if(wrap_truthy_case(wrap_truthy_filters(final)))))
+        except Exception as exc:  # noqa: BLE001 — matched by error class
+            msg, masked = str(exc), None
+            for _name, applies, rewrite, hard in self._RETRIES:
+                if not applies(self, msg, final):
+                    continue
+                if masked is None:  # hide the transpiler's own literals too
+                    masked = mask_into(out, lits)
+                retry = rewrite(self, masked, lits)
+                if isinstance(retry, DataFrame):
+                    return retry
+                if retry is None or retry == masked:
+                    if hard:
+                        raise
+                    continue
+                try:
+                    return self.spark.sql(unmask_literals(retry, lits))
+                except Exception:  # noqa: BLE001 — soft: next entry
+                    if hard:
+                        raise
+            raise
 
-    def _run_recursive_union(self, final: str) -> DataFrame | None:
+    def _run_recursive_union(self, masked: str,
+                             lits: list[str]) -> DataFrame | None:
         """WITH RECURSIVE name [(cols)] AS (anchor UNION recursive) tail —
         driver-side fixpoint with per-round dedup (reference
         sql/plan/recursive_cte.go; Spark only natively supports UNION
         ALL). Returns None when the statement shape isn't the single
         leading recursive CTE this handles."""
-        from .dialect.transpiler import _find_close, mask_literals
         from .operators.recursive_cte import recursive_cte
-        m = re.search(r"\bWITH\s+RECURSIVE\s+`?(\w+)`?\s*"
-                      r"(?:\(([^)]*)\))?\s*AS\s*(\()", final, re.I)
+        m = re.search(r"\bWITH\s+RECURSIVE\s+(\x00\d+\x00|\w+)\s*"
+                      r"(?:\(([^)]*)\))?\s*AS\s*(\()", masked, re.I)
         if not m:
             return None
-        name, collist = m.group(1), m.group(2)
-        close = _find_close(final, m.start(3))
-        if close < 0:
-            return None
-        body = final[m.start(3) + 1:close]
+        name = unmask_literals(m.group(1), lits).strip("`")
+        collist = m.group(2) and unmask_literals(m.group(2), lits)
+        close = _find_close_paren(masked, m.start(3))
+        body = masked[m.start(3) + 1:close]
         # excise the CTE definition; its result binds as a temp view so
         # every remaining reference (outer query, sibling CTEs, derived
         # tables) resolves against the materialized fixpoint
-        after = final[close + 1:].lstrip()
+        after = masked[close + 1:].lstrip()
         if after.startswith(","):  # further CTEs: re-open the WITH list
             after = "WITH " + after[1:].lstrip()
-        rest = final[:m.start()] + after
+        rest = masked[:m.start()] + after
         # split the body at the top-level UNION (not ALL)
-        masked, _ = mask_literals(body)
         depth, split_at, rec_start = 0, None, None
-        for um in re.finditer(r"[()]|\bUNION\b(\s+ALL\b)?", masked, re.I):
+        for um in re.finditer(r"[()]|\bUNION\b(\s+ALL\b)?", body, re.I):
             tok = um.group(0)
             if tok == "(":
                 depth += 1
@@ -1613,8 +1549,8 @@ class Engine:
                 break
         if split_at is None:
             return None
-        anchor_sql, rec_sql = body[:split_at], body[rec_start:]
-        anchor = self.spark.sql(anchor_sql)
+        anchor = self.spark.sql(unmask_literals(body[:split_at], lits))
+        rec_sql = unmask_literals(body[rec_start:], lits)
         if collist:
             cols = [c.strip().strip("`") for c in collist.split(",")]
             anchor = anchor.toDF(*cols)
@@ -1630,47 +1566,45 @@ class Engine:
                                max_iterations=256)
         result.createOrReplaceTempView(name)
         try:
-            return self.spark.sql(rest)
+            return self.spark.sql(unmask_literals(rest, lits))
         except Exception as exc:  # noqa: BLE001 — nested recursive CTEs
             if "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(exc):
-                return self._run_recursive_union(rest)
+                return self._run_recursive_union(rest, lits)
             raise
 
-    def _rewrite_lax_temporal(self, sql: str) -> str:
+    _FROM_TABLE = re.compile(r"\bFROM\s+(\x00\d+\x00|\w+)", re.I)
+
+    def _from_table(self, masked: str, lits: list[str]) -> TableState | None:
+        """The current database's table named by the first FROM, if any."""
+        fm = self._FROM_TABLE.search(masked)
+        return fm and self._db(None).get(
+            unmask_literals(fm.group(1), lits).strip("`"))
+
+    def _rewrite_lax_temporal(self, masked: str, lits: list[str]) -> str:
         """MySQL parses '/' (and '.') date separators in temporal
         comparisons (`date_col = '2019/12/31'` — reference
         sql/types/datetime.go lax parse); Spark's implicit string→date
         cast returns NULL. Normalize the literal when it compares against
         a DATE/TIMESTAMP column of the statement's FROM table."""
-        if "/" not in sql or "'" not in sql:
-            return sql
-        fm = re.search(r"\bFROM\s+[`]?(\w+)[`]?", sql, re.I)
-        if not fm:
-            return sql
-        ts = self._db(None).get(fm.group(1))
+        ts = self._from_table(masked, lits)
         if ts is None:
-            return sql
-        tcols = [c.name for c in ts.columns
-                 if c.spark_type.simpleString() in ("date", "timestamp")]
-        for cname in tcols:
-            pat = (rf"(\b{re.escape(cname)}\s*(?:=|!=|<>|<=|>=|<|>)\s*)"
-                   rf"'(\d{{4}})/(\d{{1,2}})/(\d{{1,2}})([^']*)'")
-            sql = re.sub(pat, lambda m: (f"{m.group(1)}'{m.group(2)}-"
-                                         f"{m.group(3)}-{m.group(4)}"
-                                         f"{m.group(5)}'"), sql, flags=re.I)
-        return sql
+            return masked
+        for c in ts.columns:
+            if c.spark_type.simpleString() not in ("date", "timestamp"):
+                continue
+            for m in re.finditer(rf"\b{re.escape(c.name)}\s*(?:=|!=|<>|<=|"
+                                 rf">=|<|>)\s*\x00(\d+)\x00", masked, re.I):
+                i = int(m.group(1))
+                lits[i] = re.sub(r"^'(\d{4})/(\d{1,2})/(\d{1,2})([^']*)'$",
+                                 r"'\1-\2-\3\4'", lits[i])
+        return masked
 
-    def _rewrite_cross_db(self, sql: str) -> str:
+    def _rewrite_cross_db(self, masked: str, lits: list[str]) -> str:
         """db-qualified table references (`db1.t1`, including the 3-part
         column form `db1.t1.i`) — Spark temp views are unqualified, so
         each referenced db.table binds a flat view and the reference text
         rewrites to it (reference: catalog-qualified resolution in
         sql/analyzer/resolve_tables.go)."""
-        if "." not in sql:
-            return sql
-        from .dialect.transpiler import mask_literals, unmask_literals
-        masked, lits = mask_literals(sql)
-        changed = False
         for db, tables in self.databases.items():
             if db.lower() not in masked.lower():
                 continue
@@ -1682,19 +1616,16 @@ class Engine:
                 if ts2.df is not None:
                     ts2.df.createOrReplaceTempView(flat)
                 masked = re.sub(pat, flat, masked, flags=re.I)
-                changed = True
-        return unmask_literals(masked, lits) if changed else sql
+        return masked
 
-    def _rewrite_unix_timestamp(self, masked: str) -> str:
+    def _rewrite_unix_timestamp(self, masked: str, lits: list[str]) -> str:
         """UNIX_TIMESTAMP(x) (reference sql/expression/function/
         unixtimestamp.go): the argument is a naive datetime interpreted
         in the SESSION time zone, and the result preserves the input's
-        fractional seconds as a DECIMAL. Runs on literal-masked text.
+        fractional seconds as a DECIMAL.
         Known divergence: TIMESTAMP columns are stored naive here, so a
         session-tz change between write and read shifts them like
         DATETIME (MySQL would pin the stored instant)."""
-        if not re.search(r"\bUNIX_TIMESTAMP\s*\(", masked, re.I):
-            return masked
         tz = str(self.sys_vars.get("time_zone", "SYSTEM"))
         pat = re.compile(r"\bUNIX_TIMESTAMP\s*\(", re.I)
         pos = 0
@@ -1702,48 +1633,66 @@ class Engine:
             m = pat.search(masked, pos)
             if not m:
                 return masked
-            from .dialect.transpiler import _find_close
-            close = _find_close(masked, m.end() - 1)
-            if close < 0:
-                return masked
+            close = _find_close_paren(masked, m.end() - 1)
             arg = masked[m.end():close].strip()
             if not arg:  # no-arg form: current epoch second (integer)
                 repl = "CAST(unix_timestamp() AS BIGINT)"
             else:
                 ts = f"to_timestamp({arg})"
                 if tz.upper() not in ("SYSTEM", "UTC", "+00:00", "+0:00"):
-                    ts = f"to_utc_timestamp({ts}, '{tz}')"
+                    ts = f"to_utc_timestamp({ts}, {self._put(tz, lits)})"
                 repl = (f"CAST(CAST(unix_micros({ts}) AS DECIMAL(26,6)) "
                         f"/ 1000000 AS DECIMAL(20,6))")
             masked = masked[:m.start()] + repl + masked[close + 1:]
             pos = m.start() + len(repl)
 
-    def _rewrite_enum_arith(self, sql: str) -> str:
+    def _rewrite_password_strength(self, masked: str,
+                                   lits: list[str]) -> str:
+        """validate_password_strength reads the validate_password.* policy
+        vars — thread the session's current values as extra arguments."""
+        vals = ", ".join(str(int(self.sys_vars.get(
+            f"validate_password.{k}", d))) for k, d in (
+            ("length", 8), ("number_count", 1),
+            ("mixed_case_count", 1), ("special_char_count", 1)))
+        pat = re.compile(r"\bVALIDATE_PASSWORD_STRENGTH\s*\(", re.I)
+        pos = 0
+        while True:
+            mm = pat.search(masked, pos)
+            if not mm:
+                return masked
+            close = _find_close_paren(masked, mm.end() - 1)
+            arg = masked[mm.end():close]
+            repl = f"validate_password_strength_policy({arg}, {vals})"
+            masked = masked[:mm.start()] + repl + masked[close + 1:]
+            pos = mm.start() + len(repl)
+
+    def _rewrite_enum_arith(self, masked: str, lits: list[str]) -> str:
         """MySQL evaluates an ENUM column in NUMERIC context as its
         1-based declaration ordinal ('' = 0) — `e + 0` is the standard
         ordinal idiom (reference sql/types/enum.go). Rewrite arithmetic
         on enum columns of the statement's FROM table."""
         fm = re.search(
-            r"\bFROM\s+[`]?(\w+)[`]?(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b|"
+            r"\bFROM\s+(\x00\d+\x00|\w+)(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b|"
             r"ORDER\b|HAVING\b|LIMIT\b|JOIN\b|ON\b|SET\b|LEFT\b|RIGHT\b|"
             r"INNER\b|CROSS\b|UNION\b|NATURAL\b|FOR\b|LOCK\b|INTO\b)"
             r"(\w+))?",
-            sql, re.I)
+            masked, re.I)
         if not fm:
-            return sql
-        ts = self._db(None).get(fm.group(1))
+            return masked
+        tname = unmask_literals(fm.group(1), lits).strip("`")
+        ts = self._db(None).get(tname)
         if ts is None:
-            return sql
+            return masked
         enum_cols = {c.name: c.enum_values for c in ts.columns
                      if c.enum_values}
         set_cols = {c.name: c.set_values for c in ts.columns
                     if c.set_values is not None}
         if not enum_cols and not set_cols:
-            return sql
+            return masked
         # Qualified references rewrite only when the qualifier is the
         # FROM table (or its alias) — a same-named column on another
         # table in the statement must not be touched.
-        ok_quals = {fm.group(1).lower()}
+        ok_quals = {tname.lower()}
         if fm.group(2):
             ok_quals.add(fm.group(2).lower())
 
@@ -1751,8 +1700,8 @@ class Engine:
             arr = ", ".join("'" + v.replace("'", "''") + "'" for v in vals)
 
             def num(ref: str) -> str:
-                return (f"COALESCE(array_position(array({arr}), {ref}),"
-                        f" 0)")
+                return mask_into(f"COALESCE(array_position(array({arr}), "
+                                 f"{ref}), 0)", lits)
             return num
 
         def set_num(vals):
@@ -1765,18 +1714,16 @@ class Engine:
 
             def num(ref: str) -> str:
                 pos = f"array_position(array({larr}), lower(__p))"
-                return (
+                return mask_into(
                     f"(CASE WHEN {ref} IS NULL THEN NULL ELSE "
                     f"aggregate(split({ref}, ','), 0L, (__a, __p) -> "
                     f"__a + IF({pos} > 0, shiftleft(1L, "
-                    f"CAST({pos} AS INT) - 1), 0L)) END)")
+                    f"CAST({pos} AS INT) - 1), 0L)) END)", lits)
             return num
 
         numexpr = {c: enum_num(v) for c, v in enum_cols.items()}
         numexpr.update({c: set_num(v) for c, v in set_cols.items()})
 
-        from .dialect.transpiler import mask_literals, unmask_literals
-        masked, lits = mask_literals(sql)
         for cname, num in numexpr.items():
             masked = re.sub(
                 rf"\b((\w+\.)?){cname}\s*([+\-*/])",
@@ -1816,60 +1763,60 @@ class Engine:
                            else f"{num((m.group(1) or '') + cname)} "
                            f"{m.group(3)} {m.group(4)}"),
                 masked)
-        return unmask_literals(masked, lits)
+        return masked
 
-    def _rewrite_enum_order(self, sql: str) -> str:
+    def _rewrite_enum_order(self, masked: str, lits: list[str]) -> str:
         """ENUM columns sort by declaration ordinal, not lexicographically
         (reference sql/types/enum.go:52 — r1 judge finding). Rewrite a bare
         enum column in ORDER BY to array_position(values, col)."""
-        fm = re.search(r"\bFROM\s+[`]?(\w+)[`]?", sql, re.I)
-        om = re.search(r"\bORDER\s+BY\b", sql, re.I)
-        if not fm or not om:
-            return sql
-        ts = self._db(None).get(fm.group(1))
-        if ts is None:
-            return sql
+        om = re.search(r"\bORDER\s+BY\b", masked, re.I)
+        ts = self._from_table(masked, lits)
+        if ts is None or not om:
+            return masked
         enum_cols = {c.name: c.enum_values for c in ts.columns if c.enum_values}
         set_cols = {c.name: c.set_values for c in ts.columns
                     if c.set_values is not None}
         if not enum_cols and not set_cols:
-            return sql
-        from .dialect.transpiler import mask_literals, unmask_literals
-        head, tail = sql[:om.start()], sql[om.start():]
-        tail, lits = mask_literals(tail)
+            return masked
+        head, tail = masked[:om.start()], masked[om.start():]
         for cname, vals in enum_cols.items():
-            if re.search(rf"\bAS\s+`?{re.escape(cname)}`?\b", head, re.I):
+            if re.search(rf"\bAS\s+`?{re.escape(cname)}`?\b",
+                         unmask_literals(head, lits), re.I):
                 # a projection alias shadows the enum column — ORDER BY
                 # names the alias (string order), not the table column
                 continue
             arr = ", ".join("'" + v.replace("'", "''") + "'" for v in vals)
             tail = re.sub(
-                rf"\b{cname}\b",
-                f"array_position(array({arr}), {cname})", tail)
+                rf"\b{cname}\b", mask_into(
+                    f"array_position(array({arr}), {cname})", lits), tail)
         for cname, vals in set_cols.items():
             # SET sorts by its bitmask value (reference sql/types/set.go)
             larr = ", ".join("'" + v.lower().replace("'", "''") + "'"
                              for v in vals)
             pos = f"array_position(array({larr}), lower(__p))"
             tail = re.sub(
-                rf"\b{cname}\b",
-                f"aggregate(split({cname}, ','), 0L, (__a, __p) -> "
-                f"__a + IF({pos} > 0, shiftleft(1L, CAST({pos} AS INT) "
-                f"- 1), 0L))", tail)
-        return head + unmask_literals(tail, lits)
+                rf"\b{cname}\b", mask_into(
+                    f"aggregate(split({cname}, ','), 0L, (__a, __p) -> "
+                    f"__a + IF({pos} > 0, shiftleft(1L, CAST({pos} AS INT) "
+                    f"- 1), 0L))", lits), tail)
+        return head + tail
 
     # AS OF time travel: `FROM t AS OF <version>` binds a historical
     # snapshot (reference sql/plan/versionable.go:19-24; versions are
     # 0-based statement commit ordinals).
-    _AS_OF = re.compile(
-        r"\b([`\w]+)\s+AS\s+OF\s+(?:(\d+)|(?:TIMESTAMP\s+)?'([^']+)')", re.I)
+    _AS_OF = re.compile(r"(\x00\d+\x00|\b\w+)\s+AS\s+OF\s+(?:(\d+)|"
+                        r"(?:TIMESTAMP\s+)?\x00(\d+)\x00)", re.I)
 
-    def _rewrite_as_of(self, sql: str) -> str:
+    def _rewrite_as_of(self, masked: str, lits: list[str]) -> str:
         """AS OF <ordinal> | AS OF [TIMESTAMP] '<ts>' — historical snapshot
         binding (reference sql/plan/versionable.go:19-24; dolt binds both
         commit ordinals and wall-clock timestamps)."""
         def repl(m: re.Match) -> str:
-            _, tbl = self._split_name(m.group(1))
+            when = m.group(3) and re.fullmatch(r"'([^']+)'",
+                                               lits[int(m.group(3))])
+            if m.group(2) is None and not when:
+                return m.group(0)
+            _, tbl = self._split_name(unmask_literals(m.group(1), lits))
             ts = self._table(tbl)
             if m.group(2) is not None:
                 version = int(m.group(2))
@@ -1879,7 +1826,7 @@ class Engine:
                         f"AS OF {version} does not exist")
             else:
                 import datetime as _dt
-                want = _dt.datetime.fromisoformat(m.group(3)).timestamp()
+                want = _dt.datetime.fromisoformat(when.group(1)).timestamp()
                 version = None
                 for i, committed in enumerate(ts.history_ts):
                     if committed <= want:
@@ -1887,12 +1834,12 @@ class Engine:
                 if version is None:
                     raise SqlError(
                         f"table {tbl!r} has no version at or before "
-                        f"{m.group(3)!r}")
+                        f"{when.group(1)!r}")
             view = f"{tbl}__asof_{version}"
             ts.history[version].createOrReplaceTempView(view)
             return view
 
-        return self._AS_OF.sub(repl, sql)
+        return self._AS_OF.sub(repl, masked)
 
     # information_schema synthesized from the engine catalog (reference
     # sql/information_schema/information_schema.go)
@@ -1918,22 +1865,22 @@ class Engine:
         r"check_constraints|parameters|processlist|engines|keywords)\b",
         re.I)
 
-    def _rewrite_information_schema(self, sql: str) -> str:
+    def _rewrite_information_schema(self, masked: str, lits: list[str]) -> str:
         if self.current_db == "information_schema":
             # USE information_schema: bare table names qualify implicitly
-            sql = self._INFO_BARE.sub(
+            masked = self._INFO_BARE.sub(
                 lambda m: f"{m.group(1)} information_schema."
-                          f"{m.group(2).lower()}", sql)
-        needed = {m.group(1).lower() for m in self._INFO_SCHEMA.finditer(sql)}
+                          f"{m.group(2).lower()}", masked)
+        needed = {m.group(1).lower()
+                  for m in self._INFO_SCHEMA.finditer(masked)}
         if not needed:
-            return sql
+            return masked
         if "schemata" in needed:
-            self.spark.createDataFrame(
-                [("def", d, "utf8mb4", "utf8mb4_0900_ai_ci")
-                 for d in sorted(self.databases)],
+            self._is_view("schemata", [
+                ("def", d, "utf8mb4", "utf8mb4_0900_ai_ci")
+                for d in sorted(self.databases)],
                 "CATALOG_NAME string, SCHEMA_NAME string, "
-                "DEFAULT_CHARACTER_SET_NAME string, DEFAULT_COLLATION_NAME string",
-            ).createOrReplaceTempView("information_schema__schemata")
+                "DEFAULT_CHARACTER_SET_NAME string, DEFAULT_COLLATION_NAME string")
         if "tables" in needed:
             # TABLE_ROWS is the ANALYZE estimate exactly as MySQL stores it
             # (reference sql/information_schema/tables.go rowCount from
@@ -1952,14 +1899,10 @@ class Engine:
                 for db, tables in sorted(self.databases.items())
                 for ts in tables.values()
             ]
-            self.spark.createDataFrame(
-                rows or [("def", self.current_db, None, None, None, None,
-                          None)],
+            self._is_view("tables", rows,
                 "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
                 "TABLE_TYPE string, ENGINE string, TABLE_ROWS bigint, "
-                "AUTO_INCREMENT bigint",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__tables")
+                "AUTO_INCREMENT bigint")
         if "columns" in needed:
             def _mysql_col_type(c) -> tuple[str, str]:
                 """(DATA_TYPE, COLUMN_TYPE) — MySQL spellings for ENUM/SET
@@ -2012,46 +1955,33 @@ class Engine:
                      f.dataType.simpleString())
                     for i, f in enumerate(fields)
                 ]
-            self.spark.createDataFrame(
-                rows or [(self.current_db, None, None, 0, None, None, None,
-                          None, None)],
+            self._is_view("columns", rows,
                 "TABLE_SCHEMA string, TABLE_NAME string, COLUMN_NAME string, "
                 "ORDINAL_POSITION int, DATA_TYPE string, IS_NULLABLE string, "
-                "COLUMN_KEY string, COLUMN_DEFAULT string, COLUMN_TYPE string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__columns")
+                "COLUMN_KEY string, COLUMN_DEFAULT string, COLUMN_TYPE string")
         if "views" in needed:
             names = [r.name for r in self.spark.catalog.listTables()
                      if r.tableType == "TEMPORARY"
                      and r.name not in {t for db in self.databases.values()
                                         for t in db}]
-            self.spark.createDataFrame(
-                [("def", self.current_db, v, "<definition>") for v in names]
-                or [("def", self.current_db, None, None)],
+            self._is_view("views", [
+                ("def", self.current_db, v, "<definition>") for v in names],
                 "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
-                "VIEW_DEFINITION string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__views")
+                "VIEW_DEFINITION string")
         if "routines" in needed:
-            self.spark.createDataFrame(
-                [(p.name, self.current_db, "PROCEDURE")
-                 for p in self.procedures.values()]
-                or [(None, self.current_db, None)],
-                "ROUTINE_NAME string, ROUTINE_SCHEMA string, ROUTINE_TYPE string",
-            ).filter("ROUTINE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__routines")
+            self._is_view("routines", [
+                (p.name, self.current_db, "PROCEDURE")
+                for p in self.procedures.values()],
+                "ROUTINE_NAME string, ROUTINE_SCHEMA string, ROUTINE_TYPE string")
         if "triggers" in needed:
             rows = [
                 (tr.name, tr.event, tbl, self.current_db, tr.timing, tr.body)
                 for tbl, trigs in self.triggers.items() for tr in trigs
             ]
-            self.spark.createDataFrame(
-                rows or [(None, None, None, self.current_db, None, None)],
+            self._is_view("triggers", rows,
                 "TRIGGER_NAME string, EVENT_MANIPULATION string, "
                 "EVENT_OBJECT_TABLE string, TRIGGER_SCHEMA string, "
-                "ACTION_TIMING string, ACTION_STATEMENT string",
-            ).filter("TRIGGER_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__triggers")
+                "ACTION_TIMING string, ACTION_STATEMENT string")
         if "key_column_usage" in needed:
             rows = []
             for db, tables in sorted(self.databases.items()):
@@ -2063,13 +1993,10 @@ class Engine:
                                 zip(fk.columns, fk.parent_columns), 1):
                             rows.append((f"fk_{ts.name}", db, ts.name, c, i,
                                          fk.parent_table, p))
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None, 0, None, None)],
+            self._is_view("key_column_usage", rows,
                 "CONSTRAINT_NAME string, TABLE_SCHEMA string, TABLE_NAME string, "
                 "COLUMN_NAME string, ORDINAL_POSITION int, "
-                "REFERENCED_TABLE_NAME string, REFERENCED_COLUMN_NAME string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__key_column_usage")
+                "REFERENCED_TABLE_NAME string, REFERENCED_COLUMN_NAME string")
         if "table_constraints" in needed:
             rows = []
             for db, tables in sorted(self.databases.items()):
@@ -2090,13 +2017,11 @@ class Engine:
                             else f"{ts.name}_chk_{i + 1}"
                         enf = "YES" if ts.check_enforced_at(i) else "NO"
                         rows.append((nm, db, ts.name, "CHECK", enf))
-            self.spark.createDataFrame(
-                [("def", r[1]) + r for r in rows] or [(None,) * 7],
+            self._is_view("table_constraints", [
+                ("def", r[1]) + r for r in rows],
                 "CONSTRAINT_CATALOG string, CONSTRAINT_SCHEMA string, "
                 "CONSTRAINT_NAME string, TABLE_SCHEMA string, "
-                "TABLE_NAME string, CONSTRAINT_TYPE string, ENFORCED string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__table_constraints")
+                "TABLE_NAME string, CONSTRAINT_TYPE string, ENFORCED string")
         if "statistics" in needed:
             rows = []
             for db, tables in sorted(self.databases.items()):
@@ -2107,37 +2032,29 @@ class Engine:
                         for seq, c in enumerate(ix.columns, 1):
                             rows.append((db, ts.name, 0 if ix.unique else 1,
                                          ix.name, seq, c))
-            self.spark.createDataFrame(
-                rows or [(None, None, 0, None, 0, None)],
+            self._is_view("statistics", rows,
                 "TABLE_SCHEMA string, TABLE_NAME string, NON_UNIQUE int, "
-                "INDEX_NAME string, SEQ_IN_INDEX int, COLUMN_NAME string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__statistics")
+                "INDEX_NAME string, SEQ_IN_INDEX int, COLUMN_NAME string")
         if "character_sets" in needed:
             from .admin import _CHARSETS
-            self.spark.createDataFrame(
-                [(c[0], c[2], c[1], c[3]) for c in _CHARSETS],
+            self._is_view("character_sets", [
+                (c[0], c[2], c[1], c[3]) for c in _CHARSETS],
                 "CHARACTER_SET_NAME string, DEFAULT_COLLATE_NAME string, "
-                "DESCRIPTION string, MAXLEN int",
-            ).createOrReplaceTempView("information_schema__character_sets")
+                "DESCRIPTION string, MAXLEN int")
         if "collations" in needed:
             from .admin import _COLLATIONS
-            self.spark.createDataFrame(
-                [(c[0], c[1], c[2], c[3] or "No") for c in _COLLATIONS],
+            self._is_view("collations", [
+                (c[0], c[1], c[2], c[3] or "No") for c in _COLLATIONS],
                 "COLLATION_NAME string, CHARACTER_SET_NAME string, ID int, "
-                "IS_DEFAULT string",
-            ).createOrReplaceTempView("information_schema__collations")
+                "IS_DEFAULT string")
         if "events" in needed:
             rows = [(ev.name, self.current_db,
                      "ONE TIME" if ev.at_ts is not None else "RECURRING",
                      "ENABLED" if ev.enabled else "DISABLED")
                     for ev in self.events.values()]
-            self.spark.createDataFrame(
-                rows or [(None, self.current_db, None, None)],
+            self._is_view("events", rows,
                 "EVENT_NAME string, EVENT_SCHEMA string, EVENT_TYPE string, "
-                "STATUS string",
-            ).filter("EVENT_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__events")
+                "STATUS string")
         if "column_statistics" in needed:
             # histograms from ANALYZE ... UPDATE HISTOGRAM (reference
             # sql/stats; MySQL stores them exactly here)
@@ -2152,12 +2069,9 @@ class Engine:
                             "number-of-buckets-specified": max(
                                 len(bounds) - 1, 0),
                         })))
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None)],
+            self._is_view("column_statistics", rows,
                 "SCHEMA_NAME string, TABLE_NAME string, COLUMN_NAME string, "
-                "HISTOGRAM string",
-            ).filter("SCHEMA_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__column_statistics")
+                "HISTOGRAM string")
         if "user_privileges" in needed:
             rows = []
             for key, grants in self.grants.items():
@@ -2166,15 +2080,12 @@ class Engine:
                     for p in privs:
                         rows.append((f"'{u}'@'{h}'", "def", p,
                                      "YES" if opt else "NO"))
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None)],
+            self._is_view("user_privileges", rows,
                 "GRANTEE string, TABLE_CATALOG string, PRIVILEGE_TYPE string, "
-                "IS_GRANTABLE string",
-            ).filter("GRANTEE IS NOT NULL").createOrReplaceTempView(
-                "information_schema__user_privileges")
+                "IS_GRANTABLE string")
         self._info_schema_extras(needed)
-        sql = self._INFO_SCHEMA.sub(
-            lambda m: f"information_schema__{m.group(1).lower()}", sql
+        masked = self._INFO_SCHEMA.sub(
+            lambda m: f"information_schema__{m.group(1).lower()}", masked
         )
         # MySQL's information_schema identifier columns compare
         # case-insensitively (utf8mb4_0900_ai_ci): WHERE TABLE_NAME='t2'
@@ -2186,8 +2097,8 @@ class Engine:
         # names fold only when every relation in the statement is an
         # information_schema__* view; qualified names fold when the
         # qualifier is such a view or an alias bound to one.
-        rels = re.findall(r"\b(?:FROM|JOIN)\s+`?([\w.]+)`?"
-                          r"(?:\s+(?:AS\s+)?(\w+))?", sql, re.I)
+        rels = re.findall(r"\b(?:FROM|JOIN)\s+(\x00\d+\x00|[\w.]+)"
+                          r"(?:\s+(?:AS\s+)?(\w+))?", masked, re.I)
         is_aliases = {a.lower() for r, a in rels
                       if a and r.lower().startswith("information_schema__")}
         is_aliases |= {r.lower() for r, _ in rels
@@ -2198,17 +2109,43 @@ class Engine:
         def _ci_eq(m: re.Match) -> str:
             qual = (m.group(1) or "").rstrip(".").lower()
             ok = (all_info if not qual else qual in is_aliases)
-            if not ok:
+            if not ok or lits[int(m.group(4)[1:-1])][:1] != "'":
                 return m.group(0)
             return (f"lower({m.group(1) or ''}{m.group(2)}) {m.group(3)} "
                     f"lower({m.group(4)})")
-        sql = re.sub(
+        masked = re.sub(
             r"(\w+\.)?\b(TABLE_NAME|TABLE_SCHEMA|CONSTRAINT_SCHEMA|"
             r"CONSTRAINT_NAME|COLUMN_NAME|INDEX_NAME|SCHEMA_NAME|"
             r"ROUTINE_SCHEMA|ROUTINE_NAME|TRIGGER_NAME|EVENT_NAME)"
-            r"\s*(=|<>|!=)\s*('(?:[^']|'')*')",
-            _ci_eq, sql, flags=re.I)
-        return sql
+            r"\s*(=|<>|!=)\s*(\x00\d+\x00)",
+            _ci_eq, masked, flags=re.I)
+        return masked
+
+    # The SELECT passes over masked text, in order: (name, trigger, fn).
+    # A pass runs only when its trigger occurs in the masked statement;
+    # fn(eng, masked, lits) returns the new masked text.
+    _PASSES = (
+        ("vars", re.compile("@"), _substitute_vars),
+        ("session_fns", _SESSION_FN, _session_fns),
+        ("unix_timestamp", re.compile(r"\bUNIX_TIMESTAMP\s*\(", re.I),
+         _rewrite_unix_timestamp),
+        ("password_strength",
+         re.compile(r"\bVALIDATE_PASSWORD_STRENGTH\s*\(", re.I),
+         _rewrite_password_strength),
+        ("information_schema",
+         re.compile("information_schema|" + _INFO_BARE.pattern, re.I),
+         _rewrite_information_schema),
+        ("cross_db", re.compile(r"\."), _rewrite_cross_db),
+        ("lax_temporal", re.compile(r"[=<>]\s*\x00"), _rewrite_lax_temporal),
+        ("as_of", re.compile(r"\bAS\s+OF\b", re.I), _rewrite_as_of),
+        ("json_table", re.compile(r"\bJSON_TABLE\s*\(", re.I),
+         _rewrite_json_table),
+        ("match_against", re.compile(r"\bMATCH\b", re.I),
+         _rewrite_match_against),
+        ("enum_order", re.compile(r"\bORDER\s+BY\b", re.I),
+         _rewrite_enum_order),
+        ("enum_arith", _FROM_TABLE, _rewrite_enum_arith),
+    )
 
     # Extended information_schema surface (reference
     # sql/information_schema/information_schema.go registers ~45 tables;
@@ -2304,16 +2241,15 @@ class Engine:
             "CONSTRAINT_NAME string, TABLE_NAME string, ENGINE_ATTRIBUTE string", []),
     }
 
+    def _is_view(self, name: str, rows: list, schema: str) -> None:
+        """Bind information_schema.<name> to `rows` under a DDL schema."""
+        self.spark.createDataFrame(rows, schema).createOrReplaceTempView(
+            f"information_schema__{name}")
+
     def _info_schema_extras(self, needed: set[str]) -> None:
         for name in needed & set(self._IS_STATIC):
             schema, rows = self._IS_STATIC[name]
-            # parse the DDL, don't count commas: "decimal(9,6)" has one
-            # inside the type (profiling crashed on a 5-tuple vs 4 fields)
-            n_cols = len(T.StructType.fromDDL(schema).fields)
-            df = self.spark.createDataFrame(rows or [(None,) * n_cols], schema)
-            if not rows:
-                df = df.filter(df[df.columns[0]].isNotNull())
-            df.createOrReplaceTempView(f"information_schema__{name}")
+            self._is_view(name, rows, schema)
         if "referential_constraints" in needed:
             rows = [
                 (db, f"{ts.name}_ibfk_{i + 1}", "PRIMARY", fk.on_update,
@@ -2322,13 +2258,10 @@ class Engine:
                 for ts in tables.values()
                 for i, fk in enumerate(ts.foreign_keys)
             ]
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None, None, None, None)],
+            self._is_view("referential_constraints", rows,
                 "CONSTRAINT_SCHEMA string, CONSTRAINT_NAME string, "
                 "UNIQUE_CONSTRAINT_NAME string, UPDATE_RULE string, "
-                "DELETE_RULE string, TABLE_NAME string, REFERENCED_TABLE_NAME string",
-            ).filter("CONSTRAINT_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__referential_constraints")
+                "DELETE_RULE string, TABLE_NAME string, REFERENCED_TABLE_NAME string")
         if "check_constraints" in needed:
             rows = []
             for db, tables in sorted(self.databases.items()):
@@ -2339,43 +2272,33 @@ class Engine:
                             else f"{ts.name}_chk_{i + 1}"
                         rows.append(
                             ("def", db, nm, _check_clause_mysql(ts, chk)))
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None)],
+            self._is_view("check_constraints", rows,
                 "CONSTRAINT_CATALOG string, CONSTRAINT_SCHEMA string, "
-                "CONSTRAINT_NAME string, CHECK_CLAUSE string",
-            ).filter("CONSTRAINT_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__check_constraints")
+                "CONSTRAINT_NAME string, CHECK_CLAUSE string")
         if "parameters" in needed:
             rows = [
                 (p.name, i + 1, mode.upper(), pname, ptype)
                 for p in self.procedures.values()
                 for i, (mode, pname, ptype) in enumerate(p.params)
             ]
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None, None)],
+            self._is_view("parameters", rows,
                 "SPECIFIC_NAME string, ORDINAL_POSITION int, PARAMETER_MODE string, "
-                "PARAMETER_NAME string, DATA_TYPE string",
-            ).filter("SPECIFIC_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__parameters")
+                "PARAMETER_NAME string, DATA_TYPE string")
         if "partitions" in needed:
             rows = [
                 ("def", db, ts.name, None, None)
                 for db, tables in sorted(self.databases.items())
                 for ts in tables.values()
             ]
-            self.spark.createDataFrame(
-                rows or [(None, None, None, None, None)],
+            self._is_view("partitions", rows,
                 "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
-                "PARTITION_NAME string, PARTITION_METHOD string",
-            ).filter("TABLE_NAME IS NOT NULL").createOrReplaceTempView(
-                "information_schema__partitions")
+                "PARTITION_NAME string, PARTITION_METHOD string")
         if "processlist" in needed:
-            self.spark.createDataFrame(
-                [(1, "root", "localhost", self.current_db, "Query", 0,
-                  "executing", None)],
+            self._is_view("processlist", [
+                (1, "root", "localhost", self.current_db, "Query", 0,
+                 "executing", None)],
                 "ID bigint, USER string, HOST string, DB string, "
-                "COMMAND string, TIME int, STATE string, INFO string",
-            ).createOrReplaceTempView("information_schema__processlist")
+                "COMMAND string, TIME int, STATE string, INFO string")
 
     _LOAD_DATA = re.compile(
         r"^LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s+'([^']+)'\s+"
@@ -2525,7 +2448,7 @@ class Engine:
             for c in ts.columns:
                 if c.name in assigns:
                     out_cols.append(
-                        F.expr(transpile_select(assigns[c.name])).alias(c.name))
+                        F.expr(self._transpile(assigns[c.name])).alias(c.name))
                 elif c.name in read_names:
                     out_cols.append(F.col(c.name))
             df = df.select(*out_cols)
@@ -2606,7 +2529,7 @@ class Engine:
                 toks = p.split(None, 1)
                 params.append(f"{toks[0].strip('`')} {self._udf_sql_type(toks[1])}")
         rtype = self._udf_sql_type(m.group(3))
-        body = transpile_select(m.group(4).strip().rstrip(";"))
+        body = self._transpile(m.group(4).strip().rstrip(";"))
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({', '.join(params)}) "
             f"RETURNS {rtype} RETURN {body}"
@@ -2723,7 +2646,7 @@ class Engine:
             _, vname = self._split_name(m.group(2))
             if m.group(1) and self.spark.catalog.tableExists(vname):
                 return OkResult(0)  # IF NOT EXISTS: keep the existing view
-            body = transpile_select(self._substitute_vars(m.group(4)))
+            body = self._transpile(on_text(self._substitute_vars, m.group(4)))
             cols = m.group(3) or ""
             self.spark.sql(
                 f"CREATE OR REPLACE TEMP VIEW {vname}{cols} AS {body}")
@@ -2798,8 +2721,8 @@ class Engine:
                 out = df
                 for c in cols:
                     if c.name.lower() not in sel_names:
-                        fill = (_default_col(c) if c.default
-                                else F.lit(None)).cast(c.spark_type)
+                        fill = (_default_col(c, self._pipes_as_concat)
+                                if c.default else F.lit(None)).cast(c.spark_type)
                         out = out.withColumn(c.name, fill)
                     elif c.name.lower() in decl_by:
                         out = out.withColumn(
@@ -3038,13 +2961,13 @@ class Engine:
                                     r"\s*YEAR\b", col_rest, re.I)))
                 if generated is not None:
                     # ALTER ADD generated column backfills over existing rows
-                    fill = F.expr(transpile_select(generated)).cast(dtype)
+                    fill = F.expr(self._transpile(generated)).cast(dtype)
                 elif "AUTO_INCREMENT" in rest_up:
                     fill = F.row_number().over(
                         Window.orderBy(F.monotonically_increasing_id())
                     ).cast(dtype)
                 elif default:
-                    fill = F.expr(transpile_select(
+                    fill = F.expr(self._transpile(
                         _normalize_default(default))).cast(dtype)
                 elif not nullable:
                     # implicit default backfill (reference column default
@@ -3205,10 +3128,9 @@ class Engine:
                 # existing rows must satisfy a newly-added ENFORCED check
                 # (reference sql/plan/alter_check.go validation pass)
                 if enforced and ts.df is not None:
-                    from .dialect.transpiler import transpile_select as _tp
+                    cond = self._transpile(clause)
                     bad = ts.df.filter(
-                        f"NOT ({_tp(clause)}) AND ({_tp(clause)}) "
-                        f"IS NOT NULL").count()
+                        f"NOT ({cond}) AND ({cond}) IS NOT NULL").count()
                     if bad:
                         raise SqlError(
                             f"CHECK constraint violated by {bad} existing "
@@ -3465,14 +3387,13 @@ class Engine:
     )
 
     def _q_insert(self, sql: str) -> OkResult | DataFrame:
-        sql = self._substitute_vars(sql)
+        sql = on_text(self._substitute_vars, sql)
         self._gen_default_ok = set()
         # Search for trailing RETURNING / ON DUPLICATE KEY UPDATE on
         # literal-masked text so a string literal containing those words
         # (e.g. VALUES ('see RETURNING docs')) can't truncate the
         # statement mid-literal; slice the masked text and unmask each
         # piece (same literal-safety fix as INTO @var).
-        from .dialect.transpiler import mask_literals, unmask_literals
         masked, _lits = mask_literals(sql)
         returning = None
         rm = re.search(r"\bRETURNING\s+(.+)$", masked, re.I | re.S)
@@ -3544,7 +3465,7 @@ class Engine:
                         rtxt = rtxt[1:-1]
                     selects.append("SELECT " + rtxt)
                 new_rows = self.spark.sql(
-                    transpile_select(" UNION ALL ".join(selects)))
+                    self._transpile(" UNION ALL ".join(selects)))
             else:
                 try:
                     new_rows = self.spark.sql(
@@ -3569,7 +3490,7 @@ class Engine:
                         new_rows = self.spark.sql(union_sql)
                     except Exception:  # noqa: BLE001
                         new_rows = self.spark.sql(
-                            transpile_select(union_sql))
+                            self._transpile(union_sql))
         result = self._insert_df(ts, new_rows, col_list, verb, ignore,
                                  odku, src_cols=src_cols)
         if returning is not None and getattr(self, "_last_inserted",
@@ -3577,7 +3498,7 @@ class Engine:
             # INSERT ... RETURNING (MariaDB/Dolt extension the reference
             # supports): project the inserted rows
             return self._last_inserted.selectExpr(
-                *[transpile_select(e.strip())
+                *[self._transpile(e.strip())
                   for e in _split_top_level(returning)])
         return result
 
@@ -3657,7 +3578,6 @@ class Engine:
         drop those cells so the recompute pass supplies the value
         (reference issue #9428). When the table is all-generated the cell
         becomes NULL and the column is whitelisted for recompute."""
-        from .dialect.transpiler import mask_literals, unmask_literals
         self._gen_default_ok = set()
         masked, lits = mask_literals(values_sql)
         rows = [r.strip() for r in _split_top_level(masked)]
@@ -3694,7 +3614,6 @@ class Engine:
         NOT NULL column (reference sql/plan/insert.go resolveDefaults).
         Substituted textually per position before the VALUES relation is
         built."""
-        from .dialect.transpiler import mask_literals, unmask_literals
 
         def col_of(n: str):
             nl = n.lower()
@@ -3932,7 +3851,8 @@ class Engine:
                         F.lit(None).cast(c.spark_type).alias(c.name))
                     deferred_defaults.append(c)
                 else:
-                    select_cols.append(_default_col(c).alias(c.name))
+                    select_cols.append(_default_col(
+                        c, self._pipes_as_concat).alias(c.name))
             elif c.enum_values and not c.nullable:
                 # NOT NULL ENUM without DEFAULT: implicit default is the
                 # first enumeration value (MySQL)
@@ -3957,7 +3877,8 @@ class Engine:
         # row, so a default can read a provided column anywhere in the row
         # and the result of any default evaluated before it
         for c in deferred_defaults:
-            incoming = incoming.withColumn(c.name, _default_col(c))
+            incoming = incoming.withColumn(
+                c.name, _default_col(c, self._pipes_as_concat))
         incoming = self._enum_set_normalize(ts, incoming)
         if gen_cols:
             incoming = self._compute_generated(ts, incoming)
@@ -3994,7 +3915,7 @@ class Engine:
                 if not ts.check_enforced_at(ci):
                     continue
                 keep = keep & F.coalesce(
-                    F.expr(transpile_select(chk)).cast("boolean"),
+                    F.expr(self._transpile(chk)).cast("boolean"),
                     F.lit(True))
             incoming = incoming.filter(keep)
             for fk in ts.foreign_keys:
@@ -4124,10 +4045,7 @@ class Engine:
         if uuid_cols:
             row = incoming.select(uuid_cols[0]).first()
             if row is not None:
-                # reference last_insert_uuid.go: the uuid() DEFAULT
-                # materialized by the last insert, session-scoped
-                from .functions import wkb_fns
-                wkb_fns.LAST_INSERT_UUID[0] = row[0]
+                self.last_insert_uuid = row[0]
         self._apply_insert_triggers(ts, incoming, "AFTER")
         return OkResult(max(affected, 0), last_id)
 
@@ -4194,7 +4112,7 @@ class Engine:
                               if cd is not None and cd.default else "NULL")
         for c in ts.columns:
             if c.name in assigns:
-                newv = F.expr(transpile_select(assigns[c.name]))
+                newv = F.expr(self._transpile(assigns[c.name]))
                 newv = (self._lenient_cast(c, newv) if lenient
                         else newv.cast(c.spark_type))
                 out_cols.append(
@@ -4217,7 +4135,7 @@ class Engine:
                 if not ts.check_enforced_at(ci):
                     continue
                 viol = viol | ~F.coalesce(
-                    F.expr(transpile_select(chk)).cast("boolean"),
+                    F.expr(self._transpile(chk)).cast("boolean"),
                     F.lit(True))
             out = out.withColumn("__odku_viol", viol & F.col("__odku_m"))
             out = out.select(*[
@@ -4570,7 +4488,7 @@ class Engine:
             if c.generated is not None:
                 df = df.withColumn(
                     c.name,
-                    F.expr(transpile_select(c.generated))
+                    F.expr(self._transpile(c.generated))
                     .cast(c.spark_type))
         return df.select(*[c.name for c in ts.columns], *extra)
 
@@ -4688,7 +4606,7 @@ class Engine:
             for item in _split_top_level(order_sql):
                 it = item.strip()
                 desc = bool(re.search(r"\s+DESC$", it, re.I))
-                expr = F.expr(transpile_select(
+                expr = F.expr(self._transpile(
                     re.sub(r"\s+(ASC|DESC)$", "", it, flags=re.I)))
                 order_cols.append(expr.desc() if desc else expr.asc())
             vict = vict.orderBy(*order_cols)
@@ -4709,7 +4627,7 @@ class Engine:
         return f"({cols}) IN ({tuples})"
 
     def _q_update(self, sql: str, cte_prefix: str = "") -> OkResult:
-        sql = self._substitute_vars(sql)
+        sql = on_text(self._substitute_vars, sql)
         if re.search(r"UPDATE\s+IGNORE\s+", sql, re.I) is None and re.search(
             r"\bJOIN\b", sql.split(" SET ")[0] if " SET " in sql else sql, re.I
         ):
@@ -4721,7 +4639,6 @@ class Engine:
             r"(UPDATE\s+(?:IGNORE\s+)?)(?!IGNORE\b)([`\w.]+)\s+(?:AS\s+)?"
             r"(?!SET\b)([`\w]+)\s+(SET\s+.*)$", sql, re.I | re.S)
         if am:
-            from .dialect.transpiler import mask_literals, unmask_literals
             alias = am.group(3).strip("`")
             masked, lits = mask_literals(am.group(4))
             masked = re.sub(rf"\b{re.escape(alias)}\.", "", masked)
@@ -4736,7 +4653,6 @@ class Engine:
             # self-qualified references (UPDATE test SET ... WHERE
             # test.pk = 0) — fold the table qualifier away, outside
             # string literals
-            from .dialect.transpiler import mask_literals, unmask_literals
             tail = sql[m.end(2):]
             masked, lits = mask_literals(tail)
             masked = re.sub(rf"(?<![\w`.]){re.escape(ts.name)}\.", "",
@@ -4766,12 +4682,13 @@ class Engine:
                 # SET clause is an assignment, never a comparison
                 prefix = f"SELECT * FROM {ts.name} WHERE "
                 try:
-                    rewritten = self._rewrite_enum_arith(prefix + wtxt)
+                    rewritten = on_text(self._rewrite_enum_arith,
+                                        prefix + wtxt)
                     if rewritten.startswith(prefix):
                         wtxt = rewritten[len(prefix):]
                 except SqlError:
                     pass
-            where = transpile_select(wtxt) if wtxt else "true"
+            where = self._transpile(wtxt) if wtxt else "true"
         if limit_n is not None:
             where = self._limit_victims_where(ts, where, order_sql,
                                               limit_n, offset_n)
@@ -4814,10 +4731,10 @@ class Engine:
         if n_match and not ignore:
             self._check_int_bounds(
                 ts, matched,
-                {c: F.expr(transpile_select(e)) for c, e in assigns.items()})
+                {c: F.expr(self._transpile(e)) for c, e in assigns.items()})
 
         def _assigned(c):
-            expr = F.expr(transpile_select(assigns[c.name]))
+            expr = F.expr(self._transpile(assigns[c.name]))
             if not ignore:
                 return expr.cast(c.spark_type)
             return self._lenient_cast(c, expr)
@@ -4907,7 +4824,7 @@ class Engine:
                 types = {c.name: c.spark_type for c in ts.columns}
                 mapping = matched.select(
                     *[F.col(p).alias(f"__old_{p}") for p in needed],
-                    *[((F.expr(transpile_select(assigns[p]))
+                    *[((F.expr(self._transpile(assigns[p]))
                         .cast(types[p]))
                        if p in assigns else F.col(p)).alias(f"__new_{p}")
                       for p in needed],
@@ -5028,7 +4945,7 @@ class Engine:
             if not ts.check_enforced_at(ci):
                 continue
             viol = viol | ~F.coalesce(
-                F.expr(transpile_select(chk)).cast("boolean"), F.lit(True))
+                F.expr(self._transpile(chk)).cast("boolean"), F.lit(True))
         if ts.primary_key and set(ts.primary_key) & set(assigns):
             orig = base.select(*[
                 F.col(k).alias(f"__orig_{k}") for k in ts.primary_key
@@ -5156,7 +5073,7 @@ class Engine:
                 qual, col = first_qual, lhs
             groups.setdefault(qual.lower(), {})[col] = rhs.strip()
             quals[qual.lower()] = qual
-        where_sql = f" WHERE {transpile_select(where)}" if where else ""
+        where_sql = f" WHERE {self._transpile(where)}" if where else ""
         # stage every target's updates and new state, validate all
         # (CHECK/FK), then commit — a violation on ANY target must leave
         # EVERY table untouched (MySQL statement atomicity)
@@ -5180,14 +5097,14 @@ class Engine:
             pk = list(ts.primary_key)
             pk_select = ", ".join(f"{qual}.{k} AS {k}" for k in pk)
             new_select = ", ".join(
-                f"({transpile_select(expr)}) AS __new_{c}"
+                f"({self._transpile(expr)}) AS __new_{c}"
                 for c, expr in assigns.items())
-            cte_sql = (transpile_select(cte_prefix) + " ") if cte_prefix \
+            cte_sql = (self._transpile(cte_prefix) + " ") if cte_prefix \
                 else ""
             updates = self.spark.sql(
                 f"{cte_sql}SELECT {pk_select}, {new_select}, "
                 f"1 AS __upd_match FROM "
-                f"{transpile_select(from_clause)}{where_sql}"
+                f"{self._transpile(from_clause)}{where_sql}"
             ).dropDuplicates(pk)
             if offset_n:
                 updates = updates.offset(offset_n)
@@ -5272,7 +5189,7 @@ class Engine:
                 if not ts.check_enforced_at(ci):
                     continue
                 viol = viol | ~F.coalesce(
-                    F.expr(transpile_select(chk)).cast("boolean"),
+                    F.expr(self._transpile(chk)).cast("boolean"),
                     F.lit(True))
             if n and ts.checks:
                 bad = out.join(updates.select(*pk), pk, "left_semi") \
@@ -5323,9 +5240,9 @@ class Engine:
         return self._q_delete_inner(sql, cte_prefix)
 
     def _q_delete_inner(self, sql: str, cte_prefix: str = "") -> OkResult:
-        sql = self._substitute_vars(sql)
+        sql = on_text(self._substitute_vars, sql)
         try:  # ENUM/SET numeric comparisons in the WHERE (s = 2 → bitmask)
-            sql = self._rewrite_enum_arith(sql)
+            sql = on_text(self._rewrite_enum_arith, sql)
         except SqlError:
             pass
         mu = re.match(
@@ -5348,7 +5265,7 @@ class Engine:
         if not m:
             raise SqlError(f"cannot parse DELETE: {sql[:60]!r}")
         ts = self._table(m.group(1))
-        where = transpile_select(m.group(2)) if m.group(2) else "true"
+        where = self._transpile(m.group(2)) if m.group(2) else "true"
         if cte_prefix or re.search(r"\(\s*SELECT\b", where, re.I):
             # WHERE carries a subquery (or the statement has a CTE
             # prefix): DataFrame.filter can't host those — route the
@@ -5392,7 +5309,6 @@ class Engine:
         (alias→table map, qualifier of the first relation). Paren-aware:
         top-level comma pieces first (JSON_TABLE args survive), then
         join operands, then "table [AS] alias"."""
-        from .dialect.transpiler import mask_literals
         masked_refs, _ = mask_literals(refs)
         alias_map: dict[str, str] = {}
         first_qual: str | None = None
@@ -5809,8 +5725,8 @@ class Engine:
         return value
 
     def _eval_scalar(self, expr: str) -> Any:
-        expr = self._substitute_vars(expr)
-        row = self.spark.sql(f"SELECT {transpile_select(expr)} AS v").first()
+        expr = on_text(self._substitute_vars, expr)
+        row = self.spark.sql(f"SELECT {self._transpile(expr)} AS v").first()
         return row["v"]
 
     def _q_show(self, sql: str) -> DataFrame:

@@ -258,15 +258,6 @@ def _schema_report(schema, doc):
 
 # ---- session stragglers ------------------------------------------------------
 
-# Engine DML sets this when an inserted row materializes a uuid() DEFAULT
-# (mirrors engine.last_insert_id; reference last_insert_uuid.go).
-LAST_INSERT_UUID: list = [None]
-
-
-def last_insert_uuid() -> Column:
-    return F.lit(LAST_INSERT_UUID[0]).cast("string")
-
-
 def _datetime(x, fmt=None) -> Column:
     """DATETIME(expr) — MySQL's cast-to-datetime constructor function
     (reference registry.go NewDatetime)."""
@@ -319,7 +310,6 @@ FUNCTIONS = {
         _c(a), _c(b)),
     "json_schema_validation_report": lambda s, d: F.udf(
         _schema_report, T.StringType())(_c(s), _c(d)),
-    "last_insert_uuid": last_insert_uuid,
     "datetime": _datetime,
     "values": _values,
     "json_table": _json_table,

@@ -12,7 +12,7 @@ fingerprinting (normalized-md5 + min-shingle "winnowing-lite").
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .hashing import md5_int60
@@ -74,20 +74,6 @@ def stopword_ratio_of_tokens(toks: Column,
     token-array column (see langid_of_tokens for why)."""
     hits = F.size(F.filter(toks, _in_set(stopwords)))
     return F.round(hits / F.size(toks), 6)
-
-
-def stopword_ratio(col: Column, stopwords: tuple[str, ...]) -> Column:
-    """Fraction of tokens that are stopwords, rounded for cross-engine hash."""
-    return stopword_ratio_of_tokens(tokens(col), stopwords)
-
-
-def stopword_ratio_sql(expr: str, stopwords: tuple[str, ...]) -> str:
-    inlist = ", ".join(f"'{w}'" for w in stopwords)
-    toks = tokens_sql(expr)
-    return (
-        f"ROUND(len(list_filter({toks}, x -> x IN ({inlist})))"
-        f" / CAST(len({toks}) AS DOUBLE), 6)"
-    )
 
 
 def quality_score_of_tokens(col: Column, toks: Column) -> Column:
@@ -237,35 +223,9 @@ def min_shingle_fingerprint_of_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def min_shingle_fingerprint(col: Column, k: int = 3) -> Column:
-    """Inline-text form; prefer min_shingle_fingerprint_of_tokens (the
-    inline tokens() re-evaluates per shingle position)."""
-    return min_shingle_fingerprint_of_tokens(tokens(col), k)
-
-
 def min_shingle_fingerprint_sql(expr: str, k: int = 3) -> str:
     sh = shingles_sql(expr, k)
     return (
         f"list_aggregate(list_transform({sh}, "
         f"s -> ('0x' || substr(md5(s), 1, 15))::BIGINT), 'min')"
-    )
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach all text-analysis columns at once."""
-    c = F.col(text_col)
-    # Tokenize once into a column so the shingle lambda does not re-run the
-    # split per shingle position (see shingles_of_tokens).
-    return (
-        df.withColumn("_toks", tokens(c))
-        .select(
-            *df.columns,
-            token_count_of_tokens(F.col("_toks")).alias("n_tokens"),
-            bpe_token_count(c).alias("n_bpe_tokens"),
-            langid_of_tokens(F.col("_toks")).alias("pred_lang"),
-            quality_score_of_tokens(c, F.col("_toks")).alias("quality"),
-            fingerprint_md5(c).alias("fp_md5"),
-            min_shingle_fingerprint_of_tokens(
-                F.col("_toks")).alias("fp_shingle"),
-        )
     )

@@ -18,7 +18,7 @@ physical plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
@@ -38,7 +38,3 @@ def write_bucketed(df: DataFrame, table_name: str, bucket_col: str,
         .sortBy(bucket_col)
         .saveAsTable(table_name)
     )
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

@@ -3,6 +3,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from bench import HEADLINE
 from go_mysql_server_spark.session import build_session
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -41,20 +42,8 @@ def oracle():
 # sweeps. `pytest -o addopts=` runs everything, as before.
 
 # Bench headline set (the driver's perf surface) — always in the default
-# tier.
-_FAST_HEADLINE = {
-    "tpch_q1_pricing_summary", "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume", "tpch_q18_large_volume_customer",
-    "agg_count_distinct", "window_row_number_topn_per_group",
-    "events_sessionization", "dedup_minhash_lsh", "dedup_simhash",
-    "similarity_topk_cosine", "text_features", "events_funnel",
-    "multimodal_decode", "vocab_document_frequency",
-    "tpch_q2_min_cost_supplier", "tpch_q9_product_type_profit",
-    "pipeline_domain_mix", "pipeline_cluster_keep_best",
-    "pipeline_quality_rules", "pipeline_sequence_packing",
-    "pipeline_char_lm_score", "similarity_ivf_pq_search",
-    "pipeline_decontaminate",
-}
+# tier; read from bench.py so the two cannot drift apart.
+_FAST_HEADLINE = set(HEADLINE)
 
 # Queries rewritten in r9/r10 — the driver-verification-debt cohort
 # (VERDICT r9 "Next round" #1); their oracle rows stay in the default tier.

@@ -840,18 +840,121 @@ def test_time_duration_functions(eng):
     assert got == [("12:15:30", "08:44:30", "09:05:07", 3630)]
 
 
-def test_only_full_group_by_enforced(eng):
-    """ONLY_FULL_GROUP_BY with MySQL's functional-dependency refinement
-    (r5): grouping by the PRIMARY KEY makes every column of the table
-    selectable (MySQL 5.7.5+ dependency detection; reference
-    sql/analyzer/rules.go:55) — the engine resolves it via an any_value
-    retry. Grouping by a NON-unique column still rejects ungrouped
-    selects, matching MySQL 8's default mode."""
-    got = rows(eng.query(
-        "SELECT s, COUNT(*) AS c FROM mytable GROUP BY i ORDER BY s"))
-    assert got == [("first row", 1), ("second row", 1), ("third row", 1)]
-    with pytest.raises(Exception, match="(?i)group|aggregate|resolved"):
-        eng.query("SELECT i, COUNT(*) FROM niltable GROUP BY b")
+# The analysis-retry table (Engine._RETRIES), one case per entry in table
+# order, each asserting its rows and how many analyses it cost; then the
+# hard entries whose rewrite cannot help, where the original Spark error
+# class surfaces. `missing_aggregation` is ONLY_FULL_GROUP_BY with MySQL's
+# functional-dependency refinement (r5): grouping by the PRIMARY KEY makes
+# every column of the table selectable (MySQL 5.7.5+ dependency detection;
+# reference sql/analyzer/rules.go:55); grouping by a NON-unique column
+# still rejects ungrouped selects, matching MySQL 8's default mode.
+_RETRY_CASES = [
+    ("ungrouped_any_value", "",
+     "SELECT s, COUNT(*) AS c FROM rt WHERE i = 1", [("a", 1)], 2),
+    ("aggregate_order_by", None,
+     "SELECT COUNT(*) AS c FROM rt ORDER BY s", [(3,)], 2),
+    ("missing_aggregation", None,
+     "SELECT s, COUNT(*) AS c FROM mytable GROUP BY i ORDER BY s",
+     [("first row", 1), ("second row", 1), ("third row", 1)], 2),
+    ("distinct_order_alias", None,
+     "SELECT DISTINCT i * 2 AS x FROM rt ORDER BY i * 2",
+     [(2,), (4,), (6,)], 2),
+    ("lax_minmax", None,
+     "SELECT GREATEST(1, 2, '9', 'foo999') AS c", [(9.0,)], 2),
+    ("if_int_branches", None,
+     "SELECT IF(i > 1, FALSE, i) AS c FROM rt ORDER BY i",
+     [(1,), (0,), (0,)], 2),
+    ("correlation", None,
+     "SELECT 1 AS a, (SELECT a) AS b FROM rt WHERE i = 1", [(1, 1)], 2),
+    ("recursive_union", None,
+     "WITH RECURSIVE c(n) AS (SELECT 1 UNION SELECT n + 1 FROM c "
+     "WHERE n < 3) SELECT n FROM c ORDER BY n", [(1,), (2,), (3,)], 6),
+    ("truthiness", None,
+     "SELECT i FROM rt WHERE d AND i > 1 ORDER BY i", [(2,), (3,)], 2),
+    ("only_full_group_by", None,
+     "SELECT s, COUNT(*) AS c FROM rt WHERE i = 1", "MISSING_GROUP_BY", 1),
+    ("only_full_group_by_grouped", None,
+     "SELECT s, COUNT(*) AS c FROM rt GROUP BY d", "MISSING_AGGREGATION", 1),
+    ("if_int_branches_unhelped", None,
+     "SELECT IF(i > 1, array(1), 'x') AS c FROM rt", "DATA_DIFF_TYPES", 1),
+    ("correlation_unhelped", None,
+     "SELECT nosuch FROM rt", "UNRESOLVED_COLUMN", 1),
+    ("recursive_union_unhelped", None,
+     "WITH RECURSIVE a AS (SELECT 1 AS n), b AS (SELECT n FROM a UNION "
+     "SELECT n + 1 FROM b WHERE n < 3) SELECT * FROM b",
+     "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE", 1),
+    ("truthiness_unhelped", None,
+     "SELECT i FROM rt WHERE array(1) AND i > 1", "BINARY_OP_DIFF_TYPES", 2),
+]
+
+
+@pytest.mark.parametrize(("sql_mode", "sql", "want", "analyses"),
+                         [c[1:] for c in _RETRY_CASES],
+                         ids=[c[0] for c in _RETRY_CASES])
+def test_analysis_retry_table(eng, monkeypatch, sql_mode, sql, want,
+                              analyses):
+    eng.query("CREATE TABLE rt (i BIGINT PRIMARY KEY, s VARCHAR(20), "
+              "d DOUBLE)")
+    eng.query("INSERT INTO rt VALUES (1, 'a', 0.0), (2, 'b', 1.5), "
+              "(3, 'b', 2.5)")
+    if sql_mode is not None:
+        eng.query(f"SET sql_mode = '{sql_mode}'")
+    real, seen = eng.spark, []
+
+    class Counting:
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+        def sql(self, text, *args, **kwargs):
+            seen.append(text)
+            return real.sql(text, *args, **kwargs)
+
+    monkeypatch.setattr(eng, "spark", Counting())
+    if isinstance(want, str):
+        with pytest.raises(Exception, match=want):
+            eng.query(sql)
+    else:
+        assert rows(eng.query(sql)) == want
+    assert len(seen) == analyses, seen
+
+
+def test_sql_mode_stays_with_its_connection(spark):
+    """Two DB-API connections, one Engine each: A under PIPES_AS_CONCAT,
+    B under the default mode, where `||` is OR. A's statement is paused
+    after Engine.query has started it and before it transpiles, and B
+    runs a whole statement meanwhile; A must still concatenate."""
+    import threading
+
+    from go_mysql_server_spark import dbapi
+
+    a, b = dbapi.connect(spark), dbapi.connect(spark)
+    a.cursor().execute("SET sql_mode = 'PIPES_AS_CONCAT'")
+    paused, resume = threading.Event(), threading.Event()
+    select = a._engine._q_select
+
+    def paused_select(sql):
+        paused.set()
+        assert resume.wait(60)
+        return select(sql)
+
+    a._engine._q_select = paused_select
+    got = {}
+
+    def run_a():
+        try:
+            got["a"] = a.cursor().execute("SELECT 'a' || 'b' AS c").fetchall()
+        finally:
+            paused.set()
+
+    thread = threading.Thread(target=run_a)
+    thread.start()
+    try:
+        assert paused.wait(60)
+        got["b"] = b.cursor().execute("SELECT 'a' || 'b' AS c").fetchall()
+    finally:
+        resume.set()
+        thread.join(60)
+    assert got == {"a": [("ab",)], "b": [(False,)]}
 
 
 def test_group_by_with_rollup_sql(eng):

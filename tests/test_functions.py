@@ -289,3 +289,8 @@ def test_last_insert_uuid_engine(spark):
     got = eng.query("SELECT LAST_INSERT_UUID() AS u").collect()[0]["u"]
     stored = eng.query("SELECT id FROM tu").collect()[0]["id"]
     assert got == stored and len(got) == 36
+    # session state: another engine on the same SparkSession has not
+    # inserted anything
+    other = Engine(spark)
+    assert other.query("SELECT LAST_INSERT_UUID() AS u").collect()[0]["u"] \
+        is None

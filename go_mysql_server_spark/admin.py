@@ -518,64 +518,29 @@ def q_analyze(eng, sql: str):
 # ---- indexes ----------------------------------------------------------------
 
 def create_index(eng, sql: str):
+    """CREATE [UNIQUE|FULLTEXT|SPATIAL] INDEX binds the index element ALTER
+    TABLE ADD INDEX binds. A FULLTEXT index is materialized now and kept
+    through DML (reference sql/fulltext/fulltext.go); the others are
+    bookkeeping, as Spark pushdown/pruning replace index lookups."""
     from .engine import OkResult, SqlError
-    m = re.match(r"CREATE\s+(UNIQUE\s+|FULLTEXT\s+|SPATIAL\s+)?INDEX\s+"
-                 r"(?:IF\s+NOT\s+EXISTS\s+)?"
-                 r"[`]?(\w+)[`]?\s*(?:USING\s+(?:HASH|BTREE)\s*)?"
-                 r"ON\s+([`\w.]+)\s*\(([^)]*)\)"
-                 r"(?:\s+(?:USING\s+(?:HASH|BTREE)|(?:IN)?VISIBLE|"
-                 r"COMMENT\s+\S+))*\s*$", sql, re.I)
+    m = re.match(r"CREATE\s+(?:(UNIQUE|FULLTEXT|SPATIAL)\s+)?INDEX\s+"
+                 r"(?:IF\s+NOT\s+EXISTS\s+)?([`]?\w+[`]?)\s*"
+                 r"(?:USING\s+\w+\s*)?ON\s+([`\w.]+)\s*(\(.*)$",
+                 sql, re.I | re.S)
     if not m:
-        # functional index (CREATE INDEX i ON t ((LOWER(name))),
-        # ((c1*10)) …): balanced-paren key list — advisory bookkeeping
-        # like plain indexes (Spark plans expressions directly)
-        fm = re.match(
-            r"CREATE\s+(UNIQUE\s+|FULLTEXT\s+|SPATIAL\s+)?INDEX\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?[`]?(\w+)[`]?\s*"
-            r"(?:USING\s+(?:HASH|BTREE)\s*)?ON\s+([`\w.]+)\s*(\()", sql,
-            re.I)
-        if fm:
-            depth, i = 0, fm.start(4)
-            while i < len(sql):
-                if sql[i] == "(":
-                    depth += 1
-                elif sql[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            if depth == 0:
-                ts = eng._table(fm.group(3))
-                kind = (fm.group(1) or "").strip().upper()
-                ts.indexes.append(IndexDef(
-                    fm.group(2),
-                    (sql[fm.start(4) + 1:i].strip(),),
-                    unique=kind == "UNIQUE", kind="BTREE"))
-                return OkResult(0, info="functional index recorded "
-                                "(advisory)")
         raise SqlError(f"cannot parse CREATE INDEX: {sql[:60]!r}")
-    ts = eng._table(m.group(3))
-    cols = tuple(c.strip().strip("`").split("(")[0] for c in m.group(4).split(","))
-    kind = (m.group(1) or "").strip().upper()
-    if kind == "FULLTEXT":
-        # materialize the postings index now and maintain it through DML
-        # (reference sql/fulltext/fulltext.go CreateFulltextIndexes)
-        eng._ft_create(ts, m.group(2), cols)
-        ts.indexes.append(IndexDef(m.group(2), cols, kind="FULLTEXT"))
-        return OkResult(0, info="fulltext index materialized")
-    ts.indexes.append(IndexDef(m.group(2), cols, unique=kind == "UNIQUE",
-                               kind="SPATIAL" if kind == "SPATIAL" else "BTREE"))
-    return OkResult(
-        0, info="index recorded (advisory: Spark pushdown/pruning replace lookups)")
+    kind = (m.group(1) or "").upper()
+    eng._add_element(eng._table(m.group(3)),
+                     f"{kind} INDEX {m.group(2)} {m.group(4)}".strip())
+    return OkResult(0, info="fulltext index materialized"
+                    if kind == "FULLTEXT" else "index recorded (advisory)")
 
 
 def drop_index(eng, sql: str):
     from .engine import OkResult
     m = re.match(r"DROP\s+INDEX\s+[`]?(\w+)[`]?\s+ON\s+([`\w.]+)", sql, re.I)
     if m:
-        ts = eng._table(m.group(2))
-        ts.indexes = [ix for ix in ts.indexes if ix.name != m.group(1)]
-        ts.fulltext = [fx for fx in ts.fulltext if fx.name != m.group(1)]
+        eng._drop_index(eng._table(m.group(2)), m.group(1))
     return OkResult(0)
 
 

@@ -466,17 +466,43 @@ def _default_col(c, pipes_as_concat: bool) -> "F.Column":
     return expr.cast(c.spark_type)
 
 
-def _rename_in_col_exprs(ts, old: str, new: str) -> None:
-    """A column rename follows into OTHER columns' stored DEFAULT and
-    GENERATED expressions (MySQL rewrites the stored definition; reference
-    alter_table.go RenameColumn + enginetest 'Column referenced with name
-    change')."""
-    pat = rf"(?<![`\w]){re.escape(old)}(?![`\w])"
-    for c in ts.columns:
-        if c.default and c.default.strip().startswith("("):
-            c.default = re.sub(pat, new, c.default)
-        if c.generated:
-            c.generated = re.sub(pat, new, c.generated)
+def _key_parts(body: str) -> tuple[str, ...]:
+    """A key-part list — `a(10), b DESC, (LOWER(c))` — as column names: a
+    prefix length and ASC/DESC drop, and an expression part keeps its text
+    (a functional index)."""
+    parts = []
+    for part in _split_top_level(body):
+        m = re.fullmatch(r"(?:`([^`]+)`|(\w+))\s*(?:\(\s*\d+\s*\))?"
+                         r"(?:\s+(?:ASC|DESC))?", part, re.I)
+        parts.append((m.group(1) or m.group(2)) if m else part)
+    return tuple(parts)
+
+
+def _index_name(indexes, first: str) -> str:
+    """MySQL's name for an unnamed index: its first column (for an
+    expression part, functional_index), suffixed _2, _3, … on a clash."""
+    base = first if re.fullmatch(r"\w+", first) else "functional_index"
+    taken = {ix.name for ix in indexes}
+    name, n = base, 2
+    while name in taken:
+        name, n = f"{base}_{n}", n + 1
+    return name
+
+
+_POSITION = re.compile(r"\b(?:(FIRST)|AFTER\s+[`]?(\w+)[`]?)\s*$", re.I)
+
+
+def _column_position(columns, definition: str) -> int | None:
+    """Where the FIRST / AFTER c ending a column definition puts the
+    column in `columns`; None without one. An unknown AFTER column
+    appends."""
+    pm = _POSITION.search(definition)
+    if not pm:
+        return None
+    if pm.group(1):
+        return 0
+    names = [c.name for c in columns]
+    return names.index(pm.group(2)) + 1 if pm.group(2) in names else len(names)
 
 
 def _default_references(c, colnames: set) -> bool:
@@ -2780,131 +2806,330 @@ class Engine:
 
     # ON DELETE / ON UPDATE may appear in either order (MySQL grammar)
     _FK_DEF = re.compile(
-        r"FOREIGN\s+KEY\s*\(([^)]*)\)\s*REFERENCES\s+([`\w.]+)\s*\(([^)]*)\)"
+        r"FOREIGN\s+KEY\s*(?:[`]?\w+[`]?\s*)?\(([^)]*)\)\s*"
+        r"REFERENCES\s+([`\w.]+)\s*\(([^)]*)\)"
         r"(?:\s+ON\s+(?:DELETE\s+(CASCADE|RESTRICT|SET\s+NULL|NO\s+ACTION)"
         r"|UPDATE\s+(CASCADE|RESTRICT|SET\s+NULL|NO\s+ACTION))){0,2}",
         re.I,
     )
+    # A table element opens with one of these words; a column definition
+    # never does, since a bare column name cannot be a reserved word.
+    _ELEMENT = re.compile(r"(?:CONSTRAINT|PRIMARY|UNIQUE|KEY|INDEX|FULLTEXT"
+                          r"|SPATIAL|FOREIGN|CHECK)\b", re.I)
+    _INDEX_DEF = re.compile(
+        r"(PRIMARY\s+KEY|UNIQUE|FULLTEXT|SPATIAL)?\s*(?:KEY|INDEX)?\s*"
+        r"(?:`([^`]+)`|(?!USING\b)(\w+))?\s*(?:USING\s+\w+\s*)?\(", re.I)
 
     def _parse_table_body(self, tbl: str, body: str) -> TableState:
-        columns: list[ColumnDef] = []
-        pk: tuple[str, ...] = ()
-        checks: list[str] = []
-        check_names: list = []
-        check_enforced: list = []
-        fks: list[ForeignKey] = []
-        indexes: list = []
+        """CREATE TABLE's parenthesized body: column definitions and
+        table elements, bound in declaration order."""
+        ts = TableState(tbl, [])
         for item in _split_top_level(body):
-            up = item.upper()
-            if up.startswith("PRIMARY KEY"):
-                cols = item[item.index("("):].strip("() ")
-                pk = tuple(c.strip().strip("`") for c in cols.split(","))
+            if self._ELEMENT.match(item):
+                self._add_element(ts, item)
                 continue
-            if up.startswith(("UNIQUE", "KEY", "INDEX", "FULLTEXT", "SPATIAL",
-                              "CONSTRAINT", "FOREIGN KEY")):
-                fm = self._FK_DEF.search(item)
-                if fm:
-                    _, parent = self._split_name(fm.group(2))
-                    fks.append(ForeignKey(
-                        tuple(c.strip().strip("`") for c in fm.group(1).split(",")),
-                        parent,
-                        tuple(c.strip().strip("`") for c in fm.group(3).split(",")),
-                        (fm.group(4) or "RESTRICT").upper().replace("NO ACTION", "RESTRICT"),
-                        (fm.group(5) or "RESTRICT").upper().replace("NO ACTION", "RESTRICT"),
-                    ))
-                    continue
-                cm = re.search(
-                    r"CHECK\s*\((.*)\)\s*(NOT\s+ENFORCED|ENFORCED"
-                    r"|/\*!\d+\s+NOT\s+ENFORCED\s*\*/)?\s*$",
-                    item, re.I | re.S)
-                if cm:
-                    checks.append(_strip_outer_parens(cm.group(1)))
-                    cn = re.match(
-                        r"CONSTRAINT\s+[`]?(?!CHECK\b)(\w+)[`]?", item,
+            col, elements = self._parse_column(item)
+            ts.columns.append(col)
+            for el in elements:
+                self._add_element(ts, el)
+        return ts
+
+    def _parse_column(self, item: str) -> tuple[ColumnDef, list[str]]:
+        """One column definition → (the column, the table elements its
+        inline PRIMARY KEY / UNIQUE / CHECK attributes declare)."""
+        cm = re.match(r"(?:`([^`]+)`|(\w+))\s+(.*)$", item.strip(), re.S)
+        if not cm:
+            raise SqlError(f"cannot parse column def: {item!r}")
+        name, rest = cm.group(1) or cm.group(2), cm.group(3)
+        dtype, vals, bounds = _parse_type(rest)
+        enum_vals, set_vals = _split_enum_set(vals)
+        up = rest.upper()
+        col = ColumnDef(
+            name, dtype, "NOT NULL" not in up,
+            _canon_default(_extract_default(rest), dtype, bounds),
+            "AUTO_INCREMENT" in up, enum_vals, bounds, _parse_generated(rest),
+            set_values=set_vals, char_length=_char_len_of(rest),
+            fsp=_fsp_of(rest), is_year=bool(re.match(r"\s*YEAR\b", rest, re.I)))
+        elements = ([f"PRIMARY KEY (`{name}`)"] if "PRIMARY KEY" in up
+                    else [f"UNIQUE (`{name}`)"] if re.search(r"\bUNIQUE\b", up)
+                    else [])
+        ckm = re.search(r"(?:CONSTRAINT\s+[`]?\w+[`]?\s+)?CHECK\s*\(", rest,
                         re.I)
-                    check_names.append(cn.group(1) if cn else None)
-                    check_enforced.append(
-                        "NOT ENFORCED" not in (cm.group(2) or "").upper())
-                    continue
-                im = re.match(
-                    r"(UNIQUE\s+|FULLTEXT\s+|SPATIAL\s+)?(?:KEY|INDEX)?"
-                    r"\s*[`]?(\w*)[`]?\s*\(([^)]*)\)",
-                    item, re.I)
-                if im:
-                    from .admin import IndexDef
-                    idx_cols = tuple(c.strip().strip("`").split("(")[0]
-                                     for c in im.group(3).split(","))
-                    ikind = (im.group(1) or "").strip().upper()
-                    indexes.append(IndexDef(
-                        im.group(2) or f"idx_{len(indexes)}", idx_cols,
-                        unique=ikind == "UNIQUE",
-                        kind=ikind if ikind in ("FULLTEXT", "SPATIAL")
-                        else "BTREE"))
-                continue
-            if up.startswith("CHECK"):
-                op = item.index("(")
-                close = _find_close_paren(item, op)
-                checks.append(_strip_outer_parens(item[op + 1:close]))
-                check_names.append(None)
-                check_enforced.append("NOT ENFORCED" not in up)
-                continue
-            cm = re.match(r"(?:`([^`]+)`|(\w+))\s+(.*)$", item, re.S)
-            if not cm:
-                raise SqlError(f"cannot parse column def: {item!r}")
-            cname, rest = cm.group(1) or cm.group(2), cm.group(3)
-            dtype, enum_vals, bounds = _parse_type(rest)
-            rest_up = rest.upper()
-            nullable = "NOT NULL" not in rest_up
-            auto_inc = "AUTO_INCREMENT" in rest_up
-            default = _canon_default(_extract_default(rest), dtype, bounds)
-            generated = _parse_generated(rest)
-            if "PRIMARY KEY" in rest_up:
-                pk = (cname,)
-            elif re.search(r"\bUNIQUE\b", rest_up):
-                # column-attribute UNIQUE creates a single-column unique
-                # index (MySQL shorthand)
-                from .admin import IndexDef
-                indexes.append(IndexDef(cname, (cname,), unique=True))
-            enum_vals, set_vals = _split_enum_set(enum_vals)
-            # column-attribute CHECK: `c1 INT CHECK (c1 > 10)` /
-            # `c2 INT CONSTRAINT nm CHECK (c2 > 0)` registers a
-            # table-level check (MySQL folds them together)
-            ckm = re.search(r"CHECK\s*\(", rest, re.I)
-            if ckm:
-                cclose = _find_close_paren(rest, ckm.end() - 1)
-                checks.append(_strip_outer_parens(rest[ckm.end():cclose]))
-                cnm = re.search(
-                    r"CONSTRAINT\s+[`]?(?!CHECK\b)(\w+)[`]?\s+CHECK\b",
-                    rest, re.I)
-                check_names.append(cnm.group(1) if cnm else None)
-                check_enforced.append(
-                    not re.search(r"\)\s*NOT\s+ENFORCED", rest, re.I))
-            columns.append(ColumnDef(cname, dtype, nullable, default, auto_inc,
-                                     enum_vals, bounds, generated,
-                                     set_values=set_vals,
-                                     char_length=_char_len_of(rest),
-                                     fsp=_fsp_of(rest),
-                                     is_year=bool(re.match(
-                                         r"\s*YEAR\b", rest, re.I))))
-        if pk:
-            for c in columns:
-                if c.name in pk:
+        if ckm:
+            elements.append(rest[ckm.start():])
+        return col, elements
+
+    def _add_element(self, ts: TableState, item: str) -> None:
+        """Bind one table element — PRIMARY KEY, UNIQUE / KEY / INDEX /
+        FULLTEXT / SPATIAL, FOREIGN KEY or CHECK, each with an optional
+        CONSTRAINT name — to `ts`. CREATE TABLE, ALTER TABLE and CREATE
+        INDEX all bind through here (reference ddl.go, alter_table.go,
+        create_index.go). On a table with rows, a new ENFORCED check is
+        validated against them and a FULLTEXT index is materialized."""
+        from .admin import IndexDef
+        cm = re.match(r"CONSTRAINT(?:\s+[`]?(?!(?:PRIMARY|UNIQUE|FOREIGN|"
+                      r"CHECK)\b)(\w+)[`]?)?\s*", item, re.I)
+        symbol = cm.group(1) if cm else None
+        body = item[cm.end():] if cm else item
+        if re.match(r"CHECK\s*\(", body, re.I):
+            op = body.index("(")
+            close = _find_close_paren(body, op)
+            clause = _strip_outer_parens(body[op + 1:close])
+            enforced = not re.match(r"\s*(?:/\*!\d+\s+)?NOT\s+ENFORCED",
+                                    body[close + 1:], re.I)
+            if enforced and ts.df is not None:
+                # existing rows must satisfy a new ENFORCED check
+                # (reference sql/plan/alter_check.go validation pass)
+                cond = self._transpile(clause)
+                bad = ts.df.filter(
+                    f"NOT ({cond}) AND ({cond}) IS NOT NULL").count()
+                if bad:
+                    raise SqlError(f"CHECK constraint violated by {bad} "
+                                   f"existing row(s)")
+            ts.checks.append(clause)
+            ts.check_names.append(symbol or ts.next_check_name())
+            ts.check_enforced.append(enforced)
+            return
+        fm = self._FK_DEF.match(body)
+        if fm:
+            on_delete, on_update = (
+                (a or "RESTRICT").upper().replace("NO ACTION", "RESTRICT")
+                for a in fm.group(4, 5))
+            ts.foreign_keys.append(ForeignKey(
+                _key_parts(fm.group(1)), self._split_name(fm.group(2))[1],
+                _key_parts(fm.group(3)), on_delete, on_update))
+            return
+        im = self._INDEX_DEF.match(body)
+        if not im:
+            raise SqlError(f"cannot parse table element: {item[:60]!r}")
+        cols = _key_parts(body[im.end():_find_close_paren(body, im.end() - 1)])
+        kind = " ".join((im.group(1) or "").upper().split())
+        if kind == "PRIMARY KEY":
+            ts.primary_key = cols
+            for c in ts.columns:
+                if c.name in cols:
                     c.nullable = False
-        # MySQL auto-names unnamed checks {table}_chk_{n} in declaration
-        # order (information_schema joins rely on the name being present)
-        n_auto = 0
-        for i, nm in enumerate(check_names):
-            if nm is None:
-                n_auto += 1
-                check_names[i] = f"{tbl}_chk_{n_auto}"
-        return TableState(tbl, columns, pk, checks, fks, indexes=indexes,
-                          check_names=check_names,
-                          check_enforced=check_enforced)
+            return
+        name = (im.group(2) or im.group(3) or symbol
+                or _index_name(ts.indexes, cols[0]))
+        if kind == "FULLTEXT" and ts.df is not None:
+            self._ft_create(ts, name, cols)
+        ts.indexes.append(IndexDef(
+            name, cols, unique=kind == "UNIQUE",
+            kind=kind if kind in ("FULLTEXT", "SPATIAL") else "BTREE"))
+
+    def _rename_column(self, ts: TableState, old: str, new: str) -> None:
+        """RENAME COLUMN / CHANGE: the new name follows into the keys,
+        indexes, FOREIGN KEYs (this table's and those referencing it),
+        CHECKs and other columns' DEFAULT / GENERATED expressions, as
+        MySQL rewrites every stored reference (reference alter_table.go
+        RenameColumn, enginetest 'Column referenced with name change')."""
+        def ren(cols):
+            return tuple(new if c == old else c for c in cols)
+
+        pat = rf"(?<![`\w]){re.escape(old)}(?![`\w])"
+        for c in ts.columns:
+            if c.name == old:
+                c.name = new
+            if c.default and c.default.strip().startswith("("):
+                c.default = re.sub(pat, new, c.default)
+            if c.generated:
+                c.generated = re.sub(pat, new, c.generated)
+        ts.df = ts.df.withColumnRenamed(old, new)
+        ts.primary_key = ren(ts.primary_key)
+        ts.checks = [re.sub(pat, new, chk) for chk in ts.checks]
+        for ix in ts.indexes + ts.fulltext:
+            ix.columns = ren(ix.columns)
+        for fx in ts.fulltext:
+            fx.key = new if fx.key == old else fx.key
+        for fk in ts.foreign_keys:
+            fk.columns = ren(fk.columns)
+        for tables in self.databases.values():
+            for other in tables.values():
+                for fk in other.foreign_keys:
+                    if fk.parent_table == ts.name:
+                        fk.parent_columns = ren(fk.parent_columns)
+
+    def _drop_column(self, ts: TableState, name: str) -> None:
+        """DROP COLUMN: the column also leaves the primary key and every
+        index, and an index left with no column is dropped (MySQL)."""
+        ts.columns = [c for c in ts.columns if c.name != name]
+        ts.df = ts.df.drop(name)
+        ts.primary_key = tuple(k for k in ts.primary_key if k != name)
+        for ix in ts.indexes + ts.fulltext:
+            ix.columns = tuple(c for c in ix.columns if c != name)
+        ts.indexes = [ix for ix in ts.indexes if ix.columns]
+        ts.fulltext = [fx for fx in ts.fulltext
+                       if fx.columns and fx.key != name]
+
+    @staticmethod
+    def _drop_index(ts: TableState, name: str) -> None:
+        ts.indexes = [ix for ix in ts.indexes if ix.name != name]
+        ts.fulltext = [fx for fx in ts.fulltext if fx.name != name]
+
+    def _alter_add_column(self, ts: TableState, m: re.Match) -> None:
+        body = m.string[m.end():].strip()
+        # ADD COLUMN (v2 INT, v3 INT): the paren-list form adds each in turn
+        for item in (_split_top_level(_strip_outer_parens(body))
+                     if body.startswith("(") else [body]):
+            col, elements = self._parse_column(item)
+            dtype = col.spark_type
+            if col.generated is not None:
+                # a generated column backfills over the existing rows
+                fill = F.expr(self._transpile(col.generated)).cast(dtype)
+            elif col.auto_increment:
+                fill = F.row_number().over(
+                    Window.orderBy(F.monotonically_increasing_id())
+                ).cast(dtype)
+            elif col.default:
+                fill = F.expr(self._transpile(
+                    _normalize_default(col.default))).cast(dtype)
+            elif not col.nullable:
+                # implicit default backfill (reference column default
+                # resolution: NOT NULL without DEFAULT takes the type's
+                # zero value)
+                t = dtype.simpleString()
+                fill = (F.lit("") if t == "string"
+                        else F.lit("1970-01-01").cast(dtype)
+                        if t in ("date", "timestamp")
+                        else F.lit(0).cast(dtype))
+            else:
+                fill = F.lit(None).cast(dtype)
+            at = _column_position(ts.columns, item)
+            ts.columns.insert(len(ts.columns) if at is None else at, col)
+            ts.df = ts.df.withColumn(col.name, fill).select(
+                *[c.name for c in ts.columns])
+            if col.auto_increment:
+                ts.auto_inc_next = (ts.df.count() or 0) + 1
+            for el in elements:
+                self._add_element(ts, el)
+
+    def _alter_modify(self, ts: TableState, m: re.Match) -> None:
+        """MODIFY c <def> / CHANGE old new <def>: the definition is
+        restated whole — type, nullability, DEFAULT, AUTO_INCREMENT and
+        position (reference alter_table.go ModifyColumn)."""
+        body = m.string[m.end():]
+        if m.group(1).upper() == "CHANGE":
+            old, body = body.split(None, 1)
+            self._rename_column(ts, old.strip("`"),
+                                body.split(None, 1)[0].strip("`"))
+        col, elements = self._parse_column(body)
+        i = next((i for i, c in enumerate(ts.columns)
+                  if c.name == col.name), None)
+        if i is None:
+            raise SqlError(f"unknown column {col.name!r}")
+        prev = ts.columns.pop(i)
+        if col.auto_increment and not prev.auto_increment:
+            # newly auto-inc: seed past existing max
+            mxr = ts.df.agg(F.max(F.col(col.name).cast("bigint"))).first()[0]
+            ts.auto_inc_next = max(ts.auto_inc_next, int(mxr or 0) + 1)
+        # converting to an integer type ROUNDS (MySQL number conversion),
+        # it doesn't truncate: 127.9 -> 128
+        conv = (F.round(F.col(col.name).cast("double")).cast(col.spark_type)
+                if col.int_bounds is not None
+                and not isinstance(ts.df.schema[col.name].dataType,
+                                   (T.LongType, T.IntegerType, T.ShortType,
+                                    T.ByteType))
+                else F.col(col.name).cast(col.spark_type))
+        at = _column_position(ts.columns, body)
+        ts.columns.insert(i if at is None else at, col)
+        ts.df = ts.df.withColumn(col.name, conv).select(
+            *[c.name for c in ts.columns])
+        for el in elements:
+            self._add_element(ts, el)
+
+    def _alter_drop_constraint(self, ts: TableState, m: re.Match) -> None:
+        """DROP CHECK / DROP CONSTRAINT name: a CHECK, the primary key or
+        an index by name; a bare DROP CHECK drops every CHECK."""
+        name = m.group(1)
+        if name is None:
+            ts.checks, ts.check_names, ts.check_enforced = [], [], []
+        elif name in ts.check_names:
+            i = ts.check_names.index(name)
+            ts.checks.pop(i)
+            ts.check_names.pop(i)
+            if i < len(ts.check_enforced):
+                ts.check_enforced.pop(i)
+        elif name.upper() == "PRIMARY":
+            ts.primary_key = ()
+        elif name in [ix.name for ix in ts.indexes]:
+            self._drop_index(ts, name)
+        else:
+            raise SqlError(f"unknown constraint {name!r}")
+
+    def _alter_drop_primary(self, ts: TableState, m: re.Match) -> None:
+        # reference alter_table.go DropPrimaryKey: data unchanged; fulltext
+        # indexes keyed off the PK fall back to the on-the-fly MATCH path
+        ts.primary_key = ()
+        ts.fulltext = []
+
+    def _alter_rename_index(self, ts: TableState, m: re.Match) -> None:
+        for ix in ts.indexes + ts.fulltext:
+            if ix.name == m.group(1):
+                ix.name = m.group(2)
+
+    def _alter_rename_table(self, ts: TableState, m: re.Match) -> None:
+        tables = self._db(None)
+        self.spark.catalog.dropTempView(ts.name)
+        del tables[ts.name]
+        ts.name = m.group(1).strip("`")
+        tables[ts.name] = ts
+
+    def _alter_default(self, ts: TableState, m: re.Match) -> None:
+        for c in ts.columns:
+            if c.name == m.group(1):
+                c.default = m.group(2).strip() if m.group(2) else None
+
+    def _alter_auto_increment(self, ts: TableState, m: re.Match) -> None:
+        # MySQL: can only raise the counter, never lower it
+        ts.auto_inc_next = max(ts.auto_inc_next, int(m.group(1)))
+
+    # ALTER TABLE actions, in order: (name, pattern, handler(eng, ts, m),
+    # rewrites_rows). Each action runs the first entry whose pattern
+    # matches it. The statement re-checkpoints the snapshot once, and only
+    # when one of its actions rewrites the rows.
+    _ALTER_ACTIONS = (
+        ("add_element", re.compile(rf"ADD\s+(?={_ELEMENT.pattern})", re.I),
+         lambda e, ts, m: e._add_element(ts, m.string[m.end():]), False),
+        ("add_column", re.compile(r"ADD\s+(?:COLUMN\s+)?", re.I),
+         _alter_add_column, True),
+        ("drop_index", re.compile(r"DROP\s+(?:INDEX|KEY)\s+[`]?(\w+)[`]?",
+                                  re.I),
+         lambda e, ts, m: e._drop_index(ts, m.group(1)), False),
+        ("drop_primary", re.compile(r"DROP\s+PRIMARY\s+KEY\b", re.I),
+         _alter_drop_primary, False),
+        ("drop_constraint", re.compile(
+            r"DROP\s+(?:CHECK|CONSTRAINT)\b(?:\s+[`]?(\w+)[`]?)?", re.I),
+         _alter_drop_constraint, False),
+        ("drop_column", re.compile(r"DROP\s+(?:COLUMN\s+)?[`]?(\w+)[`]?$",
+                                   re.I),
+         lambda e, ts, m: e._drop_column(ts, m.group(1)), True),
+        ("rename_column", re.compile(
+            r"RENAME\s+COLUMN\s+[`]?(\w+)[`]?\s+TO\s+[`]?(\w+)[`]?", re.I),
+         lambda e, ts, m: e._rename_column(ts, m.group(1), m.group(2)), True),
+        ("rename_index", re.compile(
+            r"RENAME\s+(?:INDEX|KEY)\s+[`]?(\w+)[`]?\s+TO\s+[`]?(\w+)[`]?",
+            re.I), _alter_rename_index, False),
+        ("rename_table", re.compile(r"RENAME\s+(?:TO\s+|AS\s+)?([`\w.]+)$",
+                                    re.I), _alter_rename_table, False),
+        ("modify", re.compile(r"(MODIFY|CHANGE)\s+(?:COLUMN\s+)?", re.I),
+         _alter_modify, True),
+        ("column_default", re.compile(
+            r"ALTER\s+(?:COLUMN\s+)?[`]?(\w+)[`]?\s+"
+            r"(?:SET\s+DEFAULT\s+(.+)|DROP\s+DEFAULT)$", re.I | re.S),
+         _alter_default, False),
+        ("auto_increment", re.compile(r"AUTO_INCREMENT\s*=?\s*(\d+)", re.I),
+         _alter_auto_increment, False),
+        # table-option metadata: accepted, advisory
+        ("table_option", re.compile(
+            r"(?:COLLATE|CHARACTER\s+SET|CHARSET|COMMENT|ENGINE|ROW_FORMAT"
+            r"|(?:DISABLE|ENABLE)\s+KEYS)\b", re.I),
+         lambda e, ts, m: None, False),
+    )
 
     def _q_alter(self, sql: str) -> OkResult:
-        """ALTER TABLE add/drop/modify/rename column, rename table
-        (reference sql/plan/alter_table.go:1-1038) — each variant is a
-        schema-projection over the current snapshot."""
+        """ALTER TABLE, one `_ALTER_ACTIONS` entry per comma-separated
+        action (reference sql/plan/alter_table.go)."""
         if re.match(r"ALTER\s+EVENT", sql, re.I):
             from . import admin
             return admin.alter_event(self, sql)
@@ -2912,375 +3137,17 @@ class Engine:
         if not m:
             raise SqlError(f"cannot parse ALTER: {sql[:60]!r}")
         ts = self._table(m.group(1))
-        df_mutated = False  # metadata-only actions skip the re-materialize
-        actions = _split_top_level(m.group(2))
-        ai = 0
-        while ai < len(actions):
-            action = actions[ai]
-            ai += 1
-            up = action.upper()
-            if not up.startswith(("ADD INDEX", "ADD KEY", "ADD UNIQUE",
-                                  "ADD FULLTEXT", "DROP INDEX", "DROP KEY",
-                                  "ADD PRIMARY", "ADD CONSTRAINT",
-                                  "RENAME INDEX", "RENAME KEY",
-                                  "DROP PRIMARY")):
-                df_mutated = True
-            if up.startswith("ADD COLUMN") or (
-                    up.startswith("ADD ")
-                    and not re.match(r"ADD\s+(INDEX|KEY|UNIQUE|FULLTEXT|"
-                                     r"SPATIAL|CHECK|CONSTRAINT|PRIMARY|"
-                                     r"FOREIGN)\b", up)):
-                body = re.sub(r"^ADD\s+(COLUMN\s+)?", "", action, flags=re.I)
-                if body.lstrip().startswith("("):
-                    # ADD COLUMN (v2 int[, v3 int ...]) — paren list form;
-                    # re-queue each inner def as its own ADD COLUMN action
-                    inner = _strip_outer_parens(body.strip())
-                    parts = _split_top_level(inner)
-                    for extra in reversed(parts[1:]):
-                        actions.insert(ai, f"ADD COLUMN {extra.strip()}")
-                    body = parts[0].strip()
-                cm = re.match(r"(?:`([^`]+)`|(\w+))\s+(.*)$", body, re.S)
-                if cm is None:
-                    raise SqlError(
-                        f"cannot parse ADD COLUMN: {body[:60]!r}")
-                col_name = cm.group(1) or cm.group(2)
-                col_rest = cm.group(3)
-                dtype, enum_vals, bounds = _parse_type(col_rest)
-                rest_up = col_rest.upper()
-                nullable = "NOT NULL" not in rest_up
-                default = _canon_default(_extract_default(col_rest),
-                                         dtype, bounds)
-                generated = _parse_generated(col_rest)
-                enum_vals, set_vals = _split_enum_set(enum_vals)
-                col = ColumnDef(col_name, dtype, nullable, default,
-                                enum_values=enum_vals, int_bounds=bounds,
-                                generated=generated, set_values=set_vals,
-                                char_length=_char_len_of(col_rest),
-                                fsp=_fsp_of(col_rest),
-                                is_year=bool(re.match(
-                                    r"\s*YEAR\b", col_rest, re.I)))
-                if generated is not None:
-                    # ALTER ADD generated column backfills over existing rows
-                    fill = F.expr(self._transpile(generated)).cast(dtype)
-                elif "AUTO_INCREMENT" in rest_up:
-                    fill = F.row_number().over(
-                        Window.orderBy(F.monotonically_increasing_id())
-                    ).cast(dtype)
-                elif default:
-                    fill = F.expr(self._transpile(
-                        _normalize_default(default))).cast(dtype)
-                elif not nullable:
-                    # implicit default backfill (reference column default
-                    # resolution: NOT NULL without DEFAULT takes the
-                    # type's zero value)
-                    t = dtype.simpleString()
-                    fill = (F.lit("") if t == "string"
-                            else F.lit("1970-01-01").cast(dtype)
-                            if t in ("date", "timestamp")
-                            else F.lit(0).cast(dtype))
-                else:
-                    fill = F.lit(None).cast(dtype)
-                posm = re.search(r"\b(?:(FIRST)|AFTER\s+[`]?(\w+)[`]?)\s*$",
-                                 col_rest, re.I)
-                if posm and posm.group(1):
-                    idx_at = 0
-                elif posm and posm.group(2):
-                    names = [c.name for c in ts.columns]
-                    idx_at = names.index(posm.group(2)) + 1 \
-                        if posm.group(2) in names else len(ts.columns)
-                else:
-                    idx_at = len(ts.columns)
-                if "AUTO_INCREMENT" in rest_up:
-                    col.auto_increment = True
-                ts.columns.insert(idx_at, col)
-                ts.df = ts.df.withColumn(col.name, fill).select(
-                    *[c.name for c in ts.columns])
-                if "AUTO_INCREMENT" in rest_up:
-                    ts.auto_inc_next = (ts.df.count() or 0) + 1
-            elif up.startswith("DROP COLUMN") or (
-                    up.startswith("DROP ")
-                    and not re.match(r"DROP\s+(INDEX|KEY|CHECK|CONSTRAINT|"
-                                     r"PRIMARY|FOREIGN)\b", up)):
-                name = action.split()[-1].strip("`")
-                ts.columns = [c for c in ts.columns if c.name != name]
-                ts.df = ts.df.drop(name)
-            elif up.startswith("RENAME COLUMN"):
-                mm = re.match(r"RENAME\s+COLUMN\s+[`]?(\w+)[`]?\s+TO\s+[`]?(\w+)[`]?",
-                              action, re.I)
-                old, new = mm.group(1), mm.group(2)
-                for c in ts.columns:
-                    if c.name == old:
-                        c.name = new
-                ts.primary_key = tuple(new if k == old else k for k in ts.primary_key)
-                ts.df = ts.df.withColumnRenamed(old, new)
-                # CHECK expressions follow the rename (MySQL rewrites the
-                # stored constraint; reference alter_table.go RenameColumn)
-                ts.checks = [re.sub(rf"(?<![`\w]){re.escape(old)}(?![`\w])",
-                                    new, chk) for chk in ts.checks]
-                _rename_in_col_exprs(ts, old, new)
-            elif up.startswith("RENAME INDEX") or up.startswith("RENAME KEY"):
-                rm2 = re.match(r"RENAME\s+(?:INDEX|KEY)\s+[`]?(\w+)[`]?\s+"
-                               r"TO\s+[`]?(\w+)[`]?", action, re.I)
-                if rm2:
-                    for ix in ts.indexes:
-                        if ix.name == rm2.group(1):
-                            ix.name = rm2.group(2)
-                    for fx in ts.fulltext:
-                        if fx.name == rm2.group(1):
-                            fx.name = rm2.group(2)
-                continue
-            elif up.startswith("DROP PRIMARY"):
-                # reference alter_table.go DropPrimaryKey: data unchanged;
-                # fulltext indexes keyed off the PK fall back to the
-                # on-the-fly MATCH path
-                ts.primary_key = ()
-                ts.fulltext = []
-                continue
-            elif up.startswith("RENAME TO") or up.startswith("RENAME "):
-                new = action.split()[-1].strip("`")
-                tables = self._db(None)
-                self.spark.catalog.dropTempView(ts.name)
-                del tables[ts.name]
-                ts.name = new
-                tables[new] = ts
-            elif up.startswith(("MODIFY", "CHANGE")):
-                is_change = up.startswith("CHANGE")
-                body = re.sub(r"^(MODIFY|CHANGE)\s+(COLUMN\s+)?", "", action, flags=re.I)
-                if is_change:
-                    # CHANGE old_name new_name TYPE...: rename then retype
-                    cparts = body.split(None, 2)
-                    old_name = cparts[0].strip("`")
-                    new_name = cparts[1].strip("`")
-                    if old_name != new_name:
-                        for c in ts.columns:
-                            if c.name == old_name:
-                                c.name = new_name
-                        ts.df = ts.df.withColumnRenamed(old_name, new_name)
-                        ts.primary_key = tuple(
-                            new_name if k == old_name else k
-                            for k in ts.primary_key)
-                        ts.checks = [
-                            re.sub(rf"(?<![`\w]){re.escape(old_name)}"
-                                   rf"(?![`\w])", new_name, chk)
-                            for chk in ts.checks]
-                        _rename_in_col_exprs(ts, old_name, new_name)
-                    body = new_name + " " + (cparts[2] if len(cparts) > 2
-                                             else "")
-                parts = body.split(None, 1)
-                cname = parts[0].strip("`")
-                dtype, enum_vals, bounds = _parse_type(parts[1])
-                enum_vals, set_vals = _split_enum_set(enum_vals)
-                modify_up = parts[1].upper()
-                for c in ts.columns:
-                    if c.name == cname:
-                        c.spark_type = dtype
-                        c.enum_values = enum_vals
-                        c.int_bounds = bounds
-                        c.set_values = set_vals
-                        c.nullable = "NOT NULL" not in modify_up
-                        # MODIFY restates the whole definition: a DEFAULT
-                        # clause (re)binds it, its absence drops any prior
-                        # default (MySQL ALTER semantics; reference
-                        # alter_table.go ModifyColumn)
-                        c.default = _canon_default(
-                            _extract_default(parts[1]), dtype, bounds)
-                        c.char_length = _char_len_of(parts[1])
-                        was_ai = c.auto_increment
-                        c.auto_increment = "AUTO_INCREMENT" in modify_up
-                        if c.auto_increment and not was_ai:
-                            # newly auto-inc: seed past existing max
-                            mxr = ts.df.agg(F.max(
-                                F.col(cname).cast("bigint"))).first()[0]
-                            ts.auto_inc_next = max(
-                                ts.auto_inc_next, int(mxr or 0) + 1)
-                # converting to an integer type ROUNDS (MySQL number
-                # conversion), it doesn't truncate: 127.9 -> 128
-                conv = (F.round(F.col(cname).cast("double")).cast(dtype)
-                        if bounds is not None
-                        and not isinstance(ts.df.schema[cname].dataType,
-                                           (T.LongType, T.IntegerType,
-                                            T.ShortType, T.ByteType))
-                        else F.col(cname).cast(dtype))
-                ts.df = ts.df.withColumn(cname, conv)
-                posm = re.search(r"\b(?:(FIRST)|AFTER\s+[`]?(\w+)[`]?)\s*$",
-                                 parts[1], re.I)
-                if posm:  # reposition (reference alter_table.go ModifyColumn)
-                    col = next(c for c in ts.columns if c.name == cname)
-                    ts.columns.remove(col)
-                    if posm.group(1):
-                        at = 0
-                    else:
-                        names = [c.name for c in ts.columns]
-                        at = names.index(posm.group(2)) + 1 \
-                            if posm.group(2) in names else len(names)
-                    ts.columns.insert(at, col)
-                    ts.df = ts.df.select(*[c.name for c in ts.columns])
-            elif up.startswith("ADD CHECK") or re.match(
-                    r"ADD\s+CONSTRAINT(\s+[`]?\w*[`]?)?\s+CHECK", up):
-                nm3 = re.match(
-                    r"ADD\s+CONSTRAINT\s+[`]?(?!CHECK\b)(\w+)[`]?",
-                    action, re.I)
-                ckm = re.search(r"CHECK\s*\(", action, re.I)
-                close = _find_close_paren(action, ckm.end() - 1)
-                clause = _strip_outer_parens(action[ckm.end():close])
-                enforced = not re.search(r"\)\s*NOT\s+ENFORCED\s*$",
-                                         action, re.I)
-                # existing rows must satisfy a newly-added ENFORCED check
-                # (reference sql/plan/alter_check.go validation pass)
-                if enforced and ts.df is not None:
-                    cond = self._transpile(clause)
-                    bad = ts.df.filter(
-                        f"NOT ({cond}) AND ({cond}) IS NOT NULL").count()
-                    if bad:
-                        raise SqlError(
-                            f"CHECK constraint violated by {bad} existing "
-                            f"row(s)")
-                ts.checks.append(clause)
-                ts.check_names.append(nm3.group(1) if nm3
-                                      else ts.next_check_name())
-                ts.check_enforced.append(enforced)
-                continue
-            elif up.startswith("DROP CHECK") or re.match(
-                    r"DROP\s+CONSTRAINT\b", up):
-                dnm = re.match(r"DROP\s+(?:CHECK|CONSTRAINT)\s+"
-                               r"[`]?(\w+)[`]?", action, re.I)
-                if dnm and dnm.group(1) in ts.check_names:
-                    idx = ts.check_names.index(dnm.group(1))
-                    ts.checks.pop(idx)
-                    ts.check_names.pop(idx)
-                    if idx < len(ts.check_enforced):
-                        ts.check_enforced.pop(idx)
-                elif dnm and dnm.group(1).upper() == "PRIMARY":
-                    ts.primary_key = ()
-                elif dnm and dnm.group(1) in [
-                        ix.name for ix in ts.indexes]:
-                    ts.indexes = [ix for ix in ts.indexes
-                                  if ix.name != dnm.group(1)]
-                elif dnm:
-                    raise SqlError(
-                        f"unknown constraint {dnm.group(1)!r}")
-                else:
-                    ts.checks, ts.check_names, ts.check_enforced = \
-                        [], [], []
-                continue
-            elif re.match(r"AUTO_INCREMENT\s*=?\s*\d+", up):
-                n = int(re.search(r"(\d+)", action).group(1))
-                # MySQL: can only raise the counter, never lower it
-                ts.auto_inc_next = max(ts.auto_inc_next, n)
-                continue
-            elif re.match(r"(COLLATE|CHARACTER\s+SET|CHARSET|COMMENT|"
-                          r"ENGINE|ROW_FORMAT)\b", up) or \
-                    re.match(r"(DISABLE|ENABLE)\s+KEYS\b", up):
-                continue  # table-option metadata: accepted, advisory
-            elif re.match(r"ALTER\s+(COLUMN\s+)?[`]?\w+[`]?\s+SET\s+"
-                          r"DEFAULT\b", up):
-                am2 = re.match(r"ALTER\s+(?:COLUMN\s+)?[`]?(\w+)[`]?\s+"
-                               r"SET\s+DEFAULT\s+(.*)$", action,
-                               re.I | re.S)
-                for c in ts.columns:
-                    if c.name == am2.group(1):
-                        c.default = am2.group(2).strip()
-                continue
-            elif re.match(r"ALTER\s+(COLUMN\s+)?[`]?\w+[`]?\s+DROP\s+"
-                          r"DEFAULT\b", up):
-                am2 = re.match(r"ALTER\s+(?:COLUMN\s+)?[`]?(\w+)[`]?",
-                               action, re.I)
-                for c in ts.columns:
-                    if c.name == am2.group(1):
-                        c.default = None
-                continue
-            elif up.startswith(("ADD INDEX", "ADD KEY", "ADD UNIQUE",
-                                "ADD FULLTEXT", "DROP INDEX", "DROP KEY")):
-                # record in the index bookkeeping (SHOW INDEX /
-                # information_schema.statistics); advisory for execution —
-                # Spark pushdown/pruning replace index lookups
-                from . import admin
-                im = re.match(
-                    r"ADD\s+(UNIQUE\s+|FULLTEXT\s+)?(?:INDEX|KEY)?\s*"
-                    r"[`]?(\w+)?[`]?\s*\(", action, re.I)
-                if im:
-                    # scan to the BALANCED close paren — prefix-length
-                    # columns like (a(10), b) contain nested parens, and
-                    # stopping at the first ')' would drop column b
-                    from .dialect.transpiler import _find_close
-                    close = _find_close(action, im.end() - 1)
-                    col_body = action[im.end():close] if close > 0 else ""
-                    cols = tuple(c.strip().strip("`").split("(")[0]
-                                 for c in col_body.split(","))
-                    ikind = (im.group(1) or "").strip().upper()
-                    if ikind == "FULLTEXT":
-                        self._ft_create(ts, im.group(2) or cols[0], cols)
-                    ts.indexes.append(admin.IndexDef(
-                        im.group(2) or cols[0], cols,
-                        unique=ikind == "UNIQUE",
-                        kind="FULLTEXT" if ikind == "FULLTEXT"
-                        else "BTREE"))
-                else:
-                    dm2 = re.match(r"DROP\s+(?:INDEX|KEY)\s+[`]?(\w+)[`]?",
-                                   action, re.I)
-                    if dm2:
-                        ts.indexes = [ix for ix in ts.indexes
-                                      if ix.name != dm2.group(1)]
-                continue
-            elif up.startswith("ADD PRIMARY"):
-                pm = re.match(r"ADD\s+PRIMARY\s+KEY\s*\(([^)]*)\)",
-                              action, re.I)
-                if pm:  # recorded: FULLTEXT/dup checks key off it
-                    ts.primary_key = tuple(
-                        c.strip().strip("`") for c in pm.group(1).split(","))
-                continue
-            elif up.startswith("ADD CONSTRAINT"):
-                # named UNIQUE/FOREIGN KEY constraints: record under the
-                # constraint name so DROP CONSTRAINT <name> resolves
-                # (reference sql/plan/alter_index.go named constraints)
-                um = re.match(
-                    r"ADD\s+CONSTRAINT\s+[`]?(\w+)[`]?\s+UNIQUE"
-                    r"(?:\s+(?:INDEX|KEY))?\s*\(", action, re.I)
-                if um:
-                    from . import admin
-                    from .dialect.transpiler import _find_close
-                    close = _find_close(action, um.end() - 1)
-                    cols = tuple(
-                        c.strip().strip("`").split("(")[0] for c in
-                        action[um.end():close].split(","))
-                    ts.indexes.append(admin.IndexDef(
-                        um.group(1), cols, unique=True))
-                    continue
-                fm2 = self._FK_DEF.search(action)
-                if fm2:
-                    _, parent = self._split_name(fm2.group(2))
-                    ts.foreign_keys.append(ForeignKey(
-                        tuple(c.strip().strip("`")
-                              for c in fm2.group(1).split(",")),
-                        parent,
-                        tuple(c.strip().strip("`")
-                              for c in fm2.group(3).split(",")),
-                        (fm2.group(4) or "RESTRICT").upper()
-                        .replace("NO ACTION", "RESTRICT"),
-                        (fm2.group(5) or "RESTRICT").upper()
-                        .replace("NO ACTION", "RESTRICT")))
-                    continue
-                continue  # other constraint kinds: advisory on Spark
-            elif up.startswith("ADD FOREIGN"):
-                fm2 = self._FK_DEF.search(action)
-                if not fm2:
-                    raise SqlError(
-                        f"cannot parse FOREIGN KEY: {action[:60]!r}")
-                _, parent = self._split_name(fm2.group(2))
-                ts.foreign_keys.append(ForeignKey(
-                    tuple(c.strip().strip("`")
-                          for c in fm2.group(1).split(",")),
-                    parent,
-                    tuple(c.strip().strip("`")
-                          for c in fm2.group(3).split(",")),
-                    (fm2.group(4) or "RESTRICT").upper()
-                    .replace("NO ACTION", "RESTRICT"),
-                    (fm2.group(5) or "RESTRICT").upper()
-                    .replace("NO ACTION", "RESTRICT")))
-                continue
+        rewrote = False
+        for action in _split_top_level(m.group(2)):
+            for _name, pattern, handler, rewrites_rows in self._ALTER_ACTIONS:
+                am = pattern.match(action)
+                if am:
+                    handler(self, ts, am)
+                    rewrote = rewrote or rewrites_rows
+                    break
             else:
                 raise SqlError(f"unsupported ALTER action: {action[:50]!r}")
-        if df_mutated:
+        if rewrote:
             ts.df = ts.df.localCheckpoint(eager=True)
         self._register(ts)
         return OkResult(0)

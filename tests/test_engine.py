@@ -1761,3 +1761,118 @@ def test_large_insert_select_keeps_parallel_partitions(spark, monkeypatch):
                                   seen[-1])
     assert rows(e.query("SELECT COUNT(*) AS c FROM li")) == [(600000,)]
     e.query("DROP TABLE li")
+
+
+# ---- one table-element parser: CREATE TABLE, ALTER TABLE, CREATE INDEX ------
+
+
+@pytest.mark.parametrize("ddl", [
+    ["CREATE TABLE kp (a VARCHAR(20), b INT, KEY kab (a(10), b))"],
+    ["CREATE TABLE kp (a VARCHAR(20), b INT)",
+     "CREATE INDEX kab ON kp (a(10), b)"],
+    ["CREATE TABLE kp (a VARCHAR(20), b INT)",
+     "ALTER TABLE kp ADD INDEX kab (a(10), b)"],
+    ["CREATE TABLE kp (a VARCHAR(20), b INT)",
+     "ALTER TABLE kp ADD CONSTRAINT kab UNIQUE (a(10), b)"],
+], ids=["inline_key", "create_index", "alter_add_index", "alter_add_unique"])
+def test_key_part_list_spellings(eng, ddl):
+    """A prefix length drops from the key part the same way whichever
+    statement declares the index."""
+    for s in ddl:
+        eng.query(s)
+    got = rows(eng.query("SHOW INDEX FROM kp"))
+    assert [(r[2], r[3], r[4]) for r in got] == [
+        ("kab", 1, "a"), ("kab", 2, "b")]
+
+
+@pytest.mark.parametrize("rename", ["CHANGE b bb INT",
+                                    "RENAME COLUMN b TO c"])
+def test_unique_index_follows_column_rename(eng, rename):
+    eng.query("CREATE TABLE ur1 (a INT, b INT UNIQUE)")
+    eng.query(f"ALTER TABLE ur1 {rename}")
+    with pytest.raises(SqlError, match="duplicate entry"):
+        eng.query("INSERT INTO ur1 VALUES (1, 5), (2, 5)")
+
+
+def test_rename_and_drop_column_follow_through(eng):
+    """A renamed column keeps its place in other tables' FOREIGN KEYs; a
+    dropped column leaves every index, and an index left empty goes."""
+    eng.query("CREATE TABLE fp (a INT PRIMARY KEY, b INT, c INT, "
+              "KEY kb (b), KEY kbc (b, c))")
+    eng.query("CREATE TABLE fc (x INT, FOREIGN KEY (x) REFERENCES fp(a))")
+    eng.query("ALTER TABLE fp RENAME COLUMN a TO z")
+    got = rows(eng.query(
+        "SELECT REFERENCED_COLUMN_NAME FROM information_schema."
+        "key_column_usage WHERE TABLE_NAME = 'fc' "
+        "AND REFERENCED_TABLE_NAME IS NOT NULL"))
+    assert got == [("z",)]
+    eng.query("ALTER TABLE fp DROP COLUMN b")
+    got = rows(eng.query("SHOW INDEX FROM fp"))
+    assert [(r[2], r[4]) for r in got] == [("PRIMARY", "z"), ("kbc", "c")]
+
+
+def _alter_add_unique(e):
+    e.query("ALTER TABLE ag ADD COLUMN b INT UNIQUE")
+    with pytest.raises(SqlError, match="duplicate entry"):
+        e.query("INSERT INTO ag VALUES (2, 5), (3, 5)")
+
+
+def _alter_add_check(e):
+    e.query("ALTER TABLE ag ADD COLUMN c INT CHECK (c > 0)")
+    with pytest.raises(SqlError, match="CHECK"):
+        e.query("INSERT INTO ag VALUES (2, -5)")
+
+
+def _alter_modify_fsp(e):
+    e.query("ALTER TABLE ag ADD COLUMN d DATETIME(3)")
+    e.query("ALTER TABLE ag MODIFY d DATETIME(6)")
+    e.query("INSERT INTO ag VALUES (2, '2020-01-02 03:04:05.123456')")
+    got = rows(e.query("SELECT d FROM ag WHERE a = 2"))
+    assert got[0][0].microsecond == 123456
+
+
+def _alter_add_spatial(e):
+    e.query("ALTER TABLE ag ADD COLUMN g GEOMETRY")
+    e.query("ALTER TABLE ag ADD SPATIAL INDEX sg (g)")
+    got = rows(e.query("SHOW INDEX FROM ag"))
+    assert [(r[2], r[4], r[5]) for r in got] == [("sg", "g", "SPATIAL")]
+
+
+@pytest.mark.parametrize("case", [_alter_add_unique, _alter_add_check,
+                                  _alter_modify_fsp, _alter_add_spatial],
+                         ids=lambda f: f.__name__.lstrip("_"))
+def test_alter_takes_full_column_grammar(eng, case):
+    """ADD COLUMN and MODIFY parse a column exactly as CREATE TABLE does:
+    inline UNIQUE and CHECK bind, and the type's precision is restated."""
+    eng.query("CREATE TABLE ag (a INT)")
+    eng.query("INSERT INTO ag VALUES (1)")
+    case(eng)
+
+
+def test_unnamed_index_names(eng):
+    """An unnamed index takes its first column's name, suffixed _2, _3, …
+    on a clash, in CREATE TABLE and ALTER TABLE alike (MySQL)."""
+    eng.query("CREATE TABLE nm (a INT, b INT, KEY (a), KEY (a, b), "
+              "UNIQUE (b), c INT UNIQUE)")
+    eng.query("ALTER TABLE nm ADD INDEX (a), ADD COLUMN d INT UNIQUE")
+    got = rows(eng.query("SHOW INDEX FROM nm"))
+    assert [(r[2], r[3], r[4]) for r in got] == [
+        ("a", 1, "a"), ("a_2", 1, "a"), ("a_2", 2, "b"), ("b", 1, "b"),
+        ("c", 1, "c"), ("a_3", 1, "a"), ("d", 1, "d")]
+
+
+@pytest.mark.parametrize("action", [
+    "ALTER COLUMN s SET DEFAULT 'x'", "ALTER COLUMN s DROP DEFAULT",
+    "AUTO_INCREMENT = 10", "COMMENT = 'x'", "ENGINE = InnoDB",
+    "COLLATE utf8mb4_bin", "ADD CHECK (i > 0)",
+    "ADD CONSTRAINT ck CHECK (i > 0), DROP CHECK ck",
+    "ADD FOREIGN KEY (i) REFERENCES mytable(i)",
+    "ADD INDEX ks (s), RENAME INDEX ks TO ks2",
+])
+def test_metadata_only_alter_keeps_snapshot(eng, action):
+    """An ALTER that leaves the rows alone does not re-checkpoint the
+    table: its snapshot stays the same DataFrame."""
+    before = eng._table("mytable").df
+    eng.query(f"ALTER TABLE mytable {action}")
+    assert eng._table("mytable").df is before
+    assert rows(eng.query("SELECT COUNT(*) AS c FROM mytable")) == [(3,)]

@@ -387,43 +387,41 @@ def drop_event(eng, sql: str):
 
 def run_due_events(eng) -> None:
     """Execute due events at a statement boundary (the deterministic
-    single-process analogue of the reference's scheduler goroutine)."""
-    if getattr(eng, "_in_event", False) or not eng.events:
+    single-process analogue of the reference's scheduler goroutine), in
+    the engine's event session: an event's SET @v or USE reaches no
+    client's session."""
+    if eng.session is eng.event_session or not eng.events:
         return
     now = time.time()
-    eng._in_event = True
-    try:
-        from .procedures import split_statements
-        for name in list(eng.events):
-            ev = eng.events.get(name)
-            if ev is None or not ev.enabled:
-                continue
-            if ev.ends_ts is not None and now >= ev.ends_ts:
-                # recurring event past its ENDS bound expires
-                if ev.preserve:
-                    ev.enabled = False
-                else:
-                    del eng.events[name]
-                continue
-            due = (ev.at_ts is not None and now >= ev.at_ts) or (
-                ev.every_secs is not None
-                and now >= (ev.last_run or 0) + ev.every_secs
-                and (ev.starts_ts is None or now >= ev.starts_ts))
-            if not due:
-                continue
-            for stmt in split_statements(ev.body):
-                if stmt.strip():
-                    eng.query(stmt)
-            ev.last_executed = now
-            if ev.at_ts is not None:  # one-shot
-                if ev.preserve:
-                    ev.enabled = False
-                else:
-                    del eng.events[name]
+    from .procedures import split_statements
+    for name in list(eng.events):
+        ev = eng.events.get(name)
+        if ev is None or not ev.enabled:
+            continue
+        if ev.ends_ts is not None and now >= ev.ends_ts:
+            # recurring event past its ENDS bound expires
+            if ev.preserve:
+                ev.enabled = False
             else:
-                ev.last_run = now
-    finally:
-        eng._in_event = False
+                del eng.events[name]
+            continue
+        due = (ev.at_ts is not None and now >= ev.at_ts) or (
+            ev.every_secs is not None
+            and now >= (ev.last_run or 0) + ev.every_secs
+            and (ev.starts_ts is None or now >= ev.starts_ts))
+        if not due:
+            continue
+        for stmt in split_statements(ev.body):
+            if stmt.strip():
+                eng.query(stmt, session=eng.event_session)
+        ev.last_executed = now
+        if ev.at_ts is not None:  # one-shot
+            if ev.preserve:
+                ev.enabled = False
+            else:
+                del eng.events[name]
+        else:
+            ev.last_run = now
 
 
 def set_event_scheduler(eng, enabled: bool) -> None:
@@ -465,7 +463,7 @@ def show_events(eng) -> DataFrame:
         last = (_dt.datetime.utcfromtimestamp(ev.last_executed)
                 .strftime("%Y-%m-%d %H:%M:%S")
                 if ev.last_executed is not None else None)
-        rows.append((eng.current_db, ev.name, "root@localhost", kind,
+        rows.append((eng.session.current_db, ev.name, "root@localhost", kind,
                      "ENABLED" if ev.enabled else "DISABLED", last))
     schema = ("Db string, Name string, Definer string, Type string, "
               "Status string, Last_Executed string")
@@ -608,8 +606,8 @@ def show_misc(eng, sql: str) -> DataFrame | None:
             [], "Level string, Code int, Message string")
     if up.startswith("SHOW PROCESSLIST") or up.startswith("SHOW FULL PROCESSLIST"):
         return sp.createDataFrame(
-            [(1, "root", "localhost", eng.current_db, "Query", 0, "executing",
-              "SHOW PROCESSLIST")],
+            [(1, "root", "localhost", eng.session.current_db, "Query", 0,
+              "executing", "SHOW PROCESSLIST")],
             "Id bigint, User string, Host string, db string, Command string, "
             "Time int, State string, Info string")
     if up.startswith("SHOW STATUS") or re.match(
@@ -629,7 +627,7 @@ def show_misc(eng, sql: str) -> DataFrame | None:
         return sp.createDataFrame(rows, schema) if rows else \
             sp.createDataFrame([], schema)
     if re.match(r"SHOW\s+(PROCEDURE|FUNCTION)\s+STATUS", up):
-        rows = [(eng.current_db, p.name, "PROCEDURE") for p in
+        rows = [(eng.session.current_db, p.name, "PROCEDURE") for p in
                 eng.procedures.values()]
         schema = "Db string, Name string, Type string"
         return sp.createDataFrame(rows, schema) if rows else \
@@ -651,7 +649,7 @@ def show_misc(eng, sql: str) -> DataFrame | None:
             "Privilege string, Context string, Comment string")
     if up.startswith("SHOW OPEN TABLES"):
         return sp.createDataFrame(
-            [(eng.current_db, n, 0, 0) for n in sorted(eng._db(None))],
+            [(eng.session.current_db, n, 0, 0) for n in sorted(eng._db(None))],
             "Database string, Table string, In_use int, Name_locked int")
     if up.startswith("SHOW EVENTS"):
         return show_events(eng)
@@ -725,7 +723,7 @@ def show_misc(eng, sql: str) -> DataFrame | None:
         names = (sorted(eng.procedures) if kind == "PROCEDURE"
                  else sorted(eng.functions))
         return sp.createDataFrame(
-            [(eng.current_db, n, kind, "root@%") for n in names],
+            [(eng.session.current_db, n, kind, "root@%") for n in names],
             "Db string, Name string, Type string, Definer string")
     if up.startswith("SHOW BINARY LOGS"):
         # no binlog subsystem: empty set, same as a server with logging off
@@ -780,7 +778,7 @@ def q_checksum(eng, sql: str) -> DataFrame:
         agg = ts.df.select(
             F.xxhash64(*ts.df.columns).alias("h")
         ).agg(F.expr("cast(coalesce(bit_xor(h), 0) as bigint)").alias("c"))
-        rows.append((f"{eng.current_db}.{name}", agg.first()["c"]))
+        rows.append((f"{eng.session.current_db}.{name}", agg.first()["c"]))
     return eng.spark.createDataFrame(rows, "Table string, Checksum bigint")
 
 
@@ -799,7 +797,7 @@ def q_table_maint(eng, sql: str, kind: str) -> DataFrame:
         name = re.sub(r"\s+(QUICK|FAST|MEDIUM|EXTENDED|CHANGED|USE_FRM)$",
                       "", name, flags=re.I)
         ts = eng._table(name)
-        full = f"{eng.current_db}.{name}"
+        full = f"{eng.session.current_db}.{name}"
         if kind == "check":
             ts.df.count()  # provably readable
             rows.append((full, "check", "status", "OK"))

@@ -5,7 +5,8 @@ engine behind the standard database API (reference driver/driver.go:83
 OpenConnector, driver/conn.go QueryContext/ExecContext); this is the
 Python-standard equivalent (PEP 249): `connect(spark)` → Connection →
 Cursor with execute/fetchmany/description/rowcount, qmark + named
-paramstyles, context-manager transactions.
+paramstyles, context-manager transactions. Each Connection owns one
+engine Session, as each database/sql conn owns one sql.Session.
 """
 
 from __future__ import annotations
@@ -84,8 +85,8 @@ def _bind(sql: str, params) -> str:
 class Connection:
     def __init__(self, engine: Engine):
         self._engine = engine
+        self._session = engine.new_session()
         self._closed = False
-        self._in_txn = False
 
     def cursor(self) -> "Cursor":
         if self._closed:
@@ -94,7 +95,7 @@ class Connection:
 
     def _exec(self, sql: str):
         try:
-            return self._engine.query(sql)
+            return self._engine.query(sql, self._session)
         except SqlError as exc:
             raise DatabaseError(str(exc), exc.errno, exc.sqlstate) from exc
         except Exception as exc:  # noqa: BLE001 — Spark analyzer/runtime
@@ -104,18 +105,15 @@ class Connection:
             raise DatabaseError(msg[:300]) from exc
 
     def commit(self) -> None:
-        if self._in_txn:
+        if self._session.txn_snapshot is not None:
             self._exec("COMMIT")
-            self._in_txn = False
 
     def rollback(self) -> None:
-        if self._in_txn:
+        if self._session.txn_snapshot is not None:
             self._exec("ROLLBACK")
-            self._in_txn = False
 
     def begin(self) -> None:
         self._exec("BEGIN")
-        self._in_txn = True
 
     def close(self) -> None:
         self.rollback()

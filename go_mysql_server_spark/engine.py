@@ -21,8 +21,10 @@ constraints, INSERT IGNORE / REPLACE / ON DUPLICATE KEY UPDATE.
 
 from __future__ import annotations
 
+import itertools
 import re
 from dataclasses import dataclass, field
+from types import MappingProxyType
 from typing import Any
 
 from pyspark.sql import DataFrame, Row, SparkSession, Window
@@ -601,8 +603,82 @@ def _ansi_quotes_to_backticks(sql: str) -> str:
     return "".join(out)
 
 
+# System-variable defaults: every Session starts from a copy
+SYS_VAR_DEFAULTS = MappingProxyType({
+    "autocommit": 1,
+    # MySQL 8 default modes; SET sql_mode = '' switches DML value
+    # conversion to non-strict (clamp/implicit-default) semantics
+    "sql_mode": "ONLY_FULL_GROUP_BY,STRICT_TRANS_TABLES,"
+                "NO_ZERO_IN_DATE,NO_ZERO_DATE,"
+                "ERROR_FOR_DIVISION_BY_ZERO,NO_ENGINE_SUBSTITUTION",
+    "version": "8.0.0-gms-spark",
+    "max_allowed_packet": 67108864,
+    # connection charset surface (SET NAMES / CHARACTER SET)
+    "character_set_client": "utf8mb4",
+    "character_set_connection": "utf8mb4",
+    "character_set_results": "utf8mb4",
+    "collation_connection": "utf8mb4_0900_ai_ci",
+    "innodb_autoinc_lock_mode": 2,
+    "foreign_key_checks": 1,
+    "time_zone": "SYSTEM",
+    # reference defaults (sql/variables/system_variables.go):
+    # the reference brands version_comment "Dolt" and defaults the
+    # server-side charset pair to utf8mb4 / utf8mb4_0900_bin
+    "version_comment": "Dolt",
+    # validate_password component defaults (MySQL 8)
+    "validate_password.length": 8,
+    "validate_password.number_count": 1,
+    "validate_password.mixed_case_count": 1,
+    "validate_password.special_char_count": 1,
+    "strict_mysql_compatibility": 0,
+    "character_set_server": "utf8mb4",
+    "collation_server": "utf8mb4_0900_bin",
+})
+
+
+class Session:
+    """Everything MySQL scopes to one connection (reference
+    server/context.go:50 SessionManager.NewSession, sql/session.go): its
+    id, current database, user and system variables, the last-statement
+    counters, SQL-level prepared statements and the open transaction.
+    `Engine.query` runs each statement against one Session."""
+
+    def __init__(self, conn_id: int, db: str):
+        self.id = conn_id
+        self.current_db = db
+        self.user_vars: dict[str, Any] = {}
+        self.sys_vars: dict[str, Any] = dict(SYS_VAR_DEFAULTS)
+        self.last_insert_id: int | None = None
+        # uuid() DEFAULT materialized by this session's last INSERT
+        # (reference last_insert_uuid.go)
+        self.last_insert_uuid: str | None = None
+        self.last_row_count = -1    # ROW_COUNT(): -1 until a DML runs
+        self.last_select_df: DataFrame | None = None  # for FOUND_ROWS()
+        self.found_rows_n: int | None = None
+        self.prepared: dict[str, object] = {}     # name → PreparedStatement
+        # BEGIN's catalog snapshot and the named SAVEPOINT snapshots
+        self.txn_snapshot: dict | None = None
+        self.savepoints: dict[str, dict] = {}
+
+    def reset(self) -> None:
+        """COM_RESET_CONNECTION: back to a new session's state, keeping
+        the id and the current database."""
+        self.__init__(self.id, self.current_db)
+
+    def found_rows(self) -> int:
+        """FOUND_ROWS(): row count of the previous SELECT — post-LIMIT
+        normally, pre-LIMIT when it was SQL_CALC_FOUND_ROWS (reference
+        sql/expression/function/found_rows.go). The previous result is
+        kept as an (uncollected) DataFrame; the count runs on demand."""
+        if self.found_rows_n is not None:
+            return self.found_rows_n
+        prev = self.last_select_df
+        return prev.count() if prev is not None else 0
+
+
 class Engine:
-    """Statement router + session/catalog state.
+    """Statement router + catalog state; per-connection state lives in a
+    `Session` (`new_session`, the `session=` argument of `query`).
 
     Usage::
 
@@ -635,44 +711,14 @@ class Engine:
             register_sql_macros(self.spark)  # TIME/date shims for SQL text
             spark.conf.set("spark.gms.fnRegistered", "1")
         self.databases: dict[str, dict[str, TableState]] = {default_db: {}}
-        self.current_db = default_db
-        self.user_vars: dict[str, Any] = {}
-        self.sys_vars: dict[str, Any] = {
-            "autocommit": 1,
-            # MySQL 8 default modes; SET sql_mode = '' switches DML value
-            # conversion to non-strict (clamp/implicit-default) semantics
-            "sql_mode": "ONLY_FULL_GROUP_BY,STRICT_TRANS_TABLES,"
-                        "NO_ZERO_IN_DATE,NO_ZERO_DATE,"
-                        "ERROR_FOR_DIVISION_BY_ZERO,NO_ENGINE_SUBSTITUTION",
-            "version": "8.0.0-gms-spark",
-            "max_allowed_packet": 67108864,
-            # connection charset surface (SET NAMES / CHARACTER SET)
-            "character_set_client": "utf8mb4",
-            "character_set_connection": "utf8mb4",
-            "character_set_results": "utf8mb4",
-            "collation_connection": "utf8mb4_0900_ai_ci",
-            "innodb_autoinc_lock_mode": 2,
-            "foreign_key_checks": 1,
-            "time_zone": "SYSTEM",
-            # reference defaults (sql/variables/system_variables.go):
-            # the reference brands version_comment "Dolt" and defaults the
-            # server-side charset pair to utf8mb4 / utf8mb4_0900_bin
-            "version_comment": "Dolt",
-            # validate_password component defaults (MySQL 8)
-            "validate_password.length": 8,
-            "validate_password.number_count": 1,
-            "validate_password.mixed_case_count": 1,
-            "validate_password.special_char_count": 1,
-            "strict_mysql_compatibility": 0,
-            "character_set_server": "utf8mb4",
-            "collation_server": "utf8mb4_0900_bin",
-        }
-        self.last_insert_id: int | None = None
-        # uuid() DEFAULT materialized by this session's last INSERT
-        # (reference last_insert_uuid.go)
-        self.last_insert_uuid: str | None = None
-        self._last_select_df: DataFrame | None = None  # for FOUND_ROWS()
-        self._found_rows_n: int | None = None
+        self._default_db = default_db
+        self._conn_ids = itertools.count(1)
+        # the session of the running statement; between statements, the
+        # session of callers that pass none
+        self.session = self.new_session()
+        self.event_session = self.new_session()  # runs event bodies
+        # the database whose tables the bare temp views show (_bind_db)
+        self._bound_db = default_db
         self.triggers: dict[str, list] = {}       # table → [Trigger]
         self.procedures: dict[str, object] = {}   # name → Procedure
         self.functions: dict[str, str] = {}       # stored SQL functions (DDL)
@@ -681,11 +727,8 @@ class Engine:
         self.events: dict[str, object] = {}       # name → admin.EventDef
         self._started = __import__("time").time()
         self._query_count = 0
-        self.connection_id = 1      # single-session engine: fixed thread id
-        self.last_row_count = -1    # ROW_COUNT(): -1 until a DML runs
         from .admin import UserEntry
         self.users["root@localhost"] = UserEntry("root", "localhost")
-        self.prepared: dict[str, object] = {}     # name → PreparedStatement
         from .streaming.replication import ReplicaController
         self.replica = ReplicaController(self)    # binlog-replica analogue
         import threading
@@ -889,7 +932,7 @@ class Engine:
 
 
     def _ungrouped_selects_allowed(self, sql: str) -> bool:
-        mode = str(self.sys_vars.get("sql_mode", "")).upper()
+        mode = self._sql_mode
         if "ONLY_FULL_GROUP_BY" not in mode:
             return True
         gm = re.search(r"\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\b|"
@@ -1091,7 +1134,37 @@ class Engine:
                     f"THEN {score} ELSE CAST(0 AS BIGINT) END)")
         return f"({score})"
 
-    def query(self, sql: str) -> DataFrame | OkResult:
+    def new_session(self) -> Session:
+        """A new connection's Session, with the next id from the one
+        counter (reference server/context.go:74 NewSessionManager)."""
+        return Session(next(self._conn_ids), self._default_db)
+
+    def query(self, sql: str,
+              session: Session | None = None) -> DataFrame | OkResult:
+        """Run one statement against `session`. A caller that passes none
+        gets the running statement's session when nested (trigger,
+        procedure, EXECUTE), else the engine's own. The statement lock
+        is held for the whole statement."""
+        with self._stmt_lock:
+            outer = self.session
+            self.session = session or outer
+            try:
+                return self._statement(sql)
+            finally:
+                self.session = outer
+
+    def _bind_db(self) -> None:
+        """Bind the bare temp views to the session's current database:
+        before each statement, at USE and after a snapshot restore. Only
+        a switch rebinds; it records no AS OF version."""
+        db = self.session.current_db
+        if db != self._bound_db:
+            self._bound_db = db
+            for ts in self.databases.get(db, {}).values():
+                if ts.df is not None:
+                    ts.df.createOrReplaceTempView(ts.name)
+
+    def _statement(self, sql: str) -> DataFrame | OkResult:
         from . import admin
         sql = sql.strip().rstrip(";").strip()
         # ANSI_QUOTES sql_mode: double-quoted tokens are IDENTIFIERS, not
@@ -1099,8 +1172,7 @@ class Engine:
         # ansi_quotes_queries.go). Normalized to backticks up front so
         # every downstream path (masking, transpiler, DDL) sees one
         # identifier spelling.
-        if "ANSI_QUOTES" in str(self.sys_vars.get("sql_mode", "")).upper() \
-                and '"' in sql:
+        if "ANSI_QUOTES" in self._sql_mode and '"' in sql:
             sql = _ansi_quotes_to_backticks(sql)
         if "_" in sql and "'" in sql:
             # identity-charset string introducers are no-ops here
@@ -1150,15 +1222,15 @@ class Engine:
         }.get(head)
         if handler is None:
             raise SqlError(f"unsupported statement: {sql[:60]!r}")
-        with self._stmt_lock:
-            admin.run_due_events(self)
-            result = handler(sql)
-            # ROW_COUNT() tracking (reference row_count.go): DML reports
-            # its affected count; statements that return a result set
-            # reset it to -1, as MySQL does
-            self.last_row_count = (
-                result.rows_affected if isinstance(result, OkResult) else -1)
-            return result
+        admin.run_due_events(self)  # in the event session
+        self._bind_db()
+        result = handler(sql)
+        # ROW_COUNT() tracking (reference row_count.go): DML reports its
+        # affected count; statements that return a result set reset it to
+        # -1, as MySQL does
+        self.session.last_row_count = (
+            result.rows_affected if isinstance(result, OkResult) else -1)
+        return result
 
     def _q_do(self, sql: str) -> OkResult:
         """DO expr: evaluate and discard (reference sql/plan/do.go)."""
@@ -1170,7 +1242,7 @@ class Engine:
     # ---- catalog helpers ---------------------------------------------------
 
     def _db(self, name: str | None = None) -> dict[str, TableState]:
-        db = name or self.current_db
+        db = name or self.session.current_db
         if db not in self.databases:
             raise SqlError(f"unknown database {db!r}")
         return self.databases[db]
@@ -1184,7 +1256,8 @@ class Engine:
             lower = {t.lower(): t for t in tables}
             if tbl.lower() in lower:
                 return tables[lower[tbl.lower()]]
-            raise SqlError(f"table {tbl!r} not found in database {db or self.current_db!r}")
+            raise SqlError(f"table {tbl!r} not found in database "
+                           f"{db or self.session.current_db!r}")
         return tables[tbl]
 
     @staticmethod
@@ -1195,17 +1268,18 @@ class Engine:
             return db.strip("`"), tbl.strip("`")
         return None, name
 
-    def _register(self, ts: TableState, record_version: bool = True) -> None:
-        """(Re)bind the table's current snapshot as a temp view and record
-        the snapshot in the version history (AS OF support — snapshots are
+    def _register(self, ts: TableState) -> None:
+        """(Re)bind the table's current snapshot as a temp view when the
+        table is in the bound database (`_bind_db`), and record the
+        snapshot in the version history (AS OF support — snapshots are
         already immutable DataFrames, so 'history' costs one list append).
         A checkpointed snapshot is compacted first (`_compact`)."""
         assert ts.df is not None
         ts.df = self._compact(ts.df)
-        ts.df.createOrReplaceTempView(ts.name)
-        if record_version:
-            ts.history.append(ts.df)
-            ts.history_ts.append(__import__("time").time())
+        if self.databases.get(self._bound_db, {}).get(ts.name) is ts:
+            ts.df.createOrReplaceTempView(ts.name)
+        ts.history.append(ts.df)
+        ts.history_ts.append(__import__("time").time())
 
     def _compact(self, df: DataFrame) -> DataFrame:
         """Narrow-coalesce an eagerly checkpointed snapshot to the
@@ -1262,19 +1336,21 @@ class Engine:
     def _substitute_vars(self, masked: str, lits: list[str]) -> str:
         # Literal-aware: runs on masked text so @ inside a string (emails,
         # handles) is never rewritten (r1 judge finding).
+        sys_vars = self.session.sys_vars
+
         def sys_repl(m: re.Match) -> str:
             name = m.group(1).lower()
-            if name in self.sys_vars:
-                return self._put(self.sys_vars.get(name), lits)
+            if name in sys_vars:
+                return self._put(sys_vars.get(name), lits)
             if "." in name:
                 head = name.split(".", 1)[0]
-                if head in self.sys_vars:  # @@var.field: var then field
-                    return (self._put(self.sys_vars.get(head), lits)
+                if head in sys_vars:  # @@var.field: var then field
+                    return (self._put(sys_vars.get(head), lits)
                             + name[len(head):])
-            return self._put(self.sys_vars.get(name), lits)
+            return self._put(sys_vars.get(name), lits)
 
         def user_repl(m: re.Match) -> str:
-            return self._put(self.user_vars.get(m.group(1)), lits)
+            return self._put(self.session.user_vars.get(m.group(1)), lits)
 
         return self._USER_VAR.sub(user_repl,
                                   self._SYS_VAR.sub(sys_repl, masked))
@@ -1304,14 +1380,14 @@ class Engine:
     # session, substituted as literals. A thunk runs only when its name
     # occurs — FOUND_ROWS() may count the previous result.
     _SESSION_FNS = {
-        "LAST_INSERT_ID": lambda e: e.last_insert_id or 0,
-        "LAST_INSERT_UUID": lambda e: e.last_insert_uuid,
-        "DATABASE": lambda e: e.current_db,
-        "SCHEMA": lambda e: e.current_db,
-        "VERSION": lambda e: str(e.sys_vars.get("version", "")),
-        "CONNECTION_ID": lambda e: e.connection_id,
-        "ROW_COUNT": lambda e: e.last_row_count,
-        "FOUND_ROWS": lambda e: e._found_rows(),
+        "LAST_INSERT_ID": lambda s: s.last_insert_id or 0,
+        "LAST_INSERT_UUID": lambda s: s.last_insert_uuid,
+        "DATABASE": lambda s: s.current_db,
+        "SCHEMA": lambda s: s.current_db,
+        "VERSION": lambda s: str(s.sys_vars.get("version", "")),
+        "CONNECTION_ID": lambda s: s.id,
+        "ROW_COUNT": lambda s: s.last_row_count,
+        "FOUND_ROWS": Session.found_rows,
     }
     _SESSION_FN = re.compile(rf"\b({'|'.join(_SESSION_FNS)})\s*\(\s*\)",
                              re.I)
@@ -1322,26 +1398,21 @@ class Engine:
         def repl(m: re.Match) -> str:
             name = m.group(1).upper()
             if name not in vals:
-                vals[name] = self._put(self._SESSION_FNS[name](self), lits)
+                vals[name] = self._put(
+                    self._SESSION_FNS[name](self.session), lits)
             return vals[name]
 
         return self._SESSION_FN.sub(repl, masked)
 
-    def _found_rows(self) -> int:
-        """FOUND_ROWS(): row count of the previous SELECT — post-LIMIT
-        normally, pre-LIMIT when it was SQL_CALC_FOUND_ROWS (reference
-        sql/expression/function/found_rows.go). The previous result is
-        kept as an (uncollected) DataFrame; the count runs on demand."""
-        if self._found_rows_n is not None:
-            return self._found_rows_n
-        prev = self._last_select_df
-        return prev.count() if prev is not None else 0
+    @property
+    def _sql_mode(self) -> str:
+        return str(self.session.sys_vars.get("sql_mode", "")).upper()
 
     @property
     def _pipes_as_concat(self) -> bool:
         """sql_mode PIPES_AS_CONCAT (or ANSI): `||` concatenates. Read from
-        this engine's own sql_mode, so engines never share the flag."""
-        mode = str(self.sys_vars.get("sql_mode", "")).upper()
+        the session's own sql_mode, so sessions never share the flag."""
+        mode = self._sql_mode
         return ("PIPES_AS_CONCAT" in mode
                 or re.search(r"\bANSI\b", mode) is not None)
 
@@ -1362,10 +1433,11 @@ class Engine:
         res = self._select_masked(masked, lits)
         if isinstance(res, DataFrame):
             # found_rows() reads the PRE-limit count after SQL_CALC_FOUND_ROWS
-            self._last_select_df = res if not calc else self._select_masked(
-                re.sub(r"\bLIMIT\s+\d+(?:\s*,\s*\d+|\s+OFFSET\s+\d+)?\s*$",
-                       "", masked, flags=re.I), calc_lits)
-            self._found_rows_n = None
+            self.session.last_select_df = res if not calc else \
+                self._select_masked(re.sub(
+                    r"\bLIMIT\s+\d+(?:\s*,\s*\d+|\s+OFFSET\s+\d+)?\s*$",
+                    "", masked, flags=re.I), calc_lits)
+            self.session.found_rows_n = None
         return res
 
     def _select_masked(self, masked: str,
@@ -1425,7 +1497,7 @@ class Engine:
                 raise SqlError(
                     f"SELECT INTO: {len(row)} columns for {len(names)} variables")
             for name, value in zip(names, row):
-                self.user_vars[name] = value
+                self.session.user_vars[name] = value
             return OkResult(1)
         if path:
             df.coalesce(1).write.mode("overwrite").option("header", "false") \
@@ -1652,7 +1724,7 @@ class Engine:
         Known divergence: TIMESTAMP columns are stored naive here, so a
         session-tz change between write and read shifts them like
         DATETIME (MySQL would pin the stored instant)."""
-        tz = str(self.sys_vars.get("time_zone", "SYSTEM"))
+        tz = str(self.session.sys_vars.get("time_zone", "SYSTEM"))
         pat = re.compile(r"\bUNIX_TIMESTAMP\s*\(", re.I)
         pos = 0
         while True:
@@ -1676,7 +1748,7 @@ class Engine:
                                    lits: list[str]) -> str:
         """validate_password_strength reads the validate_password.* policy
         vars — thread the session's current values as extra arguments."""
-        vals = ", ".join(str(int(self.sys_vars.get(
+        vals = ", ".join(str(int(self.session.sys_vars.get(
             f"validate_password.{k}", d))) for k, d in (
             ("length", 8), ("number_count", 1),
             ("mixed_case_count", 1), ("special_char_count", 1)))
@@ -1892,7 +1964,7 @@ class Engine:
         re.I)
 
     def _rewrite_information_schema(self, masked: str, lits: list[str]) -> str:
-        if self.current_db == "information_schema":
+        if self.session.current_db == "information_schema":
             # USE information_schema: bare table names qualify implicitly
             masked = self._INFO_BARE.sub(
                 lambda m: f"{m.group(1)} information_schema."
@@ -1975,7 +2047,7 @@ class Engine:
                 except Exception:  # noqa: BLE001 — unreadable view
                     continue
                 rows += [
-                    (self.current_db, r.name, f.name, i + 1,
+                    (self.session.current_db, r.name, f.name, i + 1,
                      f.dataType.simpleString(),
                      "YES" if f.nullable else "NO", "", None,
                      f.dataType.simpleString())
@@ -1991,17 +2063,19 @@ class Engine:
                      and r.name not in {t for db in self.databases.values()
                                         for t in db}]
             self._is_view("views", [
-                ("def", self.current_db, v, "<definition>") for v in names],
+                ("def", self.session.current_db, v, "<definition>")
+                for v in names],
                 "TABLE_CATALOG string, TABLE_SCHEMA string, TABLE_NAME string, "
                 "VIEW_DEFINITION string")
         if "routines" in needed:
             self._is_view("routines", [
-                (p.name, self.current_db, "PROCEDURE")
+                (p.name, self.session.current_db, "PROCEDURE")
                 for p in self.procedures.values()],
                 "ROUTINE_NAME string, ROUTINE_SCHEMA string, ROUTINE_TYPE string")
         if "triggers" in needed:
             rows = [
-                (tr.name, tr.event, tbl, self.current_db, tr.timing, tr.body)
+                (tr.name, tr.event, tbl, self.session.current_db, tr.timing,
+                 tr.body)
                 for tbl, trigs in self.triggers.items() for tr in trigs
             ]
             self._is_view("triggers", rows,
@@ -2074,7 +2148,7 @@ class Engine:
                 "COLLATION_NAME string, CHARACTER_SET_NAME string, ID int, "
                 "IS_DEFAULT string")
         if "events" in needed:
-            rows = [(ev.name, self.current_db,
+            rows = [(ev.name, self.session.current_db,
                      "ONE TIME" if ev.at_ts is not None else "RECURRING",
                      "ENABLED" if ev.enabled else "DISABLED")
                     for ev in self.events.values()]
@@ -2321,7 +2395,7 @@ class Engine:
                 "PARTITION_NAME string, PARTITION_METHOD string")
         if "processlist" in needed:
             self._is_view("processlist", [
-                (1, "root", "localhost", self.current_db, "Query", 0,
+                (1, "root", "localhost", self.session.current_db, "Query", 0,
                  "executing", None)],
                 "ID bigint, USER string, HOST string, DB string, "
                 "COMMAND string, TIME int, STATE string, INFO string")
@@ -3174,7 +3248,7 @@ class Engine:
                 except Exception:  # noqa: BLE001
                     raise SqlError(
                         f"table {old_t!r} not found in database "
-                        f"{self.current_db!r}")
+                        f"{self.session.current_db!r}")
                 vdf.createOrReplaceTempView(new_t)
                 self.spark.catalog.dropTempView(old_t)
                 vk = getattr(self, "views", None)
@@ -3233,7 +3307,8 @@ class Engine:
         # triggers defined ON this table go with it (MySQL; reference
         # trigger_queries.go "drop table referenced in triggers")
         self.triggers.pop(tbl, None)
-        self.spark.catalog.dropTempView(tbl)
+        if tables is self.databases.get(self._bound_db):
+            self.spark.catalog.dropTempView(tbl)
         return OkResult(0)
 
     # ---- DML ---------------------------------------------------------------
@@ -3653,8 +3728,8 @@ class Engine:
                     # m_i = max over explicit rows j < i of (ex_j - g_j):
                     #   id_i = g_i + max(start - 1, m_i)
                     # — one window pass, no per-row loop.
-                    zero_gens = "NO_AUTO_VALUE_ON_ZERO" not in str(
-                        self.sys_vars.get("sql_mode", "")).upper()
+                    zero_gens = "NO_AUTO_VALUE_ON_ZERO" not in \
+                        self._sql_mode
                     gen_flag = F.col(c.name).isNull() | (
                         (F.col(c.name).cast("bigint") == 0)
                         if zero_gens else F.lit(False))
@@ -3905,14 +3980,14 @@ class Engine:
             # `incoming` (exactly the net-new/overwriting rows)
             self._ft_after_insert(ts, incoming, incremental=odku is None)
         if last_id is not None:
-            self.last_insert_id = last_id
+            self.session.last_insert_id = last_id
         uuid_cols = [c.name for c in ts.columns
                      if c.default and "uuid" in c.default.lower()
                      and c.name not in target_cols]
         if uuid_cols:
             row = incoming.select(uuid_cols[0]).first()
             if row is not None:
-                self.last_insert_uuid = row[0]
+                self.session.last_insert_uuid = row[0]
         self._apply_insert_triggers(ts, incoming, "AFTER")
         return OkResult(max(affected, 0), last_id)
 
@@ -4362,7 +4437,7 @@ class Engine:
     def _strict_mode(self) -> bool:
         """True when sql_mode contains a STRICT_* flag (reference
         sql/types/number.go consults the session's strict setting)."""
-        return "STRICT_" in str(self.sys_vars.get("sql_mode", "")).upper()
+        return "STRICT_" in self._sql_mode
 
     def _lenient_cast(self, c, expr: Column) -> Column:
         """IGNORE-mode value conversion (reference sql/plan/update.go /
@@ -4590,7 +4665,7 @@ class Engine:
         n_match = matched.count()
         # FOUND_ROWS() after an UPDATE reports the matched-row count
         # (reference found_rows.go + update result Info.Matched)
-        self._found_rows_n = n_match
+        self.session.found_rows_n = n_match
         if not assigns:
             # every assignment was a generated-column DEFAULT: nothing
             # changes, but the statement still reports matched rows
@@ -5483,9 +5558,8 @@ class Engine:
             self.databases.setdefault(db, {})
         if db not in self.databases:
             raise SqlError(f"unknown database {db!r}")
-        self.current_db = db
-        for ts in self.databases[db].values():
-            self._register(ts)
+        self.session.current_db = db
+        self._bind_db()
         return OkResult(0)
 
     def _q_set(self, sql: str) -> OkResult:
@@ -5498,8 +5572,8 @@ class Engine:
             cs = nm.group(1).lower()
             for v in ("character_set_client", "character_set_connection",
                       "character_set_results"):
-                self.sys_vars[v] = cs
-            self.sys_vars["collation_connection"] = (
+                self.session.sys_vars[v] = cs
+            self.session.sys_vars["collation_connection"] = (
                 nm.group(2).lower() if nm.group(2)
                 else {"utf8mb4": "utf8mb4_0900_ai_ci"}.get(
                     cs, cs + "_general_ci"))
@@ -5508,17 +5582,17 @@ class Engine:
                       body, re.I)
         if cm:
             cs = cm.group(1).lower()
-            self.sys_vars["character_set_client"] = cs
-            self.sys_vars["character_set_results"] = cs
+            self.session.sys_vars["character_set_client"] = cs
+            self.session.sys_vars["character_set_results"] = cs
             # connection charset takes the DATABASE charset (MySQL docs)
-            self.sys_vars["character_set_connection"] = "utf8mb4"
+            self.session.sys_vars["character_set_connection"] = "utf8mb4"
             return OkResult(0)
         m = re.match(r"(?:GLOBAL\s+|@@global\.|@@)?event_scheduler\s*=\s*(\w+)",
                      body, re.I)
         if m:
             from . import admin
             on = m.group(1).upper() in ("ON", "1", "TRUE")
-            self.sys_vars["event_scheduler"] = "ON" if on else "OFF"
+            self.session.sys_vars["event_scheduler"] = "ON" if on else "OFF"
             admin.set_event_scheduler(self, on)
             return OkResult(0)
         scope = r"(?:(?:SESSION|LOCAL|GLOBAL)\s+)?"
@@ -5541,17 +5615,18 @@ class Engine:
                          r"(\w+(?:\.\w+)?)"
                          r"\s*:?=\s*(.*)$", assign, re.I)
             if m:
-                self.sys_vars[m.group(1).lower()] = \
+                self.session.sys_vars[m.group(1).lower()] = \
                     self._eval_sysvar_value(m.group(1).lower(), m.group(2))
                 continue
             m = re.match(r"@(\w+)\s*:?=\s*(.*)$", assign)
             if m:
-                self.user_vars[m.group(1)] = self._eval_scalar(m.group(2))
+                self.session.user_vars[m.group(1)] = \
+                    self._eval_scalar(m.group(2))
                 continue
             m = re.match(rf"{scope}(\w+(?:\.\w+)?)\s*=\s*(.*)$",
                          assign, re.I)
             if m:  # bare sysvar, optionally SESSION/LOCAL/GLOBAL-scoped
-                self.sys_vars[m.group(1).lower()] = \
+                self.session.sys_vars[m.group(1).lower()] = \
                     self._eval_sysvar_value(m.group(1).lower(), m.group(2))
                 continue
             raise SqlError(f"cannot parse SET: {assign!r}")
@@ -5572,14 +5647,14 @@ class Engine:
             elif up in ("OFF", "FALSE"):
                 value = 0
             elif up == "DEFAULT":
-                value = self.sys_vars.get(name)
+                value = self.session.sys_vars.get(name)
             else:
                 value = raw.upper()  # bareword enum/set member
         else:
             value = self._eval_scalar(raw)
             if isinstance(value, str) and \
                     value.upper() in ("ON", "TRUE", "OFF", "FALSE") and \
-                    not isinstance(self.sys_vars.get(name), str):
+                    not isinstance(self.session.sys_vars.get(name), str):
                 # boolean-typed (or unknown) variable: quoted booleans
                 # coerce like MySQL's TypeBool system variables
                 value = 1 if value.upper() in ("ON", "TRUE") else 0
@@ -5621,7 +5696,7 @@ class Engine:
             m = re.search(r"FROM\s+([`\w]+)", sql, re.I)
             db = m.group(1).strip("`") if m else None
             names = sorted(self._db(db))
-            field = f"Tables_in_{db or self.current_db}"
+            field = f"Tables_in_{db or self.session.current_db}"
             return self.spark.createDataFrame(
                 [(n,) for n in names], f"`{field}` string"
             )
@@ -5682,7 +5757,7 @@ class Engine:
             )
         if up.startswith("SHOW VARIABLES"):
             return self.spark.createDataFrame(
-                [(k, str(v)) for k, v in sorted(self.sys_vars.items())],
+                sorted((k, str(v)) for k, v in self.session.sys_vars.items()),
                 "Variable_name string, Value string",
             )
         raise SqlError(f"unsupported SHOW: {sql[:60]!r}")
@@ -5735,11 +5810,11 @@ class Engine:
             m2 = re.match(r"PREPARE\s+(\w+)\s+FROM\s+@(\w+)\s*$", sql, re.I)
             if not m2:
                 raise SqlError(f"cannot parse PREPARE: {sql[:60]!r}")
-            text = str(self.user_vars.get(m2.group(2), ""))
+            text = str(self.session.user_vars.get(m2.group(2), ""))
             name = m2.group(1)
         else:
             name, text = m.group(1), m.group(2).replace("''", "'")
-        self.prepared[name.lower()] = PreparedStatement(
+        self.session.prepared[name.lower()] = PreparedStatement(
             name, text, text.count("?")
         )
         return OkResult(0)
@@ -5748,15 +5823,15 @@ class Engine:
         m = re.match(r"EXECUTE\s+(\w+)(?:\s+USING\s+(.*))?$", sql, re.I | re.S)
         if not m:
             raise SqlError(f"cannot parse EXECUTE: {sql[:60]!r}")
-        ps = self.prepared.get(m.group(1).lower())
+        ps = self.session.prepared.get(m.group(1).lower())
         if ps is None:
             raise SqlError(f"unknown prepared statement {m.group(1)!r}")
         args = []
         if m.group(2):
             for a in _split_top_level(m.group(2)):
                 a = a.strip()
-                args.append(self.user_vars.get(a[1:]) if a.startswith("@")
-                            else self._eval_scalar(a))
+                args.append(self.session.user_vars.get(a[1:])
+                            if a.startswith("@") else self._eval_scalar(a))
         if len(args) != ps.n_params:
             raise SqlError(
                 f"prepared statement {ps.name} needs {ps.n_params} params, got {len(args)}")
@@ -5768,7 +5843,7 @@ class Engine:
     def _q_deallocate(self, sql: str) -> OkResult:
         m = re.match(r"DEALLOCATE\s+PREPARE\s+(\w+)", sql, re.I)
         if m:
-            self.prepared.pop(m.group(1).lower(), None)
+            self.session.prepared.pop(m.group(1).lower(), None)
         return OkResult(0)
 
     def _q_call(self, sql: str) -> DataFrame | OkResult:
@@ -5799,7 +5874,7 @@ class Engine:
             if i < len(proc.params) and proc.params[i][0] in ("OUT",
                                                               "INOUT") \
                     and a.startswith("@"):
-                self.user_vars[a[1:]] = scope_out.get(
+                self.session.user_vars[a[1:]] = scope_out.get(
                     proc.params[i][1].lower())
         return result if result is not None else OkResult(0)
 
@@ -5991,26 +6066,24 @@ class Engine:
     # is just a dict of references — BEGIN records it, ROLLBACK restores it,
     # COMMIT drops it. SAVEPOINT keeps a named stack of the same.
 
+    _SNAPSHOT_FIELDS = ("df", "columns", "primary_key", "checks",
+                        "check_names", "check_enforced", "foreign_keys",
+                        "auto_inc_next", "history", "history_ts")
+
     def _snapshot_state(self) -> dict:
-        import copy as _copy
-        snap: dict = {"dbs": {},
-                      "triggers": {k: list(v) for k, v in self.triggers.items()}}
-        for dbname, tables in self.databases.items():
-            snap["dbs"][dbname] = {}
-            for tname, ts in tables.items():
-                snap["dbs"][dbname][tname] = {
-                    "df": ts.df,
-                    "columns": _copy.deepcopy(ts.columns),
-                    "primary_key": ts.primary_key,
-                    "checks": list(ts.checks),
-                    "check_names": list(ts.check_names),
-                    "check_enforced": list(ts.check_enforced),
-                    "foreign_keys": list(ts.foreign_keys),
-                    "auto_inc_next": ts.auto_inc_next,
-                    "history": list(ts.history),
-                    "history_ts": list(ts.history_ts),
-                }
-        return snap
+        import copy
+
+        def saved(ts: TableState) -> dict:
+            out = {}
+            for f in self._SNAPSHOT_FIELDS:
+                v = getattr(ts, f)
+                out[f] = list(v) if isinstance(v, list) else v
+            out["columns"] = copy.deepcopy(ts.columns)  # ALTER edits them
+            return out
+
+        return {"triggers": {k: list(v) for k, v in self.triggers.items()},
+                "dbs": {db: {t: saved(ts) for t, ts in tables.items()}
+                        for db, tables in self.databases.items()}}
 
     def _restore_state(self, snap: dict) -> None:
         self.triggers = {k: list(v) for k, v in snap["triggers"].items()}
@@ -6027,24 +6100,13 @@ class Engine:
                     except Exception:
                         pass
                     del tables[tname]
-            for tname, s in tsnap.items():
-                ts = tables.get(tname)
-                if ts is None:
-                    ts = TableState(tname, s["columns"])
-                    tables[tname] = ts
-                ts.columns = s["columns"]
-                ts.primary_key = s["primary_key"]
-                ts.checks = s["checks"]
-                ts.check_names = s.get("check_names", list(ts.check_names))
-                ts.check_enforced = s.get("check_enforced",
-                                          list(ts.check_enforced))
-                ts.foreign_keys = s["foreign_keys"]
-                ts.auto_inc_next = s["auto_inc_next"]
-                ts.history = s["history"]
-                ts.history_ts = s["history_ts"]
-                ts.df = s["df"]
-                if ts.df is not None:
-                    ts.df.createOrReplaceTempView(tname)
+            for tname, saved in tsnap.items():
+                ts = tables.setdefault(tname,
+                                       TableState(tname, saved["columns"]))
+                for f, v in saved.items():
+                    setattr(ts, f, v)
+        self._bound_db = None  # rebind: a view above may have been dropped
+        self._bind_db()
 
     def _q_start(self, sql: str) -> OkResult:
         """START TRANSACTION → txn; START REPLICA|SLAVE → replication
@@ -6069,39 +6131,31 @@ class Engine:
 
     def _q_txn(self, sql: str) -> OkResult:
         """BEGIN/COMMIT/ROLLBACK + SAVEPOINT/ROLLBACK TO/RELEASE
-        (reference sql/plan/transaction.go:1-209)."""
+        (reference sql/plan/transaction.go:1-209), on the session's
+        snapshots."""
+        sess = self.session
         up = sql.strip().rstrip(";").upper()
         if up.startswith(("BEGIN", "START")):
-            self._txn_snapshot = self._snapshot_state()
-            self._savepoints = {}
+            sess.txn_snapshot, sess.savepoints = self._snapshot_state(), {}
             return OkResult(0)
         if up.startswith("SAVEPOINT"):
-            name = sql.split()[1].strip("`;")
-            if not hasattr(self, "_savepoints"):
-                self._savepoints = {}
-            self._savepoints[name] = self._snapshot_state()
+            sess.savepoints[sql.split()[1].strip("`;")] = \
+                self._snapshot_state()
             return OkResult(0)
         if up.startswith("RELEASE"):
-            name = sql.split()[-1].strip("`;")
-            getattr(self, "_savepoints", {}).pop(name, None)
+            sess.savepoints.pop(sql.split()[-1].strip("`;"), None)
             return OkResult(0)
         if up.startswith("ROLLBACK"):
             m = re.match(r"ROLLBACK\s+(?:WORK\s+)?TO\s+(?:SAVEPOINT\s+)?`?(\w+)`?",
                          sql.strip(), re.I)
             if m:
-                name = m.group(1)
-                sp = getattr(self, "_savepoints", {}).get(name)
+                sp = sess.savepoints.get(m.group(1))
                 if sp is None:
-                    raise SqlError(f"savepoint {name!r} does not exist")
+                    raise SqlError(f"savepoint {m.group(1)!r} does not exist")
                 self._restore_state(sp)  # txn stays open
                 return OkResult(0)
-            snap = getattr(self, "_txn_snapshot", None)
-            if snap is not None:
-                self._restore_state(snap)
-            self._txn_snapshot = None
-            self._savepoints = {}
-            return OkResult(0)
-        # COMMIT
-        self._txn_snapshot = None
-        self._savepoints = {}
+            if sess.txn_snapshot is not None:
+                self._restore_state(sess.txn_snapshot)
+        # COMMIT, or the end of a ROLLBACK
+        sess.txn_snapshot, sess.savepoints = None, {}
         return OkResult(0)

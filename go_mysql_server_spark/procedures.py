@@ -60,7 +60,9 @@ class Handler:
                           # (else RESIGNAL inside it would recurse forever)
 
 
-_OPENER_RE = r"(BEGIN|IF|WHILE|REPEAT|CASE|LOOP)\b"
+# a BEGIN that ends its statement, or BEGIN WORK, starts a transaction;
+# any other BEGIN opens a block
+_OPENER_RE = r"(BEGIN(?!\s*(?:;|$)|\s+WORK\b)|IF|WHILE|REPEAT|CASE|LOOP)\b"
 _CLOSER_RE = r"END\s*(IF|WHILE|REPEAT|CASE|LOOP)?\b"
 
 
@@ -115,12 +117,13 @@ def _split_on_keywords(body: str, pattern: str) -> list[tuple[str | None, str]]:
 
 
 def split_statements(body: str) -> list[str]:
-    """Split a BEGIN...END body on ';' at top nesting level (respects
-    nested BEGIN/END, IF/END IF, WHILE/END WHILE and string literals)."""
+    """Split a BEGIN...END body, or a multi-statement query, on ';' at
+    top nesting level (respects nested BEGIN/END, IF/END IF, WHILE/END
+    WHILE and string literals; a transaction's BEGIN is a statement)."""
     body = body.strip()
-    if re.match(r"^BEGIN\b", body, re.I):
-        body = re.sub(r"^BEGIN\b", "", body, flags=re.I)
-        body = re.sub(r"\bEND\s*$", "", body, flags=re.I)
+    m = re.match(_OPENER_RE, body, re.I)
+    if m and m.group(1).upper() == "BEGIN":
+        body = re.sub(r"\bEND\s*$", "", body[m.end():], flags=re.I)
     out, depth, cur, i, n = [], 0, [], 0, len(body)
     while i < n:
         c = body[i]
@@ -553,7 +556,7 @@ class ProcedureInterpreter:
                     # user variables are session-scoped, visible after
                     # the CALL returns (reference sql/expression/
                     # user_variable.go)
-                    self.engine.user_vars[name[1:]] = \
+                    self.engine.session.user_vars[name[1:]] = \
                         self._eval(expr, scope)
                     continue
                 scope[name.lower()] = self._eval(expr, scope)
@@ -592,7 +595,7 @@ class ProcedureInterpreter:
                         "processed", sqlstate="02000", errno=1329)
                 for t, v in zip(targets, rows[0]):
                     if t.startswith("@"):
-                        self.engine.user_vars[t[1:]] = v
+                        self.engine.session.user_vars[t[1:]] = v
                     else:
                         scope[t.lower()] = v
                 return None
@@ -627,7 +630,7 @@ class ProcedureInterpreter:
                             continue
                         val = scope_out.get(proc.params[i][1].lower())
                         if a.startswith("@"):
-                            self.engine.user_vars[a[1:]] = val
+                            self.engine.session.user_vars[a[1:]] = val
                         elif re.fullmatch(r"\w+", a) and a.lower() in scope:
                             scope[a.lower()] = val
                     return result
@@ -865,7 +868,7 @@ class ProcedureInterpreter:
             # Lookup is case-insensitive like MySQL's; an unbound @var
             # stays intact for the engine's own substitution.
             def repl_uvar(m: re.Match) -> str:
-                uv = self.engine.user_vars
+                uv = self.engine.session.user_vars
                 if m.group(1) in uv:
                     return Engine._lit(uv[m.group(1)])
                 key = m.group(1).lower()

@@ -58,7 +58,9 @@ class Client:
         greeting = p.read_packet(self.sock)
         if greeting is None or greeting[0] != 0x0A:
             raise MySQLClientError(2013, "HY000", "bad greeting")
-        self.server_version = greeting[1:greeting.index(b"\x00", 1)].decode()
+        end = greeting.index(b"\x00", 1)
+        self.server_version = greeting[1:end].decode()
+        self.thread_id = struct.unpack_from("<I", greeting, end + 1)[0]
         caps = self.CAPS if database else (
             self.CAPS & ~p.CLIENT_CONNECT_WITH_DB)
         resp = (struct.pack("<IIB", caps, 1 << 24, p.CHARSET_UTF8MB4)
@@ -276,6 +278,10 @@ class Client:
         p.write_packet(self.sock, bytes([p.COM_PING]), 0)
         self._expect_ok(p.read_packet(self.sock))
         return True
+
+    def reset_connection(self) -> None:
+        p.write_packet(self.sock, bytes([p.COM_RESET_CONNECTION]), 0)
+        self._expect_ok(p.read_packet(self.sock))
 
     def select_db(self, database: str) -> None:
         p.write_packet(

@@ -10,14 +10,15 @@ prepared-statement protocol (COM_STMT_PREPARE / EXECUTE / CLOSE /
 RESET, reference server/handler.go:126 ComPrepare, :261 ComStmtExecute).
 
 Execution model: one shared Engine (the catalog is server-global, as in
-the reference), with statement execution serialized behind a lock —
-Spark drives the actual parallelism inside each statement across its
-executors, so concurrent protocol connections interleave statements
-rather than threads. Each connection carries its OWN session state
-(current database, @vars, last_insert_id, sys_vars incl. sql_mode),
-swapped into the engine under the statement lock — the reference builds
-a sql.Session per connection the same way (server/context.go:50
-SessionManager, :74 NewSessionManager).
+the reference), whose statement lock serializes statements — Spark drives
+the actual parallelism inside each statement across its executors, so
+concurrent protocol connections interleave statements rather than
+threads. Each connection owns one engine `Session` (current database,
+@vars, system variables incl. sql_mode, LAST_INSERT_ID, prepared
+statements, the open transaction) and passes it with every statement —
+the reference builds a sql.Session per connection the same way
+(server/context.go:50 SessionManager, :74 NewSessionManager). Only the
+binary protocol's statement table lives here.
 
 Resultsets reach the socket holding at most one result partition on the
 driver at a time — the analogue of the reference's pull-based RowIter →
@@ -38,7 +39,8 @@ import socketserver
 import struct
 import threading
 
-from ..engine import Engine, OkResult, SqlError
+from ..dbapi import _bind
+from ..engine import Engine, OkResult, Session, SqlError
 from . import protocol as p
 
 
@@ -58,22 +60,6 @@ def _result_rows(df):
     return df.toLocalIterator()
 
 
-class _ConnSession:
-    """Per-connection session state overlay (reference
-    server/context.go:50 SessionManager.NewSession): the engine's
-    session-scoped fields, private to one wire connection."""
-
-    def __init__(self, engine: Engine):
-        self.current_db = engine.current_db
-        self.user_vars: dict = {}
-        self.sys_vars = dict(engine.sys_vars)
-        self.last_insert_id: int | None = None
-        self.last_row_count = -1
-        self.stmts: dict[int, tuple[str, int]] = {}  # id → (sql, nparams)
-        self.stmt_types: dict[int, list] = {}  # id → last bound types
-        self.next_stmt_id = 1
-
-
 class MySQLServer:
     """Serve `engine` on host:port. Start with .start() (daemon threads),
     stop with .close(). Port 0 picks an ephemeral port (see .port)."""
@@ -83,8 +69,6 @@ class MySQLServer:
                  "8.0.33-go-mysql-server-spark"):
         self.engine = engine
         self.server_version = server_version
-        self._lock = threading.Lock()
-        self._next_conn_id = 1
         outer = self
 
         class _Handler(socketserver.BaseRequestHandler):
@@ -114,44 +98,14 @@ class MySQLServer:
         if self._thread:
             self._thread.join(timeout=5)
 
-    # -- per-connection session binding
-
-    def _run(self, sess: _ConnSession, sql: str):
-        """Execute one statement with `sess`'s state swapped into the
-        engine, under the statement lock; session mutations (USE, SET
-        @x, LAST_INSERT_ID) flow back into `sess`, never into another
-        connection's view."""
-        with self._lock:
-            eng = self.engine
-            saved = (eng.current_db, eng.user_vars, eng.sys_vars,
-                     eng.last_insert_id, eng.last_row_count)
-            eng.current_db = sess.current_db
-            eng.user_vars = sess.user_vars
-            eng.sys_vars = sess.sys_vars
-            eng.last_insert_id = sess.last_insert_id
-            eng.last_row_count = sess.last_row_count
-            try:
-                return eng.query(sql)
-            finally:
-                sess.current_db = eng.current_db
-                sess.user_vars = eng.user_vars
-                sess.sys_vars = eng.sys_vars
-                sess.last_insert_id = eng.last_insert_id
-                sess.last_row_count = eng.last_row_count
-                (eng.current_db, eng.user_vars, eng.sys_vars,
-                 eng.last_insert_id, eng.last_row_count) = saved
-
     # -- connection phase
 
     def _serve_connection(self, sock: socket.socket) -> None:
         sock.settimeout(300)
         sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
-        with self._lock:
-            conn_id = self._next_conn_id
-            self._next_conn_id += 1
-        sess = _ConnSession(self.engine)
+        sess = self.engine.new_session()
         try:
-            client_caps = self._handshake(sock, conn_id, sess)
+            client_caps = self._handshake(sock, sess)
             if client_caps is None:
                 return
             self._command_loop(sock, client_caps, sess)
@@ -163,12 +117,11 @@ class MySQLServer:
             except OSError:
                 pass
 
-    def _handshake(self, sock, conn_id: int,
-                   sess: _ConnSession) -> int | None:
+    def _handshake(self, sock, sess: Session) -> int | None:
         salt = os.urandom(20).replace(b"\x00", b"\x01")
         greeting = (
             b"\x0a" + self.server_version.encode() + b"\x00"
-            + struct.pack("<I", conn_id) + salt[:8] + b"\x00"
+            + struct.pack("<I", sess.id) + salt[:8] + b"\x00"
             + struct.pack("<H", p.SERVER_CAPABILITIES & 0xFFFF)
             + bytes([p.CHARSET_UTF8MB4])
             + struct.pack("<H", p.SERVER_STATUS_AUTOCOMMIT)
@@ -180,14 +133,11 @@ class MySQLServer:
         if resp is None or len(resp) < 32:
             return None
         caps = struct.unpack_from("<I", resp, 0)[0]
-        # username starts after caps(4) + max-packet(4) + charset(1) +
+        # the username starts after caps(4) + max-packet(4) + charset(1) +
         # 23 reserved bytes; auth is accepted for any credentials (the
         # reference delegates to a pluggable authenticator — the default
         # test server accepts all; server/server_config.go)
-        pos = 32
-        end = resp.index(b"\x00", pos)
-        self._last_user = resp[pos:end].decode("utf-8", "replace")
-        pos = end + 1
+        pos = resp.index(b"\x00", 32) + 1
         if caps & p.CLIENT_PLUGIN_AUTH_LENENC:
             _auth, pos = p.read_lenenc_bytes(resp, pos)
         elif caps & p.CLIENT_SECURE_CONNECTION:
@@ -200,7 +150,7 @@ class MySQLServer:
             db = resp[pos:end].decode("utf-8", "replace")
             if db:
                 try:
-                    self._run(sess, f"USE `{db}`")
+                    self.engine.query(f"USE `{db}`", sess)
                 except SqlError:
                     p.write_packet(sock, p.err_packet(
                         1049, "42000", f"Unknown database '{db}'"), seq)
@@ -210,7 +160,8 @@ class MySQLServer:
 
     # -- command phase
 
-    def _command_loop(self, sock, caps: int, sess: _ConnSession) -> None:
+    def _command_loop(self, sock, caps: int, sess: Session) -> None:
+        stmts: dict[int, list] = {}  # COM_STMT id → [sql, nparams, types]
         while True:
             pkt = p.read_packet(sock)
             if pkt is None or not pkt:
@@ -235,22 +186,23 @@ class MySQLServer:
                 else:
                     self._run_and_reply(sock, sess, sql)
             elif cmd == p.COM_STMT_PREPARE:
-                self._stmt_prepare(sock, sess,
+                self._stmt_prepare(sock, stmts,
                                    body.decode("utf-8", "replace"))
             elif cmd == p.COM_STMT_EXECUTE:
-                self._stmt_execute(sock, sess, body)
+                self._stmt_execute(sock, sess, stmts, body)
             elif cmd == p.COM_STMT_CLOSE:
                 # no response packet, per protocol
-                sid = struct.unpack_from("<I", body, 0)[0]
-                sess.stmts.pop(sid, None)
-                sess.stmt_types.pop(sid, None)
+                stmts.pop(struct.unpack_from("<I", body, 0)[0], None)
             elif cmd == p.COM_STMT_RESET:
                 p.write_packet(sock, p.ok_packet(), 1)
             elif cmd == p.COM_STATISTICS:
                 p.write_packet(sock, b"Uptime: 0  Threads: 1", 1)
             elif cmd == p.COM_RESET_CONNECTION:
-                sess.user_vars.clear()
-                sess.last_insert_id = None
+                # as MySQL: roll back, then a new session's state with the
+                # same id and database, and no prepared statements
+                self.engine.query("ROLLBACK", sess)
+                sess.reset()
+                stmts.clear()
                 p.write_packet(sock, p.ok_packet(), 1)
             elif cmd == p.COM_FIELD_LIST:
                 # deprecated in MySQL 8; empty terminator is sufficient
@@ -261,7 +213,7 @@ class MySQLServer:
 
     # -- text protocol
 
-    def _local_infile(self, sock, sess: "_ConnSession", sql: str,
+    def _local_infile(self, sock, sess: Session, sql: str,
                       fname: str) -> None:
         """LOAD DATA LOCAL INFILE: the server answers COM_QUERY with a
         0xFB LOCAL INFILE request naming the file; the CLIENT streams the
@@ -270,7 +222,6 @@ class MySQLServer:
         server/handler.go ComQuery local-infile callback path). The bytes
         spool to a server-side temp file and run through the engine's
         regular LOAD DATA INFILE plan."""
-        import os
         import tempfile
 
         p.write_packet(sock, b"\xfb" + fname.encode("utf-8"), 1)
@@ -298,7 +249,7 @@ class MySQLServer:
             except OSError:
                 pass
 
-    def _multi_query(self, sock, sess: _ConnSession, sql: str) -> None:
+    def _multi_query(self, sock, sess: Session, sql: str) -> None:
         """CLIENT_MULTI_STATEMENTS: split on top-level semicolons
         (literal-masked) and chain the resultsets with
         SERVER_MORE_RESULTS_EXISTS (reference server/handler.go:337
@@ -316,13 +267,13 @@ class MySQLServer:
             if not ok:
                 return  # an ERR terminates the chain, as in MySQL
 
-    def _run_and_reply(self, sock, sess: _ConnSession, sql: str,
+    def _run_and_reply(self, sock, sess: Session, sql: str,
                        status_extra: int = 0, binary: bool = False) -> bool:
         """Execute and write one resultset / OK / ERR, as a text
         resultset or, for COM_STMT_EXECUTE, a binary one. Returns False on
         error (for multi-statement chain termination)."""
         try:
-            res = self._run(sess, sql)
+            res = self.engine.query(sql, sess)
             if not isinstance(res, OkResult):
                 rows = _result_rows(res)
         except SqlError as exc:
@@ -365,14 +316,13 @@ class MySQLServer:
     # -- binary prepared-statement protocol
     # (reference server/handler.go:126 ComPrepare, :261 ComStmtExecute)
 
-    def _stmt_prepare(self, sock, sess: _ConnSession, sql: str) -> None:
+    def _stmt_prepare(self, sock, stmts: dict, sql: str) -> None:
         from ..dialect.transpiler import mask_literals
 
         masked, _ = mask_literals(sql)
         nparams = masked.count("?")
-        stmt_id = sess.next_stmt_id
-        sess.next_stmt_id += 1
-        sess.stmts[stmt_id] = (sql, nparams)
+        stmt_id = max(stmts, default=0) + 1
+        stmts[stmt_id] = [sql, nparams, []]
         # COM_STMT_PREPARE_OK: status, stmt_id, num_columns (0 — the
         # result schema is delivered with each execute, which every
         # binary-capable client accepts), num_params, filler, warnings
@@ -387,15 +337,15 @@ class MySQLServer:
                     f"?{i}", T.StringType()), seq)
             p.write_packet(sock, p.eof_packet(), seq)
 
-    def _stmt_execute(self, sock, sess: _ConnSession,
+    def _stmt_execute(self, sock, sess: Session, stmts: dict,
                       body: bytes) -> None:
         stmt_id = struct.unpack_from("<I", body, 0)[0]
-        if stmt_id not in sess.stmts:
+        if stmt_id not in stmts:
             p.write_packet(sock, p.err_packet(
                 1243, "HY000", f"Unknown prepared statement ({stmt_id})"),
                 1)
             return
-        sql, nparams = sess.stmts[stmt_id]
+        sql, nparams, types = stmts[stmt_id]
         pos = 4 + 1 + 4  # stmt_id + flags + iteration_count
         params: list = []
         if nparams:
@@ -403,16 +353,10 @@ class MySQLServer:
             pos += (nparams + 7) // 8
             new_bound = body[pos]
             pos += 1
-            types: list[tuple[int, bool]] = []
-            if new_bound:
-                for _ in range(nparams):
-                    tcode = body[pos]
-                    unsigned = bool(body[pos + 1] & 0x80)
-                    types.append((tcode, unsigned))
-                    pos += 2
-                sess.stmt_types[stmt_id] = types  # re-execute reuses them
-            else:
-                types = sess.stmt_types.get(stmt_id, [])
+            if new_bound:  # else a re-execute reuses the last types
+                types[:] = [(body[q], bool(body[q + 1] & 0x80))
+                            for q in range(pos, pos + 2 * nparams, 2)]
+                pos += 2 * nparams
             for i in range(nparams):
                 if nullmap[i // 8] & (1 << (i % 8)):
                     params.append(None)
@@ -420,25 +364,5 @@ class MySQLServer:
                 tcode, unsigned = types[i]
                 v, pos = p.read_binary_value(body, pos, tcode, unsigned)
                 params.append(v)
-        bound = self._bind_params(sql, params) if nparams else sql
+        bound = _bind(sql, params) if nparams else sql  # DB-API's binding
         self._run_and_reply(sock, sess, bound, binary=True)
-
-    @staticmethod
-    def _bind_params(sql: str, params: list) -> str:
-        """Substitute decoded binary params for `?` placeholders,
-        literal-safely (a '?' inside a string literal survives) — the
-        engine's own PREPARE/EXECUTE path does the same textual binding
-        for the SQL-level protocol."""
-        from ..dbapi import _render_param
-        from ..dialect.transpiler import mask_literals, unmask_literals
-
-        masked, lits = mask_literals(sql)
-        parts = masked.split("?")
-        if len(parts) - 1 != len(params):
-            raise SqlError(
-                f"{len(parts) - 1} placeholders, {len(params)} params",
-                errno=1210, sqlstate="HY000")
-        masked = "".join(
-            a + (_render_param(params[i]) if i < len(params) else "")
-            for i, a in enumerate(parts))
-        return unmask_literals(masked, lits)

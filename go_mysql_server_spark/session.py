@@ -96,7 +96,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # load (sources/tables.py), and the 8 py4j conf round-trips were pure
     # driver latency inside the bench's timed region (guide §5: the
     # driver should do almost no work on the query path). Nothing else in
-    # the engine mutates these confs (session vars live in Engine.sys_vars),
+    # the engine mutates these confs (session vars live in Session.sys_vars),
     # so re-applying them is a no-op re-spelled.
     try:
         if spark.conf.get("spark.gms.tuned", "") == "1":

@@ -1132,7 +1132,7 @@ def test_async_event_scheduler(eng):
         assert eng._db(None)["evta"].df.count() == 1
     finally:
         eng.query("SET GLOBAL event_scheduler = OFF")
-    assert eng.sys_vars["event_scheduler"] == "OFF"
+    assert eng.session.sys_vars["event_scheduler"] == "OFF"
 
 
 def test_update_delete_order_by_limit(eng):

@@ -376,3 +376,213 @@ def test_load_data_local_infile_over_wire(cli, tmp_path):
     rs = cli.query("SELECT a, b FROM li_wire ORDER BY a")
     assert rs.rows == [("1", "alpha"), ("2", "beta"), ("3", None)]
     cli.query("DROP TABLE li_wire")
+
+
+# -- one Session per connection (reference server/context.go:50
+# SessionManager: each connection owns a sql.Session; the engine keeps
+# none of its own between statements)
+
+
+@pytest.fixture()
+def two(srv):
+    a, b = Client(srv.host, srv.port), Client(srv.host, srv.port)
+    yield a, b
+    a.close()
+    b.close()
+
+
+def _one(client, sql: str):
+    return client.query(sql).rows[0][0]
+
+
+def test_connection_id_is_the_handshake_thread_id(two):
+    a, b = two
+    ids = [int(_one(c, "SELECT CONNECTION_ID() AS c")) for c in two]
+    assert ids == [a.thread_id, b.thread_id]
+    assert ids[0] != ids[1]
+
+
+def test_concurrent_connections_keep_their_own_sessions(srv):
+    """More client threads than cores, switching often: each statement
+    runs against its own connection's session."""
+    import sys
+
+    errs: list = []
+
+    def worker(k: int) -> None:
+        try:
+            c = Client(srv.host, srv.port)
+            try:
+                for n in range(4):
+                    c.query(f"SET @v = {k * 10 + n}")
+                    got = c.query("SELECT @v AS v, CONNECTION_ID() AS c")
+                    assert got.rows == [(str(k * 10 + n), str(c.thread_id))]
+            finally:
+                c.close()
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errs.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(k,))
+                   for k in range(6)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs
+
+
+def test_session_functions_and_prepared_stay_per_connection(srv, two):
+    a, b = two
+    a.query("CREATE TABLE wuu (id VARCHAR(36) DEFAULT (uuid()), x INT)")
+    try:
+        a.query("INSERT INTO wuu (x) VALUES (1)")
+        assert len(_one(a, "SELECT LAST_INSERT_UUID() AS u")) == 36
+        assert _one(b, "SELECT LAST_INSERT_UUID() AS u") is None
+    finally:
+        a.query("DROP TABLE wuu")
+    a.query("SELECT SQL_CALC_FOUND_ROWS i FROM wt LIMIT 1")
+    fresh = Client(srv.host, srv.port)
+    try:
+        assert _one(fresh, "SELECT FOUND_ROWS() AS n") == "0"
+    finally:
+        fresh.close()
+    assert _one(a, "SELECT FOUND_ROWS() AS n") == "2"
+    a.query("PREPARE wps FROM 'SELECT 7 AS v'")
+    with pytest.raises(MySQLClientError):
+        b.query("EXECUTE wps")
+    assert _one(a, "EXECUTE wps") == "7"
+
+
+def test_rollback_restores_only_its_own_transaction(two):
+    a, b = two
+    a.query("CREATE TABLE wtx (i BIGINT PRIMARY KEY)")
+    try:
+        a.query("START TRANSACTION")
+        a.query("INSERT INTO wtx VALUES (1)")
+        b.query("ROLLBACK")  # b has no transaction: nothing to undo
+        assert _one(a, "SELECT COUNT(*) AS n FROM wtx") == "1"
+        a.query("ROLLBACK")
+        assert _one(a, "SELECT COUNT(*) AS n FROM wtx") == "0"
+    finally:
+        a.query("DROP TABLE wtx")
+
+
+@pytest.mark.parametrize("begin", ["BEGIN", "BEGIN WORK"])
+def test_begin_opens_a_transaction_over_the_wire(cli, begin):
+    cli.query("CREATE TABLE wbg (i BIGINT PRIMARY KEY)")
+    try:
+        cli.query(begin)
+        cli.query("INSERT INTO wbg VALUES (1)")
+        cli.query("ROLLBACK")
+        assert _one(cli, "SELECT COUNT(*) AS n FROM wbg") == "0"
+        results = cli.multi_query(
+            f"{begin}; INSERT INTO wbg VALUES (2); ROLLBACK")
+        assert len(results) == 3
+        assert _one(cli, "SELECT COUNT(*) AS n FROM wbg") == "0"
+    finally:
+        cli.query("DROP TABLE wbg")
+
+
+def test_bare_name_stays_on_the_current_database(two):
+    a, b = two
+    a.query("CREATE DATABASE IF NOT EXISTS wbare")
+    a.query("CREATE TABLE wbt (v BIGINT)")
+    try:
+        a.query("INSERT INTO wbt VALUES (1)")
+        a.query("CREATE TABLE wbare.wbt (v BIGINT)")
+        a.query("INSERT INTO wbare.wbt VALUES (2)")
+        assert a.query("SELECT v FROM wbt").rows == [("1",)]
+        b.select_db("wbare")
+        b.query("INSERT INTO wbt VALUES (3)")
+        assert a.query("SELECT v FROM wbt").rows == [("1",)]
+        assert b.query("SELECT v FROM wbt ORDER BY v").rows == [
+            ("2",), ("3",)]
+        assert a.query("SELECT v FROM wbare.wbt ORDER BY v").rows == [
+            ("2",), ("3",)]
+    finally:
+        a.query("DROP TABLE wbt")
+        a.query("DROP DATABASE wbare")
+
+
+def test_use_records_no_history_version(srv, cli):
+    ts = srv.engine.databases["mydb"]["wt"]
+    before = len(ts.history)
+    cli.query("USE mydb")
+    cli.select_db("mydb")
+    assert len(ts.history) == before
+
+
+def test_reset_connection_resets_the_session(two):
+    cli, other = two
+    default_mode = _one(other, "SELECT @@sql_mode AS m")
+    cli.query("CREATE DATABASE IF NOT EXISTS wrst")
+    cli.select_db("wrst")
+    cli.query("CREATE TABLE wr (i BIGINT PRIMARY KEY AUTO_INCREMENT, "
+              "v BIGINT)")
+    cid = _one(cli, "SELECT CONNECTION_ID() AS c")
+    cli.query("SET @x = 1")
+    cli.query("SET sql_mode = ''")
+    cli.query("PREPARE wrp FROM 'SELECT 1'")
+    bin_stmt = cli.prepare("SELECT 1")
+    cli.query("BEGIN")
+    cli.query("INSERT INTO wr (v) VALUES (5)")
+    cli.reset_connection()
+    assert cli.query(
+        "SELECT CONNECTION_ID() AS c, DATABASE() AS d, @x AS x, "
+        "@@sql_mode AS m, LAST_INSERT_ID() AS l").rows == [
+        (cid, "wrst", None, default_mode, "0")]
+    assert _one(cli, "SELECT COUNT(*) AS n FROM wr") == "0"
+    with pytest.raises(MySQLClientError):
+        cli.query("EXECUTE wrp")
+    with pytest.raises(MySQLClientError) as ei:
+        cli.execute(bin_stmt, ())
+    assert ei.value.errno == 1243
+    cli.query("DROP DATABASE wrst")
+
+
+def test_event_body_runs_in_the_event_session(srv, cli):
+    cli.query("CREATE EVENT wev ON SCHEDULE AT CURRENT_TIMESTAMP "
+              "DO SET @ev = 1")
+    # the due event runs at this statement's boundary
+    assert _one(cli, "SELECT @ev AS v") is None
+    assert srv.engine.event_session.user_vars["ev"] == 1
+
+
+# -- DB-API connections each own a Session
+
+
+def test_dbapi_connections_do_not_share_session_state(spark):
+    eng = Engine(spark)
+    a, b = dbapi.connect(engine=eng), dbapi.connect(engine=eng)
+    ca, cb = a.cursor(), b.cursor()
+    ca.execute("CREATE DATABASE IF NOT EXISTS dbsess")
+    ca.execute("USE dbsess")
+    ca.execute("SET @x = 1")
+    cb.execute("SELECT DATABASE() AS d, @x AS x")
+    assert cb.fetchall() == [("mydb", None)]
+    cb.execute("CREATE TABLE dtx (i BIGINT PRIMARY KEY)")
+    b.begin()
+    cb.execute("INSERT INTO dtx VALUES (1)")
+    ca.execute("ROLLBACK")  # a has no transaction: nothing to undo
+    cb.execute("SELECT COUNT(*) AS n FROM dtx")
+    assert cb.fetchone() == (1,)
+    b.rollback()
+    cb.execute("SELECT COUNT(*) AS n FROM dtx")
+    assert cb.fetchone() == (0,)
+
+
+def test_dbapi_rollback_ends_a_cursor_begin(conn):
+    cur = conn.cursor()
+    cur.execute("CREATE TABLE dbt4 (i BIGINT PRIMARY KEY)")
+    cur.execute("BEGIN")
+    cur.execute("INSERT INTO dbt4 VALUES (1)")
+    conn.rollback()
+    cur.execute("SELECT COUNT(*) AS n FROM dbt4")
+    assert cur.fetchone() == (0,)
+    cur.execute("DROP TABLE dbt4")

@@ -55,6 +55,7 @@ class EventDef:
     starts_ts: float | None = None    # EVERY ... STARTS
     ends_ts: float | None = None      # EVERY ... ENDS
     comment: str = ""
+    db: str = ""                      # schema the body runs in
     last_run: float | None = None
     # LAST_EXECUTED bookkeeping (reference eventscheduler/event_executor.go
     # records execution times; surfaced by SHOW EVENTS)
@@ -277,7 +278,8 @@ def create_event(eng, sql: str):
     ev = EventDef(name, m.group(7).strip(),
                   preserve=bool(m.group(4)) and "NOT" not in (m.group(4) or "").upper(),
                   enabled=(m.group(5) or "ENABLE").upper().startswith("ENABLE"),
-                  comment=(m.group(6) or "''").strip("'"))
+                  comment=(m.group(6) or "''").strip("'"),
+                  db=eng.session.current_db)
     _apply_schedule(ev, m.group(3))
     eng.events[name] = ev
     return OkResult(0)
@@ -359,9 +361,7 @@ def alter_event(eng, sql: str):
     if em:
         want = em.group(1).upper().startswith("ENABLE")
         if want and _event_expired(ev, now):
-            # expired: ENABLE keeps it disabled (PRESERVE) or drops it
-            if not ev.preserve:
-                del eng.events[key]
+            _complete(eng, key, ev)  # expired: ENABLE does not revive it
             return OkResult(0)
         ev.enabled = want
         rest = em.group(2).strip()
@@ -385,11 +385,21 @@ def drop_event(eng, sql: str):
     return OkResult(0)
 
 
+def _complete(eng, name: str, ev: EventDef) -> None:
+    """ON COMPLETION: a finished event stays disabled (PRESERVE) or is
+    dropped."""
+    if ev.preserve:
+        ev.enabled = False
+    else:
+        eng.events.pop(name, None)
+
+
 def run_due_events(eng) -> None:
     """Execute due events at a statement boundary (the deterministic
-    single-process analogue of the reference's scheduler goroutine), in
-    the engine's event session: an event's SET @v or USE reaches no
-    client's session."""
+    single-process analogue of the reference's scheduler goroutine) in
+    the engine's event session, set to the event's own schema. As in
+    MySQL, a failing body ends its run unseen by any client, and the run
+    still counts: the event does not stay due."""
     if eng.session is eng.event_session or not eng.events:
         return
     now = time.time()
@@ -399,11 +409,7 @@ def run_due_events(eng) -> None:
         if ev is None or not ev.enabled:
             continue
         if ev.ends_ts is not None and now >= ev.ends_ts:
-            # recurring event past its ENDS bound expires
-            if ev.preserve:
-                ev.enabled = False
-            else:
-                del eng.events[name]
+            _complete(eng, name, ev)  # recurring event past its ENDS bound
             continue
         due = (ev.at_ts is not None and now >= ev.at_ts) or (
             ev.every_secs is not None
@@ -411,15 +417,16 @@ def run_due_events(eng) -> None:
             and (ev.starts_ts is None or now >= ev.starts_ts))
         if not due:
             continue
-        for stmt in split_statements(ev.body):
-            if stmt.strip():
-                eng.query(stmt, session=eng.event_session)
+        eng.event_session.current_db = ev.db
+        try:
+            for stmt in split_statements(ev.body):
+                if stmt.strip():
+                    eng.query(stmt, session=eng.event_session)
+        except Exception:  # noqa: BLE001 — as the scheduler thread does
+            pass
         ev.last_executed = now
         if ev.at_ts is not None:  # one-shot
-            if ev.preserve:
-                ev.enabled = False
-            else:
-                del eng.events[name]
+            _complete(eng, name, ev)
         else:
             ev.last_run = now
 
@@ -443,7 +450,7 @@ def set_event_scheduler(eng, enabled: bool) -> None:
                     with eng._stmt_lock:
                         run_due_events(eng)
                 except Exception:  # noqa: BLE001 — scheduler must survive
-                    pass           # bad event bodies (logged via last run)
+                    pass
 
         th = threading.Thread(target=loop, daemon=True,
                               name="gms-event-scheduler")
@@ -463,7 +470,7 @@ def show_events(eng) -> DataFrame:
         last = (_dt.datetime.utcfromtimestamp(ev.last_executed)
                 .strftime("%Y-%m-%d %H:%M:%S")
                 if ev.last_executed is not None else None)
-        rows.append((eng.session.current_db, ev.name, "root@localhost", kind,
+        rows.append((ev.db, ev.name, "root@localhost", kind,
                      "ENABLED" if ev.enabled else "DISABLED", last))
     schema = ("Db string, Name string, Definer string, Type string, "
               "Status string, Last_Executed string")
@@ -606,8 +613,8 @@ def show_misc(eng, sql: str) -> DataFrame | None:
             [], "Level string, Code int, Message string")
     if up.startswith("SHOW PROCESSLIST") or up.startswith("SHOW FULL PROCESSLIST"):
         return sp.createDataFrame(
-            [(1, "root", "localhost", eng.session.current_db, "Query", 0,
-              "executing", "SHOW PROCESSLIST")],
+            [(eng.session.id, "root", "localhost", eng.session.current_db,
+              "Query", 0, "executing", "SHOW PROCESSLIST")],
             "Id bigint, User string, Host string, db string, Command string, "
             "Time int, State string, Info string")
     if up.startswith("SHOW STATUS") or re.match(

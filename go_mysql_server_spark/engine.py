@@ -2148,7 +2148,7 @@ class Engine:
                 "COLLATION_NAME string, CHARACTER_SET_NAME string, ID int, "
                 "IS_DEFAULT string")
         if "events" in needed:
-            rows = [(ev.name, self.session.current_db,
+            rows = [(ev.name, ev.db,
                      "ONE TIME" if ev.at_ts is not None else "RECURRING",
                      "ENABLED" if ev.enabled else "DISABLED")
                     for ev in self.events.values()]
@@ -2395,8 +2395,8 @@ class Engine:
                 "PARTITION_NAME string, PARTITION_METHOD string")
         if "processlist" in needed:
             self._is_view("processlist", [
-                (1, "root", "localhost", self.session.current_db, "Query", 0,
-                 "executing", None)],
+                (self.session.id, "root", "localhost",
+                 self.session.current_db, "Query", 0, "executing", None)],
                 "ID bigint, USER string, HOST string, DB string, "
                 "COMMAND string, TIME int, STATE string, INFO string")
 

@@ -32,6 +32,7 @@ partition through `DataFrame.toLocalIterator()`.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 import socket
@@ -162,6 +163,7 @@ class MySQLServer:
 
     def _command_loop(self, sock, caps: int, sess: Session) -> None:
         stmts: dict[int, list] = {}  # COM_STMT id → [sql, nparams, types]
+        stmt_ids = itertools.count(1)  # never reused on this connection
         while True:
             pkt = p.read_packet(sock)
             if pkt is None or not pkt:
@@ -186,7 +188,7 @@ class MySQLServer:
                 else:
                     self._run_and_reply(sock, sess, sql)
             elif cmd == p.COM_STMT_PREPARE:
-                self._stmt_prepare(sock, stmts,
+                self._stmt_prepare(sock, stmts, next(stmt_ids),
                                    body.decode("utf-8", "replace"))
             elif cmd == p.COM_STMT_EXECUTE:
                 self._stmt_execute(sock, sess, stmts, body)
@@ -200,10 +202,16 @@ class MySQLServer:
             elif cmd == p.COM_RESET_CONNECTION:
                 # as MySQL: roll back, then a new session's state with the
                 # same id and database, and no prepared statements
-                self.engine.query("ROLLBACK", sess)
+                reply = p.ok_packet()
+                if sess.txn_snapshot is not None:
+                    try:
+                        self.engine.query("ROLLBACK", sess)
+                    except SqlError as exc:
+                        reply = p.err_packet(exc.errno, exc.sqlstate,
+                                             str(exc))
                 sess.reset()
                 stmts.clear()
-                p.write_packet(sock, p.ok_packet(), 1)
+                p.write_packet(sock, reply, 1)
             elif cmd == p.COM_FIELD_LIST:
                 # deprecated in MySQL 8; empty terminator is sufficient
                 p.write_packet(sock, p.eof_packet(), 1)
@@ -316,12 +324,12 @@ class MySQLServer:
     # -- binary prepared-statement protocol
     # (reference server/handler.go:126 ComPrepare, :261 ComStmtExecute)
 
-    def _stmt_prepare(self, sock, stmts: dict, sql: str) -> None:
+    def _stmt_prepare(self, sock, stmts: dict, stmt_id: int,
+                      sql: str) -> None:
         from ..dialect.transpiler import mask_literals
 
         masked, _ = mask_literals(sql)
         nparams = masked.count("?")
-        stmt_id = max(stmts, default=0) + 1
         stmts[stmt_id] = [sql, nparams, []]
         # COM_STMT_PREPARE_OK: status, stmt_id, num_columns (0 — the
         # result schema is delivered with each execute, which every

@@ -554,6 +554,68 @@ def test_event_body_runs_in_the_event_session(srv, cli):
     assert srv.engine.event_session.user_vars["ev"] == 1
 
 
+def test_event_runs_in_the_schema_it_was_created_in(srv, two):
+    a, b = two
+    a.query("CREATE DATABASE IF NOT EXISTS wevdb")
+    a.select_db("wevdb")
+    a.query("CREATE TABLE wet (v BIGINT)")
+    try:
+        a.query("CREATE EVENT wev_off ON SCHEDULE EVERY 1 HOUR DISABLE "
+                "DO SELECT 1")
+        a.query("CREATE EVENT wev_db ON SCHEDULE AT CURRENT_TIMESTAMP "
+                "DO INSERT INTO wet VALUES (1)")
+        # b (in mydb, which has no wet) reaches the boundary that runs it
+        assert _one(b, "SELECT COUNT(*) AS n FROM wevdb.wet") == "1"
+        assert "wev_db" not in srv.engine.events
+        shown = {r[1]: r[0] for r in b.query("SHOW EVENTS").rows}
+        assert shown["wev_off"] == "wevdb"
+    finally:
+        a.query("DROP EVENT IF EXISTS wev_off")
+        a.query("DROP DATABASE wevdb")
+
+
+def test_failing_event_body_reaches_no_client(srv, cli):
+    cli.query("CREATE EVENT wev_bad ON SCHEDULE AT CURRENT_TIMESTAMP "
+              "DO INSERT INTO wno_such_table VALUES (1)")
+    assert _one(cli, "SELECT 1 AS v") == "1"
+    assert "wev_bad" not in srv.engine.events  # the failed run counts
+    assert _one(cli, "SELECT 2 AS v") == "2"
+
+
+def test_reset_without_a_transaction_runs_no_statement(srv, cli):
+    cli.query("CREATE EVENT wev_rst ON SCHEDULE AT CURRENT_TIMESTAMP "
+              "DO SET @r = 1")
+    cli.reset_connection()
+    assert "wev_rst" in srv.engine.events  # no statement boundary passed
+    cli.query("DO 0")
+    assert "wev_rst" not in srv.engine.events
+
+
+def test_stmt_ids_are_never_reused(cli):
+    s1 = cli.prepare("SELECT 1 AS v")
+    s2 = cli.prepare("SELECT 2 AS v")
+    cli.stmt_close(s2)
+    s3 = cli.prepare("SELECT 3 AS v")
+    assert s3.stmt_id not in (s1.stmt_id, s2.stmt_id)
+    with pytest.raises(MySQLClientError) as ei:
+        cli.execute(s2, ())
+    assert ei.value.errno == 1243
+    cli.reset_connection()
+    s4 = cli.prepare("SELECT 4 AS v")
+    assert s4.stmt_id > s3.stmt_id
+    for stale in (s1, s3):
+        with pytest.raises(MySQLClientError) as ei:
+            cli.execute(stale, ())
+        assert ei.value.errno == 1243
+    assert cli.execute(s4, ()).rows == [(4,)]
+
+
+def test_processlist_reports_the_connection_id(cli):
+    cid = _one(cli, "SELECT CONNECTION_ID() AS c")
+    assert _one(cli, "SHOW PROCESSLIST") == cid
+    assert _one(cli, "SELECT ID FROM information_schema.processlist") == cid
+
+
 # -- DB-API connections each own a Session
 
 

@@ -480,6 +480,33 @@ def _key_parts(body: str) -> tuple[str, ...]:
     return tuple(parts)
 
 
+def _all_set(cols) -> Column:
+    """True where no column of a key is NULL: only such a row can
+    duplicate a key (MySQL lets NULL key parts repeat)."""
+    out = F.lit(True)
+    for c in cols:
+        out = out & F.col(c).isNotNull()
+    return out
+
+
+def _one_per_key(df: DataFrame, cols, last: bool) -> DataFrame:
+    """Keep the first (or the last) row of a batch per non-NULL key."""
+    order = F.monotonically_increasing_id()
+    w = Window.partitionBy(*cols).orderBy(order.desc() if last else order)
+    return (df.withColumn("__kn", F.when(_all_set(cols), F.row_number()
+                                         .over(w)).otherwise(1))
+            .filter("__kn = 1").drop("__kn"))
+
+
+def _raise_dup(keys, verdict) -> None:
+    """Raise MySQL's ER_DUP_ENTRY for the first key (`Engine._keys` order)
+    that `verdict` finds repeated or clashing."""
+    for (name, _), (dup, clash) in zip(keys, verdict):
+        if dup or clash:
+            raise SqlError(f"duplicate entry for key '{name}'",
+                           sqlstate="23000", errno=1062)
+
+
 def _index_name(indexes, first: str) -> str:
     """MySQL's name for an unnamed index: its first column (for an
     expression part, functional_index), suffixed _2, _3, … on a clash."""
@@ -2559,7 +2586,7 @@ class Engine:
             ts, df, col_list,
             "REPLACE" if mode == "REPLACE" else "INSERT",
             ignore=(mode == "IGNORE"), odku=None,
-        )
+        )[0]
 
     def _q_explain(self, sql: str) -> DataFrame:
         inner = sql.split(None, 1)[1]
@@ -2938,8 +2965,9 @@ class Engine:
         FULLTEXT / SPATIAL, FOREIGN KEY or CHECK, each with an optional
         CONSTRAINT name — to `ts`. CREATE TABLE, ALTER TABLE and CREATE
         INDEX all bind through here (reference ddl.go, alter_table.go,
-        create_index.go). On a table with rows, a new ENFORCED check is
-        validated against them and a FULLTEXT index is materialized."""
+        create_index.go). On a table with rows, a new ENFORCED check or
+        key is validated against them and a FULLTEXT index is
+        materialized."""
         from .admin import IndexDef
         cm = re.match(r"CONSTRAINT(?:\s+[`]?(?!(?:PRIMARY|UNIQUE|FOREIGN|"
                       r"CHECK)\b)(\w+)[`]?)?\s*", item, re.I)
@@ -2978,14 +3006,18 @@ class Engine:
             raise SqlError(f"cannot parse table element: {item[:60]!r}")
         cols = _key_parts(body[im.end():_find_close_paren(body, im.end() - 1)])
         kind = " ".join((im.group(1) or "").upper().split())
+        name = ("PRIMARY" if kind == "PRIMARY KEY" else im.group(2)
+                or im.group(3) or symbol or _index_name(ts.indexes, cols[0]))
+        if kind in ("PRIMARY KEY", "UNIQUE") and ts.df is not None:
+            # existing rows must not already repeat the new key
+            key = [(name, list(cols))]
+            _raise_dup(key, self._key_verdict(key, ts.df))
         if kind == "PRIMARY KEY":
             ts.primary_key = cols
             for c in ts.columns:
                 if c.name in cols:
                     c.nullable = False
             return
-        name = (im.group(2) or im.group(3) or symbol
-                or _index_name(ts.indexes, cols[0]))
         if kind == "FULLTEXT" and ts.df is not None:
             self._ft_create(ts, name, cols)
         ts.indexes.append(IndexDef(
@@ -3212,15 +3244,23 @@ class Engine:
             raise SqlError(f"cannot parse ALTER: {sql[:60]!r}")
         ts = self._table(m.group(1))
         rewrote = False
-        for action in _split_top_level(m.group(2)):
-            for _name, pattern, handler, rewrites_rows in self._ALTER_ACTIONS:
-                am = pattern.match(action)
-                if am:
-                    handler(self, ts, am)
-                    rewrote = rewrote or rewrites_rows
-                    break
-            else:
-                raise SqlError(f"unsupported ALTER action: {action[:50]!r}")
+        # a failing action (a new key or CHECK the rows break) leaves the
+        # table as it was, however many actions ran before it
+        snap = self._snapshot_state()
+        try:
+            for action in _split_top_level(m.group(2)):
+                for _name, pattern, handler, rewrites in self._ALTER_ACTIONS:
+                    am = pattern.match(action)
+                    if am:
+                        handler(self, ts, am)
+                        rewrote = rewrote or rewrites
+                        break
+                else:
+                    raise SqlError(
+                        f"unsupported ALTER action: {action[:50]!r}")
+        except Exception:
+            self._restore_state(snap)
+            raise
         if rewrote:
             ts.df = ts.df.localCheckpoint(eager=True)
         self._register(ts)
@@ -3330,7 +3370,7 @@ class Engine:
 
     def _q_insert(self, sql: str) -> OkResult | DataFrame:
         sql = on_text(self._substitute_vars, sql)
-        self._gen_default_ok = set()
+        gen_ok: set = set()
         # Search for trailing RETURNING / ON DUPLICATE KEY UPDATE on
         # literal-masked text so a string literal containing those words
         # (e.g. VALUES ('see RETURNING docs')) can't truncate the
@@ -3391,8 +3431,9 @@ class Engine:
                         else r.strip() for r in rows_txt)
             if re.search(r"\bDEFAULT\b", values_sql, re.I):
                 if any(c.generated for c in ts.columns):
-                    values_sql, col_list = self._drop_generated_defaults(
-                        ts, values_sql, col_list)
+                    values_sql, col_list, gen_ok = \
+                        self._drop_generated_defaults(ts, values_sql,
+                                                      col_list)
                 if re.search(r"\bDEFAULT\b", values_sql, re.I):
                     values_sql = self._fill_values_defaults(
                         ts, values_sql, col_list)
@@ -3433,121 +3474,52 @@ class Engine:
                     except Exception:  # noqa: BLE001
                         new_rows = self.spark.sql(
                             self._transpile(union_sql))
-        result = self._insert_df(ts, new_rows, col_list, verb, ignore,
-                                 odku, src_cols=src_cols)
-        if returning is not None and getattr(self, "_last_inserted",
-                                             None) is not None:
+        result, inserted = self._insert_df(ts, new_rows, col_list, verb,
+                                           ignore, odku, src_cols, gen_ok)
+        if returning is not None:
             # INSERT ... RETURNING (MariaDB/Dolt extension the reference
             # supports): project the inserted rows
-            return self._last_inserted.selectExpr(
+            return inserted.selectExpr(
                 *[self._transpile(e.strip())
                   for e in _split_top_level(returning)])
         return result
 
-    def _enforce_unique_indexes(
-            self, ts: TableState, incoming: DataFrame, ignore: bool,
-            verb: str, odku: bool = False) -> tuple[DataFrame, list]:
-        """Returns (filtered incoming, replace_victims) where
-        replace_victims is [(key_cols, keys_df), ...] — existing rows
-        REPLACE must delete because an incoming row clashes on that
-        unique index (MySQL REPLACE delete-then-insert; reference
-        memory/table.go). Deletion is applied by the caller after
-        validation so a failed statement mutates nothing."""
-        uniq = [ix for ix in ts.indexes
-                if ix.unique and all(
-                    any(c.name == col for c in ts.columns)
-                    for col in ix.columns)]
-        victims: list = []
-        if not uniq:
-            return incoming, victims
-        for ix in uniq:
-            cols = list(ix.columns)
-            nn = None
-            for cc in cols:
-                n2 = F.col(cc).isNotNull()
-                nn = n2 if nn is None else (nn & n2)
-            keyed = incoming.filter(nn)
-            n_rows = keyed.count()
-            if not n_rows:
-                continue
-            dup_in_batch = n_rows - keyed.select(*cols).distinct().count()
-            clash = keyed.join(ts.df.select(*cols).na.drop(), cols,
-                               "left_semi").count()
-            if (dup_in_batch or clash) and not ignore and verb != "REPLACE":
-                if odku:
-                    continue  # folds via _apply_odku_unique instead
-                raise SqlError(
-                    f"duplicate entry for key {ix.name!r}")
-            if verb == "REPLACE" and (dup_in_batch or clash):
-                if dup_in_batch:
-                    # sequential REPLACE semantics: the LAST row per
-                    # duplicated unique key wins within the batch; each
-                    # dropped earlier row was inserted-then-deleted, so
-                    # it still counts toward rows affected
-                    self._replace_batch_dropped += dup_in_batch
-                    w2 = Window.partitionBy(*cols).orderBy(
-                        F.monotonically_increasing_id().desc())
-                    incoming = (incoming.withColumn(
-                        "__uq_rn", F.when(nn, F.row_number().over(w2))
-                        .otherwise(F.lit(1)))
-                        .filter(F.col("__uq_rn") == 1).drop("__uq_rn"))
-                if clash:
-                    victims.append(
-                        (cols,
-                         incoming.filter(nn).select(*cols).distinct()))
-                continue
-            if ignore and (dup_in_batch or clash):
-                # keep the FIRST row per duplicated key in the batch,
-                # then drop rows clashing with existing non-null keys
-                w2 = Window.partitionBy(*cols).orderBy(
-                    F.monotonically_increasing_id())
-                incoming = (incoming.withColumn(
-                    "__uq_rn", F.when(nn, F.row_number().over(w2))
-                    .otherwise(F.lit(1)))
-                    .filter(F.col("__uq_rn") == 1).drop("__uq_rn"))
-                existing_keys = ts.df.select(*cols).na.drop().distinct()
-                nonnull_ok = incoming.filter(nn).join(
-                    existing_keys, cols, "left_anti")
-                incoming = incoming.filter(~nn).unionByName(nonnull_ok)
-        return incoming, victims
-
     def _drop_generated_defaults(
             self, ts: TableState, values_sql: str,
             col_list: list[str] | None
-    ) -> tuple[str, list[str] | None]:
+    ) -> tuple[str, list[str] | None, set]:
         """INSERT ... VALUES (x, DEFAULT) where the DEFAULT cell targets a
         GENERATED column: MySQL accepts DEFAULT (meaning "compute it") —
         drop those cells so the recompute pass supplies the value
         (reference issue #9428). When the table is all-generated the cell
-        becomes NULL and the column is whitelisted for recompute."""
-        self._gen_default_ok = set()
+        becomes NULL and the column is returned in the set of generated
+        columns the INSERT may name."""
         masked, lits = mask_literals(values_sql)
         rows = [r.strip() for r in _split_top_level(masked)]
         parsed = []
         for r in rows:
             if not (r.startswith("(") and r.endswith(")")):
-                return values_sql, col_list
+                return values_sql, col_list, set()
             parsed.append(_split_top_level(r[1:-1]))
         names = col_list or [c.name for c in ts.columns]
         if any(len(p) != len(names) for p in parsed):
-            return values_sql, col_list
+            return values_sql, col_list, set()
         gen = {c.name for c in ts.columns if c.generated}
         drop_idx = [i for i, n in enumerate(names)
                     if n in gen and all(
                         p[i].strip().upper() == "DEFAULT" for p in parsed)]
         if not drop_idx:
-            return values_sql, col_list
+            return values_sql, col_list, set()
         keep = [i for i in range(len(names)) if i not in drop_idx]
         if keep:
             new_rows = ["(" + ", ".join(p[i].strip() for i in keep) + ")"
                         for p in parsed]
             return (unmask_literals(", ".join(new_rows), lits),
-                    [names[i] for i in keep])
+                    [names[i] for i in keep], set())
         # all columns generated: NULL placeholders, recompute overwrites
-        self._gen_default_ok = set(names)
         new_rows = ["(" + ", ".join("NULL" for _ in p) + ")"
                     for p in parsed]
-        return ", ".join(new_rows), list(names)
+        return ", ".join(new_rows), list(names), set(names)
 
     def _fill_values_defaults(self, ts: TableState, values_sql: str,
                               col_list: list[str] | None) -> str:
@@ -3635,8 +3607,12 @@ class Engine:
 
     def _insert_df(self, ts: TableState, new_rows: DataFrame,
                    col_list: list[str] | None, verb: str, ignore: bool,
-                   odku: str | None,
-                   src_cols: list[str] | None = None) -> OkResult:
+                   odku: str | None, src_cols: list[str] | None = None,
+                   gen_ok: set = frozenset()) -> tuple[OkResult, DataFrame]:
+        """Write one INSERT / REPLACE / LOAD DATA batch. `gen_ok` names the
+        generated columns the column list may name (cells that were all
+        DEFAULT). Returns the result and the rows appended, which
+        INSERT ... RETURNING projects."""
         # Triggers that mutate other tables mid-statement (sequential OR
         # set-based audit INSERTs): a failure part-way (SIGNAL,
         # constraint) must leave NO trace — MySQL statement atomicity
@@ -3648,23 +3624,23 @@ class Engine:
             snap = self._snapshot_state()
             try:
                 return self._insert_df_inner(ts, new_rows, col_list, verb,
-                                             ignore, odku, src_cols)
+                                             ignore, odku, src_cols, gen_ok)
             except Exception:
                 self._restore_state(snap)
                 raise
         return self._insert_df_inner(ts, new_rows, col_list, verb, ignore,
-                                     odku, src_cols)
+                                     odku, src_cols, gen_ok)
 
     def _insert_df_inner(self, ts: TableState, new_rows: DataFrame,
                          col_list: list[str] | None, verb: str,
                          ignore: bool, odku: str | None,
-                         src_cols: list[str] | None = None) -> OkResult:
+                         src_cols: list[str] | None,
+                         gen_ok: set) -> tuple[OkResult, DataFrame]:
         if col_list:
             # MySQL column names are case-insensitive: map to declared
             actual = {c.name.lower(): c.name for c in ts.columns}
             col_list = [actual.get(c.lower(), c) for c in col_list]
         gen_cols = [c.name for c in ts.columns if c.generated]
-        gen_ok = getattr(self, "_gen_default_ok", set())
         if col_list and set(col_list) & set(gen_cols) - gen_ok:
             raise SqlError(
                 "the value specified for generated column is not allowed")
@@ -3874,105 +3850,11 @@ class Engine:
                         zip(fk.columns, fk.parent_columns)]).distinct(),
                     list(fk.columns), "left_semi")
                 incoming = incoming.filter(fk_null).unionByName(ok_rows)
-        # UNIQUE secondary indexes (reference memory/table.go unique key
-        # enforcement): duplicates error in strict mode, are skipped
-        # under IGNORE; rows with any NULL key part always pass (MySQL)
-        self._replace_batch_dropped = 0
-        incoming, uq_victims = self._enforce_unique_indexes(
-            ts, incoming, ignore, verb, odku=odku is not None)
         self._validate(ts, incoming, lenient=lenient,
                        skip_raises=ignore)
-
-        existing = ts.df
-        n_deleted_uq = 0
-        if uq_victims:
-            n_before = existing.count()
-            for vcols, vkeys in uq_victims:
-                # REPLACE deletes existing rows clashing on a unique
-                # secondary index before inserting (delete-then-insert)
-                existing = existing.join(vkeys, vcols, "left_anti")
-            # deletions across all unique indexes without double-counting
-            # a row clashing several of them (pk clashes are counted
-            # separately — n_clash is computed against the pruned df)
-            n_deleted_uq = n_before - existing.count()
-        n_clash = 0
-        if ts.primary_key:
-            pk = list(ts.primary_key)
-            # ONE aggregation job for both PK checks (was two): duplicate
-            # keys WITHIN the incoming batch (count > countDistinct) and
-            # incoming rows clashing with existing keys (left join marker).
-            stats = (
-                incoming.select(*pk)
-                .join(existing.select(*pk).withColumn("__ex", F.lit(1)),
-                      pk, "left")
-                .agg((F.count(F.lit(1))
-                      - F.count_distinct(*[F.col(c) for c in pk]))
-                     .alias("dup_rows"),
-                     F.count("__ex").alias("n_clash"))
-                .first()
-            )
-            if stats["dup_rows"] and not ignore and verb != "REPLACE":
-                raise SqlError("duplicate primary key within inserted rows")
-            if stats["dup_rows"] and ignore and verb != "REPLACE":
-                # IGNORE keeps the FIRST row per duplicated key
-                wpk = Window.partitionBy(*pk).orderBy(
-                    F.monotonically_increasing_id())
-                incoming = (incoming.withColumn(
-                    "__pk_rn", F.row_number().over(wpk))
-                    .filter(F.col("__pk_rn") == 1).drop("__pk_rn"))
-            if stats["dup_rows"] and verb == "REPLACE":
-                # sequential REPLACE: the LAST row per duplicated pk
-                # wins; earlier ones were inserted-then-deleted
-                self._replace_batch_dropped += int(stats["dup_rows"])
-                wpk = Window.partitionBy(*pk).orderBy(
-                    F.monotonically_increasing_id().desc())
-                incoming = (incoming.withColumn(
-                    "__pk_rn", F.row_number().over(wpk))
-                    .filter(F.col("__pk_rn") == 1).drop("__pk_rn"))
-            n_clash = int(stats["n_clash"])
-            if n_clash:
-                if verb == "REPLACE":
-                    existing = existing.join(incoming.select(*pk), pk, "left_anti")
-                elif odku is not None:
-                    # clash detection keys are the PRE-update existing
-                    # keys: the ODKU assignment may rewrite the pk itself
-                    # (a.i = b.j + 100), and the folded incoming rows must
-                    # still be excluded from the append
-                    pre_keys = existing.select(*pk)
-                    existing = self._apply_odku(ts, existing, incoming, odku,
-                                                src_cols=src_cols,
-                                                target_cols=target_cols,
-                                                lenient=ignore)
-                    if any(c.generated for c in ts.columns):
-                        # generated columns recompute after the ODKU
-                        # update mutates their inputs (reference
-                        # issue: virtual col stays consistent)
-                        existing = self._compute_generated(ts, existing)
-                    incoming = incoming.join(pre_keys, pk, "left_anti")
-                elif ignore:
-                    incoming = incoming.join(existing.select(*pk), pk, "left_anti")
-                else:
-                    raise SqlError("duplicate entry for primary key")
-        if odku is not None:
-            existing, incoming, n_uq_fold = self._apply_odku_unique(
-                ts, existing, incoming, odku, src_cols, target_cols,
-                lenient=ignore)
-            n_clash += n_uq_fold
-        result = existing.unionByName(incoming).localCheckpoint(eager=True)
-        self._last_inserted = incoming
-        # affected arithmetically (saves two count jobs): for INSERT the
-        # net-new rows are n_new minus the clash rows that were dropped
-        # (IGNORE) or folded into updates (ODKU); plain INSERT has
-        # n_clash == 0 or raised above. REPLACE counts every insert PLUS
-        # every delete it performed (MySQL delete-then-insert semantics:
-        # replacing an existing row reports 2 — reference
-        # replace_queries.go NewOkResult(2) goldens).
-        if verb == "REPLACE":
-            affected = (n_new + n_clash + n_deleted_uq
-                        + self._replace_batch_dropped)
-        else:
-            affected = n_new - n_clash
-        ts.df = result
+        existing, incoming, affected = self._apply_keys(
+            ts, incoming, n_new, verb, ignore, odku, src_cols, target_cols)
+        ts.df = existing.unionByName(incoming).localCheckpoint(eager=True)
         self._register(ts)
         if ts.fulltext:
             # ODKU mutates existing rows without a threaded delta → lazy
@@ -3989,25 +3871,138 @@ class Engine:
             if row is not None:
                 self.session.last_insert_uuid = row[0]
         self._apply_insert_triggers(ts, incoming, "AFTER")
-        return OkResult(max(affected, 0), last_id)
+        return OkResult(max(affected, 0), last_id), incoming
+
+    @staticmethod
+    def _keys(ts: TableState) -> list[tuple[str, list[str]]]:
+        """The table's keys as (name, columns), in the order they are
+        checked: PRIMARY, then every UNIQUE index as declared. The primary
+        key is one more unique key (reference memory/table_editor.go); a
+        key keeps its place only while all its columns exist."""
+        keys = [("PRIMARY", list(ts.primary_key))] if ts.primary_key else []
+        keys += [(ix.name, list(ix.columns)) for ix in ts.indexes
+                 if ix.unique]
+        names = {c.name for c in ts.columns}
+        return [(n, cols) for n, cols in keys if set(cols) <= names]
+
+    def _key_verdict(self, keys: list, rows: DataFrame,
+                     existing: DataFrame | None = None) -> list[tuple]:
+        """Every key check of a statement in one Spark action: per key,
+        (rows of `rows` that repeat a key within `rows`, rows whose key is
+        already in `existing`). A row with a NULL key part counts for
+        neither. The existing rows' keys are unique — every write and key
+        DDL keeps them so — so a marker join counts each clash once."""
+        if not keys:
+            return []
+        marked = rows.select(*dict.fromkeys(c for _, cols in keys
+                                            for c in cols))
+        aggs = []
+        for i, (_, cols) in enumerate(keys):
+            clash = F.lit(0)
+            if existing is not None:
+                marked = marked.join(existing.select(
+                    *cols, F.lit(1).alias(f"__ex{i}")), cols, "left")
+                clash = F.count(f"__ex{i}")
+            aggs += [F.count(F.when(_all_set(cols), 1))
+                     - F.count_distinct(*cols), clash]
+        got = marked.agg(*aggs).first()
+        return [(int(got[2 * i]), int(got[2 * i + 1]))
+                for i in range(len(keys))]
+
+    def _apply_keys(self, ts: TableState, incoming: DataFrame, n_new: int,
+                    verb: str, ignore: bool, odku: str | None,
+                    src_cols: list[str] | None,
+                    target_cols: list[str]) -> tuple:
+        """Enforce every key (`_keys`) on an INSERT batch from one
+        verdict, walking the keys in order:
+        - plain INSERT raises on the first key that fails;
+        - IGNORE drops rows clashing with an existing key, then keeps the
+          first row per key repeated in the batch;
+        - REPLACE keeps the last row per key and deletes every existing
+          row a kept row clashes with;
+        - ON DUPLICATE KEY UPDATE folds repeats within the batch, then
+          folds each clashing row into the existing row.
+        Returns (existing rows, rows to append, affected rows), counted as
+        MySQL does: IGNORE the rows it kept, REPLACE each insert and each
+        delete, ODKU 1 per inserted row and 2 per row its update changed.
+        """
+        existing = ts.df
+        keys = self._keys(ts)
+        verdict = self._key_verdict(keys, incoming, existing)
+        failed = [(cols, dup, clash) for (_, cols), (dup, clash)
+                  in zip(keys, verdict) if dup or clash]
+        repeats = any(dup for _, dup, _ in failed)
+        order = [c.name for c in ts.columns]
+        if odku is None and verb != "REPLACE":
+            if not ignore:
+                _raise_dup(keys, verdict)
+                return existing, incoming, n_new
+            if not (failed or ts.checks or ts.foreign_keys):
+                return existing, incoming, n_new
+            # IGNORE may have dropped rows breaking a CHECK or FK too
+            for cols, _, clash in failed:
+                if clash:
+                    incoming = incoming.join(existing.select(*cols), cols,
+                                             "left_anti")
+            for cols, dup, _ in failed:
+                if dup:
+                    incoming = _one_per_key(incoming, cols, last=False)
+            incoming = incoming.select(*order)
+            return existing, incoming, incoming.count()
+        if not failed:
+            return existing, incoming, n_new
+        if odku is None:  # REPLACE
+            for cols, dup, _ in failed:
+                if dup:
+                    incoming = _one_per_key(incoming, cols, last=True)
+            affected = n_new + (n_new - incoming.count() if repeats else 0)
+            victims = [cols for cols, _, clash in failed if clash]
+            if victims:
+                before = existing.count()
+                for cols in victims:
+                    existing = existing.join(incoming.select(*cols), cols,
+                                             "left_anti")
+                existing = existing.select(*order)
+                affected += before - existing.count()
+            return existing, incoming, affected
+        affected = 0
+        if repeats:
+            incoming, affected = self._fold_batch_odku(
+                ts, incoming, odku, keys, src_cols, target_cols)
+        for cols, _, clash in failed:
+            if not clash:
+                continue
+            # clashes are judged on the keys BEFORE the update: it may
+            # rewrite the key itself (a.i = b.j + 100)
+            old_keys = existing.select(*cols)
+            existing = self._apply_odku(ts, existing, incoming, odku, cols,
+                                        src_cols, target_cols, lenient=ignore)
+            affected += 2 * existing.filter("__odku_chg").count()
+            existing = existing.drop("__odku_chg")
+            incoming = incoming.join(old_keys, cols, "left_anti") \
+                .select(*incoming.columns)
+        if any(c.generated for c in ts.columns):
+            # generated columns follow the updated base columns
+            existing = self._compute_generated(ts, existing)
+        return existing, incoming, affected + incoming.count()
 
     def _apply_odku(self, ts: TableState, existing: DataFrame,
-                    incoming: DataFrame, odku: str,
+                    incoming: DataFrame, odku: str, key_cols: list[str],
                     src_cols: list[str] | None = None,
                     target_cols: list[str] | None = None,
-                    key_cols: list[str] | None = None,
                     lenient: bool = False) -> DataFrame:
         """ON DUPLICATE KEY UPDATE: update clashing existing rows; VALUES(c)
         refers to the incoming row's value. With an INSERT...SELECT
         source, assignments may also reference the SOURCE's columns
         (qualified or not — `a.i = b.j + 100`, `t.j`, `cte.j`): each maps
         positionally onto the incoming row (MySQL 8 / reference
-        insert_queries.go 'references table in subquery')."""
-        pk = key_cols if key_cols is not None else list(ts.primary_key)
+        insert_queries.go 'references table in subquery'). `key_cols`
+        is the key the rows clash on. The result carries `__odku_chg`,
+        true on each row the update changed."""
         inc = incoming.select(
             *[F.col(c).alias(f"__new_{c}") for c in incoming.columns]
         )
-        cond = [existing[k] == inc[f"__new_{k}"] for k in pk]
+        cond = [existing[k] == inc[f"__new_{k}"] for k in key_cols]
         joined = existing.join(inc, cond, "left")
         out_cols = []
 
@@ -4058,7 +4053,7 @@ class Engine:
                 newv = (self._lenient_cast(c, newv) if lenient
                         else newv.cast(c.spark_type))
                 out_cols.append(
-                    F.when(F.col(f"__new_{pk[0]}").isNotNull(), newv)
+                    F.when(F.col(f"__new_{key_cols[0]}").isNotNull(), newv)
                     .otherwise(F.col(c.name)).alias(c.name)
                 )
             else:
@@ -4067,7 +4062,7 @@ class Engine:
             *out_cols,
             *[F.col(c.name).alias(f"__old__{c.name}") for c in ts.columns
               if c.name in assigns],
-            F.col(f"__new_{pk[0]}").isNotNull().alias("__odku_m"))
+            F.col(f"__new_{key_cols[0]}").isNotNull().alias("__odku_m"))
         if lenient and any(ts.check_enforced_at(ci)
                            for ci in range(len(ts.checks))):
             # INSERT IGNORE + ODKU: an update that would violate a CHECK
@@ -4084,69 +4079,26 @@ class Engine:
                 (F.when(F.col("__odku_viol"), F.col(f"__old__{c.name}"))
                  .otherwise(F.col(c.name)).alias(c.name))
                 if c.name in assigns else F.col(c.name)
-                for c in ts.columns])
-            return out
-        return out.select(*[c.name for c in ts.columns])
-
-    def _apply_odku_unique(self, ts: TableState, existing: DataFrame,
-                           incoming: DataFrame, odku: str,
-                           src_cols: list[str] | None,
-                           target_cols: list[str] | None,
-                           lenient: bool = False):
-        """ON DUPLICATE KEY conflicts on UNIQUE SECONDARY indexes
-        (keyless tables included — reference insert_queries.go
-        InsertDuplicateKeyKeyless): incoming rows clashing on any unique
-        index fold into the existing row via the ODKU assignment; rows
-        with a NULL key part never clash (MySQL). Returns
-        (existing, incoming, n_folded)."""
-        uniq = [ix for ix in ts.indexes
-                if ix.unique and all(any(c.name == col for c in ts.columns)
-                                     for col in ix.columns)]
-        if not uniq:
-            return existing, incoming, 0
-        folded = 0
-        # within-batch duplicates fold SEQUENTIALLY (row k applies the
-        # ODKU update onto the state row k-1 produced) — driver-side over
-        # the bounded DML batch, mirroring MySQL's row-at-a-time insert
-        for ix in uniq:
-            cols = list(ix.columns)
-            nn = None
-            for cc in cols:
-                n2 = F.col(cc).isNotNull()
-                nn = n2 if nn is None else (nn & n2)
-            keyed = incoming.filter(nn)
-            if keyed.count() > keyed.select(*cols).distinct().count():
-                incoming = self._fold_batch_odku(
-                    ts, incoming, odku, uniq, src_cols, target_cols)
-                break
-        for ix in uniq:
-            cols = list(ix.columns)
-            nn = None
-            for cc in cols:
-                n2 = F.col(cc).isNotNull()
-                nn = n2 if nn is None else (nn & n2)
-            ex_keys = existing.select(*cols).na.drop().distinct()
-            clash_inc = incoming.filter(nn).join(ex_keys, cols, "left_semi")
-            k = clash_inc.count()
-            if not k:
-                continue
-            folded += k
-            existing = self._apply_odku(
-                ts, existing, clash_inc, odku, src_cols=src_cols,
-                target_cols=target_cols, key_cols=cols, lenient=lenient)
-            incoming = incoming.filter(~nn).unionByName(
-                incoming.filter(nn).join(ex_keys, cols, "left_anti"))
-        return existing, incoming, folded
+                for c in ts.columns], *[c for c in out.columns
+                                        if c.startswith("__o")])
+        changed = F.lit(False)
+        for c in ts.columns:
+            if c.name in assigns:
+                changed = changed | ~F.col(c.name).eqNullSafe(
+                    F.col(f"__old__{c.name}"))
+        return out.select(*[c.name for c in ts.columns],
+                          (F.col("__odku_m") & changed).alias("__odku_chg"))
 
     def _fold_batch_odku(self, ts: TableState, incoming: DataFrame,
-                         odku: str, uniq: list,
+                         odku: str, keys: list,
                          src_cols: list[str] | None,
-                         target_cols: list[str] | None) -> DataFrame:
-        """Sequential within-batch ODKU fold for unique-key duplicates:
-        walk the batch in order; a row whose unique key matches an
+                         target_cols: list[str] | None) -> tuple:
+        """Sequential within-batch ODKU fold for repeated keys: walk the
+        batch in order; a row whose key (any of `keys`) matches an
         earlier row applies the ODKU assignments onto that row (driver
         side, bounded by the statement batch — the reference's rowexec
-        inserts row-at-a-time and hits the same path)."""
+        inserts row-at-a-time and hits the same path). Returns the folded
+        batch and its affected rows: 2 per fold that changed the row."""
         cols_in = list(incoming.columns)
         rows = [r.asDict() for r in incoming.collect()]
         assigns = {
@@ -4158,7 +4110,9 @@ class Engine:
         pos = ({s.lower(): i for i, s in enumerate(src_cols)}
                if src_cols else {})
         out_rows: list[dict] = []
-        keymaps: list[dict] = [dict() for _ in uniq]
+        keymaps: list[dict] = [dict() for _ in keys]
+        types = {c.name: c.spark_type for c in ts.columns}
+        changed = 0
 
         by_name = {c.name.lower(): c for c in ts.columns}
 
@@ -4186,8 +4140,8 @@ class Engine:
 
         for r in rows:
             hit = None
-            for kmi, ix in enumerate(uniq):
-                kt = tuple(r.get(c) for c in ix.columns)
+            for kmi, (_, cols) in enumerate(keys):
+                kt = tuple(r.get(c) for c in cols)
                 if any(v is None for v in kt):
                     continue
                 if kt in keymaps[kmi]:
@@ -4196,21 +4150,26 @@ class Engine:
             if hit is None:
                 idx = len(out_rows)
                 out_rows.append(dict(r))
-                for kmi, ix in enumerate(uniq):
-                    kt = tuple(r.get(c) for c in ix.columns)
+                for kmi, (_, cols) in enumerate(keys):
+                    kt = tuple(r.get(c) for c in cols)
                     if all(v is not None for v in kt):
                         keymaps[kmi][kt] = idx
             else:
                 cur = out_rows[hit]
+                before = dict(cur)
                 for col, rhs in assigns.items():
                     cur[col] = eval_rhs(col, rhs, dict(cur), r)
-        types = {c.name: c.spark_type for c in ts.columns}
+                changed += 2 * any(
+                    self._py_coerce(cur[c], types.get(c, T.StringType()))
+                    != self._py_coerce(before.get(c),
+                                       types.get(c, T.StringType()))
+                    for c in assigns)
         schema = T.StructType([
             T.StructField(c, types.get(c, T.StringType())) for c in cols_in])
         data = [tuple(self._py_coerce(d.get(c), types.get(c, T.StringType()))
                       for c in cols_in) for d in out_rows]
         return (self.spark.createDataFrame(data, schema)
-                if data else self._empty_df_for(schema))
+                if data else self._empty_df_for(schema)), changed
 
     def _empty_df_for(self, schema) -> DataFrame:
         """An empty local relation: it has no partitions, so reading it
@@ -4759,6 +4718,8 @@ class Engine:
                                                      assigns)
             else:
                 self._validate(ts, updated.filter("__matched"))
+                if n_match:
+                    self._check_end_state(ts, updated, assigns)
             fks = self._referencing_fks(ts, set(assigns))
             if fks and n_match:
                 needed = sorted({p for _, fk in fks
@@ -4863,13 +4824,39 @@ class Engine:
                 )
         return updated
 
+    def _changeable_keys(self, ts: TableState, assigned) -> list:
+        """The keys (`_keys`) an UPDATE can change: those with a column
+        the SET clause assigns, a generated column, or a column a BEFORE
+        UPDATE trigger names as NEW.col."""
+        cols = {c.lower() for c in assigned}
+        if cols:
+            cols |= {c.name.lower() for c in ts.columns if c.generated}
+        for t in self.triggers.get(ts.name, []):
+            if t.event == "UPDATE" and t.timing == "BEFORE":
+                cols |= {m.group(1).lower() for m in
+                         re.finditer(r"\bNEW\.`?(\w+)", t.body, re.I)}
+        return [k for k in self._keys(ts)
+                if {c.lower() for c in k[1]} & cols]
+
+    def _check_end_state(self, ts: TableState, state: DataFrame,
+                         assigned) -> None:
+        """A strict UPDATE's key check, over the table's end state
+        (`state`, its matched rows flagged `__matched`): the matched rows'
+        new keys may repeat neither each other nor a row the statement
+        left alone, so UPDATE t SET k = k + 1 passes."""
+        keys = self._changeable_keys(ts, assigned)
+        if keys:
+            hit = F.coalesce(F.col("__matched"), F.lit(False))
+            _raise_dup(keys, self._key_verdict(keys, state.filter(hit),
+                                               state.filter(~hit)))
+
     def _update_ignore_revert(self, ts: TableState, base: DataFrame,
                               updated: DataFrame,
                               assigns: dict) -> DataFrame:
         """UPDATE IGNORE: a matched row whose new values violate a CHECK,
-        a child-side FK, or would collide with another row's (original)
-        PRIMARY KEY keeps its OLD values — MySQL skips the row with a
-        warning (reference sql/plan/update.go Ignore handling).
+        a child-side FK, or would collide with another row's key keeps its
+        OLD values — MySQL skips the row with a warning (reference
+        sql/plan/update.go Ignore handling).
 
         `base` still holds the pre-update values; carry them alongside the
         new ones, evaluate the violation predicate on the new values, and
@@ -4888,60 +4875,27 @@ class Engine:
                 continue
             viol = viol | ~F.coalesce(
                 F.expr(self._transpile(chk)).cast("boolean"), F.lit(True))
-        if ts.primary_key and set(ts.primary_key) & set(assigns):
+        # a new key colliding with another row's ORIGINAL key skips the
+        # row, and so does one repeating an earlier row's new key — the
+        # first in table order wins (MySQL row-at-a-time IGNORE; reference
+        # insert_queries.go IgnoreWithDuplicateUniqueKeyKeylessScripts).
+        # NULL key parts never collide
+        for ki, (_, cols) in enumerate(self._changeable_keys(ts, assigns)):
             orig = base.select(*[
-                F.col(k).alias(f"__orig_{k}") for k in ts.primary_key
-            ]).distinct()
-            cond = None
-            for k in ts.primary_key:
-                c2 = F.col(k).eqNullSafe(F.col(f"__orig_{k}"))
-                cond = c2 if cond is None else (cond & c2)
-            upd = upd.join(F.broadcast(orig), cond, "left")
-            changed = F.lit(False)
-            for k in ts.primary_key:
-                old_ref = (F.col(f"__old_{k}") if k in assigns
-                           else F.col(k))
-                changed = changed | ~F.col(k).eqNullSafe(old_ref)
-            viol = viol | (
-                F.col(f"__orig_{ts.primary_key[0]}").isNotNull() & changed)
-            # collisions WITHIN the statement: two rows updating to the
-            # same new key — the first (table order) wins, later ones
-            # skip (MySQL row-at-a-time IGNORE)
-            wdup = Window.partitionBy(
-                *[F.col(k) for k in ts.primary_key]).orderBy("__rid")
-            viol = viol | (changed & (F.row_number().over(wdup) > 1))
-        # UNIQUE secondary indexes: a new value tuple colliding with
-        # another row's ORIGINAL tuple skips the row (UPDATE IGNORE on
-        # keyless tables — reference insert_queries.go
-        # IgnoreWithDuplicateUniqueKeyKeylessScripts); NULL key parts
-        # never collide
-        for ui, ix in enumerate(ts.indexes):
-            if not ix.unique or not (set(ix.columns) & set(assigns)):
-                continue
-            ucols = list(ix.columns)
-            orig = base.select(*[
-                F.col(k).alias(f"__uorig{ui}_{k}") for k in ucols
+                F.col(k).alias(f"__k{ki}_{k}") for k in cols
             ]).na.drop().distinct()
-            cond = None
-            for k in ucols:
-                c2 = F.col(k).eqNullSafe(F.col(f"__uorig{ui}_{k}"))
-                cond = c2 if cond is None else (cond & c2)
-            upd = upd.join(F.broadcast(orig), cond, "left")
+            cond = F.lit(True)
             changed = F.lit(False)
-            for k in ucols:
+            for k in cols:
+                cond = cond & F.col(k).eqNullSafe(F.col(f"__k{ki}_{k}"))
                 old_ref = (F.col(f"__old_{k}") if k in assigns
                            else F.col(k))
                 changed = changed | ~F.col(k).eqNullSafe(old_ref)
-            viol = viol | (
-                F.col(f"__uorig{ui}_{ucols[0]}").isNotNull() & changed)
-            nn_new = None
-            for k in ucols:
-                n3 = F.col(k).isNotNull()
-                nn_new = n3 if nn_new is None else (nn_new & n3)
-            wdup = Window.partitionBy(
-                *[F.col(k) for k in ucols]).orderBy("__rid")
-            viol = viol | (changed & nn_new
-                           & (F.row_number().over(wdup) > 1))
+            upd = upd.join(F.broadcast(orig), cond, "left")
+            wdup = Window.partitionBy(*cols).orderBy("__rid")
+            viol = viol | (changed & (
+                F.col(f"__k{ki}_{cols[0]}").isNotNull()
+                | (_all_set(cols) & (F.row_number().over(wdup) > 1))))
         for fi, fk in enumerate(ts.foreign_keys):
             if not (set(fk.columns) & set(assigns)):
                 continue
@@ -5120,7 +5074,7 @@ class Engine:
                  .alias(c.name))
                 if c.name in assigns else F.col(c.name)
                 for c in ts.columns
-            ])
+            ], matched.alias("__matched"))
             if any(c.generated for c in ts.columns):
                 # generated columns recompute from the post-assignment
                 # base values (reference virtual_column_table.go)
@@ -5134,13 +5088,13 @@ class Engine:
                     F.expr(self._transpile(chk)).cast("boolean"),
                     F.lit(True))
             if n and ts.checks:
-                bad = out.join(updates.select(*pk), pk, "left_semi") \
-                    .filter(viol).count()
-                if bad:
+                if out.filter(F.col("__matched") & viol).count():
                     raise SqlError(
                         f"CHECK constraint violated on UPDATE of "
                         f"{tname!r}")
-            staged.append((ts, out))
+            if n:
+                self._check_end_state(ts, out, assigns)
+            staged.append((ts, out.drop("__matched")))
         snap = self._snapshot_state() if need_snap else None
         try:
             for ts, out in staged:

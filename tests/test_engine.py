@@ -1876,3 +1876,151 @@ def test_metadata_only_alter_keeps_snapshot(eng, action):
     eng.query(f"ALTER TABLE mytable {action}")
     assert eng._table("mytable").df is before
     assert rows(eng.query("SELECT COUNT(*) AS c FROM mytable")) == [(3,)]
+
+
+# One key rule: PRIMARY KEY and UNIQUE keys follow the same rule on every
+# write. Each key variant is a (name, columns, key) triple; `id` gives the
+# UNIQUE variants the primary key a multi-table UPDATE needs. Every table
+# starts as _SEED, and `src` feeds the UPDATE JOIN.
+_KEY_VARIANTS = {
+    "primary": ("PRIMARY", "a INT, b INT, c INT", "PRIMARY KEY (a)"),
+    "unique": ("uk", "id INT AUTO_INCREMENT PRIMARY KEY, a INT, b INT, "
+               "c INT", "UNIQUE KEY uk (a)"),
+    "composite_null": ("uab", "id INT AUTO_INCREMENT PRIMARY KEY, a INT, "
+                       "b INT, c INT", "UNIQUE KEY uab (a, b)"),
+}
+_SEED = [(1, 1, 1), (2, None, 2)]
+_LOAD_ROWS = "1,1,9\n3,3,9\n"
+# cell: (statements, {variant or "*": expected}); expected is _DUP (the
+# last statement fails) or (affected rows of the last statement, final
+# rows). `{cols}` and `{add}` are the variant's columns and key, `{csv}` a
+# file holding _LOAD_ROWS. A cell whose first statement is a CREATE
+# starts from the table without its key. test_key_error_names_the_key
+# pins the full error.
+_DUP = "duplicate"
+_KEY_CELLS = {
+    "insert": (["INSERT INTO kt (a, b, c) VALUES (1, 1, 9)"],
+               {"*": _DUP}),
+    "insert_batch": (["INSERT INTO kt (a, b, c) VALUES (3, 3, 9), (3, 3, 8)"],
+                     {"*": _DUP}),
+    "insert_null_part": (
+        ["INSERT INTO kt (a, b, c) VALUES (2, NULL, 9)"],
+        {"*": _DUP, "composite_null": (1, _SEED + [(2, None, 9)])}),
+    "ignore": (["INSERT IGNORE INTO kt (a, b, c) VALUES (1, 1, 9), (3, 3, 9)"],
+               {"*": (1, _SEED + [(3, 3, 9)])}),
+    "ignore_batch": (
+        ["INSERT IGNORE INTO kt (a, b, c) VALUES (3, 3, 9), (3, 3, 8)"],
+        {"*": (1, _SEED + [(3, 3, 9)])}),
+    "replace": (["REPLACE INTO kt (a, b, c) VALUES (1, 1, 9), (3, 3, 9), "
+                 "(3, 3, 8)"],
+                {"*": (5, [(1, 1, 9), (2, None, 2), (3, 3, 8)])}),
+    "odku": (["INSERT INTO kt (a, b, c) VALUES (1, 1, 9), (3, 3, 9), "
+              "(3, 3, 8) ON DUPLICATE KEY UPDATE c = c + 10"],
+             {"*": (5, [(1, 1, 11), (2, None, 2), (3, 3, 19)])}),
+    "odku_unchanged": (["INSERT INTO kt (a, b, c) VALUES (1, 1, 9) "
+                        "ON DUPLICATE KEY UPDATE c = c"],
+                       {"*": (0, _SEED)}),
+    "load_data": (["LOAD DATA INFILE '{csv}' INTO TABLE kt "
+                   "FIELDS TERMINATED BY ',' (a, b, c)"],
+                  {"*": _DUP}),
+    "load_data_ignore": (["LOAD DATA INFILE '{csv}' IGNORE INTO TABLE kt "
+                          "FIELDS TERMINATED BY ',' (a, b, c)"],
+                         {"*": (1, _SEED + [(3, 3, 9)])}),
+    "update": (["UPDATE kt SET a = 1, b = 1 WHERE c = 2"], {"*": _DUP}),
+    "update_null_part": (
+        ["UPDATE kt SET a = 1 WHERE c = 2"],
+        {"*": _DUP, "composite_null": (1, [(1, 1, 1), (1, None, 2)])}),
+    "update_shift": (["UPDATE kt SET a = a + 1"],
+                     {"*": (2, [(2, 1, 1), (3, None, 2)])}),
+    # UPDATE reports the rows it matched, the skipped one included
+    "update_ignore": (
+        ["UPDATE IGNORE kt SET a = 1 WHERE c = 2"],
+        {"*": (1, _SEED), "composite_null": (1, [(1, 1, 1), (1, None, 2)])}),
+    "update_join": (
+        ["UPDATE kt JOIN src ON kt.c = src.c SET kt.a = src.a"],
+        {"*": _DUP, "composite_null": (2, [(5, 1, 1), (5, None, 2)])}),
+    "alter_add": (
+        ["CREATE TABLE kt ({cols})",
+         "INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (2, NULL, 2), "
+         "(2, NULL, 3)", "ALTER TABLE kt ADD {add}"],
+        {"*": _DUP, "composite_null": (0, _SEED + [(2, None, 3)])}),
+    "alter_add_repeat": (
+        ["CREATE TABLE kt ({cols})",
+         "INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (2, NULL, 2), "
+         "(1, 1, 3)", "ALTER TABLE kt ADD {add}"],
+        {"*": _DUP}),
+}
+
+
+@pytest.mark.parametrize("variant", list(_KEY_VARIANTS))
+@pytest.mark.parametrize("cell", list(_KEY_CELLS))
+def test_key_rule(spark, tmp_path, cell, variant):
+    """Every verb enforces PRIMARY and UNIQUE keys alike: a failing
+    statement raises and changes nothing; a NULL key part never
+    repeats a key; IGNORE, REPLACE and ON DUPLICATE KEY UPDATE report
+    affected rows as MySQL does."""
+    name, cols, key = _KEY_VARIANTS[variant]
+    stmts, expect = _KEY_CELLS[cell]
+    want = expect.get(variant, expect.get("*"))
+    csv = tmp_path / "rows.csv"
+    csv.write_text(_LOAD_ROWS)
+    e = Engine(spark)
+    e.query("CREATE TABLE src (c INT PRIMARY KEY, a INT)")
+    e.query("INSERT INTO src VALUES (1, 5), (2, 5)")
+    if not stmts[0].startswith("CREATE"):
+        e.query(f"CREATE TABLE kt ({cols}, {key})")
+        e.query("INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (2, NULL, 2)")
+    stmts = [s.format(cols=cols, add=key, csv=csv) for s in stmts]
+    for s in stmts[:-1]:
+        e.query(s)
+    if isinstance(want, str):
+        before = rows(e.query("SELECT a, b, c FROM kt ORDER BY a, c"))
+        with pytest.raises(SqlError) as err:
+            e.query(stmts[-1])
+        assert str(err.value).startswith("duplicate")
+        final = before
+    else:
+        assert e.query(stmts[-1]).rows_affected == want[0]
+        final = want[1]
+    assert rows(e.query("SELECT a, b, c FROM kt ORDER BY a, c")) == final
+
+
+@pytest.mark.parametrize("variant", list(_KEY_VARIANTS))
+def test_key_error_names_the_key(spark, variant):
+    """Every key failure is one error: MySQL's ER_DUP_ENTRY (1062,
+    SQLSTATE 23000) naming the key, PRIMARY for the primary key."""
+    name, cols, key = _KEY_VARIANTS[variant]
+    e = Engine(spark)
+    e.query(f"CREATE TABLE kt ({cols}, {key})")
+    e.query("INSERT INTO kt (a, b, c) VALUES (1, 1, 1)")
+    with pytest.raises(SqlError) as err:
+        e.query("INSERT INTO kt (a, b, c) VALUES (1, 1, 2)")
+    assert str(err.value) == f"duplicate entry for key '{name}'"
+    assert (err.value.errno, err.value.sqlstate) == (1062, "23000")
+
+
+@pytest.mark.parametrize("row, error", [
+    ("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'"),
+    ("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null"),
+    ("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'"),
+    ("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0"),
+    ("1, 1, 1, 'x', 1, 9", "FK violation"),
+    ("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'"),
+    ("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'"),
+], ids=["int_bounds", "not_null", "enum", "check", "fk", "primary",
+        "unique"])
+def test_key_check_order(spark, row, error):
+    """A row breaking several rules reports the first in MySQL's order:
+    integer bounds, then NOT NULL / ENUM / SET / CHECK, then foreign
+    keys, then keys with PRIMARY before UNIQUE."""
+    e = Engine(spark)
+    e.query("CREATE TABLE par (p INT PRIMARY KEY)")
+    e.query("INSERT INTO par VALUES (1)")
+    e.query("CREATE TABLE pc (k TINYINT PRIMARY KEY, u INT, n INT NOT NULL, "
+            "e ENUM('x', 'y'), c INT CHECK (c > 0), f INT, "
+            "UNIQUE KEY uk (u), FOREIGN KEY (f) REFERENCES par (p))")
+    e.query("INSERT INTO pc VALUES (1, 1, 1, 'x', 1, 1)")
+    with pytest.raises(SqlError) as err:
+        e.query(f"INSERT INTO pc VALUES ({row})")
+    assert str(err.value).startswith(error)
+    assert rows(e.query("SELECT * FROM pc")) == [(1, 1, 1, "x", 1, 1)]

@@ -70,6 +70,14 @@ def test_error_packet_has_errno_and_sqlstate(cli):
     assert len(ei.value.sqlstate) == 5
 
 
+def test_duplicate_key_err_packet_is_1062(cli):
+    """A key failure reaches the client as MySQL's ER_DUP_ENTRY."""
+    with pytest.raises(MySQLClientError) as ei:
+        cli.query("INSERT INTO wt (i, s) VALUES (1, 'again')")
+    assert (ei.value.errno, ei.value.sqlstate) == (1062, "23000")
+    assert "duplicate entry for key 'PRIMARY'" in str(ei.value)
+
+
 def test_init_db_and_unknown_db(cli):
     cli.query("CREATE DATABASE IF NOT EXISTS wiredb")
     cli.select_db("wiredb")
@@ -344,6 +352,12 @@ def test_dbapi_exec_rowcount_and_lastrowid(conn):
 def test_dbapi_error_maps_to_database_error(conn):
     with pytest.raises(dbapi.DatabaseError):
         conn.cursor().execute("SELECT * FROM missing_tbl_abc")
+
+
+def test_dbapi_duplicate_key_errno(conn):
+    with pytest.raises(dbapi.DatabaseError) as ei:
+        conn.cursor().execute("INSERT INTO dbt VALUES (1, 'again')")
+    assert (ei.value.errno, ei.value.sqlstate) == (1062, "23000")
 
 
 def test_dbapi_transaction_context(conn):

@@ -3008,8 +3008,19 @@ class Engine:
         kind = " ".join((im.group(1) or "").upper().split())
         name = ("PRIMARY" if kind == "PRIMARY KEY" else im.group(2)
                 or im.group(3) or symbol or _index_name(ts.indexes, cols[0]))
-        if kind in ("PRIMARY KEY", "UNIQUE") and ts.df is not None:
-            # existing rows must not already repeat the new key
+        checked = ts.df is not None and set(cols) <= {c.name
+                                                      for c in ts.columns}
+        nullable = [c.name for c in ts.columns if c.name in cols
+                    and c.nullable] if kind == "PRIMARY KEY" else []
+        if checked and nullable and \
+                not ts.df.filter(~_all_set(nullable)).isEmpty():
+            # a primary key's columns become NOT NULL, so the rows
+            # already there may hold no NULL in them
+            raise SqlError("Invalid use of NULL value", sqlstate="22004",
+                           errno=1138)
+        if checked and kind in ("PRIMARY KEY", "UNIQUE"):
+            # existing rows must not already repeat the new key; as in
+            # `_keys`, a key with a functional part is not checked
             key = [(name, list(cols))]
             _raise_dup(key, self._key_verdict(key, ts.df))
         if kind == "PRIMARY KEY":
@@ -4976,6 +4987,9 @@ class Engine:
         staged = []
         total = 0
         trig_after: list = []  # (AFTER triggers, pairs_old, pairs_new)
+        # ON UPDATE actions run on the committed targets, once every
+        # target has passed its checks (a child may be a target too)
+        fk_actions: list = []  # (parent, old → new key mapping, fks)
         need_snap = False
         for qual_l, assigns in groups.items():
             qual = quals[qual_l]
@@ -5065,7 +5079,7 @@ class Engine:
                        else F.col(p)).alias(f"__new_{p}")
                       for p in needed],
                 )
-                self._apply_fk_on_update(ts, mapping, fks)
+                fk_actions.append((ts, mapping, fks))
             joined = ts.df.join(updates, pk, "left")
             matched = F.col("__upd_match").isNotNull()
             out = joined.select(*[
@@ -5095,11 +5109,13 @@ class Engine:
             if n:
                 self._check_end_state(ts, out, assigns)
             staged.append((ts, out.drop("__matched")))
-        snap = self._snapshot_state() if need_snap else None
+        snap = self._snapshot_state() if need_snap or fk_actions else None
         try:
             for ts, out in staged:
                 ts.df = out.localCheckpoint(eager=True)
                 self._register(ts)
+            for ts, mapping, fks in fk_actions:
+                self._apply_fk_on_update(ts, mapping, fks)
             if trig_after:
                 from .procedures import ProcedureInterpreter
                 for ats, pairs_old, pairs_new in trig_after:
@@ -6022,21 +6038,27 @@ class Engine:
 
     _SNAPSHOT_FIELDS = ("df", "columns", "primary_key", "checks",
                         "check_names", "check_enforced", "foreign_keys",
-                        "auto_inc_next", "history", "history_ts")
+                        "indexes", "fulltext", "auto_inc_next", "history",
+                        "history_ts")
+
+    # ALTER edits these objects in place (a renamed column, an index's or
+    # FOREIGN KEY's columns), so a snapshot holds copies of them
+    _SNAPSHOT_OBJECTS = ("columns", "foreign_keys", "indexes", "fulltext")
+
+    @classmethod
+    def _saved_fields(cls, fields: dict) -> dict:
+        """The snapshot fields of `fields` (a table's or a snapshot's),
+        every list a copy."""
+        import copy
+        return {f: [copy.copy(x) for x in fields[f]]
+                if f in cls._SNAPSHOT_OBJECTS
+                else list(fields[f]) if isinstance(fields[f], list)
+                else fields[f] for f in cls._SNAPSHOT_FIELDS}
 
     def _snapshot_state(self) -> dict:
-        import copy
-
-        def saved(ts: TableState) -> dict:
-            out = {}
-            for f in self._SNAPSHOT_FIELDS:
-                v = getattr(ts, f)
-                out[f] = list(v) if isinstance(v, list) else v
-            out["columns"] = copy.deepcopy(ts.columns)  # ALTER edits them
-            return out
-
         return {"triggers": {k: list(v) for k, v in self.triggers.items()},
-                "dbs": {db: {t: saved(ts) for t, ts in tables.items()}
+                "dbs": {db: {t: self._saved_fields(vars(ts))
+                             for t, ts in tables.items()}
                         for db, tables in self.databases.items()}}
 
     def _restore_state(self, snap: dict) -> None:
@@ -6057,7 +6079,8 @@ class Engine:
             for tname, saved in tsnap.items():
                 ts = tables.setdefault(tname,
                                        TableState(tname, saved["columns"]))
-                for f, v in saved.items():
+                # copies again: a savepoint's snapshot may be restored twice
+                for f, v in self._saved_fields(saved).items():
                     setattr(ts, f, v)
         self._bound_db = None  # rebind: a view above may have been dropped
         self._bind_db()

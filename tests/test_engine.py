@@ -1891,10 +1891,10 @@ _KEY_VARIANTS = {
 }
 _SEED = [(1, 1, 1), (2, None, 2)]
 _LOAD_ROWS = "1,1,9\n3,3,9\n"
-# cell: (statements, {variant or "*": expected}); expected is _DUP (the
-# last statement fails) or (affected rows of the last statement, final
-# rows). `{cols}` and `{add}` are the variant's columns and key, `{csv}` a
-# file holding _LOAD_ROWS. A cell whose first statement is a CREATE
+# cell: (statements, {variant or "*": expected}); expected is the start
+# of the error the last statement raises (_DUP for a key) or (affected
+# rows of the last statement, final rows). `{cols}` and `{add}` are the
+# variant's columns and key, `{csv}` a file holding _LOAD_ROWS. A cell whose first statement is a CREATE
 # starts from the table without its key. test_key_error_names_the_key
 # pins the full error.
 _DUP = "duplicate"
@@ -1949,6 +1949,14 @@ _KEY_CELLS = {
          "INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (2, NULL, 2), "
          "(1, 1, 3)", "ALTER TABLE kt ADD {add}"],
         {"*": _DUP}),
+    # a primary key's columns become NOT NULL: MySQL's
+    # ER_INVALID_USE_OF_NULL; a UNIQUE key lets NULLs be
+    "alter_add_null": (
+        ["CREATE TABLE kt ({cols})",
+         "INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (NULL, 2, 2)",
+         "ALTER TABLE kt ADD {add}"],
+        {"*": (0, [(None, 2, 2), (1, 1, 1)]),
+         "primary": "Invalid use of NULL value"}),
 }
 
 
@@ -1977,7 +1985,7 @@ def test_key_rule(spark, tmp_path, cell, variant):
         before = rows(e.query("SELECT a, b, c FROM kt ORDER BY a, c"))
         with pytest.raises(SqlError) as err:
             e.query(stmts[-1])
-        assert str(err.value).startswith("duplicate")
+        assert str(err.value).startswith(want)
         final = before
     else:
         assert e.query(stmts[-1]).rows_affected == want[0]
@@ -2024,3 +2032,60 @@ def test_key_check_order(spark, row, error):
         e.query(f"INSERT INTO pc VALUES ({row})")
     assert str(err.value).startswith(error)
     assert rows(e.query("SELECT * FROM pc")) == [(1, 1, 1, "x", 1, 1)]
+
+
+@pytest.mark.parametrize("variant", list(_KEY_VARIANTS))
+@pytest.mark.parametrize("action", ["RENAME COLUMN a TO a2", "DROP KEY",
+                                    "RENAME TO kt2"])
+def test_failed_alter_keeps_keys(spark, variant, action):
+    """An ALTER whose later action fails leaves the table's keys and the
+    FOREIGN KEYs naming it as they were: the key is still enforced."""
+    name, cols, key = _KEY_VARIANTS[variant]
+    e = Engine(spark)
+    e.query(f"CREATE TABLE kt ({cols}, {key})")
+    e.query("INSERT INTO kt (a, b, c) VALUES (1, 1, 1), (2, NULL, 1)")
+    e.query("CREATE TABLE ch (x INT, FOREIGN KEY (x) REFERENCES kt (a))")
+    if action == "DROP KEY":
+        action = ("DROP PRIMARY KEY" if name == "PRIMARY"
+                  else f"DROP INDEX {name}")
+    with pytest.raises(SqlError, match="duplicate entry for key 'uc'"):
+        e.query(f"ALTER TABLE kt {action}, ADD UNIQUE KEY uc (c)")
+    with pytest.raises(SqlError, match=f"duplicate entry for key '{name}'"):
+        e.query("INSERT INTO kt (a, b, c) VALUES (1, 1, 7)")
+    assert e._table("ch").foreign_keys[0].parent_columns == ("a",)
+    assert rows(e.query("SELECT a, b, c FROM kt ORDER BY a")) == \
+        [(1, 1, 1), (2, None, 1)]
+
+
+def test_update_join_duplicate_leaves_children(spark):
+    """A multi-table UPDATE that breaks the target's key leaves the rows
+    an ON UPDATE CASCADE would have rewritten as they were."""
+    e = Engine(spark)
+    e.query("CREATE TABLE p (k INT PRIMARY KEY, v INT)")
+    e.query("INSERT INTO p VALUES (1, 1), (2, 2)")
+    e.query("CREATE TABLE ch (id INT PRIMARY KEY, pid INT, FOREIGN KEY "
+            "(pid) REFERENCES p (k) ON UPDATE CASCADE)")
+    e.query("INSERT INTO ch VALUES (10, 1), (20, 2)")
+    e.query("CREATE TABLE s (v INT PRIMARY KEY, x INT)")
+    e.query("INSERT INTO s VALUES (1, 7), (2, 7)")
+    with pytest.raises(SqlError, match="duplicate entry for key 'PRIMARY'"):
+        e.query("UPDATE p JOIN s ON p.v = s.v SET p.k = s.x")
+    assert rows(e.query("SELECT k, v FROM p ORDER BY k")) == [(1, 1), (2, 2)]
+    assert rows(e.query("SELECT id, pid FROM ch ORDER BY id")) == \
+        [(10, 1), (20, 2)]
+    assert e.query("UPDATE p JOIN s ON p.v = s.v "
+                   "SET p.k = s.x + p.k").rows_affected == 2
+    assert rows(e.query("SELECT id, pid FROM ch ORDER BY id")) == \
+        [(10, 8), (20, 9)]
+
+
+def test_functional_unique_key_on_rows(spark):
+    """A UNIQUE key with an expression part binds on a table with rows;
+    its expression is not checked, as on writes."""
+    e = Engine(spark)
+    e.query("CREATE TABLE fk (a INT, c VARCHAR(10))")
+    e.query("INSERT INTO fk VALUES (1, 'A'), (2, 'a')")
+    e.query("CREATE UNIQUE INDEX ux ON fk ((LOWER(c)))")
+    e.query("ALTER TABLE fk ADD UNIQUE (a, (a * 10))")
+    assert [ix.unique for ix in e._table("fk").indexes] == [True, True]
+    assert e.query("INSERT INTO fk VALUES (3, 'A')").rows_affected == 1

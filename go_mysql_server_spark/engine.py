@@ -489,6 +489,64 @@ def _all_set(cols) -> Column:
     return out
 
 
+def _key_repr(parts) -> Column:
+    """A key — (column, type) parts — as one value that Python compares
+    as Spark's join compares the parts: strings as they are, binary as
+    hex, timestamps as microseconds, a floating zero without its sign,
+    anything else as its string. Several parts make a JSON array, NULL
+    when a part is NULL."""
+    out = []
+    for col, dtype in parts:
+        if isinstance(dtype, T.StringType):
+            out.append(col)
+        elif isinstance(dtype, T.BinaryType):
+            out.append(F.hex(col))
+        elif isinstance(dtype, T.TimestampType):
+            out.append(F.unix_micros(col).cast("string"))
+        elif isinstance(dtype, (T.FloatType, T.DoubleType)):
+            out.append((col + F.lit(0.0)).cast("string"))
+        else:
+            out.append(col.cast("string"))
+    if len(out) == 1:
+        return out[0]
+    every = F.lit(True)
+    for col, _ in parts:
+        every = every & col.isNotNull()
+    return F.when(every, F.to_json(F.array(*out)))
+
+
+def _key_reprs(ts, keys) -> list[Column]:
+    """Each of a table's keys — (name, columns) — as a `_key_repr`."""
+    types = {c.name: c.spark_type for c in ts.columns}
+    return [_key_repr([(F.col(c), types[c]) for c in cols])
+            for _, cols in keys]
+
+
+def _ordinal_kind(coldef) -> str | None:
+    if coldef is None:
+        return None
+    if coldef.enum_values is not None:
+        return "enum"
+    return "set" if coldef.set_values is not None else None
+
+
+def _fk_ordinal(coldef, ref: str) -> Column:
+    """An ENUM or SET column's value as its ordinal (a SET's bitmask);
+    NULL stays NULL, a non-member is 0."""
+    if coldef.enum_values is not None:
+        arr = ", ".join("'" + m.replace("'", "''") + "'"
+                        for m in coldef.enum_values)
+        return F.expr(f"array_position(array({arr}), `{ref}`)")
+    larr = ", ".join("'" + m.lower().replace("'", "''") + "'"
+                     for m in coldef.set_values)
+    pos = f"array_position(array({larr}), lower(__p))"
+    return F.expr(
+        f"CASE WHEN `{ref}` IS NULL THEN NULL ELSE "
+        f"aggregate(split(`{ref}`, ','), 0L, "
+        f"(__a, __p) -> __a + IF({pos} > 0, "
+        f"shiftleft(1L, CAST({pos} AS INT) - 1), 0L)) END")
+
+
 def _one_per_key(df: DataFrame, cols, last: bool) -> DataFrame:
     """Keep the first (or the last) row of a batch per non-NULL key."""
     order = F.monotonically_increasing_id()
@@ -505,6 +563,19 @@ def _raise_dup(keys, verdict) -> None:
         if dup or clash:
             raise SqlError(f"duplicate entry for key '{name}'",
                            sqlstate="23000", errno=1062)
+
+
+def _values_as_selects(masked: str) -> str | None:
+    """`SELECT * FROM VALUES (r1), (r2)` as `SELECT r1 UNION ALL SELECT
+    r2`; None for any other statement."""
+    m = re.match(r"\s*SELECT\s+\*\s+FROM\s+VALUES\s+", masked, re.I)
+    rows = [r.strip() for r in _split_top_level(masked[m.end():])] if m \
+        else []
+    if not rows or any(not r.startswith("(")
+                       or _find_close_paren(r, 0) != len(r) - 1
+                       for r in rows):
+        return None
+    return " UNION ALL ".join("SELECT " + r[1:-1] for r in rows)
 
 
 def _index_name(indexes, first: str) -> str:
@@ -1609,6 +1680,13 @@ class Engine:
                  and (" AND " in m or " OR " in m))),
          lambda e, s, lits: tp.wrap_truthy_operands(tp.wrap_truthy_if(
              tp.wrap_truthy_case(tp.wrap_truthy_filters(s))), lits), True),
+        # an inline table Spark refuses — a scalar subquery in a row, or a
+        # column whose cells it will not widen to one type (MySQL coerces
+        # them): one SELECT per row, unioned
+        ("values_rows",
+         lambda e, m, f: ("INVALID_INLINE_TABLE" in m
+                          or "SCALAR_SUBQUERY_IN_VALUES" in m),
+         lambda e, s, lits: _values_as_selects(s), True),
     )
 
     def _analyze(self, out: str, lits: list[str]) -> DataFrame:
@@ -3416,15 +3494,12 @@ class Engine:
             new_rows = self._q_select(m.group(8))
             src_cols = list(new_rows.columns)
         elif m.group(9):  # INSERT ... SET c=v
-            from .dialect.transpiler import rewrite_numeric_literals
             assigns = _split_top_level(m.group(9))
             col_list = [a.split("=", 1)[0].strip().strip("`") for a in assigns]
-            exprs = rewrite_numeric_literals(
-                ", ".join(a.split("=", 1)[1].strip() for a in assigns))
-            new_rows = self.spark.sql(f"SELECT {exprs}")
+            new_rows = self._rows_relation([tp.rewrite_numeric_literals(
+                ", ".join(a.split("=", 1)[1].strip() for a in assigns))])
         else:
-            from .dialect.transpiler import rewrite_numeric_literals
-            values_sql = rewrite_numeric_literals(m.group(7).strip())
+            values_sql = tp.rewrite_numeric_literals(m.group(7).strip())
             # MySQL: VALUES () inserts a row of all defaults; spell the
             # row out (Spark's VALUES has no empty-tuple form). Only a
             # whole empty row counts — `(now())` contains `()` but is a
@@ -3448,43 +3523,9 @@ class Engine:
                 if re.search(r"\bDEFAULT\b", values_sql, re.I):
                     values_sql = self._fill_values_defaults(
                         ts, values_sql, col_list)
-            if re.search(r"\(\s*SELECT\b", values_sql, re.I):
-                # Spark disallows scalar subqueries inside VALUES
-                # (SCALAR_SUBQUERY_IN_VALUES) — spell the rows as a
-                # SELECT ... UNION ALL chain, where they are legal
-                selects = []
-                for rtxt in _split_top_level(values_sql):
-                    rtxt = rtxt.strip()
-                    if rtxt.startswith("(") and rtxt.endswith(")"):
-                        rtxt = rtxt[1:-1]
-                    selects.append("SELECT " + rtxt)
-                new_rows = self.spark.sql(
-                    self._transpile(" UNION ALL ".join(selects)))
-            else:
-                try:
-                    new_rows = self.spark.sql(
-                        f"SELECT * FROM VALUES {values_sql}")
-                except Exception as exc:  # noqa: BLE001
-                    retryable = any(k in str(exc) for k in (
-                        "INVALID_INLINE_TABLE", "UNRESOLVED_ROUTINE"))
-                    if not retryable:
-                        raise
-                    # mixed per-row literal types (MySQL coerces; Spark's
-                    # inline table refuses) or MySQL-dialect function
-                    # calls (JSON_OBJECT, ST_GeomFromText) — UNION ALL
-                    # SELECTs through the transpiler instead
-                    selects = []
-                    for rtxt in _split_top_level(values_sql):
-                        rtxt = rtxt.strip()
-                        if rtxt.startswith("(") and rtxt.endswith(")"):
-                            rtxt = rtxt[1:-1]
-                        selects.append("SELECT " + rtxt)
-                    union_sql = " UNION ALL ".join(selects)
-                    try:
-                        new_rows = self.spark.sql(union_sql)
-                    except Exception:  # noqa: BLE001
-                        new_rows = self.spark.sql(
-                            self._transpile(union_sql))
+            new_rows = self._rows_relation([
+                r[1:-1] if r.startswith("(") and r.endswith(")") else r
+                for r in map(str.strip, _split_top_level(values_sql))])
         result, inserted = self._insert_df(ts, new_rows, col_list, verb,
                                            ignore, odku, src_cols, gen_ok)
         if returning is not None:
@@ -3494,6 +3535,20 @@ class Engine:
                 *[self._transpile(e.strip())
                   for e in _split_top_level(returning)])
         return result
+
+    def _rows_relation(self, rows: list[str]) -> DataFrame:
+        """The rows of INSERT ... VALUES or SET, each a list of MySQL
+        expressions, as one relation whose last column, `__ord`, is the
+        row's position. The cells are transpiled once, as a SELECT's are,
+        into one inline table: a LocalRelation. Where Spark refuses one,
+        `_RETRIES` spells the rows as one SELECT each."""
+        masked, lits = mask_literals(tp.fold_literal_prefixes(
+            "SELECT * FROM VALUES "
+            + ", ".join(f"({r}, {i})" for i, r in enumerate(rows))))
+        df = self._analyze(tp.transpile_masked(
+            masked, lits, pipes_as_concat=self._pipes_as_concat), lits)
+        return df.toDF(*[f"_c{i}" for i in range(len(df.columns) - 1)],
+                       "__ord")
 
     def _drop_generated_defaults(
             self, ts: TableState, values_sql: str,
@@ -3655,22 +3710,28 @@ class Engine:
         if col_list and set(col_list) & set(gen_cols) - gen_ok:
             raise SqlError(
                 "the value specified for generated column is not allowed")
+        # rows from _rows_relation carry their position as `__ord`
+        ordinal = ["__ord"] if new_rows.columns[-1:] == ["__ord"] else []
+        n_cells = len(new_rows.columns) - len(ordinal)
         target_cols = col_list or [c.name for c in ts.columns if not (
-            c.auto_increment and len(new_rows.columns) < len(ts.columns)
+            c.auto_increment and n_cells < len(ts.columns)
         ) and c.generated is None]
-        if len(new_rows.columns) != len(target_cols):
+        if n_cells != len(target_cols):
             raise SqlError(
-                f"column count mismatch: {len(new_rows.columns)} values for "
+                f"column count mismatch: {n_cells} values for "
                 f"{len(target_cols)} columns")
-        named = new_rows.toDF(*target_cols)
+        named = new_rows.toDF(*target_cols, *ordinal)
 
         # fill defaults / auto-increment for omitted columns
-        n_new = named.count()
         last_id = None
+        counter = False  # an omitted AUTO_INCREMENT column counts the rows
         # INSERT IGNORE and non-strict sql_mode use lenient value conversion
         lenient = ignore or not self._strict_mode()
         select_cols = []
         deferred_defaults: list = []  # defaults referencing other columns
+        # checks on the values before their cast: (predicate over `named`,
+        # error), carried to the checks below as the columns `__pre<i>`
+        pre_checks: list[tuple[Column, str]] = []
         for c in ts.columns:
             if c.generated is not None:
                 # placeholder; computed in a second projection so the expr
@@ -3697,77 +3758,27 @@ class Engine:
                     # prefix (reference sql/types/strings.go charset
                     # validation, enginetest "charset validation" scripts)
                     if not lenient:
-                        bad = named.filter(F.expr(
-                            f"NOT mysql_utf8_valid(`{c.name}`)")).count()
-                        if bad:
-                            raise SqlError(
-                                f"Incorrect string value for column "
-                                f"{c.name!r}")
+                        pre_checks.append((
+                            F.expr(f"NOT mysql_utf8_valid(`{c.name}`)"),
+                            f"Incorrect string value for column {c.name!r}"))
                     src = F.expr(f"mysql_utf8_lenient(`{c.name}`)")
                 base_val = (self._lenient_cast(c, src) if lenient
                             else src.cast(c.spark_type))
                 if c.auto_increment:
-                    # MySQL AUTO_INCREMENT is SEQUENTIAL within a batch:
-                    # the counter starts at auto_inc_next, an explicit id
-                    # bumps it past itself, NULL (and 0, unless
-                    # NO_AUTO_VALUE_ON_ZERO) takes the counter. For a
-                    # generated row i with g_i = #generated rows <= i and
-                    # m_i = max over explicit rows j < i of (ex_j - g_j):
-                    #   id_i = g_i + max(start - 1, m_i)
-                    # — one window pass, no per-row loop.
-                    zero_gens = "NO_AUTO_VALUE_ON_ZERO" not in \
-                        self._sql_mode
-                    gen_flag = F.col(c.name).isNull() | (
-                        (F.col(c.name).cast("bigint") == 0)
-                        if zero_gens else F.lit(False))
-                    worder = Window.orderBy(
-                        F.monotonically_increasing_id())
-                    g = F.sum(gen_flag.cast("bigint")).over(worder)
-                    stats_ai = named.select(
-                        gen_flag.alias("__gen"),
-                        F.col(c.name).cast("bigint").alias("__ex"),
-                        g.alias("__g"),
-                    ).agg(
-                        F.sum(F.col("__gen").cast("int")).alias("n_gen"),
-                        F.max("__ex").alias("mx"),
-                        F.max(F.when(~F.col("__gen"),
-                                     F.col("__ex") - F.col("__g"))
-                              ).alias("m_all"),
-                    ).first()
-                    n_gen = int(stats_ai["n_gen"] or 0)
-                    mx = int(stats_ai["mx"] or 0)
-                    start = ts.auto_inc_next
-                    if n_gen:
-                        m = F.max(
-                            F.when(~gen_flag,
-                                   F.col(c.name).cast("bigint") - g)
-                        ).over(worder)
-                        gen_id = g + F.greatest(
-                            F.lit(start - 1),
-                            F.coalesce(m, F.lit(start - 1)))
-                        base_val = F.when(
-                            gen_flag,
-                            gen_id.cast(c.spark_type)).otherwise(base_val)
-                        last_id = start
-                        m_all = int(stats_ai["m_all"]
-                                    if stats_ai["m_all"] is not None
-                                    else start - 1)
-                        last_gen = n_gen + max(start - 1, m_all)
-                        ts.auto_inc_next = max(last_gen, mx) + 1
-                    else:
-                        ts.auto_inc_next = max(start, mx + 1)
+                    base_val, last_id = self._auto_increment(
+                        ts, c, named, base_val, bool(ordinal))
                 select_cols.append(base_val.alias(c.name))
             elif c.auto_increment:
-                named = named.withColumn(
-                    "__rn",
-                    F.row_number().over(Window.orderBy(F.monotonically_increasing_id())),
-                )
-                select_cols.append(
-                    (F.col("__rn") + F.lit(ts.auto_inc_next - 1))
-                    .cast(c.spark_type).alias(c.name)
-                )
+                if ordinal:
+                    rn = F.col("__ord") + 1
+                else:
+                    named = named.withColumn("__rn", F.row_number().over(
+                        Window.orderBy(F.monotonically_increasing_id())))
+                    rn = F.col("__rn")
+                select_cols.append((rn + F.lit(ts.auto_inc_next - 1))
+                                   .cast(c.spark_type).alias(c.name))
                 last_id = ts.auto_inc_next
-                ts.auto_inc_next += n_new
+                counter = True
             elif c.default is not None:
                 if _default_references(
                         c, {cc.name.lower() for cc in ts.columns}):
@@ -3798,10 +3809,12 @@ class Engine:
         # Convert errors instead of wrapping). INSERT IGNORE and non-strict
         # sql_mode clamp via _lenient_cast instead of erroring.
         if not lenient:
-            self._check_int_bounds(
-                ts, named, {c.name: F.col(c.name) for c in ts.columns
-                            if c.name in target_cols})
-        incoming = named.select(*select_cols)
+            pre_checks += self._int_bound_checks(
+                ts, {c.name: F.col(c.name) for c in ts.columns
+                     if c.name in target_cols})
+        pre = [f"__pre{i}" for i in range(len(pre_checks))]
+        incoming = named.select(*select_cols, *[
+            p.alias(n) for (p, _), n in zip(pre_checks, pre)])
         # cross-column defaults evaluate in TABLE ORDER over the assembled
         # row, so a default can read a provided column anywhere in the row
         # and the result of any default evaluated before it
@@ -3811,7 +3824,31 @@ class Engine:
         incoming = self._enum_set_normalize(ts, incoming)
         if gen_cols:
             incoming = self._compute_generated(ts, incoming)
-        incoming = self._apply_insert_triggers(ts, incoming, "BEFORE")
+        checks = [(F.col(n), msg) for n, (_, msg) in zip(pre, pre_checks)]
+        n_new = None
+
+        def judge(df: DataFrame, local: bool, extra=()) -> list | None:
+            # the row count, the first broken check, the collected rows;
+            # an omitted AUTO_INCREMENT column's counter moves by the row
+            # count even when a check fails, as MySQL's does
+            nonlocal n_new
+            n, err, rows = self._judge(df, checks, local, extra)
+            if counter and n_new is None:
+                ts.auto_inc_next += n
+            n_new = n
+            if err:
+                raise SqlError(err)
+            return rows
+
+        if any(t.event == "INSERT" and t.timing == "BEFORE"
+               for t in self.triggers.get(ts.name, [])):
+            # a BEFORE trigger sees converted values: the checks on the
+            # values before their cast run first
+            if checks:
+                judge(incoming, self._is_local(incoming))
+            incoming = self._apply_insert_triggers(ts, incoming.drop(*pre),
+                                                   "BEFORE")
+            checks, pre = [], []
 
         if lenient:
             # IGNORE / non-strict: NULL into NOT NULL takes the implicit
@@ -3835,18 +3872,19 @@ class Engine:
                         F.when(F.col(c.name).isNotNull()
                                & ~F.col(c.name).isin(*c.enum_values),
                                F.lit("")).otherwise(F.col(c.name)))
+        kept = incoming
+        keep = F.lit(True)
         if ignore:
             # INSERT IGNORE skips (not errors on) rows violating CHECK
             # constraints or child-side FKs (MySQL warning semantics;
             # reference sql/plan/insert.go Ignore)
-            keep = F.lit(True)
             for ci, chk in enumerate(ts.checks):
                 if not ts.check_enforced_at(ci):
                     continue
                 keep = keep & F.coalesce(
                     F.expr(self._transpile(chk)).cast("boolean"),
                     F.lit(True))
-            incoming = incoming.filter(keep)
+            kept = kept.filter(keep)
             for fk in ts.foreign_keys:
                 parent = self._db(None).get(fk.parent_table)
                 if parent is None or parent.df is None:
@@ -3855,16 +3893,42 @@ class Engine:
                 for cc in fk.columns:
                     n2 = F.col(cc).isNull()
                     fk_null = n2 if fk_null is None else (fk_null | n2)
-                ok_rows = incoming.filter(~fk_null).join(
+                ok_rows = kept.filter(~fk_null).join(
                     parent.df.select(*[
                         F.col(pc).alias(cc) for cc, pc in
                         zip(fk.columns, fk.parent_columns)]).distinct(),
                     list(fk.columns), "left_semi")
-                incoming = incoming.filter(fk_null).unionByName(ok_rows)
-        self._validate(ts, incoming, lenient=lenient,
-                       skip_raises=ignore)
+                kept = kept.filter(fk_null).unionByName(ok_rows)
+        else:
+            checks += self._row_checks(ts, lenient)
+        keys = self._keys(ts)
+        uuid_col = next((c.name for c in ts.columns if c.default
+                         and "uuid" in c.default.lower()
+                         and c.name not in target_cols), None)
+        rows = None
+        if self._is_local(kept):
+            # the rows are literals: collect them once with every check as
+            # a column and decide on the driver, then probe the snapshot
+            fks = [] if ignore else self._fk_probes(ts)
+            rows = judge(incoming, True, [
+                keep.alias("__keep"),
+                *[k.alias(f"__key{i}")
+                  for i, k in enumerate(_key_reprs(ts, keys))],
+                *[col for _, _, cols, _ in fks for col in cols],
+                *([F.col(uuid_col).alias("__uuid")] if uuid_col else [])])
+            self._check_fk_probes(ts, fks, rows, incoming)
+            rows = [r for r in rows if r["__keep"]]
+            verdict = self._probe_keys(ts, keys, rows)
+        else:
+            judge(incoming, False)
+            if not ignore:
+                for fk in ts.foreign_keys:
+                    self._check_fk(ts, fk, incoming)
+            verdict = self._key_verdict(keys, kept, ts.df)
+        checked = incoming = kept.drop(*pre)
         existing, incoming, affected = self._apply_keys(
-            ts, incoming, n_new, verb, ignore, odku, src_cols, target_cols)
+            ts, incoming, n_new, verb, ignore, odku, src_cols, target_cols,
+            verdict)
         ts.df = existing.unionByName(incoming).localCheckpoint(eager=True)
         self._register(ts)
         if ts.fulltext:
@@ -3874,15 +3938,76 @@ class Engine:
             self._ft_after_insert(ts, incoming, incremental=odku is None)
         if last_id is not None:
             self.session.last_insert_id = last_id
-        uuid_cols = [c.name for c in ts.columns
-                     if c.default and "uuid" in c.default.lower()
-                     and c.name not in target_cols]
-        if uuid_cols:
-            row = incoming.select(uuid_cols[0]).first()
+        if uuid_col:
+            if rows is not None and incoming is checked:
+                row = [rows[0]["__uuid"]] if rows else None
+            else:
+                row = incoming.select(uuid_col).first()
             if row is not None:
                 self.session.last_insert_uuid = row[0]
         self._apply_insert_triggers(ts, incoming, "AFTER")
         return OkResult(max(affected, 0), last_id), incoming
+
+    def _auto_increment(self, ts: TableState, c, named: DataFrame,
+                        base_val: Column, ordered: bool) -> tuple:
+        """An AUTO_INCREMENT column the INSERT names: MySQL's counter is
+        SEQUENTIAL within a batch. It starts at auto_inc_next, an explicit
+        id moves it past itself, and NULL (and 0, unless
+        NO_AUTO_VALUE_ON_ZERO) takes the counter. Rows that carry their
+        position (`ordered`) are numbered on the driver; others by one
+        window pass. Returns the column and LAST_INSERT_ID (None when no
+        row took the counter); advances ts.auto_inc_next."""
+        zero_gens = "NO_AUTO_VALUE_ON_ZERO" not in self._sql_mode
+        gen_flag = F.col(c.name).isNull() | (
+            (F.col(c.name).cast("bigint") == 0)
+            if zero_gens else F.lit(False))
+        start = ts.auto_inc_next
+        if ordered:
+            got = sorted(named.select("__ord", gen_flag, F.col(c.name).cast(
+                "bigint")).collect())
+            ids, nxt = [], start
+            for _, gen, ex in got:
+                ids.append(nxt if gen else None)
+                if gen:
+                    nxt += 1
+                elif ex is not None:
+                    nxt = max(nxt, ex + 1)
+            ts.auto_inc_next = nxt
+            if all(i is None for i in ids):
+                return base_val, None
+            arr = ", ".join("NULL" if i is None else str(i) for i in ids)
+            gen_id = F.expr(f"element_at(array({arr}), __ord + 1)")
+            return F.when(gen_flag, gen_id.cast(c.spark_type)).otherwise(
+                base_val), start
+        # For a generated row i with g_i = #generated rows <= i and m_i =
+        # max over explicit rows j < i of (ex_j - g_j):
+        #   id_i = g_i + max(start - 1, m_i)
+        worder = Window.orderBy(F.monotonically_increasing_id())
+        g = F.sum(gen_flag.cast("bigint")).over(worder)
+        stats_ai = named.select(
+            gen_flag.alias("__gen"),
+            F.col(c.name).cast("bigint").alias("__ex"),
+            g.alias("__g"),
+        ).agg(
+            F.sum(F.col("__gen").cast("int")).alias("n_gen"),
+            F.max("__ex").alias("mx"),
+            F.max(F.when(~F.col("__gen"),
+                         F.col("__ex") - F.col("__g"))).alias("m_all"),
+        ).first()
+        n_gen = int(stats_ai["n_gen"] or 0)
+        mx = int(stats_ai["mx"] or 0)
+        if not n_gen:
+            ts.auto_inc_next = max(start, mx + 1)
+            return base_val, None
+        m = F.max(F.when(~gen_flag, F.col(c.name).cast("bigint") - g)
+                  ).over(worder)
+        gen_id = g + F.greatest(F.lit(start - 1),
+                                F.coalesce(m, F.lit(start - 1)))
+        m_all = int(stats_ai["m_all"] if stats_ai["m_all"] is not None
+                    else start - 1)
+        ts.auto_inc_next = max(n_gen + max(start - 1, m_all), mx) + 1
+        return F.when(gen_flag, gen_id.cast(c.spark_type)).otherwise(
+            base_val), start
 
     @staticmethod
     def _keys(ts: TableState) -> list[tuple[str, list[str]]]:
@@ -3922,10 +4047,10 @@ class Engine:
 
     def _apply_keys(self, ts: TableState, incoming: DataFrame, n_new: int,
                     verb: str, ignore: bool, odku: str | None,
-                    src_cols: list[str] | None,
-                    target_cols: list[str]) -> tuple:
-        """Enforce every key (`_keys`) on an INSERT batch from one
-        verdict, walking the keys in order:
+                    src_cols: list[str] | None, target_cols: list[str],
+                    verdict: list) -> tuple:
+        """Enforce every key (`_keys`) on an INSERT batch from its
+        verdict (`_key_verdict`), walking the keys in order:
         - plain INSERT raises on the first key that fails;
         - IGNORE drops rows clashing with an existing key, then keeps the
           first row per key repeated in the batch;
@@ -3939,7 +4064,6 @@ class Engine:
         """
         existing = ts.df
         keys = self._keys(ts)
-        verdict = self._key_verdict(keys, incoming, existing)
         failed = [(cols, dup, clash) for (_, cols), (dup, clash)
                   in zip(keys, verdict) if dup or clash]
         repeats = any(dup for _, dup, _ in failed)
@@ -4191,14 +4315,12 @@ class Engine:
             self.spark._jvm.java.util.ArrayList(),
             jss.parseDataType(schema.json())), self.spark)
 
-    def _validate(self, ts: TableState, df: DataFrame,
-                  lenient: bool = False,
-                  skip_raises: bool = False) -> None:
-        # Single aggregation pass over ALL column/check constraints (r1
-        # judge finding: one .count() job per constraint made a wide table
-        # pay 10+ Spark jobs per INSERT). FK checks below are joins and
-        # stay per-FK.
-        checks: list[tuple[F.Column, str]] = []
+    @staticmethod
+    def _row_checks(ts: TableState, lenient: bool = False) -> list:
+        """The checks a written row passes after its values' cast, as
+        (predicate, error) pairs in the order MySQL reports them: NOT
+        NULL, ENUM (not when `lenient`), SET and each enforced CHECK."""
+        checks: list[tuple[Column, str]] = []
         for c in ts.columns:
             if not c.nullable:
                 checks.append((F.col(c.name).isNull(),
@@ -4222,90 +4344,175 @@ class Engine:
             # NULL check result passes (MySQL CHECK semantics)
             checks.append((F.expr(f"NOT ({chk})"),
                            f"CHECK constraint violated: {chk}"))
-        if checks and not skip_raises:
-            counts = df.agg(*[
-                F.sum(F.when(pred, 1).otherwise(0)).alias(f"_v{i}")
-                for i, (pred, _) in enumerate(checks)
-            ]).first()
-            for i, (_, msg) in enumerate(checks):
-                if counts[i]:
-                    raise SqlError(msg)
-        if skip_raises:
-            return  # IGNORE already filtered violating rows
-        for fk in ts.foreign_keys:
+        return checks
+
+    @staticmethod
+    def _judge(df: DataFrame, checks: list, local: bool = False,
+               extra=(), where: Column | None = None) -> tuple:
+        """Evaluate row checks — (predicate, error) pairs in the order
+        MySQL reports them — over `df` in one Spark action. Returns the
+        row count, the error of the first check a row breaks (None when
+        none is broken) and, for a `local` relation (`_is_local`), its
+        rows: it is collected once with every predicate and every `extra`
+        column projected, which runs no job on a LocalRelation. Any other
+        relation is one aggregate over its rows where `where` holds."""
+        if local:
+            rows = df.select(*[p.alias(f"__chk{i}") for i, (p, _)
+                               in enumerate(checks)], *extra).collect()
+            n, hits = len(rows), [any(r[i] for r in rows)
+                                  for i in range(len(checks))]
+        else:
+            on = F.lit(True) if where is None else where
+            got = df.agg(F.count(F.when(on, 1)), *[
+                F.count(F.when(on & p, 1)) for p, _ in checks]).first()
+            n, hits, rows = got[0], got[1:], None
+        return n, next((msg for (_, msg), hit in zip(checks, hits) if hit),
+                       None), rows
+
+    @staticmethod
+    def _is_local(df: DataFrame) -> bool:
+        """True when every leaf of df's optimized plan, its subqueries'
+        included, is a LocalRelation or a OneRowRelation: the rows are
+        literals and read no table."""
+        plan = df._jdf.queryExecution().optimizedPlan()
+        subs = plan.subqueriesAll()
+        for p in [plan] + [subs.apply(i) for i in range(subs.size())]:
+            leaves = p.collectLeaves()
+            if any(leaves.apply(i).getClass().getSimpleName()
+                   not in ("LocalRelation", "OneRowRelation")
+                   for i in range(leaves.size())):
+                return False
+        return True
+
+    def _probe_keys(self, ts: TableState, keys: list,
+                    rows: list) -> list[tuple]:
+        """`_key_verdict` for collected rows, which hold each key as
+        `__key<i>` (`_key_repr`): repeats are counted on the driver, and
+        one filter over the snapshot finds the rows already holding one of
+        the batch's keys."""
+        reprs = _key_reprs(ts, keys)
+        vals = [[r[f"__key{i}"] for r in rows if r[f"__key{i}"] is not None]
+                for i in range(len(keys))]
+        found: list[set] = [set() for _ in keys]
+        hit = F.lit(False)
+        for expr, v in zip(reprs, vals):
+            if v:
+                hit = hit | expr.isin(*set(v))
+        if any(vals):
+            for r in ts.df.filter(hit).select(*reprs).collect():
+                for f, v in zip(found, r):
+                    f.add(v)
+        return [(len(v) - len(set(v)), sum(x in f for x in v))
+                for v, f in zip(vals, found)]
+
+    def _fk_sides(self, ts: TableState, fk, parent: TableState) -> list:
+        """Per column of a FOREIGN KEY: the child's and the parent's value
+        as the check compares them, and their type (None when the two
+        sides' types differ). ENUM↔ENUM and SET↔SET keys compare ORDINALS,
+        not member text — a child enum('x','y') ordinal 1 references
+        parent enum('a','b') ordinal 1 (reference enginetest "enums with
+        foreign keys")."""
+        child_by = {c.name: c for c in ts.columns}
+        parent_by = {c.name: c for c in parent.columns}
+        sides = []
+        for c, p in zip(fk.columns, fk.parent_columns):
+            cd, pd = child_by.get(c), parent_by.get(p)
+            kind = _ordinal_kind(cd)
+            if kind is not None and kind == _ordinal_kind(pd):
+                sides.append((_fk_ordinal(cd, c), _fk_ordinal(pd, p),
+                              T.LongType()))
+            else:
+                same = (cd is not None and pd is not None
+                        and cd.spark_type == pd.spark_type)
+                sides.append((F.col(c), F.col(p),
+                              cd.spark_type if same else None))
+        return sides
+
+    @staticmethod
+    def _fk_error(ts: TableState, fk, orphans: int) -> SqlError:
+        return SqlError(f"FK violation: {orphans} value(s) in {ts.name}"
+                        f"({', '.join(fk.columns)}) not present in "
+                        f"{fk.parent_table}({', '.join(fk.parent_columns)})")
+
+    def _check_fk(self, ts: TableState, fk, df: DataFrame) -> None:
+        """Raise when a row of `df` names a parent key `fk`'s parent table
+        lacks: one anti join. NULL key parts never reference."""
+        parent = self._db(None).get(fk.parent_table)
+        if parent is None or parent.df is None:
+            raise SqlError(f"FK parent table {fk.parent_table!r} missing")
+        sides = self._fk_sides(ts, fk, parent)
+        pcols = list(fk.parent_columns)
+        child_keys = df.select(*[c.alias(p) for (c, _, _), p
+                                 in zip(sides, pcols)]).na.drop()
+        parent_keys = parent.df.select(*[pe.alias(p) for (_, pe, _), p
+                                         in zip(sides, pcols)])
+        if fk.parent_table == ts.name:
+            # self-referential FK: the batch may reference rows it
+            # itself inserts — validate against post-insert state
+            # (reference foreign_key_editor.go self-reference path)
+            if {c.name for c in ts.columns} <= set(df.columns):
+                parent_keys = parent_keys.unionByName(df.select(
+                    *[pe.alias(p) for (_, pe, _), p in zip(sides, pcols)]))
+        orphans = child_keys.join(parent_keys, pcols, "left_anti").count()
+        if orphans:
+            raise self._fk_error(ts, fk, orphans)
+
+    def _fk_probes(self, ts: TableState) -> list[tuple]:
+        """Per FOREIGN KEY, in order: (fk, parent table, columns to collect
+        from the batch, the parent key as `_key_repr`). The columns are the
+        child key as `__fk<j>` and, for a self-referential key, the batch's
+        own parent key as `__fkp<j>`. A key whose parent is missing or
+        whose sides' types differ collects nothing: `_check_fk` judges
+        it."""
+        probes = []
+        for j, fk in enumerate(ts.foreign_keys):
             parent = self._db(None).get(fk.parent_table)
-            if parent is None or parent.df is None:
-                raise SqlError(f"FK parent table {fk.parent_table!r} missing")
-            # ENUM↔ENUM foreign keys compare ORDINALS, not member text —
-            # a child enum('x','y') ordinal 1 references parent
-            # enum('a','b') ordinal 1 (reference enginetest "enums with
-            # foreign keys": insert 1 into child enum('x',..) referencing
-            # parent enum('a',..) succeeds)
-            child_by = {c.name: c for c in ts.columns}
-            parent_by = {c.name: c for c in parent.columns}
-
-            def _fk_side(coldef, ref):
-                # array_position: NULL in → NULL out (so na.drop still
-                # skips NULL FKs), non-member → 0
-                if coldef is not None and coldef.enum_values:
-                    arr = ", ".join("'" + m.replace("'", "''") + "'"
-                                    for m in coldef.enum_values)
-                    return F.expr(f"array_position(array({arr}), `{ref}`)")
-                if coldef is not None and coldef.set_values is not None:
-                    larr = ", ".join(
-                        "'" + m.lower().replace("'", "''") + "'"
-                        for m in coldef.set_values)
-                    pos = f"array_position(array({larr}), lower(__p))"
-                    return F.expr(
-                        f"CASE WHEN `{ref}` IS NULL THEN NULL ELSE "
-                        f"aggregate(split(`{ref}`, ','), 0L, "
-                        f"(__a, __p) -> __a + IF({pos} > 0, "
-                        f"shiftleft(1L, CAST({pos} AS INT) - 1), 0L)) END")
-                return F.col(ref)
-
-            def _ordinal_kind(coldef):
-                if coldef is None:
-                    return None
-                if coldef.enum_values is not None:
-                    return "enum"
-                if coldef.set_values is not None:
-                    return "set"
-                return None
-
-            both_enum = [
-                _ordinal_kind(child_by.get(c)) is not None
-                and _ordinal_kind(child_by.get(c))
-                == _ordinal_kind(parent_by.get(p))
-                for c, p in zip(fk.columns, fk.parent_columns)]
-            child_keys = df.select(
-                *[(_fk_side(child_by.get(c), c) if be else F.col(c))
-                  .alias(p)
-                  for (c, p), be in zip(
-                      zip(fk.columns, fk.parent_columns), both_enum)]
-            ).na.drop()  # NULL FK values are allowed (MySQL semantics)
-            parent_keys = parent.df.select(
-                *[(_fk_side(parent_by.get(p), p) if be else F.col(p))
-                  .alias(p)
-                  for p, be in zip(fk.parent_columns, both_enum)])
+            sides = (self._fk_sides(ts, fk, parent)
+                     if parent is not None and parent.df is not None else [])
+            if not sides or any(t is None for _, _, t in sides):
+                probes.append((fk, parent, [], None))
+                continue
+            key = _key_repr([(pe, t) for _, pe, t in sides])
+            cols = [_key_repr([(c, t) for c, _, t in sides])
+                    .alias(f"__fk{j}")]
             if fk.parent_table == ts.name:
-                # self-referential FK: the batch may reference rows it
-                # itself inserts — validate against post-insert state
-                # (reference foreign_key_editor.go self-reference path)
-                pcols = [c.name for c in ts.columns]
-                if set(pcols) <= set(df.columns):
-                    parent_keys = parent_keys.unionByName(df.select(
-                        *[(_fk_side(parent_by.get(p), p) if be
-                           else F.col(p)).alias(p)
-                          for p, be in zip(fk.parent_columns, both_enum)]))
-            orphans = child_keys.join(
-                parent_keys, list(fk.parent_columns),
-                "left_anti",
-            ).count()
+                cols.append(key.alias(f"__fkp{j}"))
+            probes.append((fk, parent, cols, key))
+        return probes
+
+    def _check_fk_probes(self, ts: TableState, probes: list, rows: list,
+                         df: DataFrame) -> None:
+        """The FOREIGN KEY check of collected rows (`_fk_probes`), in key
+        order: one filter per parent table finds the parent keys the batch
+        names."""
+        by_parent: dict[str, list[int]] = {}
+        for j, (fk, _, cols, _) in enumerate(probes):
+            if cols:
+                by_parent.setdefault(fk.parent_table, []).append(j)
+        found: dict[int, set] = {}
+        for js in by_parent.values():
+            hit, named = F.lit(False), False
+            for j in js:
+                found[j] = set()
+                vals = {r[f"__fk{j}"] for r in rows} - {None}
+                if vals:
+                    hit, named = hit | probes[j][3].isin(*vals), True
+            if not named:
+                continue
+            keys = [probes[j][3] for j in js]
+            for r in probes[js[0]][1].df.filter(hit).select(*keys).collect():
+                for j, v in zip(js, r):
+                    found[j].add(v)
+        for j, (fk, _, cols, _) in enumerate(probes):
+            if not cols:
+                self._check_fk(ts, fk, df)
+                continue
+            if fk.parent_table == ts.name:
+                found[j] |= {r[f"__fkp{j}"] for r in rows}
+            orphans = sum(r[f"__fk{j}"] is not None
+                          and r[f"__fk{j}"] not in found[j] for r in rows)
             if orphans:
-                raise SqlError(
-                    f"FK violation: {orphans} value(s) in {ts.name}"
-                    f"({', '.join(fk.columns)}) not present in "
-                    f"{fk.parent_table}({', '.join(fk.parent_columns)})")
+                raise self._fk_error(ts, fk, orphans)
 
     def _enum_set_normalize(self, ts: TableState, df: DataFrame) -> DataFrame:
         """Map incoming ENUM/SET values to their canonical member
@@ -4314,8 +4521,9 @@ class Engine:
         the bitmask decode), string values match members
         case-insensitively and normalize to the declared case, SET
         strings dedupe and re-order to declaration order. Values that
-        resolve to no member pass through unchanged so _validate (or the
-        lenient '' rewrite) still sees them. One projection, JVM-side."""
+        resolve to no member pass through unchanged so the row checks (or
+        the lenient '' rewrite) still see them. One projection, JVM-side.
+        """
         exprs = {}
         for c in ts.columns:
             if (c.fsp is not None
@@ -4452,11 +4660,11 @@ class Engine:
             expr = F.coalesce(expr, dflt)
         return expr
 
-    def _check_int_bounds(self, ts: TableState, df: DataFrame,
-                          exprs: dict[str, F.Column]) -> None:
-        """One aggregation pass asserting every bounded integer column's
-        pre-cast value is in its MySQL range (strict mode; reference
-        sql/types/number.go:40-94)."""
+    @staticmethod
+    def _int_bound_checks(ts: TableState, exprs: dict) -> list:
+        """A (predicate, error) pair per bounded integer column in `exprs`
+        (column → its value before the cast): out of the column's MySQL
+        range (strict mode; reference sql/types/number.go:40-94)."""
         checks = []
         for c in ts.columns:
             if c.int_bounds is None or c.name not in exprs:
@@ -4468,15 +4676,7 @@ class Engine:
             checks.append((
                 v.isNotNull() & ((v < lo_l) | (v > hi_l)),
                 f"out of range value for column {c.name!r}"))
-        if not checks:
-            return
-        counts = df.agg(*[
-            F.sum(F.when(pred, 1).otherwise(0)).alias(f"_b{i}")
-            for i, (pred, _) in enumerate(checks)
-        ]).first()
-        for i, (_, msg) in enumerate(checks):
-            if counts[i]:
-                raise SqlError(msg)
+        return checks
 
     _DML_ORDER_LIMIT = re.compile(
         r"(?:\s+ORDER\s+BY\s+([^()]+?))?\s+LIMIT\s+(\d+)"
@@ -4631,19 +4831,13 @@ class Engine:
                 f"the value specified for generated column "
                 f"{sorted(gen_assigned)} is not allowed")
         ignore = bool(m.group(1)) or not self._strict_mode()
+        explicit_ignore = bool(m.group(1))
         matched = ts.df.filter(where)
-        n_match = matched.count()
-        # FOUND_ROWS() after an UPDATE reports the matched-row count
-        # (reference found_rows.go + update result Info.Matched)
-        self.session.found_rows_n = n_match
         if not assigns:
             # every assignment was a generated-column DEFAULT: nothing
             # changes, but the statement still reports matched rows
+            self.session.found_rows_n = n_match = matched.count()
             return OkResult(n_match)
-        if n_match and not ignore:
-            self._check_int_bounds(
-                ts, matched,
-                {c: F.expr(self._transpile(e)) for c, e in assigns.items()})
 
         def _assigned(c):
             expr = F.expr(self._transpile(assigns[c.name]))
@@ -4670,12 +4864,33 @@ class Engine:
                            for t in utrigs))
         old_carry = ([F.col(c.name).alias(f"__old__{c.name}")
                       for c in ts.columns] if seq_rows else [])
-        updated = base.select(*out_cols, "__matched", *old_carry)
+        # strict mode checks the assigned values before their cast, carried
+        # as the columns `__pre<i>`
+        pre_checks = [] if ignore else self._int_bound_checks(
+            ts, {c: F.expr(self._transpile(e)) for c, e in assigns.items()})
+        pre = [f"__pre{i}" for i in range(len(pre_checks))]
+        updated = base.select(*out_cols, "__matched", *old_carry, *[
+            p.alias(n) for (p, _), n in zip(pre_checks, pre)])
         if any(c.enum_values is not None or c.set_values is not None
                or c.fsp is not None or c.is_year for c in ts.columns):
             updated = self._enum_set_normalize(ts, updated)
         if any(c.generated for c in ts.columns):
             updated = self._compute_generated(ts, updated)
+        # one aggregate counts the matched rows and judges them: the checks
+        # before the cast, then the row checks — after the BEFORE triggers
+        # instead when there are any, as they may still change the rows
+        checks = [(F.col(n), msg) for n, (_, msg) in zip(pre, pre_checks)]
+        row_checks = [] if explicit_ignore else self._row_checks(ts)
+        if not any(t.timing == "BEFORE" for t in utrigs):
+            checks, row_checks = checks + row_checks, []
+        n_match, err, _ = self._judge(updated, checks,
+                                      where=F.col("__matched"))
+        # FOUND_ROWS() after an UPDATE reports the matched-row count
+        # (reference found_rows.go + update result Info.Matched)
+        self.session.found_rows_n = n_match
+        if err:
+            raise SqlError(err)
+        updated = updated.drop(*pre)
         pairs_old = pairs_new = None
         # statement atomicity whenever any UPDATE trigger can mutate state
         # outside the row (same contract as _insert_df / _q_delete): the
@@ -4723,12 +4938,16 @@ class Engine:
                 self._restore_state(snap)
             raise
         try:
-            explicit_ignore = bool(m.group(1))
             if explicit_ignore and n_match:
                 updated = self._update_ignore_revert(ts, base, updated,
                                                      assigns)
             else:
-                self._validate(ts, updated.filter("__matched"))
+                err = row_checks and self._judge(
+                    updated, row_checks, where=F.col("__matched"))[1]
+                if err:
+                    raise SqlError(err)
+                for fk in ts.foreign_keys:
+                    self._check_fk(ts, fk, updated.filter("__matched"))
                 if n_match:
                     self._check_end_state(ts, updated, assigns)
             fks = self._referencing_fks(ts, set(assigns))

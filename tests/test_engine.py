@@ -2007,27 +2007,33 @@ def test_key_error_names_the_key(spark, variant):
     assert (err.value.errno, err.value.sqlstate) == (1062, "23000")
 
 
-@pytest.mark.parametrize("row, error", [
-    ("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'"),
-    ("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null"),
-    ("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'"),
-    ("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0"),
-    ("1, 1, 1, 'x', 1, 9", "FK violation"),
-    ("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'"),
-    ("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'"),
-], ids=["int_bounds", "not_null", "enum", "check", "fk", "primary",
-        "unique"])
+# (row, error) pairs: each row breaks every rule from its error on
+_CHECK_ORDER = [pytest.param(*p, id=i) for p, i in [
+    (("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'"),
+     "int_bounds"),
+    (("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null"), "not_null"),
+    (("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'"), "enum"),
+    (("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0"), "check"),
+    (("1, 1, 1, 'x', 1, 9", "FK violation"), "fk"),
+    (("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'"), "primary"),
+    (("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'"), "unique"),
+]]
+_CHECK_ORDER_TABLES = [
+    "CREATE TABLE par (p INT PRIMARY KEY)", "INSERT INTO par VALUES (1)",
+    "CREATE TABLE pc (k TINYINT PRIMARY KEY, u INT, n INT NOT NULL, "
+    "e ENUM('x', 'y'), c INT CHECK (c > 0), f INT, "
+    "UNIQUE KEY uk (u), FOREIGN KEY (f) REFERENCES par (p))",
+    "INSERT INTO pc VALUES (1, 1, 1, 'x', 1, 1)"]
+
+
+@pytest.mark.parametrize("row, error", _CHECK_ORDER)
 def test_key_check_order(spark, row, error):
     """A row breaking several rules reports the first in MySQL's order:
     integer bounds, then NOT NULL / ENUM / SET / CHECK, then foreign
     keys, then keys with PRIMARY before UNIQUE."""
     e = Engine(spark)
-    e.query("CREATE TABLE par (p INT PRIMARY KEY)")
-    e.query("INSERT INTO par VALUES (1)")
-    e.query("CREATE TABLE pc (k TINYINT PRIMARY KEY, u INT, n INT NOT NULL, "
-            "e ENUM('x', 'y'), c INT CHECK (c > 0), f INT, "
-            "UNIQUE KEY uk (u), FOREIGN KEY (f) REFERENCES par (p))")
-    e.query("INSERT INTO pc VALUES (1, 1, 1, 'x', 1, 1)")
+    for s in _CHECK_ORDER_TABLES:
+        e.query(s)
     with pytest.raises(SqlError) as err:
         e.query(f"INSERT INTO pc VALUES ({row})")
     assert str(err.value).startswith(error)

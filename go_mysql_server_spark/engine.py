@@ -4390,20 +4390,26 @@ class Engine:
         `__key<i>` (`_key_repr`): repeats are counted on the driver, and
         one filter over the snapshot finds the rows already holding one of
         the batch's keys."""
-        reprs = _key_reprs(ts, keys)
         vals = [[r[f"__key{i}"] for r in rows if r[f"__key{i}"] is not None]
                 for i in range(len(keys))]
-        found: list[set] = [set() for _ in keys]
-        hit = F.lit(False)
-        for expr, v in zip(reprs, vals):
-            if v:
-                hit = hit | expr.isin(*set(v))
-        if any(vals):
-            for r in ts.df.filter(hit).select(*reprs).collect():
-                for f, v in zip(found, r):
-                    f.add(v)
+        found = self._probe(ts.df, _key_reprs(ts, keys), vals)
         return [(len(v) - len(set(v)), sum(x in f for x in v))
                 for v, f in zip(vals, found)]
+
+    @staticmethod
+    def _probe(df: DataFrame, exprs: list, vals: list) -> list[set]:
+        """One filter over `df`: per expression, the values of `vals[i]`
+        (collected, none NULL) that `exprs[i]` takes on some row of df."""
+        hit = F.lit(False)
+        for expr, v in zip(exprs, vals):
+            if v:
+                hit = hit | expr.isin(*set(v))
+        found: list[set] = [set() for _ in exprs]
+        if any(vals):
+            for r in df.filter(hit).select(*exprs).collect():
+                for f, x in zip(found, r):
+                    f.add(x)
+        return found
 
     def _fk_sides(self, ts: TableState, fk, parent: TableState) -> list:
         """Per column of a FOREIGN KEY: the child's and the parent's value
@@ -4491,18 +4497,9 @@ class Engine:
                 by_parent.setdefault(fk.parent_table, []).append(j)
         found: dict[int, set] = {}
         for js in by_parent.values():
-            hit, named = F.lit(False), False
-            for j in js:
-                found[j] = set()
-                vals = {r[f"__fk{j}"] for r in rows} - {None}
-                if vals:
-                    hit, named = hit | probes[j][3].isin(*vals), True
-            if not named:
-                continue
-            keys = [probes[j][3] for j in js]
-            for r in probes[js[0]][1].df.filter(hit).select(*keys).collect():
-                for j, v in zip(js, r):
-                    found[j].add(v)
+            found.update(zip(js, self._probe(
+                probes[js[0]][1].df, [probes[j][3] for j in js],
+                [{r[f"__fk{j}"] for r in rows} - {None} for j in js])))
         for j, (fk, _, cols, _) in enumerate(probes):
             if not cols:
                 self._check_fk(ts, fk, df)

@@ -106,8 +106,9 @@ _KEY_TYPES = {
     # Spark compares strings exactly: a trailing space makes a new key
     "varchar_trailing_space": ("VARCHAR(10)", "'a'", "'a '", "'b'"),
 }
-# (prefix, rows with {eq} and {new}, expected: an error or the affected
-# rows, then the final `v` column); `{eq}` makes no clash for the string
+# (prefix, rows with {eq} and {new}, expected, expected for the string
+# key, whose `{eq}` is a new key); expected is (an error or the affected
+# rows, the final `v` column)
 _KEY_TYPE_CELLS = {
     "clash": ("INSERT INTO kt", ["{eq}, 9"], (_DUP, [0]), (1, [0, 9])),
     "ignore": ("INSERT IGNORE INTO kt", ["{eq}, 1", "{new}, 2", "{new}, 3"],

@@ -3905,25 +3905,20 @@ class Engine:
         uuid_col = next((c.name for c in ts.columns if c.default
                          and "uuid" in c.default.lower()
                          and c.name not in target_cols), None)
-        rows = None
-        if self._is_local(kept):
-            # the rows are literals: collect them once with every check as
-            # a column and decide on the driver, then probe the snapshot
-            fks = [] if ignore else self._fk_probes(ts)
-            rows = judge(incoming, True, [
-                keep.alias("__keep"),
-                *[k.alias(f"__key{i}")
-                  for i, k in enumerate(_key_reprs(ts, keys))],
-                *[col for _, _, cols, _ in fks for col in cols],
-                *([F.col(uuid_col).alias("__uuid")] if uuid_col else [])])
-            self._check_fk_probes(ts, fks, rows, incoming)
+        # rows that are literals are collected once with every check as a
+        # column and decided on the driver; the snapshot is probed once
+        rows = judge(incoming, self._is_local(kept), [
+            keep.alias("__keep"),
+            *[k.alias(f"__key{i}")
+              for i, k in enumerate(_key_reprs(ts, keys))],
+            *([F.col(uuid_col).alias("__uuid")] if uuid_col else [])])
+        if not ignore:
+            for fk in ts.foreign_keys:
+                self._check_fk(ts, fk, incoming)
+        if rows is not None:
             rows = [r for r in rows if r["__keep"]]
             verdict = self._probe_keys(ts, keys, rows)
         else:
-            judge(incoming, False)
-            if not ignore:
-                for fk in ts.foreign_keys:
-                    self._check_fk(ts, fk, incoming)
             verdict = self._key_verdict(keys, kept, ts.df)
         checked = incoming = kept.drop(*pre)
         existing, incoming, affected = self._apply_keys(
@@ -4390,34 +4385,30 @@ class Engine:
         `__key<i>` (`_key_repr`): repeats are counted on the driver, and
         one filter over the snapshot finds the rows already holding one of
         the batch's keys."""
+        reprs = _key_reprs(ts, keys)
         vals = [[r[f"__key{i}"] for r in rows if r[f"__key{i}"] is not None]
                 for i in range(len(keys))]
-        found = self._probe(ts.df, _key_reprs(ts, keys), vals)
+        found: list[set] = [set() for _ in keys]
+        hit = F.lit(False)
+        for expr, v in zip(reprs, vals):
+            if v:
+                hit = hit | expr.isin(*set(v))
+        if any(vals):
+            for r in ts.df.filter(hit).select(*reprs).collect():
+                for f, v in zip(found, r):
+                    f.add(v)
         return [(len(v) - len(set(v)), sum(x in f for x in v))
                 for v, f in zip(vals, found)]
 
-    @staticmethod
-    def _probe(df: DataFrame, exprs: list, vals: list) -> list[set]:
-        """One filter over `df`: per expression, the values of `vals[i]`
-        (collected, none NULL) that `exprs[i]` takes on some row of df."""
-        hit = F.lit(False)
-        for expr, v in zip(exprs, vals):
-            if v:
-                hit = hit | expr.isin(*set(v))
-        found: list[set] = [set() for _ in exprs]
-        if any(vals):
-            for r in df.filter(hit).select(*exprs).collect():
-                for f, x in zip(found, r):
-                    f.add(x)
-        return found
-
-    def _fk_sides(self, ts: TableState, fk, parent: TableState) -> list:
-        """Per column of a FOREIGN KEY: the child's and the parent's value
-        as the check compares them, and their type (None when the two
-        sides' types differ). ENUM↔ENUM and SET↔SET keys compare ORDINALS,
-        not member text — a child enum('x','y') ordinal 1 references
-        parent enum('a','b') ordinal 1 (reference enginetest "enums with
-        foreign keys")."""
+    def _check_fk(self, ts: TableState, fk, df: DataFrame) -> None:
+        """Raise when a row of `df` names a parent key `fk`'s parent table
+        lacks: one anti join. NULL key parts never reference. ENUM↔ENUM
+        and SET↔SET keys compare ORDINALS, not member text — a child
+        enum('x','y') ordinal 1 references parent enum('a','b') ordinal 1
+        (reference enginetest "enums with foreign keys")."""
+        parent = self._db(None).get(fk.parent_table)
+        if parent is None or parent.df is None:
+            raise SqlError(f"FK parent table {fk.parent_table!r} missing")
         child_by = {c.name: c for c in ts.columns}
         parent_by = {c.name: c for c in parent.columns}
         sides = []
@@ -4425,32 +4416,13 @@ class Engine:
             cd, pd = child_by.get(c), parent_by.get(p)
             kind = _ordinal_kind(cd)
             if kind is not None and kind == _ordinal_kind(pd):
-                sides.append((_fk_ordinal(cd, c), _fk_ordinal(pd, p),
-                              T.LongType()))
+                sides.append((_fk_ordinal(cd, c), _fk_ordinal(pd, p)))
             else:
-                same = (cd is not None and pd is not None
-                        and cd.spark_type == pd.spark_type)
-                sides.append((F.col(c), F.col(p),
-                              cd.spark_type if same else None))
-        return sides
-
-    @staticmethod
-    def _fk_error(ts: TableState, fk, orphans: int) -> SqlError:
-        return SqlError(f"FK violation: {orphans} value(s) in {ts.name}"
-                        f"({', '.join(fk.columns)}) not present in "
-                        f"{fk.parent_table}({', '.join(fk.parent_columns)})")
-
-    def _check_fk(self, ts: TableState, fk, df: DataFrame) -> None:
-        """Raise when a row of `df` names a parent key `fk`'s parent table
-        lacks: one anti join. NULL key parts never reference."""
-        parent = self._db(None).get(fk.parent_table)
-        if parent is None or parent.df is None:
-            raise SqlError(f"FK parent table {fk.parent_table!r} missing")
-        sides = self._fk_sides(ts, fk, parent)
+                sides.append((F.col(c), F.col(p)))
         pcols = list(fk.parent_columns)
-        child_keys = df.select(*[c.alias(p) for (c, _, _), p
+        child_keys = df.select(*[c.alias(p) for (c, _), p
                                  in zip(sides, pcols)]).na.drop()
-        parent_keys = parent.df.select(*[pe.alias(p) for (_, pe, _), p
+        parent_keys = parent.df.select(*[pe.alias(p) for (_, pe), p
                                          in zip(sides, pcols)])
         if fk.parent_table == ts.name:
             # self-referential FK: the batch may reference rows it
@@ -4458,58 +4430,13 @@ class Engine:
             # (reference foreign_key_editor.go self-reference path)
             if {c.name for c in ts.columns} <= set(df.columns):
                 parent_keys = parent_keys.unionByName(df.select(
-                    *[pe.alias(p) for (_, pe, _), p in zip(sides, pcols)]))
+                    *[pe.alias(p) for (_, pe), p in zip(sides, pcols)]))
         orphans = child_keys.join(parent_keys, pcols, "left_anti").count()
         if orphans:
-            raise self._fk_error(ts, fk, orphans)
-
-    def _fk_probes(self, ts: TableState) -> list[tuple]:
-        """Per FOREIGN KEY, in order: (fk, parent table, columns to collect
-        from the batch, the parent key as `_key_repr`). The columns are the
-        child key as `__fk<j>` and, for a self-referential key, the batch's
-        own parent key as `__fkp<j>`. A key whose parent is missing or
-        whose sides' types differ collects nothing: `_check_fk` judges
-        it."""
-        probes = []
-        for j, fk in enumerate(ts.foreign_keys):
-            parent = self._db(None).get(fk.parent_table)
-            sides = (self._fk_sides(ts, fk, parent)
-                     if parent is not None and parent.df is not None else [])
-            if not sides or any(t is None for _, _, t in sides):
-                probes.append((fk, parent, [], None))
-                continue
-            key = _key_repr([(pe, t) for _, pe, t in sides])
-            cols = [_key_repr([(c, t) for c, _, t in sides])
-                    .alias(f"__fk{j}")]
-            if fk.parent_table == ts.name:
-                cols.append(key.alias(f"__fkp{j}"))
-            probes.append((fk, parent, cols, key))
-        return probes
-
-    def _check_fk_probes(self, ts: TableState, probes: list, rows: list,
-                         df: DataFrame) -> None:
-        """The FOREIGN KEY check of collected rows (`_fk_probes`), in key
-        order: one filter per parent table finds the parent keys the batch
-        names."""
-        by_parent: dict[str, list[int]] = {}
-        for j, (fk, _, cols, _) in enumerate(probes):
-            if cols:
-                by_parent.setdefault(fk.parent_table, []).append(j)
-        found: dict[int, set] = {}
-        for js in by_parent.values():
-            found.update(zip(js, self._probe(
-                probes[js[0]][1].df, [probes[j][3] for j in js],
-                [{r[f"__fk{j}"] for r in rows} - {None} for j in js])))
-        for j, (fk, _, cols, _) in enumerate(probes):
-            if not cols:
-                self._check_fk(ts, fk, df)
-                continue
-            if fk.parent_table == ts.name:
-                found[j] |= {r[f"__fkp{j}"] for r in rows}
-            orphans = sum(r[f"__fk{j}"] is not None
-                          and r[f"__fk{j}"] not in found[j] for r in rows)
-            if orphans:
-                raise self._fk_error(ts, fk, orphans)
+            raise SqlError(
+                f"FK violation: {orphans} value(s) in {ts.name}"
+                f"({', '.join(fk.columns)}) not present in "
+                f"{fk.parent_table}({', '.join(fk.parent_columns)})")
 
     def _enum_set_normalize(self, ts: TableState, df: DataFrame) -> DataFrame:
         """Map incoming ENUM/SET values to their canonical member

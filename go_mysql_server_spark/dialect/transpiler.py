@@ -426,12 +426,24 @@ def _rewrite_cast_datetime(sql: str) -> str:
         pos = m.start() + len(repl)
 
 
+# Spark types whose plain CAST to DOUBLE equals the lax parse of their
+# string form. FLOAT is not one (1.1f prints as 1.1, a different double),
+# nor is DECIMAL (its double can differ from its digits' by one ulp).
+_EXACT_DOUBLE_TYPES = ("'tinyint', 'smallint', 'int', 'bigint', 'double', "
+                       "'boolean'")
+
+
 def _lax_double_expr(x: str) -> str:
     """MySQL lax string→double: longest numeric prefix, else 0; NULL in →
-    NULL out (reference sql/types/number.go convertToFloat64)."""
+    NULL out (reference sql/types/number.go convertToFloat64). Dispatched
+    on x's type like GMS's per-type Convert: Catalyst folds `typeof`, so
+    an integer, DOUBLE or BOOLEAN x plans as a plain cast and every other
+    type as the two regexp_extract calls of the string parse."""
     p = f"regexp_extract(TRIM(CAST({x} AS STRING)), {_LAX_PREFIX_RE}, 0)"
     return (
-        f"(CASE WHEN {p} = '' THEN COALESCE(TRY_CAST({x} AS DOUBLE), 0.0D) "
+        f"(CASE WHEN typeof({x}) IN ({_EXACT_DOUBLE_TYPES}) "
+        f"THEN CAST({x} AS DOUBLE) "
+        f"WHEN {p} = '' THEN COALESCE(TRY_CAST({x} AS DOUBLE), 0.0D) "
         f"ELSE CAST({p} AS DOUBLE) END)"
     )
 
@@ -1535,9 +1547,27 @@ def _rewrite_tuple_compare(sql: str) -> str:
 # Retry-only rewrites (the engine's analysis-retry table) take masked text
 # and return masked text; wrap_truthy_operands also reads the literals.
 
+_TRUTHY = "(CAST(("  # how `_truthy_cast`'s form starts
+
+
+def _truthy(number: str) -> str:
+    """MySQL truthiness of a value whose numeric value is `number`: true
+    when non-zero, NULL when NULL. A BOOLEAN value needs no branch of its
+    own: Catalyst folds `CAST(b AS DOUBLE) <> 0.0` back to `b`, so the
+    comparisons in it keep their pushed filters."""
+    return f"({number} <> 0.0)"
+
+
+def _truthy_cast(x: str) -> str:
+    """`_truthy` of an expression whose numeric value is its plain cast.
+    The passes skip text that starts with `_TRUTHY`, so none wraps
+    another's form again."""
+    return _truthy(f"CAST(({x}) AS DOUBLE)")
+
+
 def wrap_truthy_if(masked: str) -> str:
     """MySQL truthiness in IF(cond, a, b)'s first argument (`IF(1, x, y)`)
-    — wrap it as CAST(cond AS DOUBLE) <> 0. Retry-only."""
+    — wrap it as `_truthy_cast(cond)`. Retry-only."""
     pat = re.compile(r"\bIF\s*\(", re.IGNORECASE)
     pos = 0
     while True:
@@ -1546,12 +1576,10 @@ def wrap_truthy_if(masked: str) -> str:
             break
         close = _find_close(masked, m.end() - 1)
         args = _split_args(masked[m.end():close])
-        if len(args) != 3 or args[0].strip().startswith("(CAST(("):
+        if len(args) != 3 or args[0].strip().startswith(_TRUTHY):
             pos = m.end()
             continue
-        cond = args[0].strip()
-        repl = (f"IF( (CAST(({cond}) AS DOUBLE) <> 0.0) ,"
-                f"{args[1]},{args[2]})")
+        repl = f"IF( {_truthy_cast(args[0].strip())} ,{args[1]},{args[2]})"
         masked = masked[:m.start()] + repl + masked[close + 1:]
         pos = m.start() + len(repl)
     return masked
@@ -1560,9 +1588,9 @@ def wrap_truthy_if(masked: str) -> str:
 def wrap_truthy_case(masked: str) -> str:
     """MySQL truthiness in searched-CASE conditions (`CASE WHEN COUNT(*)
     THEN ...`): wrap each WHEN body of a SEARCHED case (no subject between
-    CASE and the first WHEN) as CAST(body AS DOUBLE) <> 0. Value-form
-    CASE x WHEN v compares, not tests — left untouched. Retry-only,
-    like wrap_truthy_filters."""
+    CASE and the first WHEN) as `_truthy_cast(body)`. Value-form CASE x
+    WHEN v compares, not tests — left untouched, as is the `typeof` test
+    of `_lax_double_expr`. Retry-only, like wrap_truthy_filters."""
 
     def one_pass(text: str):
         toks = list(re.finditer(r"\b(CASE|END|WHEN|THEN)\b", text, re.I))
@@ -1589,8 +1617,8 @@ def wrap_truthy_case(masked: str) -> str:
         # innermost/rightmost first, one edit per pass (spans can nest)
         for s, e in sorted(repls, reverse=True):
             body = text[s:e].strip()
-            if body and not body.startswith("(CAST(("):
-                return (text[:s] + f" (CAST(({body}) AS DOUBLE) <> 0.0) "
+            if body and not body.startswith((_TRUTHY, "typeof(")):
+                return (text[:s] + f" {_truthy_cast(body)} "
                         + text[e:]), True
         return text, False
 
@@ -1602,20 +1630,19 @@ def wrap_truthy_case(masked: str) -> str:
 
 def wrap_truthy_operands(masked: str, lits: list[str]) -> str:
     """MySQL truthiness inside boolean operators: `NOT col`,
-    `0.000 AND true`. Wraps the ATOM operand of NOT and bare numeric
-    literals adjacent to AND/OR as CAST(x AS DOUBLE) <> 0. Retry-only,
-    like the other truthiness wraps."""
+    `0.000 AND true`. Wraps the ATOM operand of NOT and bare operands
+    adjacent to AND/OR in `_truthy`; a column or string operand takes
+    MySQL's lax numeric value (`_lax_double_expr`, a plain cast for a
+    numeric or BOOLEAN column). Retry-only, like the other truthiness
+    wraps."""
     atom = r"`?\w+`?(?:\.`?\w+`?)*|[-+]?\d+\.?\d*"
-
-    def wrap(s):
-        return f"(CAST(({s}) AS DOUBLE) <> 0.0)"
 
     def not_repl(m):
         a = m.group(1)
         if a.upper() in ("TRUE", "FALSE", "NULL", "IN", "BETWEEN", "LIKE",
                          "EXISTS", "NOT", "REGEXP", "RLIKE", "CAST"):
             return m.group(0)
-        return f"NOT {wrap(a)}"
+        return f"NOT {_truthy_cast(a)}"
 
     prev = None
     while prev != masked:
@@ -1658,13 +1685,13 @@ def wrap_truthy_operands(masked: str, lits: list[str]) -> str:
         if re.fullmatch(r"\x00\d+\x00", core):
             lit = lits[int(core.strip("\x00"))]
             if lit[:1] == "'":
-                return f"({_lax_double_expr(core)} <> 0.0)"
+                return _truthy(_lax_double_expr(core))
         if re.fullmatch(r"`?\w+`?(?:\.`?\w+`?)*", core) \
                 and not re.fullmatch(r"[-+]?[\d.]+", core):
             # identifier operand: a STRING column must truthy-compare via
             # MySQL's lax numeric parse ('john' → 0, not NULL)
-            return f"({_lax_double_expr(core)} <> 0.0)"
-        return wrap(a)
+            return _truthy(_lax_double_expr(core))
+        return _truthy_cast(a)
 
     def _is_keyword(a: str) -> bool:
         return a.strip().strip("()").strip().upper() in _KEYWORDS
@@ -1703,9 +1730,9 @@ def wrap_truthy_filters(masked: str) -> str:
     non-zero is true, 0/NULL is false. Spark's analyzer requires BOOLEAN
     and raises FILTER_NOT_BOOLEAN — the engine retries the statement
     through this rewrite, which wraps every WHERE/HAVING clause body in
-    `CAST((body) AS DOUBLE) <> 0.0` (valid for boolean and numeric
-    operands alike). Retry-only: the wrap defeats parquet filter pushdown,
-    so it must never run on statements whose filters are already boolean."""
+    `_truthy_cast(body)`. Catalyst folds the wrap of a BOOLEAN body away,
+    so its pushed filters stay. Retry-only: a statement whose filters are
+    already boolean gains nothing but analysis work from it."""
 
     def spans(text: str) -> list[tuple[int, int]]:
         out = []
@@ -1737,11 +1764,9 @@ def wrap_truthy_filters(masked: str) -> str:
         changed = False
         for start, end in reversed(spans(masked)):
             body = masked[start:end].strip()
-            if not body or body.startswith("(CAST(("):
+            if not body or body.startswith(_TRUTHY):
                 continue
-            masked = (masked[:start]
-                      + f" (CAST(({body}) AS DOUBLE) <> 0.0) "
-                      + masked[end:])
+            masked = masked[:start] + f" {_truthy_cast(body)} " + masked[end:]
             changed = True
             break
     return masked

@@ -27,9 +27,14 @@ from dataclasses import dataclass, field
 from types import MappingProxyType
 from typing import Any
 
+from py4j import protocol as py4j_proto
+from py4j.java_gateway import is_instance_of
+from pyspark import SparkContext
+from pyspark.errors.exceptions import captured
 from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from .dialect import transpiler as tp
 from .dialect.transpiler import _find_close as _find_close_paren
@@ -50,6 +55,43 @@ class SqlError(Exception):
         super().__init__(msg)
         self.sqlstate = sqlstate or "HY000"
         self.errno = errno or 1105
+
+
+class _Rejected(Exception):
+    """A statement Spark's analyzer refused, held as the unconverted
+    Py4JJavaError. PySpark's conversion fetches the whole JVM stack trace,
+    converts the cause and logs an ERROR record: ~100 ms, ten times the
+    failed analysis itself. A statement that the `_RETRIES` ladder rescues
+    reads only `text()`; `error()` converts when the error is raised."""
+
+    def __init__(self, err: py4j_proto.Py4JJavaError):
+        super().__init__()
+        self.err = err
+        self._error: BaseException | None = None
+
+    def text(self) -> str:
+        """str() of `error()`. An AnalysisException (ParseException too)
+        reads as its JVM message, plus the JVM stack trace when
+        spark.sql.pyspark.jvmStacktrace.enabled is on; any other error
+        converts."""
+        je, jvm = self.err.java_exception, SparkContext._jvm
+        if (is_instance_of(SparkContext._gateway, je,
+                           "org.apache.spark.sql.AnalysisException")
+                and not getattr(jvm, "org.apache.spark.sql.internal.SQLConf")
+                .get().pysparkJVMStacktraceEnabled()):
+            return je.getMessage() or ""
+        return str(self.error())
+
+    def error(self) -> BaseException:
+        """What spark.sql raises for this failure: the converted
+        exception, or the Py4JJavaError itself when PySpark has no class
+        for it."""
+        if self._error is None:
+            conv = captured.convert_exception(self.err.java_exception)
+            self._error = (self.err if isinstance(conv,
+                                                  captured.UnknownException)
+                           else conv)
+        return self._error
 
 
 @dataclass
@@ -455,6 +497,20 @@ def _default_display(c) -> str | None:
     return d
 
 
+def _implicit_default(c: ColumnDef) -> Column:
+    """MySQL's implicit default of NOT NULL column `c`, which a NULL
+    takes outside strict mode: the first ENUM member, '', the zero date,
+    else 0."""
+    t = c.spark_type.simpleString()
+    if c.enum_values:
+        return F.lit(c.enum_values[0])
+    if t == "string":
+        return F.lit("")
+    if t in ("date", "timestamp"):
+        return F.lit("1970-01-01").cast(c.spark_type)
+    return F.lit(0).cast(c.spark_type)
+
+
 def _default_col(c, pipes_as_concat: bool) -> "F.Column":
     """Column expression for a declared default, with MySQL's insert-time
     conversion: numeric-string defaults ROUND into integer columns
@@ -788,6 +844,7 @@ class Engine:
 
     def __init__(self, spark: SparkSession, default_db: str = "mydb"):
         self.spark = tune_session(spark)
+        self._no_args = spark._jvm.PythonUtils.toArray([])  # for _sql
         # UDF / macro registration is idempotent per SparkSession but costs
         # ~0.6 s of py4j round-trips — cache it on the session so the 2nd+
         # Engine in a session (every dml_* catalog entry, most tests) skips
@@ -1689,14 +1746,37 @@ class Engine:
          lambda e, s, lits: _values_as_selects(s), True),
     )
 
+    def _sql(self, text: str, *, probe: bool = False) -> DataFrame:
+        """The engine's one analysis call: `spark.sql(text)`, read through
+        py4j's own return path, which PySpark leaves unpatched. A refused
+        statement raises `_Rejected` when `probe` is set, else what
+        spark.sql raises."""
+        call = self.spark._jsparkSession.sql
+        args, _ = call._build_args(text, self._no_args)
+        answer = call.gateway_client.send_command(
+            py4j_proto.CALL_COMMAND_NAME + call.command_header + args
+            + py4j_proto.END_COMMAND_PART)
+        try:
+            jdf = py4j_proto.get_return_value(
+                answer, call.gateway_client, call.target_id, call.name)
+        except py4j_proto.Py4JJavaError as err:
+            rejected = _Rejected(err)
+            if probe:
+                raise rejected from None
+            raise rejected.error() from None
+        return ClassicDataFrame(jdf, self.spark)
+
     def _analyze(self, out: str, lits: list[str]) -> DataFrame:
-        """spark.sql of the transpiled masked text `out`, through the
-        `_RETRIES` table when the analyzer rejects it."""
+        """`_sql` of the transpiled masked text `out`, through the
+        `_RETRIES` table when the analyzer rejects it. The first attempt
+        and the soft retries are probes, so a rescued statement converts
+        no exception; a statement nothing rescues raises the error
+        spark.sql raises."""
         final = unmask_literals(out, lits)
         try:
-            return self.spark.sql(final)
-        except Exception as exc:  # noqa: BLE001 — matched by error class
-            msg, masked = str(exc), None
+            return self._sql(final, probe=True)
+        except _Rejected as first:
+            msg, masked = first.text(), None
             for _name, applies, rewrite, hard in self._RETRIES:
                 if not applies(self, msg, final):
                     continue
@@ -1707,14 +1787,14 @@ class Engine:
                     return retry
                 if retry is None or retry == masked:
                     if hard:
-                        raise
+                        break
                     continue
-                try:
-                    return self.spark.sql(unmask_literals(retry, lits))
-                except Exception:  # noqa: BLE001 — soft: next entry
-                    if hard:
-                        raise
-            raise
+                try:  # a hard entry's failed retry raises its own error
+                    return self._sql(unmask_literals(retry, lits),
+                                     probe=not hard)
+                except _Rejected:
+                    continue
+            raise first.error() from None
 
     def _run_recursive_union(self, masked: str,
                              lits: list[str]) -> DataFrame | None:
@@ -1752,7 +1832,7 @@ class Engine:
                 break
         if split_at is None:
             return None
-        anchor = self.spark.sql(unmask_literals(body[:split_at], lits))
+        anchor = self._sql(unmask_literals(body[:split_at], lits))
         rec_sql = unmask_literals(body[rec_start:], lits)
         if collist:
             cols = [c.strip().strip("`") for c in collist.split(",")]
@@ -1760,7 +1840,7 @@ class Engine:
 
         def step(delta: DataFrame) -> DataFrame:
             delta.createOrReplaceTempView(name)
-            out = self.spark.sql(rec_sql)
+            out = self._sql(rec_sql)
             return out.toDF(*anchor.columns)
 
         # bounded: each driver-side iteration is a Spark job — a
@@ -1769,11 +1849,11 @@ class Engine:
                                max_iterations=256)
         result.createOrReplaceTempView(name)
         try:
-            return self.spark.sql(unmask_literals(rest, lits))
-        except Exception as exc:  # noqa: BLE001 — nested recursive CTEs
-            if "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in str(exc):
+            return self._sql(unmask_literals(rest, lits), probe=True)
+        except _Rejected as rejected:  # nested recursive CTEs
+            if "UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE" in rejected.text():
                 return self._run_recursive_union(rest, lits)
-            raise
+            raise rejected.error() from None
 
     _FROM_TABLE = re.compile(r"\bFROM\s+(\x00\d+\x00|\w+)", re.I)
 
@@ -3214,6 +3294,15 @@ class Engine:
         if i is None:
             raise SqlError(f"unknown column {col.name!r}")
         prev = ts.columns.pop(i)
+        if not col.nullable and prev.nullable and col.generated is None:
+            # existing NULLs: strict mode refuses the statement
+            # (ER_INVALID_USE_OF_NULL); otherwise they take the implicit
+            # default, as a non-strict INSERT's do
+            if not self._strict_mode():
+                ts.df = ts.df.withColumn(col.name, F.coalesce(
+                    F.col(col.name), _implicit_default(col)))
+            elif ts.df.filter(F.col(col.name).isNull()).limit(1).count():
+                raise SqlError("Invalid use of NULL value", "22004", 1138)
         if col.auto_increment and not prev.auto_increment:
             # newly auto-inc: seed past existing max
             mxr = ts.df.agg(F.max(F.col(col.name).cast("bigint"))).first()[0]
@@ -3731,7 +3820,7 @@ class Engine:
         deferred_defaults: list = []  # defaults referencing other columns
         # checks on the values before their cast: (predicate over `named`,
         # error), carried to the checks below as the columns `__pre<i>`
-        pre_checks: list[tuple[Column, str]] = []
+        pre_checks: list[tuple[Column, SqlError]] = []
         for c in ts.columns:
             if c.generated is not None:
                 # placeholder; computed in a second projection so the expr
@@ -3760,7 +3849,8 @@ class Engine:
                     if not lenient:
                         pre_checks.append((
                             F.expr(f"NOT mysql_utf8_valid(`{c.name}`)"),
-                            f"Incorrect string value for column {c.name!r}"))
+                            SqlError("Incorrect string value for column "
+                                     f"{c.name!r}")))
                     src = F.expr(f"mysql_utf8_lenient(`{c.name}`)")
                 base_val = (self._lenient_cast(c, src) if lenient
                             else src.cast(c.spark_type))
@@ -3837,7 +3927,7 @@ class Engine:
                 ts.auto_inc_next += n
             n_new = n
             if err:
-                raise SqlError(err)
+                raise err
             return rows
 
         if any(t.event == "INSERT" and t.timing == "BEFORE"
@@ -3857,15 +3947,8 @@ class Engine:
             for c in ts.columns:
                 if not c.nullable and c.generated is None and \
                         not c.auto_increment:
-                    t2 = c.spark_type.simpleString()
-                    dflt2 = (F.lit(c.enum_values[0])
-                             if c.enum_values else
-                             F.lit("") if t2 == "string" else
-                             F.lit("1970-01-01").cast(c.spark_type)
-                             if t2 in ("date", "timestamp") else
-                             F.lit(0).cast(c.spark_type))
-                    incoming = incoming.withColumn(
-                        c.name, F.coalesce(F.col(c.name), dflt2))
+                    incoming = incoming.withColumn(c.name, F.coalesce(
+                        F.col(c.name), _implicit_default(c)))
                 if c.enum_values is not None:
                     incoming = incoming.withColumn(
                         c.name,
@@ -4315,16 +4398,16 @@ class Engine:
         """The checks a written row passes after its values' cast, as
         (predicate, error) pairs in the order MySQL reports them: NOT
         NULL, ENUM (not when `lenient`), SET and each enforced CHECK."""
-        checks: list[tuple[Column, str]] = []
+        checks: list[tuple[Column, SqlError]] = []
         for c in ts.columns:
-            if not c.nullable:
-                checks.append((F.col(c.name).isNull(),
-                               f"column {c.name!r} cannot be null"))
+            if not c.nullable:  # ER_BAD_NULL_ERROR
+                checks.append((F.col(c.name).isNull(), SqlError(
+                    f"column {c.name!r} cannot be null", "23000", 1048)))
             if c.enum_values is not None and not lenient:
                 checks.append((
                     F.col(c.name).isNotNull() & (F.col(c.name) != "")
                     & ~F.col(c.name).isin(*c.enum_values),
-                    f"invalid ENUM value for column {c.name!r}"))
+                    SqlError(f"invalid ENUM value for column {c.name!r}")))
             if c.set_values is not None:
                 members = ", ".join("'" + v.replace("'", "''") + "'"
                                     for v in c.set_values)
@@ -4332,13 +4415,14 @@ class Engine:
                     F.col(c.name).isNotNull() & F.expr(
                         f"size(filter(split({c.name}, ','), "
                         f"x -> x != '' AND x NOT IN ({members}))) > 0"),
-                    f"invalid SET value for column {c.name!r}"))
+                    SqlError(f"invalid SET value for column {c.name!r}")))
         for ci, chk in enumerate(ts.checks):
             if not ts.check_enforced_at(ci):
                 continue  # NOT ENFORCED: metadata only
-            # NULL check result passes (MySQL CHECK semantics)
-            checks.append((F.expr(f"NOT ({chk})"),
-                           f"CHECK constraint violated: {chk}"))
+            # NULL check result passes (MySQL CHECK semantics);
+            # ER_CHECK_CONSTRAINT_VIOLATED
+            checks.append((F.expr(f"NOT ({chk})"), SqlError(
+                f"CHECK constraint violated: {chk}", "HY000", 3819)))
         return checks
 
     @staticmethod
@@ -4599,7 +4683,7 @@ class Engine:
             hi_l = F.lit(str(hi)).cast("decimal(38,0)")
             checks.append((
                 v.isNotNull() & ((v < lo_l) | (v > hi_l)),
-                f"out of range value for column {c.name!r}"))
+                SqlError(f"out of range value for column {c.name!r}")))
         return checks
 
     _DML_ORDER_LIMIT = re.compile(
@@ -4813,7 +4897,7 @@ class Engine:
         # (reference found_rows.go + update result Info.Matched)
         self.session.found_rows_n = n_match
         if err:
-            raise SqlError(err)
+            raise err
         updated = updated.drop(*pre)
         pairs_old = pairs_new = None
         # statement atomicity whenever any UPDATE trigger can mutate state
@@ -4869,7 +4953,7 @@ class Engine:
                 err = row_checks and self._judge(
                     updated, row_checks, where=F.col("__matched"))[1]
                 if err:
-                    raise SqlError(err)
+                    raise err
                 for fk in ts.foreign_keys:
                     self._check_fk(ts, fk, updated.filter("__matched"))
                 if n_match:

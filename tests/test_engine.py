@@ -450,6 +450,29 @@ def test_procedure_cursor_fetch_loop(eng):
         (1, "A"), (2, "B"), (3, "C")]
 
 
+@pytest.mark.parametrize("action", ["MODIFY c INT NOT NULL",
+                                    "CHANGE c c INT NOT NULL"])
+def test_alter_not_null_over_null_rows(eng, action):
+    """Making a column that holds NULL NOT NULL fails in strict mode with
+    ER_INVALID_USE_OF_NULL and leaves the table as it was; outside strict
+    mode the NULLs take the implicit default."""
+    eng.query("CREATE TABLE nn (k INT PRIMARY KEY, c INT)")
+    eng.query("INSERT INTO nn VALUES (1, NULL), (2, 5)")
+    with pytest.raises(SqlError, match="Invalid use of NULL value") as err:
+        eng.query(f"ALTER TABLE nn {action}")
+    assert (err.value.errno, err.value.sqlstate) == (1138, "22004")
+    eng.query("INSERT INTO nn VALUES (3, NULL)")  # still nullable
+    assert rows(eng.query("SELECT k, c FROM nn ORDER BY k")) == \
+        [(1, None), (2, 5), (3, None)]
+    eng.query("SET sql_mode = ''")
+    eng.query(f"ALTER TABLE nn {action}")
+    assert rows(eng.query("SELECT k, c FROM nn ORDER BY k")) == \
+        [(1, 0), (2, 5), (3, 0)]
+    eng.query("SET sql_mode = 'STRICT_TRANS_TABLES'")
+    with pytest.raises(SqlError, match="cannot be null"):
+        eng.query("INSERT INTO nn VALUES (4, NULL)")
+
+
 def test_alter_table_add_drop_rename_modify(eng):
     eng.query("ALTER TABLE mytable ADD COLUMN score INT DEFAULT 5")
     assert rows(eng.query("SELECT i, score FROM mytable WHERE i = 1")) == [(1, 5)]
@@ -893,28 +916,45 @@ _RETRY_CASES = [
                          ids=[c[0] for c in _RETRY_CASES])
 def test_analysis_retry_table(eng, monkeypatch, sql_mode, sql, want,
                               analyses):
+    """Analyses are counted at the engine's one analysis call, `_sql`. A
+    rescued statement converts no Spark exception; one nothing rescues
+    raises the class and text spark.sql raises on the last text tried
+    (the text's plan numbers its expressions afresh per analysis)."""
+    import re
+
+    from pyspark.errors.exceptions import captured
+
     eng.query("CREATE TABLE rt (i BIGINT PRIMARY KEY, s VARCHAR(20), "
               "d DOUBLE)")
     eng.query("INSERT INTO rt VALUES (1, 'a', 0.0), (2, 'b', 1.5), "
               "(3, 'b', 2.5)")
     if sql_mode is not None:
         eng.query(f"SET sql_mode = '{sql_mode}'")
-    real, seen = eng.spark, []
+    real_sql, real_convert = eng._sql, captured.convert_exception
+    seen, conversions = [], []
 
-    class Counting:
-        def __getattr__(self, name):
-            return getattr(real, name)
+    def counting_sql(text, **kwargs):
+        seen.append(text)
+        return real_sql(text, **kwargs)
 
-        def sql(self, text, *args, **kwargs):
-            seen.append(text)
-            return real.sql(text, *args, **kwargs)
+    def counting_convert(e):
+        conversions.append(e)
+        return real_convert(e)
 
-    monkeypatch.setattr(eng, "spark", Counting())
+    monkeypatch.setattr(eng, "_sql", counting_sql)
+    monkeypatch.setattr(captured, "convert_exception", counting_convert)
     if isinstance(want, str):
-        with pytest.raises(Exception, match=want):
+        with pytest.raises(Exception, match=want) as raised:
             eng.query(sql)
+        monkeypatch.undo()
+        with pytest.raises(Exception) as direct:
+            eng.spark.sql(seen[-1])
+        assert type(raised.value) is type(direct.value)
+        assert (re.sub(r"#\d+", "#", str(raised.value))
+                == re.sub(r"#\d+", "#", str(direct.value)))
     else:
         assert rows(eng.query(sql)) == want
+        assert conversions == []
     assert len(seen) == analyses, seen
 
 
@@ -2008,15 +2048,21 @@ def test_key_error_names_the_key(spark, variant):
 
 
 # (row, error) pairs: each row breaks every rule from its error on
+# (row, the error it reports, that error's errno)
 _CHECK_ORDER = [pytest.param(*p, id=i) for p, i in [
-    (("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'"),
-     "int_bounds"),
-    (("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null"), "not_null"),
-    (("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'"), "enum"),
-    (("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0"), "check"),
-    (("1, 1, 1, 'x', 1, 9", "FK violation"), "fk"),
-    (("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'"), "primary"),
-    (("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'"), "unique"),
+    (("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'",
+      1105), "int_bounds"),
+    (("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null", 1048),
+     "not_null"),
+    (("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'", 1105),
+     "enum"),
+    (("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0", 3819),
+     "check"),
+    (("1, 1, 1, 'x', 1, 9", "FK violation", 1105), "fk"),
+    (("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'", 1062),
+     "primary"),
+    (("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'", 1062),
+     "unique"),
 ]]
 _CHECK_ORDER_TABLES = [
     "CREATE TABLE par (p INT PRIMARY KEY)", "INSERT INTO par VALUES (1)",
@@ -2026,8 +2072,8 @@ _CHECK_ORDER_TABLES = [
     "INSERT INTO pc VALUES (1, 1, 1, 'x', 1, 1)"]
 
 
-@pytest.mark.parametrize("row, error", _CHECK_ORDER)
-def test_key_check_order(spark, row, error):
+@pytest.mark.parametrize("row, error, errno", _CHECK_ORDER)
+def test_key_check_order(spark, row, error, errno):
     """A row breaking several rules reports the first in MySQL's order:
     integer bounds, then NOT NULL / ENUM / SET / CHECK, then foreign
     keys, then keys with PRIMARY before UNIQUE."""
@@ -2037,6 +2083,7 @@ def test_key_check_order(spark, row, error):
     with pytest.raises(SqlError) as err:
         e.query(f"INSERT INTO pc VALUES ({row})")
     assert str(err.value).startswith(error)
+    assert err.value.errno == errno
     assert rows(e.query("SELECT * FROM pc")) == [(1, 1, 1, "x", 1, 1)]
 
 

@@ -78,6 +78,20 @@ def test_duplicate_key_err_packet_is_1062(cli):
     assert "duplicate entry for key 'PRIMARY'" in str(ei.value)
 
 
+def test_row_check_err_packets(cli):
+    """NOT NULL and CHECK failures reach the client with MySQL's errnos
+    (ER_BAD_NULL_ERROR, ER_CHECK_CONSTRAINT_VIOLATED)."""
+    cli.query("CREATE TABLE wck (i INT NOT NULL, c INT CHECK (c > 0))")
+    try:
+        for values, want in (("NULL, 1", (1048, "23000")),
+                             ("1, -1", (3819, "HY000"))):
+            with pytest.raises(MySQLClientError) as ei:
+                cli.query(f"INSERT INTO wck VALUES ({values})")
+            assert (ei.value.errno, ei.value.sqlstate) == want
+    finally:
+        cli.query("DROP TABLE wck")
+
+
 def test_init_db_and_unknown_db(cli):
     cli.query("CREATE DATABASE IF NOT EXISTS wiredb")
     cli.select_db("wiredb")

@@ -535,8 +535,9 @@ def create_index(eng, sql: str):
     if not m:
         raise SqlError(f"cannot parse CREATE INDEX: {sql[:60]!r}")
     kind = (m.group(1) or "").upper()
-    eng._add_element(eng._table(m.group(3)),
-                     f"{kind} INDEX {m.group(2)} {m.group(4)}".strip())
+    ts = eng._table(m.group(3))
+    eng._record(ts)
+    eng._add_element(ts, f"{kind} INDEX {m.group(2)} {m.group(4)}".strip())
     return OkResult(0, info="fulltext index materialized"
                     if kind == "FULLTEXT" else "index recorded (advisory)")
 
@@ -545,7 +546,9 @@ def drop_index(eng, sql: str):
     from .engine import OkResult
     m = re.match(r"DROP\s+INDEX\s+[`]?(\w+)[`]?\s+ON\s+([`\w.]+)", sql, re.I)
     if m:
-        eng._drop_index(eng._table(m.group(2)), m.group(1))
+        ts = eng._table(m.group(2))
+        eng._record(ts)
+        eng._drop_index(ts, m.group(1))
     return OkResult(0)
 
 

@@ -105,11 +105,11 @@ class Connection:
             raise DatabaseError(msg[:300]) from exc
 
     def commit(self) -> None:
-        if self._session.txn_snapshot is not None:
+        if self._session.in_txn:
             self._exec("COMMIT")
 
     def rollback(self) -> None:
-        if self._session.txn_snapshot is not None:
+        if self._session.in_txn:
             self._exec("ROLLBACK")
 
     def begin(self) -> None:

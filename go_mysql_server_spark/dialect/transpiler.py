@@ -437,13 +437,18 @@ def _lax_double_expr(x: str) -> str:
     """MySQL lax string→double: longest numeric prefix, else 0; NULL in →
     NULL out (reference sql/types/number.go convertToFloat64). Dispatched
     on x's type like GMS's per-type Convert: Catalyst folds `typeof`, so
-    an integer, DOUBLE or BOOLEAN x plans as a plain cast and every other
-    type as the two regexp_extract calls of the string parse."""
-    p = f"regexp_extract(TRIM(CAST({x} AS STRING)), {_LAX_PREFIX_RE}, 0)"
+    an integer, DOUBLE or BOOLEAN x plans as a plain cast, a DATE as its
+    YYYYMMDD number (MySQL's DATE in numeric context) and every other
+    type as the two regexp_extract calls of the string parse. Every
+    branch reads x through a cast the analyzer accepts for any type."""
+    s = f"CAST({x} AS STRING)"
+    p = f"regexp_extract(TRIM({s}), {_LAX_PREFIX_RE}, 0)"
     return (
         f"(CASE WHEN typeof({x}) IN ({_EXACT_DOUBLE_TYPES}) "
         f"THEN CAST({x} AS DOUBLE) "
-        f"WHEN {p} = '' THEN COALESCE(TRY_CAST({x} AS DOUBLE), 0.0D) "
+        f"WHEN typeof({x}) = 'date' "
+        f"THEN CAST(replace({s}, '-', '') AS DOUBLE) "
+        f"WHEN {p} = '' THEN COALESCE(TRY_CAST({s} AS DOUBLE), 0.0D) "
         f"ELSE CAST({p} AS DOUBLE) END)"
     )
 

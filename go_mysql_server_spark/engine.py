@@ -810,9 +810,13 @@ class Session:
         self.last_select_df: DataFrame | None = None  # for FOUND_ROWS()
         self.found_rows_n: int | None = None
         self.prepared: dict[str, object] = {}     # name → PreparedStatement
-        # BEGIN's catalog snapshot and the named SAVEPOINT snapshots
-        self.txn_snapshot: dict | None = None
-        self.savepoints: dict[str, dict] = {}
+        # the undo log of (key, restore) entries (`Engine._record`); the
+        # running statement's start at `stmt_mark`, None between
+        # statements. A SAVEPOINT is a position in it.
+        self.undo: list[tuple] = []
+        self.stmt_mark: int | None = None
+        self.in_txn = False
+        self.savepoints: dict[str, int] = {}
 
     def reset(self) -> None:
         """COM_RESET_CONNECTION: back to a new session's state, keeping
@@ -1299,19 +1303,26 @@ class Engine:
         """Run one statement against `session`. A caller that passes none
         gets the running statement's session when nested (trigger,
         procedure, EXECUTE), else the engine's own. The statement lock
-        is held for the whole statement."""
+        is held for the whole statement. A statement that raises undoes
+        its writes, the triggers' and foreign-key actions' included
+        (`_statement`); outside a transaction the outermost statement's
+        end commits them."""
         with self._stmt_lock:
             outer = self.session
-            self.session = session or outer
+            sess = self.session = session or outer
+            mark, sess.stmt_mark = sess.stmt_mark, len(sess.undo)
             try:
                 return self._statement(sql)
             finally:
+                sess.stmt_mark = mark
+                if mark is None and not sess.in_txn:
+                    sess.undo.clear()
                 self.session = outer
 
     def _bind_db(self) -> None:
         """Bind the bare temp views to the session's current database:
-        before each statement, at USE and after a snapshot restore. Only
-        a switch rebinds; it records no AS OF version."""
+        before each statement and at USE. Only a switch rebinds; it
+        records no AS OF version."""
         db = self.session.current_db
         if db != self._bound_db:
             self._bound_db = db
@@ -1379,7 +1390,15 @@ class Engine:
             raise SqlError(f"unsupported statement: {sql[:60]!r}")
         admin.run_due_events(self)  # in the event session
         self._bind_db()
-        result = handler(sql)
+        try:
+            result = handler(sql)
+        except BaseException:
+            # a CALL is not one statement: each statement it runs is
+            # atomic on its own, and what ran before a failure stays
+            # (EXECUTE runs its statement, a prepared CALL too, nested)
+            if head not in ("CALL", "EXECUTE"):
+                self._undo(self.session.stmt_mark)
+            raise
         # ROW_COUNT() tracking (reference row_count.go): DML reports its
         # affected count; statements that return a result set reset it to
         # -1, as MySQL does
@@ -1423,18 +1442,100 @@ class Engine:
             return db.strip("`"), tbl.strip("`")
         return None, name
 
-    def _register(self, ts: TableState) -> None:
-        """(Re)bind the table's current snapshot as a temp view when the
-        table is in the bound database (`_bind_db`), and record the
-        snapshot in the version history (AS OF support — snapshots are
-        already immutable DataFrames, so 'history' costs one list append).
-        A checkpointed snapshot is compacted first (`_compact`)."""
-        assert ts.df is not None
-        ts.df = self._compact(ts.df)
-        if self.databases.get(self._bound_db, {}).get(ts.name) is ts:
-            ts.df.createOrReplaceTempView(ts.name)
+    def _register(self, ts: TableState, df: DataFrame) -> None:
+        """Publish `df` as the table's snapshot: the old one is logged
+        first (`_record`), a checkpointed one is compacted (`_compact`),
+        bound as the temp view when the table is in the bound database
+        (`_bind_db`) and recorded in the version history (AS OF support —
+        snapshots are already immutable DataFrames, so 'history' costs
+        one list append)."""
+        self._record(ts)
+        ts.df = self._compact(df)
+        self._show(ts)
         ts.history.append(ts.df)
         ts.history_ts.append(__import__("time").time())
+
+    def _show(self, ts: TableState) -> None:
+        """Bind the table's snapshot as its temp view when the table is
+        in the bound database."""
+        if ts.df is not None and \
+                self.databases.get(self._bound_db, {}).get(ts.name) is ts:
+            ts.df.createOrReplaceTempView(ts.name)
+
+    # ---- the undo log (reference sql/rowexec/builder.go wraps every
+    # statement in one rollback chain) ---------------------------------------
+    # Storage is immutable DataFrame snapshots, so an entry is a few
+    # references: no Spark job, no py4j call. `query` marks the log when a
+    # statement starts and `_statement` undoes back to the mark when it
+    # raises; BEGIN keeps the entries until COMMIT (drops them) or
+    # ROLLBACK (undoes them), and ROLLBACK TO a SAVEPOINT undoes back to
+    # the position it recorded. Only this session's writes are undone.
+
+    def _logging(self, key: tuple) -> bool:
+        """True when a statement runs that has not logged `key` yet."""
+        sess = self.session
+        return sess.stmt_mark is not None and all(
+            k != key for k, _ in sess.undo[sess.stmt_mark:])
+
+    _TABLE_FIELDS = ("name", "df", "primary_key", "checks", "check_names",
+                     "check_enforced", "auto_inc_next")
+    # ALTER edits these objects in place (a renamed column, an index's or
+    # FOREIGN KEY's columns), so the log keeps copies of them
+    _TABLE_OBJECTS = ("columns", "foreign_keys", "indexes", "fulltext")
+
+    def _record(self, ts: TableState) -> None:
+        """Log the table's fields before the statement first changes
+        them: its snapshot, metadata (copies of the objects ALTER edits)
+        and AUTO_INCREMENT counter, and the length of its history, which
+        only grows."""
+        key = (id(ts), None)
+        if not self._logging(key):
+            return
+        import copy
+        saved = {f: getattr(ts, f) for f in self._TABLE_FIELDS}
+        for f, v in saved.items():
+            if isinstance(v, list):  # the checks: appended to in place
+                saved[f] = list(v)
+        saved.update({f: [copy.copy(x) for x in getattr(ts, f)]
+                      for f in self._TABLE_OBJECTS})
+        n = len(ts.history)
+
+        def restore() -> None:
+            for f, v in saved.items():
+                setattr(ts, f, v)
+            del ts.history[n:], ts.history_ts[n:]
+            self._show(ts)
+        self.session.undo.append((key, restore))
+
+    def _record_key(self, mapping: dict, name: str) -> None:
+        """Log what `mapping[name]` holds, or that it is absent, before the
+        statement first changes it: `mapping` is a database's tables
+        (CREATE / DROP / RENAME TABLE), `triggers` or `databases`."""
+        key = (id(mapping), name)
+        if not self._logging(key):
+            return
+        had, prior = name in mapping, mapping.get(name)
+
+        def restore() -> None:
+            if had:
+                mapping[name] = prior
+            else:
+                mapping.pop(name, None)
+            if mapping is self.databases.get(self._bound_db):
+                if not had:
+                    self.spark.catalog.dropTempView(name)
+                elif prior.df is not None:
+                    prior.df.createOrReplaceTempView(name)
+            elif mapping is self.databases and name == self._bound_db:
+                self._bound_db = None  # the next statement rebinds
+        self.session.undo.append((key, restore))
+
+    def _undo(self, mark: int) -> None:
+        """Undo the session's logged changes back to position `mark`,
+        newest first."""
+        log = self.session.undo
+        while len(log) > mark:
+            log.pop()[1]()
 
     def _compact(self, df: DataFrame) -> DataFrame:
         """Narrow-coalesce an eagerly checkpointed snapshot to the
@@ -1882,25 +1983,6 @@ class Engine:
                                  r"'\1-\2-\3\4'", lits[i])
         return masked
 
-    def _rewrite_cross_db(self, masked: str, lits: list[str]) -> str:
-        """db-qualified table references (`db1.t1`, including the 3-part
-        column form `db1.t1.i`) — Spark temp views are unqualified, so
-        each referenced db.table binds a flat view and the reference text
-        rewrites to it (reference: catalog-qualified resolution in
-        sql/analyzer/resolve_tables.go)."""
-        for db, tables in self.databases.items():
-            if db.lower() not in masked.lower():
-                continue
-            for tbl, ts2 in tables.items():
-                pat = rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\b"
-                if not re.search(pat, masked, re.I):
-                    continue
-                flat = f"__db__{db}__{tbl}"
-                if ts2.df is not None:
-                    ts2.df.createOrReplaceTempView(flat)
-                masked = re.sub(pat, flat, masked, flags=re.I)
-        return masked
-
     def _rewrite_unix_timestamp(self, masked: str, lits: list[str]) -> str:
         """UNIX_TIMESTAMP(x) (reference sql/expression/function/
         unixtimestamp.go): the argument is a naive datetime interpreted
@@ -2087,22 +2169,39 @@ class Engine:
     # AS OF time travel: `FROM t AS OF <version>` binds a historical
     # snapshot (reference sql/plan/versionable.go:19-24; versions are
     # 0-based statement commit ordinals).
-    _AS_OF = re.compile(r"(\x00\d+\x00|\b\w+)\s+AS\s+OF\s+(?:(\d+)|"
-                        r"(?:TIMESTAMP\s+)?\x00(\d+)\x00)", re.I)
+    _AS_OF = re.compile(r"(?:\b(\w+)\s*\.\s*)?(\x00\d+\x00|\b\w+)\s+AS\s+OF\s+"
+                        r"(?:(\d+)|(?:TIMESTAMP\s+)?\x00(\d+)\x00)", re.I)
 
-    def _rewrite_as_of(self, masked: str, lits: list[str]) -> str:
-        """AS OF <ordinal> | AS OF [TIMESTAMP] '<ts>' — historical snapshot
-        binding (reference sql/plan/versionable.go:19-24; dolt binds both
-        commit ordinals and wall-clock timestamps)."""
-        def repl(m: re.Match) -> str:
-            when = m.group(3) and re.fullmatch(r"'([^']+)'",
-                                               lits[int(m.group(3))])
-            if m.group(2) is None and not when:
+    def _table_view(self, db: str, ts: TableState,
+                    version: int | None = None) -> str:
+        """Bind `db`.`ts` — its snapshot, or its history entry `version` —
+        as a temp view, one name per (db, table, version), and return the
+        name: Spark temp views are unqualified."""
+        view = f"__t__{db}__{ts.name}" + (
+            "" if version is None else f"__v{version}")
+        df = ts.df if version is None else ts.history[version]
+        if df is not None:
+            df.createOrReplaceTempView(view)
+        return view
+
+    def _rewrite_table_refs(self, masked: str, lits: list[str]) -> str:
+        """Table references Spark cannot resolve, each bound through
+        `_table_view`: `[db.]t AS OF <ordinal>` and `[db.]t AS OF
+        [TIMESTAMP] '<ts>'` — historical snapshot binding (reference
+        sql/plan/versionable.go:19-24; dolt binds both commit ordinals
+        and wall-clock timestamps) — then every other `db.t`, including
+        the 3-part column form `db.t.i` (reference: catalog-qualified
+        resolution in sql/analyzer/resolve_tables.go)."""
+        def as_of(m: re.Match) -> str:
+            when = m.group(4) and re.fullmatch(r"'([^']+)'",
+                                               lits[int(m.group(4))])
+            if m.group(3) is None and not when:
                 return m.group(0)
-            _, tbl = self._split_name(unmask_literals(m.group(1), lits))
-            ts = self._table(tbl)
-            if m.group(2) is not None:
-                version = int(m.group(2))
+            _, tbl = self._split_name(unmask_literals(m.group(2), lits))
+            db = m.group(1) or self.session.current_db
+            ts = self._table(f"{db}.{tbl}")
+            if m.group(3) is not None:
+                version = int(m.group(3))
                 if version >= len(ts.history):
                     raise SqlError(
                         f"table {tbl!r} has {len(ts.history)} versions; "
@@ -2118,11 +2217,18 @@ class Engine:
                     raise SqlError(
                         f"table {tbl!r} has no version at or before "
                         f"{when.group(1)!r}")
-            view = f"{tbl}__asof_{version}"
-            ts.history[version].createOrReplaceTempView(view)
-            return view
+            return self._table_view(db, ts, version)
 
-        return self._AS_OF.sub(repl, masked)
+        masked = self._AS_OF.sub(as_of, masked)
+        for db, tables in self.databases.items():
+            if db.lower() not in masked.lower():
+                continue
+            for tbl, ts in tables.items():
+                pat = rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\b"
+                if re.search(pat, masked, re.I):
+                    masked = re.sub(pat, self._table_view(db, ts), masked,
+                                    flags=re.I)
+        return masked
 
     # information_schema synthesized from the engine catalog (reference
     # sql/information_schema/information_schema.go)
@@ -2420,9 +2526,9 @@ class Engine:
         ("information_schema",
          re.compile("information_schema|" + _INFO_BARE.pattern, re.I),
          _rewrite_information_schema),
-        ("cross_db", re.compile(r"\."), _rewrite_cross_db),
         ("lax_temporal", re.compile(r"[=<>]\s*\x00"), _rewrite_lax_temporal),
-        ("as_of", re.compile(r"\bAS\s+OF\b", re.I), _rewrite_as_of),
+        ("table_refs", re.compile(r"\.|\bAS\s+OF\b", re.I),
+         _rewrite_table_refs),
         ("json_table", re.compile(r"\bJSON_TABLE\s*\(", re.I),
          _rewrite_json_table),
         ("match_against", re.compile(r"\bMATCH\b", re.I),
@@ -2850,7 +2956,7 @@ class Engine:
             # FOR EACH ROW [{FOLLOWS|PRECEDES} other] body
             om = re.match(r"(FOLLOWS|PRECEDES)\s+[`]?(\w+)[`]?\s+(.*)$",
                           body, re.I | re.S)
-            trig_list = self.triggers.setdefault(tbl, [])
+            trig_list = list(self.triggers.get(tbl, []))
             at = len(trig_list)
             if om:
                 body = om.group(3).strip()
@@ -2863,6 +2969,8 @@ class Engine:
             trig = Trigger(m.group(1).strip("`"), m.group(2).upper(),
                            m.group(3).upper(), tbl, body)
             trig_list.insert(at, trig)
+            self._record_key(self.triggers, tbl)
+            self.triggers[tbl] = trig_list
             return OkResult(0)
         pm = re.match(
             r"CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?PROCEDURE\s+"
@@ -2912,12 +3020,12 @@ class Engine:
             if not nm:
                 raise SqlError(f"cannot parse CREATE DATABASE: {sql[:60]!r}")
             name = nm.group(2)
-            if nm.group(1):
-                self.databases.setdefault(name, {})
-            elif name in self.databases:
+            if name in self.databases:
+                if nm.group(1):
+                    return OkResult(1)
                 raise SqlError(f"database {name!r} exists")
-            else:
-                self.databases[name] = {}
+            self._record_key(self.databases, name)
+            self.databases[name] = {}
             return OkResult(1)
         if upper.startswith("CREATE VIEW") or re.match(
             r"CREATE\s+OR\s+REPLACE\s+VIEW", upper
@@ -2955,14 +3063,12 @@ class Engine:
                 raise SqlError(f"table {tbl!r} exists")
             ts = TableState(
                 tbl, copy.deepcopy(src.columns),
-                df=src.df.limit(0),
                 primary_key=tuple(src.primary_key),
                 checks=list(src.checks),
                 indexes=copy.deepcopy(src.indexes),
                 auto_inc_next=1,
             )
-            tables[tbl] = ts
-            self._register(ts)
+            self._add_table(tables, ts, src.df.limit(0))
             return OkResult(0)
         # CREATE TABLE name (col overrides / keys) [AS] SELECT ... —
         # declared definitions merge with the selected schema: a declared
@@ -3014,12 +3120,11 @@ class Engine:
                             c.name, F.col(c.name).cast(c.spark_type))
                 out = out.select(*[c.name for c in cols])
                 ts = TableState(tbl, cols, decl.primary_key,
-                                checks=decl.checks, df=out,
+                                checks=decl.checks,
                                 indexes=decl.indexes,
                                 check_names=decl.check_names,
                                 check_enforced=decl.check_enforced)
-                tables[tbl] = ts
-                self._register(ts)
+                self._add_table(tables, ts, out)
                 return OkResult(out.count())
         # CREATE TABLE ... [AS] SELECT/WITH/VALUES/TABLE — MySQL accepts
         # CTAS without AS and with any query shape (joins, GROUP BY,
@@ -3034,9 +3139,7 @@ class Engine:
             cols = [
                 ColumnDef(f.name, f.dataType, f.nullable) for f in df.schema.fields
             ]
-            ts = TableState(tbl, cols, df=df)
-            self._db(db)[tbl] = ts
-            self._register(ts)
+            self._add_table(self._db(db), TableState(tbl, cols), df)
             return OkResult(df.count())
         m = self._CREATE_TABLE.match(sql)
         if not m:
@@ -3053,15 +3156,20 @@ class Engine:
         om2 = re.search(r"AUTO_INCREMENT\s*=?\s*(\d+)", opts, re.I)
         if om2:
             ts.auto_inc_next = int(om2.group(1))
-        ts.df = self._empty_df(ts)
-        tables[tbl] = ts
-        self._register(ts)
+        self._add_table(tables, ts, self._empty_df(ts))
         for ix in ts.indexes:
             if ix.kind == "FULLTEXT":
                 # inline FULLTEXT KEY (reference fulltext.go: bookkeeping
                 # tables are created with the table)
                 self._ft_create(ts, ix.name, ix.columns)
         return OkResult(0)
+
+    def _add_table(self, tables: dict, ts: TableState, df: DataFrame) -> None:
+        """CREATE TABLE's one way into the catalog: the name is logged
+        (`_record_key`), then bound to `ts` with `df` as its snapshot."""
+        self._record_key(tables, ts.name)
+        tables[ts.name] = ts
+        self._register(ts, df)
 
     # ON DELETE / ON UPDATE may appear in either order (MySQL grammar)
     _FK_DEF = re.compile(
@@ -3223,6 +3331,7 @@ class Engine:
             for other in tables.values():
                 for fk in other.foreign_keys:
                     if fk.parent_table == ts.name:
+                        self._record(other)
                         fk.parent_columns = ren(fk.parent_columns)
 
     def _drop_column(self, ts: TableState, name: str) -> None:
@@ -3353,10 +3462,12 @@ class Engine:
                 ix.name = m.group(2)
 
     def _alter_rename_table(self, ts: TableState, m: re.Match) -> None:
-        tables = self._db(None)
+        tables, new = self._db(None), m.group(1).strip("`")
+        self._record_key(tables, ts.name)
+        self._record_key(tables, new)
         self.spark.catalog.dropTempView(ts.name)
         del tables[ts.name]
-        ts.name = m.group(1).strip("`")
+        ts.name = new
         tables[ts.name] = ts
 
     def _alter_default(self, ts: TableState, m: re.Match) -> None:
@@ -3421,27 +3532,19 @@ class Engine:
         if not m:
             raise SqlError(f"cannot parse ALTER: {sql[:60]!r}")
         ts = self._table(m.group(1))
+        self._record(ts)  # the actions edit the table in place
         rewrote = False
-        # a failing action (a new key or CHECK the rows break) leaves the
-        # table as it was, however many actions ran before it
-        snap = self._snapshot_state()
-        try:
-            for action in _split_top_level(m.group(2)):
-                for _name, pattern, handler, rewrites in self._ALTER_ACTIONS:
-                    am = pattern.match(action)
-                    if am:
-                        handler(self, ts, am)
-                        rewrote = rewrote or rewrites
-                        break
-                else:
-                    raise SqlError(
-                        f"unsupported ALTER action: {action[:50]!r}")
-        except Exception:
-            self._restore_state(snap)
-            raise
-        if rewrote:
-            ts.df = ts.df.localCheckpoint(eager=True)
-        self._register(ts)
+        for action in _split_top_level(m.group(2)):
+            for _name, pattern, handler, rewrites in self._ALTER_ACTIONS:
+                am = pattern.match(action)
+                if am:
+                    handler(self, ts, am)
+                    rewrote = rewrote or rewrites
+                    break
+            else:
+                raise SqlError(f"unsupported ALTER action: {action[:50]!r}")
+        self._register(ts, ts.df.localCheckpoint(eager=True) if rewrote
+                       else ts.df)
         return OkResult(0)
 
     def _q_rename(self, sql: str) -> OkResult:
@@ -3495,8 +3598,11 @@ class Engine:
                     self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}")
                 except Exception:
                     pass
-            for trigs in self.triggers.values():
-                trigs[:] = [t for t in trigs if t.name.lower() != name]
+            for tbl, trigs in list(self.triggers.items()):
+                if any(t.name.lower() == name for t in trigs):
+                    self._record_key(self.triggers, tbl)
+                    self.triggers[tbl] = [t for t in trigs
+                                          if t.name.lower() != name]
             return OkResult(0)
         m = re.match(r"DROP\s+(TABLE|VIEW|DATABASE|SCHEMA|INDEX)\s+(IF\s+EXISTS\s+)?([`\w.]+)",
                      sql, re.I)
@@ -3506,6 +3612,7 @@ class Engine:
         if kind in ("DATABASE", "SCHEMA"):
             name = name.strip("`")
             if name in self.databases:
+                self._record_key(self.databases, name)
                 del self.databases[name]
             elif not if_exists:
                 raise SqlError(f"unknown database {name!r}")
@@ -3521,9 +3628,11 @@ class Engine:
             if if_exists:
                 return OkResult(0)
             raise SqlError(f"unknown table {tbl!r}")
+        self._record_key(tables, tbl)
         del tables[tbl]
         # triggers defined ON this table go with it (MySQL; reference
         # trigger_queries.go "drop table referenced in triggers")
+        self._record_key(self.triggers, tbl)
         self.triggers.pop(tbl, None)
         if tables is self.databases.get(self._bound_db):
             self.spark.catalog.dropTempView(tbl)
@@ -3768,29 +3877,7 @@ class Engine:
         generated columns the column list may name (cells that were all
         DEFAULT). Returns the result and the rows appended, which
         INSERT ... RETURNING projects."""
-        # Triggers that mutate other tables mid-statement (sequential OR
-        # set-based audit INSERTs): a failure part-way (SIGNAL,
-        # constraint) must leave NO trace — MySQL statement atomicity
-        # (reference rowexec + transaction rollback of the trigger's
-        # writes). Snapshot-restore gives exactly statement-level
-        # rollback over immutable DataFrames.
-        if any(t.event == "INSERT" and self._trigger_has_side_effects(t)
-               for t in self.triggers.get(ts.name, [])):
-            snap = self._snapshot_state()
-            try:
-                return self._insert_df_inner(ts, new_rows, col_list, verb,
-                                             ignore, odku, src_cols, gen_ok)
-            except Exception:
-                self._restore_state(snap)
-                raise
-        return self._insert_df_inner(ts, new_rows, col_list, verb, ignore,
-                                     odku, src_cols, gen_ok)
-
-    def _insert_df_inner(self, ts: TableState, new_rows: DataFrame,
-                         col_list: list[str] | None, verb: str,
-                         ignore: bool, odku: str | None,
-                         src_cols: list[str] | None,
-                         gen_ok: set) -> tuple[OkResult, DataFrame]:
+        self._record(ts)  # the AUTO_INCREMENT counter moves before the write
         if col_list:
             # MySQL column names are case-insensitive: map to declared
             actual = {c.name.lower(): c.name for c in ts.columns}
@@ -3850,7 +3937,7 @@ class Engine:
                         pre_checks.append((
                             F.expr(f"NOT mysql_utf8_valid(`{c.name}`)"),
                             SqlError("Incorrect string value for column "
-                                     f"{c.name!r}")))
+                                     f"{c.name!r}", "HY000", 1366)))
                     src = F.expr(f"mysql_utf8_lenient(`{c.name}`)")
                 base_val = (self._lenient_cast(c, src) if lenient
                             else src.cast(c.spark_type))
@@ -3920,7 +4007,8 @@ class Engine:
         def judge(df: DataFrame, local: bool, extra=()) -> list | None:
             # the row count, the first broken check, the collected rows;
             # an omitted AUTO_INCREMENT column's counter moves by the row
-            # count even when a check fails, as MySQL's does
+            # count before a check can fail (the statement's undo puts it
+            # back)
             nonlocal n_new
             n, err, rows = self._judge(df, checks, local, extra)
             if counter and n_new is None:
@@ -4007,8 +4095,8 @@ class Engine:
         existing, incoming, affected = self._apply_keys(
             ts, incoming, n_new, verb, ignore, odku, src_cols, target_cols,
             verdict)
-        ts.df = existing.unionByName(incoming).localCheckpoint(eager=True)
-        self._register(ts)
+        self._register(ts, existing.unionByName(incoming).localCheckpoint(
+            eager=True))
         if ts.fulltext:
             # ODKU mutates existing rows without a threaded delta → lazy
             # rebuild; INSERT/IGNORE/REPLACE maintain incrementally from
@@ -4407,7 +4495,8 @@ class Engine:
                 checks.append((
                     F.col(c.name).isNotNull() & (F.col(c.name) != "")
                     & ~F.col(c.name).isin(*c.enum_values),
-                    SqlError(f"invalid ENUM value for column {c.name!r}")))
+                    SqlError(f"invalid ENUM value for column {c.name!r}",
+                             "01000", 1265)))
             if c.set_values is not None:
                 members = ", ".join("'" + v.replace("'", "''") + "'"
                                     for v in c.set_values)
@@ -4415,7 +4504,8 @@ class Engine:
                     F.col(c.name).isNotNull() & F.expr(
                         f"size(filter(split({c.name}, ','), "
                         f"x -> x != '' AND x NOT IN ({members}))) > 0"),
-                    SqlError(f"invalid SET value for column {c.name!r}")))
+                    SqlError(f"invalid SET value for column {c.name!r}",
+                             "01000", 1265)))
         for ci, chk in enumerate(ts.checks):
             if not ts.check_enforced_at(ci):
                 continue  # NOT ENFORCED: metadata only
@@ -4520,7 +4610,8 @@ class Engine:
             raise SqlError(
                 f"FK violation: {orphans} value(s) in {ts.name}"
                 f"({', '.join(fk.columns)}) not present in "
-                f"{fk.parent_table}({', '.join(fk.parent_columns)})")
+                f"{fk.parent_table}({', '.join(fk.parent_columns)})",
+                "23000", 1452)
 
     def _enum_set_normalize(self, ts: TableState, df: DataFrame) -> DataFrame:
         """Map incoming ENUM/SET values to their canonical member
@@ -4683,7 +4774,8 @@ class Engine:
             hi_l = F.lit(str(hi)).cast("decimal(38,0)")
             checks.append((
                 v.isNotNull() & ((v < lo_l) | (v > hi_l)),
-                SqlError(f"out of range value for column {c.name!r}")))
+                SqlError(f"out of range value for column {c.name!r}",
+                         "22003", 1264)))
         return checks
 
     _DML_ORDER_LIMIT = re.compile(
@@ -4900,94 +4992,72 @@ class Engine:
             raise err
         updated = updated.drop(*pre)
         pairs_old = pairs_new = None
-        # statement atomicity whenever any UPDATE trigger can mutate state
-        # outside the row (same contract as _insert_df / _q_delete): the
-        # set-based AFTER path at the bottom runs after ts.df is committed,
-        # so a failing trigger body must roll the whole statement back
-        need_snap = n_match and (
-            seq_rows or any(self._trigger_has_side_effects(t)
-                            for t in utrigs))
-        snap = self._snapshot_state() if need_snap else None
-        try:
-            if seq_rows and n_match:
-                # MySQL row-at-a-time trigger sequencing over the
-                # matched rows (bounded by the DML batch, an OLTP
-                # surface): BEFORE triggers see post-assignment NEW and
-                # may mutate it; side effects apply in row order
+        if seq_rows and n_match:
+            # MySQL row-at-a-time trigger sequencing over the matched rows
+            # (bounded by the DML batch, an OLTP surface): BEFORE triggers
+            # see post-assignment NEW and may mutate it; side effects
+            # apply in row order
+            from .procedures import ProcedureInterpreter
+
+            rows = updated.filter("__matched").collect()
+            pairs_old = [{c.name.lower(): r[f"__old__{c.name}"]
+                          for c in ts.columns} for r in rows]
+            pairs_new = [{c.name.lower(): r[c.name]
+                          for c in ts.columns} for r in rows]
+            bts = [t for t in utrigs if t.timing == "BEFORE"]
+            for i, newd in enumerate(pairs_new):
+                for t in bts:
+                    ProcedureInterpreter(self).run_trigger(
+                        t.body, new=newd, old=pairs_old[i])
+            data = [tuple(self._py_coerce(d[c.name.lower()], c.spark_type)
+                          for c in ts.columns) for d in pairs_new]
+            matched_new = (self.spark.createDataFrame(data, ts.schema)
+                           if data else self._empty_df(ts))
+            updated = base.filter(
+                "NOT __matched OR __matched IS NULL").select(
+                *[c.name for c in ts.columns]).withColumn(
+                "__matched", F.lit(False)).unionByName(
+                matched_new.withColumn("__matched", F.lit(True)))
+        else:
+            updated = updated.drop(*[f"__old__{c.name}"
+                                     for c in ts.columns]) \
+                if seq_rows else updated
+            updated = self._apply_before_update_triggers(ts, updated)
+        if explicit_ignore and n_match:
+            updated = self._update_ignore_revert(ts, base, updated, assigns)
+        else:
+            err = row_checks and self._judge(
+                updated, row_checks, where=F.col("__matched"))[1]
+            if err:
+                raise err
+            for fk in ts.foreign_keys:
+                self._check_fk(ts, fk, updated.filter("__matched"))
+            if n_match:
+                self._check_end_state(ts, updated, assigns)
+        fks = self._referencing_fks(ts, set(assigns))
+        if fks and n_match:
+            needed = sorted({p for _, fk in fks for p in fk.parent_columns})
+            types = {c.name: c.spark_type for c in ts.columns}
+            mapping = matched.select(
+                *[F.col(p).alias(f"__old_{p}") for p in needed],
+                *[((F.expr(self._transpile(assigns[p])).cast(types[p]))
+                   if p in assigns else F.col(p)).alias(f"__new_{p}")
+                  for p in needed],
+            )
+            self._apply_fk_on_update(ts, mapping, fks)
+        self._register(ts, updated.drop("__matched").localCheckpoint(
+            eager=True))
+        if n_match:
+            if pairs_old is not None:
                 from .procedures import ProcedureInterpreter
 
-                rows = updated.filter("__matched").collect()
-                pairs_old = [{c.name.lower(): r[f"__old__{c.name}"]
-                              for c in ts.columns} for r in rows]
-                pairs_new = [{c.name.lower(): r[c.name]
-                              for c in ts.columns} for r in rows]
-                bts = [t for t in utrigs if t.timing == "BEFORE"]
-                for i, newd in enumerate(pairs_new):
-                    for t in bts:
+                ats = [t for t in utrigs if t.timing == "AFTER"]
+                for i, old in enumerate(pairs_old):
+                    for t in ats:
                         ProcedureInterpreter(self).run_trigger(
-                            t.body, new=newd, old=pairs_old[i])
-                data = [tuple(self._py_coerce(d[c.name.lower()],
-                                              c.spark_type)
-                              for c in ts.columns) for d in pairs_new]
-                matched_new = (self.spark.createDataFrame(data, ts.schema)
-                               if data else self._empty_df(ts))
-                updated = base.filter(
-                    "NOT __matched OR __matched IS NULL").select(
-                    *[c.name for c in ts.columns]).withColumn(
-                    "__matched", F.lit(False)).unionByName(
-                    matched_new.withColumn("__matched", F.lit(True)))
+                            t.body, new=pairs_new[i], old=old)
             else:
-                updated = updated.drop(*[f"__old__{c.name}"
-                                         for c in ts.columns]) \
-                    if seq_rows else updated
-                updated = self._apply_before_update_triggers(ts, updated)
-        except Exception:
-            if snap is not None:
-                self._restore_state(snap)
-            raise
-        try:
-            if explicit_ignore and n_match:
-                updated = self._update_ignore_revert(ts, base, updated,
-                                                     assigns)
-            else:
-                err = row_checks and self._judge(
-                    updated, row_checks, where=F.col("__matched"))[1]
-                if err:
-                    raise err
-                for fk in ts.foreign_keys:
-                    self._check_fk(ts, fk, updated.filter("__matched"))
-                if n_match:
-                    self._check_end_state(ts, updated, assigns)
-            fks = self._referencing_fks(ts, set(assigns))
-            if fks and n_match:
-                needed = sorted({p for _, fk in fks
-                                 for p in fk.parent_columns})
-                types = {c.name: c.spark_type for c in ts.columns}
-                mapping = matched.select(
-                    *[F.col(p).alias(f"__old_{p}") for p in needed],
-                    *[((F.expr(self._transpile(assigns[p]))
-                        .cast(types[p]))
-                       if p in assigns else F.col(p)).alias(f"__new_{p}")
-                      for p in needed],
-                )
-                self._apply_fk_on_update(ts, mapping, fks)
-            ts.df = updated.drop("__matched").localCheckpoint(eager=True)
-            self._register(ts)
-            if n_match:
-                if pairs_old is not None:
-                    from .procedures import ProcedureInterpreter
-
-                    ats = [t for t in utrigs if t.timing == "AFTER"]
-                    for i, old in enumerate(pairs_old):
-                        for t in ats:
-                            ProcedureInterpreter(self).run_trigger(
-                                t.body, new=pairs_new[i], old=old)
-                else:
-                    self._run_old_triggers(ts, matched, "UPDATE")
-        except Exception:
-            if snap is not None:
-                self._restore_state(snap)
-            raise
+                self._run_old_triggers(ts, matched, "UPDATE")
         return OkResult(n_match)
 
     _TRIG_SIGNAL_RE = re.compile(
@@ -5217,7 +5287,6 @@ class Engine:
         # ON UPDATE actions run on the committed targets, once every
         # target has passed its checks (a child may be a target too)
         fk_actions: list = []  # (parent, old → new key mapping, fks)
-        need_snap = False
         for qual_l, assigns in groups.items():
             qual = quals[qual_l]
             tname = alias_map.get(qual_l, qual)
@@ -5293,8 +5362,6 @@ class Engine:
                 trig_after.append((
                     [t for t in utrigs if t.timing == "AFTER"],
                     pairs_old, pairs_new))
-                need_snap = need_snap or any(
-                    self._trigger_has_side_effects(t) for t in utrigs)
             fks = self._referencing_fks(ts, set(assigns))
             if fks and n:
                 needed = sorted(
@@ -5336,24 +5403,17 @@ class Engine:
             if n:
                 self._check_end_state(ts, out, assigns)
             staged.append((ts, out.drop("__matched")))
-        snap = self._snapshot_state() if need_snap or fk_actions else None
-        try:
-            for ts, out in staged:
-                ts.df = out.localCheckpoint(eager=True)
-                self._register(ts)
-            for ts, mapping, fks in fk_actions:
-                self._apply_fk_on_update(ts, mapping, fks)
-            if trig_after:
-                from .procedures import ProcedureInterpreter
-                for ats, pairs_old, pairs_new in trig_after:
-                    for i, old in enumerate(pairs_old):
-                        for t in ats:
-                            ProcedureInterpreter(self).run_trigger(
-                                t.body, new=pairs_new[i], old=old)
-        except Exception:
-            if snap is not None:
-                self._restore_state(snap)
-            raise
+        for ts, out in staged:
+            self._register(ts, out.localCheckpoint(eager=True))
+        for ts, mapping, fks in fk_actions:
+            self._apply_fk_on_update(ts, mapping, fks)
+        if trig_after:
+            from .procedures import ProcedureInterpreter
+            for ats, pairs_old, pairs_new in trig_after:
+                for i, old in enumerate(pairs_old):
+                    for t in ats:
+                        ProcedureInterpreter(self).run_trigger(
+                            t.body, new=pairs_new[i], old=old)
         return OkResult(total)
 
     def _q_delete(self, sql: str, cte_prefix: str = "") -> OkResult:
@@ -5365,20 +5425,6 @@ class Engine:
         - DELETE FROM t1[, t2] USING <table_refs> [WHERE]
         - WITH ... DELETE ... (cte_prefix threaded from the router)
         """
-        # statement atomicity when DELETE triggers mutate other tables
-        # (same contract as _insert_df; MySQL rolls the whole statement
-        # back if any row's trigger fails)
-        if any(t.event == "DELETE" and self._trigger_has_side_effects(t)
-               for trigs in self.triggers.values() for t in trigs):
-            snap = self._snapshot_state()
-            try:
-                return self._q_delete_inner(sql, cte_prefix)
-            except Exception:
-                self._restore_state(snap)
-                raise
-        return self._q_delete_inner(sql, cte_prefix)
-
-    def _q_delete_inner(self, sql: str, cte_prefix: str = "") -> OkResult:
         sql = on_text(self._substitute_vars, sql)
         try:  # ENUM/SET numeric comparisons in the WHERE (s = 2 → bitmask)
             sql = on_text(self._rewrite_enum_arith, sql)
@@ -5422,8 +5468,8 @@ class Engine:
             if n:
                 self._run_old_triggers(ts, victims, "DELETE", "BEFORE")
                 self._apply_fk_on_delete(ts, victims)
-            ts.df = ts.df.exceptAll(victims).localCheckpoint(eager=True)
-            self._register(ts)
+            self._register(ts, ts.df.exceptAll(victims).localCheckpoint(
+                eager=True))
             if n:
                 self._run_old_triggers(ts, victims, "DELETE")
             return OkResult(n)
@@ -5435,10 +5481,8 @@ class Engine:
         if n:
             self._run_old_triggers(ts, deleted, "DELETE", "BEFORE")
             self._apply_fk_on_delete(ts, deleted)
-        ts.df = ts.df.filter(f"NOT ({where}) OR ({where}) IS NULL").localCheckpoint(
-            eager=True
-        )
-        self._register(ts)
+        self._register(ts, ts.df.filter(
+            f"NOT ({where}) OR ({where}) IS NULL").localCheckpoint(eager=True))
         if n:
             self._run_old_triggers(ts, deleted, "DELETE")
         return OkResult(n)
@@ -5515,9 +5559,8 @@ class Engine:
             if n:
                 self._run_old_triggers(ts, doomed, "DELETE", "BEFORE")
                 self._apply_fk_on_delete(ts, doomed)
-            ts.df = ts.df.join(victims, pk, "left_anti").localCheckpoint(
-                eager=True)
-            self._register(ts)
+            self._register(ts, ts.df.join(victims, pk, "left_anti")
+                           .localCheckpoint(eager=True))
             if n:
                 self._run_old_triggers(ts, doomed, "DELETE")
         return OkResult(prunes[0][3] if prunes else 0)
@@ -5582,17 +5625,17 @@ class Engine:
                 if fk.on_delete == "RESTRICT":
                     raise SqlError(
                         f"cannot delete from {parent_ts.name!r}: {n_kids} row(s) "
-                        f"in {child_ts.name!r} reference it (RESTRICT)")
+                        f"in {child_ts.name!r} reference it (RESTRICT)",
+                        "23000", 1451)
                 if fk.on_delete == "CASCADE":
                     self._apply_fk_on_delete(child_ts, matching)
-                    child_ts.df = child_ts.df.join(
+                    self._register(child_ts, child_ts.df.join(
                         keys,
                         list(fk.columns), "left_anti",
                     ).select(  # name-list joins put join keys FIRST —
                         # restore the declared column order
                         *[c.name for c in child_ts.columns]
-                    ).localCheckpoint(eager=True)
-                    self._register(child_ts)
+                    ).localCheckpoint(eager=True))
                 else:  # SET NULL
                     renamed = keys
                     hit = child_ts.df.join(renamed, list(fk.columns), "left_semi")
@@ -5608,8 +5651,7 @@ class Engine:
                         *[c.name for c in child_ts.columns])
                     if any(c.generated for c in child_ts.columns):
                         out = self._compute_generated(child_ts, out)
-                    child_ts.df = out.localCheckpoint(eager=True)
-                    self._register(child_ts)
+                    self._register(child_ts, out.localCheckpoint(eager=True))
 
     def _referencing_fks(self, parent_ts: TableState,
                          changed_cols: set[str]) -> list[tuple["TableState", "ForeignKey"]]:
@@ -5650,7 +5692,8 @@ class Engine:
             if fk.on_update == "RESTRICT":
                 raise SqlError(
                     f"cannot update {parent_ts.name!r} key: {n_kids} row(s) "
-                    f"in {child_ts.name!r} reference it (RESTRICT)")
+                    f"in {child_ts.name!r} reference it (RESTRICT)",
+                    "23000", 1451)
             keymap = changed.select(
                 *[self._fk_key_expr(pdefs.get(p), cdefs.get(c),
                                     f"__old_{p}").alias(f"__k_{c}")
@@ -5677,8 +5720,7 @@ class Engine:
                 # the referential action (reference foreign_key_editor.go
                 # + virtual_column_table.go interplay)
                 out = self._compute_generated(child_ts, out)
-            child_ts.df = out.localCheckpoint(eager=True)
-            self._register(child_ts)
+            self._register(child_ts, out.localCheckpoint(eager=True))
 
     def _old_trigger_vectorizable(self, trig) -> bool:
         """OLD-bound bodies the set-based path executes faithfully:
@@ -5741,9 +5783,9 @@ class Engine:
         name = sql.split()[-1]
         ts = self._table(name)
         n = ts.df.count()
-        ts.df = self._empty_df(ts)
+        self._record(ts)
         ts.auto_inc_next = 1
-        self._register(ts)
+        self._register(ts, self._empty_df(ts))
         return OkResult(n)
 
     # ---- session / admin ---------------------------------------------------
@@ -6105,18 +6147,6 @@ class Engine:
             return False
         return True
 
-    def _trigger_has_side_effects(self, trig) -> bool:
-        """True when any body statement can mutate state outside the
-        NEW row (so a mid-batch failure needs statement rollback)."""
-        from .procedures import split_statements
-
-        for stmt in split_statements(trig.body):
-            s = stmt.strip()
-            if self._VEC_SET.match(s) or self._guard_vectorizable(s):
-                continue
-            return True
-        return False
-
     def _guard_vectorizable(self, stmt: str) -> bool:
         """True when the IF..SIGNAL guard matches the one-filter
         set-based form _trigger_signal_guard executes (simple NEW-only
@@ -6257,61 +6287,6 @@ class Engine:
                         self.query(re.sub(r"\bNEW\.(\w+)", r"\1", stmt, flags=re.I))
         return incoming
 
-    # ---- transactions -------------------------------------------------------
-    # Real multi-statement rollback (reference sql/plan/transaction.go:1-209):
-    # storage is immutable DataFrame snapshots, so a transaction checkpoint
-    # is just a dict of references — BEGIN records it, ROLLBACK restores it,
-    # COMMIT drops it. SAVEPOINT keeps a named stack of the same.
-
-    _SNAPSHOT_FIELDS = ("df", "columns", "primary_key", "checks",
-                        "check_names", "check_enforced", "foreign_keys",
-                        "indexes", "fulltext", "auto_inc_next", "history",
-                        "history_ts")
-
-    # ALTER edits these objects in place (a renamed column, an index's or
-    # FOREIGN KEY's columns), so a snapshot holds copies of them
-    _SNAPSHOT_OBJECTS = ("columns", "foreign_keys", "indexes", "fulltext")
-
-    @classmethod
-    def _saved_fields(cls, fields: dict) -> dict:
-        """The snapshot fields of `fields` (a table's or a snapshot's),
-        every list a copy."""
-        import copy
-        return {f: [copy.copy(x) for x in fields[f]]
-                if f in cls._SNAPSHOT_OBJECTS
-                else list(fields[f]) if isinstance(fields[f], list)
-                else fields[f] for f in cls._SNAPSHOT_FIELDS}
-
-    def _snapshot_state(self) -> dict:
-        return {"triggers": {k: list(v) for k, v in self.triggers.items()},
-                "dbs": {db: {t: self._saved_fields(vars(ts))
-                             for t, ts in tables.items()}
-                        for db, tables in self.databases.items()}}
-
-    def _restore_state(self, snap: dict) -> None:
-        self.triggers = {k: list(v) for k, v in snap["triggers"].items()}
-        for dbname in list(self.databases):
-            if dbname not in snap["dbs"]:
-                del self.databases[dbname]
-        for dbname, tsnap in snap["dbs"].items():
-            tables = self.databases.setdefault(dbname, {})
-            # drop tables created after the snapshot
-            for tname in list(tables):
-                if tname not in tsnap:
-                    try:
-                        self.spark.catalog.dropTempView(tname)
-                    except Exception:
-                        pass
-                    del tables[tname]
-            for tname, saved in tsnap.items():
-                ts = tables.setdefault(tname,
-                                       TableState(tname, saved["columns"]))
-                # copies again: a savepoint's snapshot may be restored twice
-                for f, v in self._saved_fields(saved).items():
-                    setattr(ts, f, v)
-        self._bound_db = None  # rebind: a view above may have been dropped
-        self._bind_db()
-
     def _q_start(self, sql: str) -> OkResult:
         """START TRANSACTION → txn; START REPLICA|SLAVE → replication
         (reference sql/plan/replication_commands.go StartReplica)."""
@@ -6335,16 +6310,16 @@ class Engine:
 
     def _q_txn(self, sql: str) -> OkResult:
         """BEGIN/COMMIT/ROLLBACK + SAVEPOINT/ROLLBACK TO/RELEASE
-        (reference sql/plan/transaction.go:1-209), on the session's
-        snapshots."""
+        (reference sql/plan/transaction.go:1-209), on the session's undo
+        log. BEGIN commits an open transaction, as MySQL's does."""
         sess = self.session
         up = sql.strip().rstrip(";").upper()
         if up.startswith(("BEGIN", "START")):
-            sess.txn_snapshot, sess.savepoints = self._snapshot_state(), {}
+            sess.undo.clear()
+            sess.in_txn, sess.savepoints = True, {}
             return OkResult(0)
         if up.startswith("SAVEPOINT"):
-            sess.savepoints[sql.split()[1].strip("`;")] = \
-                self._snapshot_state()
+            sess.savepoints[sql.split()[1].strip("`;")] = len(sess.undo)
             return OkResult(0)
         if up.startswith("RELEASE"):
             sess.savepoints.pop(sql.split()[-1].strip("`;"), None)
@@ -6353,13 +6328,16 @@ class Engine:
             m = re.match(r"ROLLBACK\s+(?:WORK\s+)?TO\s+(?:SAVEPOINT\s+)?`?(\w+)`?",
                          sql.strip(), re.I)
             if m:
-                sp = sess.savepoints.get(m.group(1))
-                if sp is None:
+                at = sess.savepoints.get(m.group(1))
+                if at is None:
                     raise SqlError(f"savepoint {m.group(1)!r} does not exist")
-                self._restore_state(sp)  # txn stays open
+                self._undo(at)  # txn stays open; later savepoints go
+                sess.savepoints = {k: v for k, v in sess.savepoints.items()
+                                   if v <= at}
                 return OkResult(0)
-            if sess.txn_snapshot is not None:
-                self._restore_state(sess.txn_snapshot)
+            if sess.in_txn:  # outside one, every statement is committed
+                self._undo(0)
         # COMMIT, or the end of a ROLLBACK
-        sess.txn_snapshot, sess.savepoints = None, {}
+        sess.undo.clear()
+        sess.in_txn, sess.savepoints = False, {}
         return OkResult(0)

@@ -203,7 +203,7 @@ class MySQLServer:
                 # as MySQL: roll back, then a new session's state with the
                 # same id and database, and no prepared statements
                 reply = p.ok_packet()
-                if sess.txn_snapshot is not None:
+                if sess.in_txn:
                     try:
                         self.engine.query("ROLLBACK", sess)
                     except SqlError as exc:

@@ -202,7 +202,7 @@ class ReplicaController:
                 for c in ts.columns])
 
         if op == "insert":
-            ts.df = ts.df.unionByName(rows_df("row")).localCheckpoint(eager=True)
+            out = ts.df.unionByName(rows_df("row"))
         elif op in ("delete", "update"):
             keycols = sorted({k for e in evs for k in (e["key"] or {})})
             if not keycols:
@@ -214,10 +214,9 @@ class ReplicaController:
             typed = {c.name: c.spark_type for c in ts.columns}
             keys = keys.select(*[F.col(k).cast(typed[k]).alias(k)
                                  for k in keycols])
-            remained = ts.df.join(F.broadcast(keys), keycols, "left_anti")
+            out = ts.df.join(F.broadcast(keys), keycols, "left_anti")
             if op == "update":
-                remained = remained.unionByName(rows_df("row"))
-            ts.df = remained.localCheckpoint(eager=True)
+                out = out.unionByName(rows_df("row"))
         else:
             raise SqlError(f"unknown replication op {op!r}")
-        self.eng._register(ts)
+        self.eng._register(ts, out.localCheckpoint(eager=True))

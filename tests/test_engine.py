@@ -2051,14 +2051,14 @@ def test_key_error_names_the_key(spark, variant):
 # (row, the error it reports, that error's errno)
 _CHECK_ORDER = [pytest.param(*p, id=i) for p, i in [
     (("300, 1, NULL, 'z', -1, 9", "out of range value for column 'k'",
-      1105), "int_bounds"),
+      1264), "int_bounds"),
     (("1, 1, NULL, 'z', -1, 9", "column 'n' cannot be null", 1048),
      "not_null"),
-    (("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'", 1105),
+    (("1, 1, 1, 'z', -1, 9", "invalid ENUM value for column 'e'", 1265),
      "enum"),
     (("1, 1, 1, 'x', -1, 9", "CHECK constraint violated: c > 0", 3819),
      "check"),
-    (("1, 1, 1, 'x', 1, 9", "FK violation", 1105), "fk"),
+    (("1, 1, 1, 'x', 1, 9", "FK violation", 1452), "fk"),
     (("1, 1, 1, 'x', 1, 1", "duplicate entry for key 'PRIMARY'", 1062),
      "primary"),
     (("2, 1, 1, 'x', 1, 1", "duplicate entry for key 'uk'", 1062),

@@ -103,13 +103,18 @@ def test_lax_double_cast_types_match_the_parse(spark, typ):
 def test_lax_double_parse_types_keep_the_regexp(spark, typ):
     """FLOAT, DECIMAL, strings and dates do not take the typed branch: a
     FLOAT's or DECIMAL's double is not always its printed digits'. They
-    plan the string parse — but a DATE's fails analysis, as it always
-    did (TRY_CAST has no DATE → DOUBLE)."""
+    plan the string parse, and a DATE reads as its YYYYMMDD number, as
+    MySQL's does."""
     cells = _cells(typ, ["NULL", "'1'"])
     typed = spark.sql(f"SELECT typeof(x) IN ({tp._EXACT_DOUBLE_TYPES}) "
                       f"AS t FROM {cells}")
     assert {r.t for r in typed.collect()} == {False}
-    if typ != "DATE":
+    if typ == "DATE":
+        dates = _cells(typ, ["NULL", "'2024-01-05'"])
+        df = spark.sql(f"SELECT {tp._lax_double_expr('x')} AS v "
+                       f"FROM {dates}")
+        assert [r.v for r in df.collect()] == [None, 20240105.0]
+    else:
         df = spark.sql(f"SELECT {tp._lax_double_expr('x')} AS v "
                        f"FROM {cells}")
         assert "regexp_extract" in _plans(df)[0]

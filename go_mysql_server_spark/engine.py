@@ -1487,7 +1487,7 @@ class Engine:
         """Log the table's fields before the statement first changes
         them: its snapshot, metadata (copies of the objects ALTER edits)
         and AUTO_INCREMENT counter, and the length of its history, which
-        only grows."""
+        only grows. Undo never lowers the counter."""
         key = (id(ts), None)
         if not self._logging(key):
             return
@@ -1501,8 +1501,12 @@ class Engine:
         n = len(ts.history)
 
         def restore() -> None:
+            taken = ts.auto_inc_next
             for f, v in saved.items():
                 setattr(ts, f, v)
+            # AUTO_INCREMENT ids a failed or rolled-back write took stay
+            # taken, as in InnoDB; TRUNCATE's reset is undone
+            ts.auto_inc_next = max(ts.auto_inc_next, taken)
             del ts.history[n:], ts.history_ts[n:]
             self._show(ts)
         self.session.undo.append((key, restore))
@@ -5783,9 +5787,8 @@ class Engine:
         name = sql.split()[-1]
         ts = self._table(name)
         n = ts.df.count()
-        self._record(ts)
-        ts.auto_inc_next = 1
         self._register(ts, self._empty_df(ts))
+        ts.auto_inc_next = 1
         return OkResult(n)
 
     # ---- session / admin ---------------------------------------------------
@@ -6319,7 +6322,9 @@ class Engine:
             sess.in_txn, sess.savepoints = True, {}
             return OkResult(0)
         if up.startswith("SAVEPOINT"):
-            sess.savepoints[sql.split()[1].strip("`;")] = len(sess.undo)
+            name = sql.split()[1].strip("`;")
+            sess.savepoints.pop(name, None)  # a reused name moves to the end
+            sess.savepoints[name] = len(sess.undo)
             return OkResult(0)
         if up.startswith("RELEASE"):
             sess.savepoints.pop(sql.split()[-1].strip("`;"), None)
@@ -6332,8 +6337,10 @@ class Engine:
                 if at is None:
                     raise SqlError(f"savepoint {m.group(1)!r} does not exist")
                 self._undo(at)  # txn stays open; later savepoints go
-                sess.savepoints = {k: v for k, v in sess.savepoints.items()
-                                   if v <= at}
+                names = list(sess.savepoints)
+                sess.savepoints = {
+                    k: sess.savepoints[k]
+                    for k in names[:names.index(m.group(1)) + 1]}
                 return OkResult(0)
             if sess.in_txn:  # outside one, every statement is committed
                 self._undo(0)

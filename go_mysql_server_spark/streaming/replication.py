@@ -168,7 +168,10 @@ class ReplicaController:
     def _apply_batch(self, batch_df) -> None:
         """Apply one micro-batch: sequence by gtid, coalesce consecutive
         same-(table, op) events, apply each run as ONE set-wise snapshot
-        transform (union / keyed anti-join)."""
+        transform (union / keyed anti-join). The applier is its own
+        session, as MySQL's applier thread is, so its writes are in no
+        statement's undo log: each run stays applied, and counted in the
+        position, when a later event makes START REPLICA fail."""
         events = [r.asDict(recursive=True)
                   for r in batch_df.orderBy("gtid").collect()]
         runs: list[tuple[str, str, list[dict]]] = []
@@ -179,12 +182,19 @@ class ReplicaController:
                 runs[-1][2].append(ev)
             else:
                 runs.append((ev["table"], ev["op"], [ev]))
-        for table, op, evs in runs:
-            self._apply_run(table, op, evs)
-            self.events_applied += len(evs)
-            self.last_gtid = max(
-                self.last_gtid,
-                max(e["gtid"] or 0 for e in evs))
+        eng = self.eng
+        caller = eng.session  # waiting in START REPLICA on another thread
+        eng.session = eng.new_session()
+        eng.session.current_db = caller.current_db
+        try:
+            for table, op, evs in runs:
+                self._apply_run(table, op, evs)
+                self.events_applied += len(evs)
+                self.last_gtid = max(
+                    self.last_gtid,
+                    max(e["gtid"] or 0 for e in evs))
+        finally:
+            eng.session = caller
 
     def _apply_run(self, table: str, op: str, evs: list[dict]) -> None:
         from ..engine import SqlError

@@ -62,9 +62,10 @@ _FORMS = {
 
 
 def _state(e: Engine) -> tuple:
-    """Every table's snapshot (the DataFrame object: equal means the
-    same rows, and no Spark job runs), columns, keys, AUTO_INCREMENT
-    counter and history length, and every table's triggers."""
+    """Every table's snapshot (the DataFrame object: snapshots are
+    immutable, so the same object means the same rows, and no Spark job
+    runs), columns, keys and history length, and every table's
+    triggers."""
     tables = {}
     for db, ts_by_name in e.databases.items():
         for name, ts in ts_by_name.items():
@@ -74,12 +75,12 @@ def _state(e: Engine) -> tuple:
                 ts.primary_key, [(ix.name, ix.columns) for ix in ts.indexes],
                 [(fk.columns, fk.parent_table, fk.parent_columns)
                  for fk in ts.foreign_keys],
-                ts.auto_inc_next, len(ts.history))
+                len(ts.history))
     return tables, {t: [x.name for x in ts] for t, ts in e.triggers.items()}
 
 
-def _rows(e: Engine) -> dict:
-    return {(db, name): sorted(map(tuple, ts.df.collect()), key=repr)
+def _counters(e: Engine) -> dict:
+    return {(db, name): ts.auto_inc_next
             for db, ts_by_name in e.databases.items()
             for name, ts in ts_by_name.items()}
 
@@ -123,24 +124,78 @@ def _run_with_fault(e: Engine, sql: str, k: int | None) -> int:
 def test_failed_statement_leaves_every_table(eng, csv, form):
     """The statement runs once inside BEGIN … ROLLBACK to count its
     `_register` calls; then, for every k it reaches, its k-th call
-    raises. Each time every table is as it was before."""
+    raises. Each time every table is as it was before, except that an
+    AUTO_INCREMENT counter keeps the ids the statement took (InnoDB's
+    gap) and is never lowered: a failed TRUNCATE keeps its counter."""
     sql = _FORMS[form].format(csv=csv)
-    before, before_rows = _state(eng), _rows(eng)
+    before, counters = _state(eng), _counters(eng)
+
+    def unchanged(what: str) -> None:
+        assert _state(eng) == before, what
+        now = _counters(eng)
+        assert all(now[t] >= n for t, n in counters.items()), what
     eng.query("BEGIN")
     n = _run_with_fault(eng, sql, None)
     eng.query("ROLLBACK")
     assert n >= 1
-    assert _state(eng) == before
+    unchanged("rollback")
     for k in range(1, n + 1):
         with pytest.raises(_Fault):
             _run_with_fault(eng, sql, k)
-        assert _state(eng) == before, f"register call {k} of {n}"
-    assert _rows(eng) == before_rows
+        unchanged(f"register call {k} of {n}")
 
 
 def _tables(e: Engine, *ddl: str) -> None:
     for s in ddl:
         e.query(s)
+
+
+def test_failed_insert_keeps_its_auto_increment_gap(eng):
+    """The ids a failed multi-row INSERT took stay taken, as in InnoDB:
+    the next INSERT gets the id after them."""
+    _tables(eng, "CREATE TABLE g (id INT PRIMARY KEY AUTO_INCREMENT, "
+                 "v TINYINT)")
+    with pytest.raises(SqlError, match="out of range"):
+        eng.query("INSERT INTO g (v) VALUES (1), (1000)")
+    eng.query("INSERT INTO g (v) VALUES (2)")
+    assert rows(eng.query("SELECT id, v FROM g")) == [(3, 2)]
+
+
+def test_rollback_to_savepoint_forgets_later_savepoints(eng):
+    """ROLLBACK TO a forgets every savepoint set after a, one set at the
+    same position in the log included, and keeps a itself."""
+    eng.query("BEGIN")
+    try:
+        eng.query("SAVEPOINT a")
+        eng.query("SAVEPOINT b")
+        eng.query("ROLLBACK TO a")
+        with pytest.raises(SqlError, match="does not exist"):
+            eng.query("ROLLBACK TO b")
+        eng.query("ROLLBACK TO a")
+    finally:
+        eng.query("ROLLBACK")
+
+
+def test_failed_start_replica_keeps_applied_events(eng, tmp_path):
+    """START REPLICA applies events as the replica's own session: an
+    event that fails does not undo the runs applied before it, which the
+    replica's position already counts."""
+    import json
+    _tables(eng, "CREATE TABLE rp (id BIGINT PRIMARY KEY, v VARCHAR(5))")
+    src = tmp_path / "stream"
+    src.mkdir()
+    (src / "000001.json").write_text("\n".join(json.dumps(e) for e in [
+        {"gtid": 1, "table": "rp", "op": "insert",
+         "row": {"id": "1", "v": "a"}},
+        {"gtid": 2, "table": "rp", "op": "delete", "key": {}}]))
+    eng.query(f"CHANGE REPLICATION SOURCE TO SOURCE_DIR='{src}'")
+    eng.query("RESET REPLICA")
+    try:
+        with pytest.raises(Exception, match="without key"):
+            eng.query("START REPLICA")
+        assert rows(eng.query("SELECT id, v FROM rp")) == [(1, "a")]
+    finally:
+        eng.query("RESET REPLICA")
 
 
 def test_failed_cascade_delete_keeps_children(eng):

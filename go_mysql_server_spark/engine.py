@@ -2195,7 +2195,10 @@ class Engine:
         sql/plan/versionable.go:19-24; dolt binds both commit ordinals
         and wall-clock timestamps) — then every other `db.t`, including
         the 3-part column form `db.t.i` (reference: catalog-qualified
-        resolution in sql/analyzer/resolve_tables.go)."""
+        resolution in sql/analyzer/resolve_tables.go). A 3-part column of
+        an AS OF table binds to its version's view."""
+        versions: dict[tuple[str, str], str] = {}
+
         def as_of(m: re.Match) -> str:
             when = m.group(4) and re.fullmatch(r"'([^']+)'",
                                                lits[int(m.group(4))])
@@ -2221,9 +2224,14 @@ class Engine:
                     raise SqlError(
                         f"table {tbl!r} has no version at or before "
                         f"{when.group(1)!r}")
-            return self._table_view(db, ts, version)
+            versions[db, tbl] = self._table_view(db, ts, version)
+            return versions[db, tbl]
 
         masked = self._AS_OF.sub(as_of, masked)
+        for (db, tbl), view in versions.items():
+            masked = re.sub(
+                rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\s*\.",
+                f"{view}.", masked, flags=re.I)
         for db, tables in self.databases.items():
             if db.lower() not in masked.lower():
                 continue
@@ -4808,156 +4816,200 @@ class Engine:
         return sql[:m.start()], m.group(1), int(m.group(2)), \
             int(m.group(3) or 0)
 
-    def _limit_victims_where(self, ts: TableState, where: str,
-                             order_sql: str | None, n: int,
-                             offset: int = 0) -> str:
-        """Refine `where` to the first n matching rows in the given order:
-        pick victim keys (PK, else all columns) with one bounded job, then
-        pin them as an IN-list — n is the statement's own LIMIT, so the
-        collect is user-bounded exactly like MySQL's applier."""
-        key = list(ts.primary_key) or [c.name for c in ts.columns]
-        vict = ts.df.filter(where)
-        if order_sql:
-            order_cols = []
-            for item in _split_top_level(order_sql):
-                it = item.strip()
-                desc = bool(re.search(r"\s+DESC$", it, re.I))
-                expr = F.expr(self._transpile(
-                    re.sub(r"\s+(ASC|DESC)$", "", it, flags=re.I)))
-                order_cols.append(expr.desc() if desc else expr.asc())
-            vict = vict.orderBy(*order_cols)
-        rows = vict.select(*key).limit(n + offset).collect()[offset:]
-        if not rows:
-            return "false"
-        return f"({where}) AND {self._keys_in_predicate(key, rows)}"
+    _ONE_REF = re.compile(
+        r"\s*((?:\x00\d+\x00|\w+)(?:\s*\.\s*(?:\x00\d+\x00|\w+))?)"
+        r"(?:\s+(?:AS\s+)?(?!AS\b)(\x00\d+\x00|\w+))?\s*", re.I)
 
-    @staticmethod
-    def _keys_in_predicate(key: list[str], rows) -> str:
-        """Pin a collected victim-key set as an IN-list predicate."""
-        if len(key) == 1:
-            vals = ", ".join(Engine._lit(r[0]) for r in rows)
-            return f"`{key[0]}` IN ({vals})"
-        tuples = ", ".join(
-            "(" + ", ".join(Engine._lit(v) for v in r) + ")" for r in rows)
+    def _one_ref(self, refs: str, lits: list[str]):
+        """A masked table-references clause that names one table, `[db.]t
+        [[AS] a]`: its table, the clause to stage it from (an unaliased
+        `db.t` is aliased as `t`, so `t.c` binds) and the qualifiers its
+        columns may carry. None for any other clause."""
+        m = self._ONE_REF.fullmatch(refs)
+        if m is None:
+            return None
+        name = re.sub(r"[`\s]", "", unmask_literals(m.group(1), lits))
+        ts = self._table(name)
+        alias = m.group(2) and unmask_literals(m.group(2), lits).strip("`")
+        if alias is None and "." in name:
+            refs = f"{refs} AS {mask_into(f'`{ts.name}`', lits)}"
+        return ts, refs, {q.lower() for q in (alias, ts.name, name) if q}
+
+    def _first_victims(self, ts: TableState, cte: str, refs: str,
+                       where: str | None, order_sql: str | None, n: int,
+                       offset: int, lits: list[str]) -> str:
+        """UPDATE/DELETE … [ORDER BY] LIMIT: the first n matching rows as a
+        masked predicate. Their keys (the PRIMARY KEY, else every column)
+        come from one SELECT bounded by the statement's own LIMIT, as
+        MySQL's applier reads them, and are pinned as an IN-list."""
+        key = list(ts.primary_key) or [c.name for c in ts.columns]
         cols = ", ".join(f"`{k}`" for k in key)
-        return f"({cols}) IN ({tuples})"
+        rows = self._select_masked(
+            f"{cte}SELECT {mask_into(cols, lits)} FROM {refs}"
+            + (f" WHERE {where}" if where else "")
+            + (f" ORDER BY {order_sql}" if order_sql else "")
+            + f" LIMIT {n} OFFSET {offset}", lits).collect()
+        if not rows:
+            return "FALSE"
+        tuples = ", ".join("(" + ", ".join(self._lit(v) for v in r) + ")"
+                           for r in rows)
+        return mask_into(f"({cols}) IN ({tuples})", lits)
+
+    def _stage(self, ts: TableState, cte: str, refs: str, where: str | None,
+               news: dict, lits: list[str], qual: str | None = None,
+               limit: tuple = (None, 0)) -> DataFrame:
+        """The rows an UPDATE or DELETE writes to `ts`, staged by one
+        SELECT through the SELECT pipeline: every column as it stands, a
+        boolean `__matched` and `__new_<c>` per column `news` assigns
+        (column → masked expression). One table ref (`qual` None) is a flag
+        over the table's own rows, with no join and no key. Over several
+        refs the join's rows, one per PRIMARY KEY of the target `qual`
+        names (`limit`: the LIMIT and OFFSET on them), left-join the
+        table."""
+        new_cols = "".join(f", ({e}) AS {mask_into(f'`__new_{c}`', lits)}"
+                           for c, e in news.items())
+        if qual is None:
+            return self._select_masked(
+                f"{cte}SELECT *, CASE WHEN {where or 'TRUE'} THEN TRUE ELSE "
+                f"FALSE END AS __matched{new_cols} FROM {refs}", lits)
+        pk = list(ts.primary_key)
+        if not pk:
+            raise SqlError(
+                "multi-table UPDATE requires a primary key on the target")
+        keys = ", ".join(mask_into(f"{qual}.`{k}` AS `{k}`", lits)
+                         for k in pk)
+        hits = self._select_masked(
+            f"{cte}SELECT {keys}, TRUE AS __matched{new_cols} FROM {refs}"
+            + (f" WHERE {where}" if where else ""), lits).dropDuplicates(pk)
+        n, offset = limit
+        if offset:
+            hits = hits.offset(offset)
+        if n is not None:
+            hits = hits.limit(n)
+        # checkpointed: the writer reads the rows twice, and the join runs
+        # once
+        return ts.df.join(hits, pk, "left").select(
+            *[c.name for c in ts.columns],
+            F.coalesce("__matched", F.lit(False)).alias("__matched"),
+            *[f"__new_{c}" for c in news]).localCheckpoint(eager=True)
 
     def _q_update(self, sql: str, cte_prefix: str = "") -> OkResult:
-        sql = on_text(self._substitute_vars, sql)
-        if re.search(r"UPDATE\s+IGNORE\s+", sql, re.I) is None and re.search(
-            r"\bJOIN\b", sql.split(" SET ")[0] if " SET " in sql else sql, re.I
-        ):
-            return self._q_update_join(sql, cte_prefix)
-        sql, order_sql, limit_n, offset_n = self._strip_order_limit(sql)
-        # single-table alias form (UPDATE test t SET t.i = ...): fold the
-        # alias away — strip `alias.` qualifiers outside string literals
-        am = re.match(
-            r"(UPDATE\s+(?:IGNORE\s+)?)(?!IGNORE\b)([`\w.]+)\s+(?:AS\s+)?"
-            r"(?!SET\b)([`\w]+)\s+(SET\s+.*)$", sql, re.I | re.S)
-        if am:
-            alias = am.group(3).strip("`")
-            masked, lits = mask_literals(am.group(4))
-            masked = re.sub(rf"\b{re.escape(alias)}\.", "", masked)
-            sql = f"{am.group(1)}{am.group(2)} " \
-                  f"{unmask_literals(masked, lits)}"
-        m = re.match(r"UPDATE\s+(IGNORE\s+)?([`\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-                     sql, re.I | re.S)
-        if not m:
+        """UPDATE [IGNORE] <table_refs> SET … [WHERE] [ORDER BY] [LIMIT]
+        (reference sql/plan/update.go; update_join.go is the same node over
+        a join): each target table is staged by one SELECT (`_stage`) and
+        checked by `_update_rows`. Then every target's new snapshot
+        commits, then the ON UPDATE foreign-key actions run, then the AFTER
+        UPDATE triggers."""
+        masked, lits = mask_literals(tp.fold_literal_prefixes(sql))
+        cte = mask_into(cte_prefix, lits) + " " if cte_prefix else ""
+        masked, order_sql, limit_n, offset_n = self._strip_order_limit(masked)
+        head = re.match(r"UPDATE\s+(IGNORE\s+)?", masked, re.I)
+        set_kw = tp._top_level_match(masked, r"\bSET\b")
+        if set_kw is None:
             raise SqlError(f"cannot parse UPDATE: {sql[:60]!r}")
-        ts = self._table(m.group(2))
-        if f"{ts.name.lower()}." in sql.lower():
-            # self-qualified references (UPDATE test SET ... WHERE
-            # test.pk = 0) — fold the table qualifier away, outside
-            # string literals
-            tail = sql[m.end(2):]
-            masked, lits = mask_literals(tail)
-            masked = re.sub(rf"(?<![\w`.]){re.escape(ts.name)}\.", "",
-                            masked, flags=re.I)
-            sql = sql[:m.end(2)] + unmask_literals(masked, lits)
-            m = re.match(
-                r"UPDATE\s+(IGNORE\s+)?([`\w.]+)\s+SET\s+(.*?)"
-                r"(?:\s+WHERE\s+(.*))?$", sql, re.I | re.S)
-        if cte_prefix and m.group(4):
-            # WITH ... UPDATE: the WHERE references CTE names, which
-            # DataFrame.filter can't host — resolve victims through the
-            # full SELECT pipeline and pin their keys as an IN-list
-            # (bounded by the DML batch, like _limit_victims_where)
-            key = list(ts.primary_key) or [c.name for c in ts.columns]
-            cols = ", ".join(f"`{k}`" for k in key)
-            vict = self._q_select(
-                f"{cte_prefix} SELECT {cols} FROM {ts.name}"
-                f" WHERE {m.group(4)}")
-            rows = vict.distinct().collect()
-            where = self._keys_in_predicate(key, rows) if rows else "false"
-        else:
-            wtxt = m.group(4)
-            if wtxt and any(c.enum_values is not None
-                            or c.set_values is not None
-                            for c in ts.columns):
-                # ENUM/SET numeric comparisons in the WHERE only — the
-                # SET clause is an assignment, never a comparison
-                prefix = f"SELECT * FROM {ts.name} WHERE "
-                try:
-                    rewritten = on_text(self._rewrite_enum_arith,
-                                        prefix + wtxt)
-                    if rewritten.startswith(prefix):
-                        wtxt = rewritten[len(prefix):]
-                except SqlError:
-                    pass
-            where = self._transpile(wtxt) if wtxt else "true"
-        if limit_n is not None:
-            where = self._limit_victims_where(ts, where, order_sql,
-                                              limit_n, offset_n)
-        assigns = {
-            a.split("=", 1)[0].strip().strip("`"): a.split("=", 1)[1].strip()
-            for a in _split_top_level(m.group(3))
-        }
-        unknown = set(assigns) - {c.name for c in ts.columns}
-        if unknown:
-            raise SqlError(f"unknown columns in UPDATE: {sorted(unknown)}")
-        # SET col = DEFAULT: a generated column recomputes (no-op here,
-        # the recompute pass runs anyway — reference issue #9438); a
-        # plain column takes its declared default (or NULL)
-        by_name = {c.name: c for c in ts.columns}
-        for cname in [k for k, v in assigns.items()
-                      if v.strip().upper() == "DEFAULT"]:
-            c = by_name.get(cname)
-            if c is None:
-                continue
-            if c.generated is not None:
-                del assigns[cname]
+        refs, rest = masked[head.end():set_kw.start()], masked[set_kw.end():]
+        where_kw = tp._top_level_match(rest, r"\bWHERE\b")
+        where = where_kw and rest[where_kw.end():].strip()
+        one = self._one_ref(refs, lits)
+        if one is None:
+            alias_map, first = self._refs_aliases(refs, lits)
+        # qualifier → (table, qualifier text, column → masked expression)
+        targets: dict[str, tuple] = {}
+        for a in _split_top_level(rest[:where_kw.start()] if where_kw
+                                  else rest):
+            lhs, rhs = a.split("=", 1)
+            *qual, col = lhs.strip().split(".")
+            col = unmask_literals(col, lits).strip().strip("`")
+            qual = ".".join(qual)
+            qname = re.sub(r"[`\s]", "", unmask_literals(qual, lits))
+            if one is not None:
+                if qname and qname.lower() not in one[2]:
+                    raise SqlError(
+                        f"unknown columns in UPDATE: {[f'{qname}.{col}']}")
+                ts, qual, qname = one[0], None, ""
             else:
-                assigns[cname] = (_normalize_default(c.default)
-                                  if c.default else "NULL")
-        gen_assigned = set(assigns) & {c.name for c in ts.columns if c.generated}
-        if gen_assigned:
-            raise SqlError(
-                f"the value specified for generated column "
-                f"{sorted(gen_assigned)} is not allowed")
-        ignore = bool(m.group(1)) or not self._strict_mode()
-        explicit_ignore = bool(m.group(1))
-        matched = ts.df.filter(where)
-        if not assigns:
+                if not qname:  # the first table ref's column
+                    qname = first or ""
+                    qual = qname if "." in qname else \
+                        mask_into(f"`{qname}`", lits)
+                try:
+                    ts = self._table(alias_map.get(qname.lower(), qname))
+                except SqlError:
+                    raise SqlError(f"the target table {qname!r} of the "
+                                   f"UPDATE is not updatable") from None
+            targets.setdefault(qname.lower(), (ts, qual, {}))[2][col] = \
+                rhs.strip()
+        ignore_kw = head.group(1) is not None
+        ignore = ignore_kw or not self._strict_mode()
+        staged = []
+        for ts, qual, assigns in targets.values():
+            by_name = {c.name.lower(): c for c in ts.columns}
+            unknown = sorted(c for c in assigns if c.lower() not in by_name)
+            if unknown:
+                raise SqlError(f"unknown columns in UPDATE: {unknown}")
+            news = {}
+            for name, rhs in assigns.items():
+                c = by_name[name.lower()]
+                if rhs.upper() != "DEFAULT":
+                    news[c.name] = rhs
+                elif c.generated is None:
+                    # SET col = DEFAULT: the declared default (or NULL); a
+                    # generated column recomputes anyway
+                    news[c.name] = mask_into(
+                        _normalize_default(c.default), lits) \
+                        if c.default else "NULL"
+            generated = sorted(c for c in news if by_name[c.lower()].generated)
+            if generated:
+                raise SqlError(f"the value specified for generated column "
+                               f"{generated} is not allowed")
+            if one is not None:
+                flag = where
+                if limit_n is not None:
+                    flag = self._first_victims(ts, cte, one[1], where,
+                                               order_sql, limit_n, offset_n,
+                                               lits)
+                base = self._stage(ts, cte, one[1], flag, news, lits)
+            else:
+                base = self._stage(ts, cte, refs, where, news, lits, qual,
+                                   (limit_n, offset_n))
+            staged.append((ts, base, list(news)))
+        done = [(ts, *self._update_rows(ts, base, news, ignore, ignore_kw))
+                for ts, base, news in staged]
+        # FOUND_ROWS() after an UPDATE reports the matched-row count
+        # (reference found_rows.go + update result Info.Matched)
+        self.session.found_rows_n = total = sum(d[1] for d in done)
+        for ts, _, out, _, _ in done:
+            if out is not None:
+                self._register(ts, out.localCheckpoint(eager=True))
+        for ts, _, _, fk_actions, _ in done:
+            if fk_actions is not None:
+                self._apply_fk_on_update(ts, *fk_actions)
+        for *_, after in done:
+            after()
+        return OkResult(total)
+
+    def _update_rows(self, ts: TableState, base: DataFrame, assigned: list,
+                     ignore: bool, ignore_kw: bool) -> tuple:
+        """UPDATE's writer for one target, over its staged rows (`_stage`):
+        the new values' strict checks or lenient cast, ENUM/SET
+        normalization, generated columns, the BEFORE UPDATE triggers, then
+        UPDATE IGNORE's revert or the row, child foreign-key and key
+        checks. Returns the matched-row count, the new snapshot (None when
+        nothing is assigned), the ON UPDATE foreign-key actions' arguments
+        (None when there are none) and a thunk running the AFTER UPDATE
+        triggers."""
+        names = [c.name for c in ts.columns]
+        matched = base.filter("__matched").select(*names)
+        if not assigned:
             # every assignment was a generated-column DEFAULT: nothing
             # changes, but the statement still reports matched rows
-            self.session.found_rows_n = n_match = matched.count()
-            return OkResult(n_match)
+            return matched.count(), None, None, lambda: None
 
-        def _assigned(c):
-            expr = F.expr(self._transpile(assigns[c.name]))
-            if not ignore:
-                return expr.cast(c.spark_type)
-            return self._lenient_cast(c, expr)
+        def new(c):
+            value = F.col(f"`__new_{c.name}`")
+            return (self._lenient_cast(c, value) if ignore
+                    else value.cast(c.spark_type))
 
-        # pin the match decision BEFORE assignments mutate the columns the
-        # WHERE references (UPDATE ... SET s='b' WHERE s='a')
-        base = ts.df.withColumn("__matched", F.expr(where))
-        out_cols = [
-            F.when(F.col("__matched"), _assigned(c))
-            .otherwise(F.col(c.name)).alias(c.name)
-            if c.name in assigns else F.col(c.name)
-            for c in ts.columns
-        ]
         utrigs = [t for t in self.triggers.get(ts.name, [])
                   if t.event == "UPDATE"]
         seq_rows = (any(t.timing == "BEFORE"
@@ -4966,15 +5018,19 @@ class Engine:
                     or any(t.timing == "AFTER"
                            and not self._old_trigger_vectorizable(t)
                            for t in utrigs))
-        old_carry = ([F.col(c.name).alias(f"__old__{c.name}")
-                      for c in ts.columns] if seq_rows else [])
         # strict mode checks the assigned values before their cast, carried
         # as the columns `__pre<i>`
         pre_checks = [] if ignore else self._int_bound_checks(
-            ts, {c: F.expr(self._transpile(e)) for c, e in assigns.items()})
+            ts, {c: F.col(f"`__new_{c}`") for c in assigned})
         pre = [f"__pre{i}" for i in range(len(pre_checks))]
-        updated = base.select(*out_cols, "__matched", *old_carry, *[
-            p.alias(n) for (p, _), n in zip(pre_checks, pre)])
+        # the old values ride along as `__old_<c>`: IGNORE's revert, the
+        # foreign-key actions and row-at-a-time triggers read them
+        updated = base.select(*[
+            F.when(F.col("__matched"), new(c)).otherwise(F.col(c.name))
+            .alias(c.name) if c.name in assigned else F.col(c.name)
+            for c in ts.columns], "__matched",
+            *[F.col(c).alias(f"__old_{c}") for c in names],
+            *[p.alias(n) for (p, _), n in zip(pre_checks, pre)])
         if any(c.enum_values is not None or c.set_values is not None
                or c.fsp is not None or c.is_year for c in ts.columns):
             updated = self._enum_set_normalize(ts, updated)
@@ -4984,18 +5040,15 @@ class Engine:
         # before the cast, then the row checks — after the BEFORE triggers
         # instead when there are any, as they may still change the rows
         checks = [(F.col(n), msg) for n, (_, msg) in zip(pre, pre_checks)]
-        row_checks = [] if explicit_ignore else self._row_checks(ts)
+        row_checks = [] if ignore_kw else self._row_checks(ts)
         if not any(t.timing == "BEFORE" for t in utrigs):
             checks, row_checks = checks + row_checks, []
         n_match, err, _ = self._judge(updated, checks,
                                       where=F.col("__matched"))
-        # FOUND_ROWS() after an UPDATE reports the matched-row count
-        # (reference found_rows.go + update result Info.Matched)
-        self.session.found_rows_n = n_match
         if err:
             raise err
         updated = updated.drop(*pre)
-        pairs_old = pairs_new = None
+        pairs = None
         if seq_rows and n_match:
             # MySQL row-at-a-time trigger sequencing over the matched rows
             # (bounded by the DML batch, an OLTP surface): BEFORE triggers
@@ -5003,32 +5056,28 @@ class Engine:
             # apply in row order
             from .procedures import ProcedureInterpreter
 
-            rows = updated.filter("__matched").collect()
-            pairs_old = [{c.name.lower(): r[f"__old__{c.name}"]
-                          for c in ts.columns} for r in rows]
-            pairs_new = [{c.name.lower(): r[c.name]
-                          for c in ts.columns} for r in rows]
-            bts = [t for t in utrigs if t.timing == "BEFORE"]
-            for i, newd in enumerate(pairs_new):
-                for t in bts:
-                    ProcedureInterpreter(self).run_trigger(
-                        t.body, new=newd, old=pairs_old[i])
-            data = [tuple(self._py_coerce(d[c.name.lower()], c.spark_type)
-                          for c in ts.columns) for d in pairs_new]
-            matched_new = (self.spark.createDataFrame(data, ts.schema)
-                           if data else self._empty_df(ts))
-            updated = base.filter(
-                "NOT __matched OR __matched IS NULL").select(
-                *[c.name for c in ts.columns]).withColumn(
-                "__matched", F.lit(False)).unionByName(
-                matched_new.withColumn("__matched", F.lit(True)))
+            pairs = [({c.lower(): r[f"__old_{c}"] for c in names},
+                      {c.lower(): r[c] for c in names})
+                     for r in updated.filter("__matched").collect()]
+            for old, row in pairs:
+                for t in utrigs:
+                    if t.timing == "BEFORE":
+                        ProcedureInterpreter(self).run_trigger(
+                            t.body, new=row, old=old)
+            data = [tuple(self._py_coerce(row[c.name.lower()], c.spark_type)
+                          for c in ts.columns)
+                    + tuple(old[c.lower()] for c in names)
+                    for old, row in pairs]
+            schema = T.StructType(ts.schema.fields + [
+                T.StructField(f"__old_{c.name}", c.spark_type)
+                for c in ts.columns])
+            updated = updated.filter("NOT __matched").unionByName(
+                self.spark.createDataFrame(data, schema)
+                .withColumn("__matched", F.lit(True)))
         else:
-            updated = updated.drop(*[f"__old__{c.name}"
-                                     for c in ts.columns]) \
-                if seq_rows else updated
             updated = self._apply_before_update_triggers(ts, updated)
-        if explicit_ignore and n_match:
-            updated = self._update_ignore_revert(ts, base, updated, assigns)
+        if ignore_kw and n_match:
+            updated = self._update_ignore_revert(ts, updated, assigned)
         else:
             err = row_checks and self._judge(
                 updated, row_checks, where=F.col("__matched"))[1]
@@ -5037,32 +5086,29 @@ class Engine:
             for fk in ts.foreign_keys:
                 self._check_fk(ts, fk, updated.filter("__matched"))
             if n_match:
-                self._check_end_state(ts, updated, assigns)
-        fks = self._referencing_fks(ts, set(assigns))
+                self._check_end_state(ts, updated, assigned)
+        fk_actions = None
+        fks = self._referencing_fks(ts, set(assigned))
         if fks and n_match:
             needed = sorted({p for _, fk in fks for p in fk.parent_columns})
-            types = {c.name: c.spark_type for c in ts.columns}
-            mapping = matched.select(
-                *[F.col(p).alias(f"__old_{p}") for p in needed],
-                *[((F.expr(self._transpile(assigns[p])).cast(types[p]))
-                   if p in assigns else F.col(p)).alias(f"__new_{p}")
-                  for p in needed],
-            )
-            self._apply_fk_on_update(ts, mapping, fks)
-        self._register(ts, updated.drop("__matched").localCheckpoint(
-            eager=True))
-        if n_match:
-            if pairs_old is not None:
-                from .procedures import ProcedureInterpreter
+            fk_actions = (updated.filter("__matched").select(
+                *[f"__old_{p}" for p in needed],
+                *[F.col(p).alias(f"__new_{p}") for p in needed]), fks)
 
-                ats = [t for t in utrigs if t.timing == "AFTER"]
-                for i, old in enumerate(pairs_old):
-                    for t in ats:
-                        ProcedureInterpreter(self).run_trigger(
-                            t.body, new=pairs_new[i], old=old)
-            else:
+        def after() -> None:
+            if not n_match:
+                return
+            if pairs is None:
                 self._run_old_triggers(ts, matched, "UPDATE")
-        return OkResult(n_match)
+                return
+            from .procedures import ProcedureInterpreter
+
+            for old, row in pairs:
+                for t in utrigs:
+                    if t.timing == "AFTER":
+                        ProcedureInterpreter(self).run_trigger(
+                            t.body, new=row, old=old)
+        return n_match, updated.select(*names), fk_actions, after
 
     _TRIG_SIGNAL_RE = re.compile(
         r"IF\s+(.*?)\s+THEN\s+SIGNAL\s+SQLSTATE(?:\s+VALUE)?\s+"
@@ -5132,8 +5178,8 @@ class Engine:
                         .otherwise(F.col(mm.group(1)))
                     )
                 updated = updated.select(
-                    *[cols[c.name].alias(c.name) for c in ts.columns], "__matched"
-                )
+                    *[cols[c.name].alias(c.name) for c in ts.columns],
+                    *[c for c in updated.columns if c not in cols])
         return updated
 
     def _changeable_keys(self, ts: TableState, assigned) -> list:
@@ -5162,25 +5208,14 @@ class Engine:
             _raise_dup(keys, self._key_verdict(keys, state.filter(hit),
                                                state.filter(~hit)))
 
-    def _update_ignore_revert(self, ts: TableState, base: DataFrame,
-                              updated: DataFrame,
-                              assigns: dict) -> DataFrame:
+    def _update_ignore_revert(self, ts: TableState, updated: DataFrame,
+                              assigned) -> DataFrame:
         """UPDATE IGNORE: a matched row whose new values violate a CHECK,
         a child-side FK, or would collide with another row's key keeps its
-        OLD values — MySQL skips the row with a warning (reference
-        sql/plan/update.go Ignore handling).
-
-        `base` still holds the pre-update values; carry them alongside the
-        new ones, evaluate the violation predicate on the new values, and
-        select old-vs-new per row."""
-        old_cols = [F.col(c.name).alias(f"__old_{c.name}")
-                    for c in ts.columns if c.name in assigns]
-        carried = base.select(
-            "*", F.monotonically_increasing_id().alias("__rid"))
-        upd = updated.withColumn(
-            "__rid", F.monotonically_increasing_id()).join(
-            carried.select("__rid", *old_cols), "__rid")
-
+        old values (`__old_<c>`) and leaves the matched rows — MySQL skips
+        the row with a warning (reference sql/plan/update.go Ignore
+        handling)."""
+        upd = updated.withColumn("__rid", F.monotonically_increasing_id())
         viol = F.lit(False)
         for ci, chk in enumerate(ts.checks):
             if not ts.check_enforced_at(ci):
@@ -5192,24 +5227,22 @@ class Engine:
         # first in table order wins (MySQL row-at-a-time IGNORE; reference
         # insert_queries.go IgnoreWithDuplicateUniqueKeyKeylessScripts).
         # NULL key parts never collide
-        for ki, (_, cols) in enumerate(self._changeable_keys(ts, assigns)):
-            orig = base.select(*[
-                F.col(k).alias(f"__k{ki}_{k}") for k in cols
+        for ki, (_, cols) in enumerate(self._changeable_keys(ts, assigned)):
+            orig = updated.select(*[
+                F.col(f"__old_{k}").alias(f"__k{ki}_{k}") for k in cols
             ]).na.drop().distinct()
             cond = F.lit(True)
             changed = F.lit(False)
             for k in cols:
                 cond = cond & F.col(k).eqNullSafe(F.col(f"__k{ki}_{k}"))
-                old_ref = (F.col(f"__old_{k}") if k in assigns
-                           else F.col(k))
-                changed = changed | ~F.col(k).eqNullSafe(old_ref)
+                changed = changed | ~F.col(k).eqNullSafe(F.col(f"__old_{k}"))
             upd = upd.join(F.broadcast(orig), cond, "left")
             wdup = Window.partitionBy(*cols).orderBy("__rid")
             viol = viol | (changed & (
                 F.col(f"__k{ki}_{cols[0]}").isNotNull()
                 | (_all_set(cols) & (F.row_number().over(wdup) > 1))))
         for fi, fk in enumerate(ts.foreign_keys):
-            if not (set(fk.columns) & set(assigns)):
+            if not (set(fk.columns) & set(assigned)):
                 continue
             try:
                 parent = self._table(fk.parent_table)
@@ -5230,281 +5263,90 @@ class Engine:
             viol = viol | (~fk_null & F.col(f"__fkp{fi}_0").isNull())
 
         upd = upd.withColumn("__viol", F.col("__matched") & viol)
-        final_cols = []
-        for c in ts.columns:
-            if c.name in assigns:
-                final_cols.append(
-                    F.when(F.col("__viol"), F.col(f"__old_{c.name}"))
-                    .otherwise(F.col(c.name)).alias(c.name))
-            else:
-                final_cols.append(F.col(c.name))
-        return upd.select(*final_cols,
-                          (F.col("__matched")
-                           & ~F.col("__viol")).alias("__matched"))
-
-    def _q_update_join(self, sql: str, cte_prefix: str = "") -> OkResult:
-        """Multi-table UPDATE (reference sql/plan/update_join.go:1-269),
-        single target table: UPDATE t JOIN ... ON ... SET t.c = expr [WHERE].
-
-        Evaluated as: project (pk → new values) over the join, then merge
-        into the target by PK — two distributed joins, no row loops.
-        A WITH prefix (cte_prefix) is transpiled and prepended to the
-        staging SELECT so the join refs may name CTEs."""
-        limit_n = offset_n = None
-        lm = re.search(r"\s+LIMIT\s+(\d+)(?:\s+OFFSET\s+(\d+))?\s*;?\s*$",
-                       sql, re.I)
-        if lm:  # LIMIT on a multi-table UPDATE caps the matched rows
-            limit_n = int(lm.group(1))
-            offset_n = int(lm.group(2)) if lm.group(2) else None
-            sql = sql[:lm.start()]
-        m = re.match(r"UPDATE\s+(.*?)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-                     sql, re.I | re.S)
-        if not m:
-            raise SqlError(f"cannot parse multi-table UPDATE: {sql[:60]!r}")
-        from_clause, set_clause, where = m.group(1), m.group(2), m.group(3)
-        alias_map, first_qual = self._refs_aliases(from_clause)
-        if first_qual is None:
-            first_qual = from_clause.split()[0].strip("`")
-        # group SET assignments by their qualifier — MySQL multi-table
-        # UPDATE can target several tables in one statement
-        # (reference sql/plan/update_join.go)
-        groups: dict[str, dict[str, str]] = {}
-        quals: dict[str, str] = {}
-        for a in _split_top_level(set_clause):
-            lhs, rhs = a.split("=", 1)
-            lhs = lhs.strip().strip("`")
-            if "." in lhs:
-                qual, col = lhs.split(".", 1)
-                qual = qual.strip("`")
-                col = col.strip().strip("`")
-            else:
-                qual, col = first_qual, lhs
-            groups.setdefault(qual.lower(), {})[col] = rhs.strip()
-            quals[qual.lower()] = qual
-        where_sql = f" WHERE {self._transpile(where)}" if where else ""
-        # stage every target's updates and new state, validate all
-        # (CHECK/FK), then commit — a violation on ANY target must leave
-        # EVERY table untouched (MySQL statement atomicity)
-        staged = []
-        total = 0
-        trig_after: list = []  # (AFTER triggers, pairs_old, pairs_new)
-        # ON UPDATE actions run on the committed targets, once every
-        # target has passed its checks (a child may be a target too)
-        fk_actions: list = []  # (parent, old → new key mapping, fks)
-        for qual_l, assigns in groups.items():
-            qual = quals[qual_l]
-            tname = alias_map.get(qual_l, qual)
-            try:
-                ts = self._table(tname)
-            except SqlError:
-                raise SqlError(
-                    f"the target table {qual!r} of the UPDATE is not "
-                    f"updatable")
-            if not ts.primary_key:
-                raise SqlError(
-                    "multi-table UPDATE requires a primary key on the "
-                    "target")
-            pk = list(ts.primary_key)
-            pk_select = ", ".join(f"{qual}.{k} AS {k}" for k in pk)
-            new_select = ", ".join(
-                f"({self._transpile(expr)}) AS __new_{c}"
-                for c, expr in assigns.items())
-            cte_sql = (self._transpile(cte_prefix) + " ") if cte_prefix \
-                else ""
-            updates = self.spark.sql(
-                f"{cte_sql}SELECT {pk_select}, {new_select}, "
-                f"1 AS __upd_match FROM "
-                f"{self._transpile(from_clause)}{where_sql}"
-            ).dropDuplicates(pk)
-            if offset_n:
-                updates = updates.offset(offset_n)
-            if limit_n is not None:
-                updates = updates.limit(limit_n)
-            n = updates.count()
-            total += n
-            # UPDATE triggers fire per matched row on EACH target table
-            # (reference update_join.go routes through the same trigger
-            # plan as single-table UPDATE). BEFORE bodies may mutate NEW
-            # (rebuilt into the staged updates); AFTER bodies run post-
-            # commit, row-sequentially, with OLD./NEW. bound.
-            utrigs = [t for t in self.triggers.get(ts.name, [])
-                      if t.event == "UPDATE"]
-            if utrigs and n:
-                from .procedures import ProcedureInterpreter
-                prs = ts.df.join(updates, pk, "inner").collect()
-                pairs_old = [{c.name.lower(): r[c.name]
-                              for c in ts.columns} for r in prs]
-                pairs_new = [
-                    {c.name.lower(): (r["__new_" + c.name]
-                                      if c.name in assigns else r[c.name])
-                     for c in ts.columns} for r in prs]
-                bts = [t for t in utrigs if t.timing == "BEFORE"]
-                for i, newd in enumerate(pairs_new):
-                    for t in bts:
-                        ProcedureInterpreter(self).run_trigger(
-                            t.body, new=newd, old=pairs_old[i])
-                if bts and prs:
-                    # NEW may have been mutated — rebuild the staging df
-                    # over EVERY non-key column: a BEFORE trigger can SET
-                    # new.<col> on columns the statement didn't assign
-                    by_name = {c.name: c for c in ts.columns}
-                    fields = pk + [c.name for c in ts.columns
-                                   if c.name not in pk]
-                    data = [tuple(self._py_coerce(
-                        d[f.lower()], by_name[f].spark_type)
-                        for f in fields) for d in pairs_new]
-                    schema2 = T.StructType(
-                        [T.StructField(f, by_name[f].spark_type)
-                         for f in fields])
-                    rebuilt = self.spark.createDataFrame(data, schema2)
-                    assigns = {f: assigns.get(f, "/*trigger-set*/")
-                               for f in fields if f not in pk}
-                    updates = rebuilt.select(
-                        *pk,
-                        *[F.col(c).alias(f"__new_{c}") for c in assigns],
-                        F.lit(1).alias("__upd_match")).dropDuplicates(pk)
-                trig_after.append((
-                    [t for t in utrigs if t.timing == "AFTER"],
-                    pairs_old, pairs_new))
-            fks = self._referencing_fks(ts, set(assigns))
-            if fks and n:
-                needed = sorted(
-                    {p for _, fk in fks for p in fk.parent_columns})
-                old = ts.df.join(updates, pk, "inner")
-                mapping = old.select(
-                    *[F.col(p).alias(f"__old_{p}") for p in needed],
-                    *[(F.col(f"__new_{p}") if p in assigns
-                       else F.col(p)).alias(f"__new_{p}")
-                      for p in needed],
-                )
-                fk_actions.append((ts, mapping, fks))
-            joined = ts.df.join(updates, pk, "left")
-            matched = F.col("__upd_match").isNotNull()
-            out = joined.select(*[
-                (F.when(matched, F.col(f"__new_{c.name}"))
-                 .otherwise(F.col(c.name)).cast(c.spark_type)
-                 .alias(c.name))
-                if c.name in assigns else F.col(c.name)
-                for c in ts.columns
-            ], matched.alias("__matched"))
-            if any(c.generated for c in ts.columns):
-                # generated columns recompute from the post-assignment
-                # base values (reference virtual_column_table.go)
-                out = self._compute_generated(ts, out)
-            # enforced CHECKs over the updated rows
-            viol = F.lit(False)
-            for ci, chk in enumerate(ts.checks):
-                if not ts.check_enforced_at(ci):
-                    continue
-                viol = viol | ~F.coalesce(
-                    F.expr(self._transpile(chk)).cast("boolean"),
-                    F.lit(True))
-            if n and ts.checks:
-                if out.filter(F.col("__matched") & viol).count():
-                    raise SqlError(
-                        f"CHECK constraint violated on UPDATE of "
-                        f"{tname!r}")
-            if n:
-                self._check_end_state(ts, out, assigns)
-            staged.append((ts, out.drop("__matched")))
-        for ts, out in staged:
-            self._register(ts, out.localCheckpoint(eager=True))
-        for ts, mapping, fks in fk_actions:
-            self._apply_fk_on_update(ts, mapping, fks)
-        if trig_after:
-            from .procedures import ProcedureInterpreter
-            for ats, pairs_old, pairs_new in trig_after:
-                for i, old in enumerate(pairs_old):
-                    for t in ats:
-                        ProcedureInterpreter(self).run_trigger(
-                            t.body, new=pairs_new[i], old=old)
-        return OkResult(total)
+        return upd.select(*[
+            F.when(F.col("__viol"), F.col(f"__old_{c.name}"))
+            .otherwise(F.col(c.name)).alias(c.name) for c in ts.columns],
+            (F.col("__matched") & ~F.col("__viol")).alias("__matched"),
+            *[f"__old_{c.name}" for c in ts.columns])
 
     def _q_delete(self, sql: str, cte_prefix: str = "") -> OkResult:
         """DELETE in all reference forms (sql/plan/delete.go,
         enginetest delete_queries.go):
-        - DELETE FROM t [WHERE] [ORDER BY] [LIMIT [OFFSET]]
+        - DELETE FROM t [[AS] a] [WHERE] [ORDER BY] [LIMIT [OFFSET]]
         - DELETE t1[, t2] FROM <table_refs> [WHERE]   (targets by name
           or alias, case-insensitive)
         - DELETE FROM t1[, t2] USING <table_refs> [WHERE]
         - WITH ... DELETE ... (cte_prefix threaded from the router)
         """
-        sql = on_text(self._substitute_vars, sql)
-        try:  # ENUM/SET numeric comparisons in the WHERE (s = 2 → bitmask)
-            sql = on_text(self._rewrite_enum_arith, sql)
-        except SqlError:
-            pass
-        mu = re.match(
-            r"DELETE\s+FROM\s+([`\w.]+(?:\s*,\s*[`\w.]+)*)\s+USING\s+"
-            r"(.*?)(?:\s+WHERE\s+(.*))?$", sql, re.I | re.S)
-        mj = None
-        if not mu:
-            mj = re.match(
-                r"DELETE\s+(?!FROM\b)([`\w.]+(?:\s*,\s*[`\w.]+)*)\s+"
-                r"FROM\s+(.*?)(?:\s+WHERE\s+(.*))?$", sql, re.I | re.S)
-        m_multi = mu or mj
-        if m_multi:
-            targets = [t.strip().strip("`").removesuffix(".*")
-                       for t in m_multi.group(1).split(",")]
-            refs, where = m_multi.group(2), m_multi.group(3)
-            return self._delete_multi(targets, refs, where, cte_prefix)
-        sql, order_sql, limit_n, offset_n = self._strip_order_limit(sql)
-        m = re.match(r"DELETE\s+FROM\s+([`\w.]+)(?:\s+WHERE\s+(.*))?$", sql,
+        masked, lits = mask_literals(tp.fold_literal_prefixes(sql))
+        cte = mask_into(cte_prefix, lits) + " " if cte_prefix else ""
+        tlist = r"([\w.*\x00]+(?:\s*,\s*[\w.*\x00]+)*)"
+        m = (re.match(rf"DELETE\s+FROM\s+{tlist}\s+USING\s+(.*?)"
+                      rf"(?:\s+WHERE\s+(.*))?$", masked, re.I | re.S)
+             or re.match(rf"DELETE\s+(?!FROM\b){tlist}\s+FROM\s+(.*?)"
+                         rf"(?:\s+WHERE\s+(.*))?$", masked, re.I | re.S))
+        if m:
+            targets = [unmask_literals(t, lits).strip().strip("`")
+                       .removesuffix(".*") for t in m.group(1).split(",")]
+            return self._delete_multi(targets, m.group(2), m.group(3), cte,
+                                      lits)
+        masked, order_sql, limit_n, offset_n = self._strip_order_limit(masked)
+        m = re.match(r"DELETE\s+FROM\s+(.*?)(?:\s+WHERE\s+(.*))?$", masked,
                      re.I | re.S)
-        if not m:
+        one = m and self._one_ref(m.group(1), lits)
+        if not one:
             raise SqlError(f"cannot parse DELETE: {sql[:60]!r}")
-        ts = self._table(m.group(1))
-        where = self._transpile(m.group(2)) if m.group(2) else "true"
-        if cte_prefix or re.search(r"\(\s*SELECT\b", where, re.I):
-            # WHERE carries a subquery (or the statement has a CTE
-            # prefix): DataFrame.filter can't host those — route the
-            # victim selection through the full SELECT pipeline and
-            # subtract with exceptAll (row-identity delete, no PK needed)
-            victims = self._q_select(
-                f"{cte_prefix} SELECT {ts.name}.* FROM {ts.name}"
-                f" WHERE {m.group(2)}")
-            if limit_n is not None:
-                victims = victims.limit(limit_n + offset_n).subtract(
-                    victims.limit(offset_n)) if offset_n else \
-                    victims.limit(limit_n)
-            victims = victims.localCheckpoint(eager=True)
-            n = victims.count()
-            if n:
-                self._run_old_triggers(ts, victims, "DELETE", "BEFORE")
-                self._apply_fk_on_delete(ts, victims)
-            self._register(ts, ts.df.exceptAll(victims).localCheckpoint(
-                eager=True))
-            if n:
-                self._run_old_triggers(ts, victims, "DELETE")
-            return OkResult(n)
+        ts, refs, _ = one
+        where = m.group(2)
         if limit_n is not None:
-            where = self._limit_victims_where(ts, where, order_sql,
-                                              limit_n, offset_n)
-        deleted = ts.df.filter(where).localCheckpoint(eager=True)
-        n = deleted.count()
-        if n:
-            self._run_old_triggers(ts, deleted, "DELETE", "BEFORE")
-            self._apply_fk_on_delete(ts, deleted)
-        self._register(ts, ts.df.filter(
-            f"NOT ({where}) OR ({where}) IS NULL").localCheckpoint(eager=True))
-        if n:
-            self._run_old_triggers(ts, deleted, "DELETE")
-        return OkResult(n)
+            where = self._first_victims(ts, cte, refs, where, order_sql,
+                                        limit_n, offset_n, lits)
+        base = self._stage(ts, cte, refs, where, {}, lits)
+        names = [c.name for c in ts.columns]
+        gone = base.filter("__matched").select(*names) \
+            .localCheckpoint(eager=True)
+        rest, snap, pk = (base.filter("NOT __matched").select(*names),
+                          ts.df, list(ts.primary_key))
 
-    def _refs_aliases(self, refs: str) -> tuple[dict, str | None]:
-        """Parse a FROM/USING table-references clause into
+        def keep(cur: DataFrame) -> DataFrame:
+            if cur is snap:
+                return rest
+            # a foreign-key action of the table on itself rewrote it
+            return (cur.join(gone.select(*pk), pk, "left_anti") if pk
+                    else cur.exceptAll(gone))
+        return OkResult(self._delete_rows([(ts, gone, keep)])[0])
+
+    def _delete_rows(self, victims: list) -> list[int]:
+        """DELETE's writer. `victims` holds per target (table, its rows to
+        delete, its rows to keep as a function of its snapshot then): every
+        target's rows are counted first, then per target the BEFORE DELETE
+        triggers and foreign-key actions run, the kept rows commit and the
+        AFTER DELETE triggers run. Returns the counts."""
+        counts = [gone.count() for _, gone, _ in victims]
+        for (ts, gone, keep), n in zip(victims, counts):
+            if n:
+                self._run_old_triggers(ts, gone, "DELETE", "BEFORE")
+                self._apply_fk_on_delete(ts, gone)
+            self._register(ts, keep(ts.df).localCheckpoint(eager=True))
+            if n:
+                self._run_old_triggers(ts, gone, "DELETE")
+        return counts
+
+    def _refs_aliases(self, refs: str,
+                      lits: list[str]) -> tuple[dict, str | None]:
+        """Parse a masked FROM/USING table-references clause into
         (alias→table map, qualifier of the first relation). Paren-aware:
         top-level comma pieces first (JSON_TABLE args survive), then
         join operands, then "table [AS] alias"."""
-        masked_refs, _ = mask_literals(refs)
         alias_map: dict[str, str] = {}
         first_qual: str | None = None
-        for piece in _split_top_level(masked_refs):
+        for piece in _split_top_level(refs):
             for frag in re.split(
                     r"\b(?:INNER|LEFT|RIGHT|FULL|CROSS|NATURAL|OUTER"
                     r"|STRAIGHT_JOIN|JOIN)\b", piece, flags=re.I):
-                frag = re.split(r"\bON\b|\bUSING\b", frag,
-                                flags=re.I)[0].strip()
+                frag = unmask_literals(re.split(
+                    r"\bON\b|\bUSING\b", frag, flags=re.I)[0].strip(),
+                    lits)
                 m2 = re.fullmatch(r"([`\w.]+)\s+(?:AS\s+)?([`\w]+)",
                                   frag, re.I)
                 if m2:
@@ -5517,20 +5359,19 @@ class Engine:
                     first_qual = frag.strip("`")
         return alias_map, first_qual
 
-    def _delete_multi(self, targets: list[str], refs: str,
-                      where: str | None, cte_prefix: str = "") -> OkResult:
+    def _delete_multi(self, targets: list[str], refs: str, where: str | None,
+                      cte: str, lits: list[str]) -> OkResult:
         """Multi-table DELETE: resolve each target (table name or FROM
         alias) to its table + the qualifier it carries in the join, pick
         every target's victim keys from the ONE join relation first (all
         targets see the pre-delete state, as MySQL does), then prune each
-        table with an anti-join on its key."""
-        alias_map, _ = self._refs_aliases(refs)
+        table with an anti-join on its key. MySQL reports the first
+        target's count."""
+        alias_map, _ = self._refs_aliases(refs, lits)
         plan: list[tuple[TableState, str, list[str]]] = []
         for tgt in targets:
-            qual = tgt
-            tname = alias_map.get(tgt.lower(), tgt)
             try:
-                ts = self._table(tname)
+                ts = self._table(alias_map.get(tgt.lower(), tgt))
             except SqlError:
                 raise SqlError(f"table {tgt!r} not found in multi-table "
                                f"DELETE")
@@ -5538,36 +5379,23 @@ class Engine:
                 raise SqlError(
                     "multi-table DELETE requires a primary key on the "
                     "target")
-            plan.append((ts, qual, list(ts.primary_key)))
-        where_sql = f" WHERE {where}" if where else ""
-        sel = ", ".join(
-            f"{qual}.{k} AS __t{i}_{k}"
-            for i, (ts, qual, pk) in enumerate(plan) for k in pk)
-        all_keys = self._q_select(
-            f"{cte_prefix} SELECT {sel} FROM {refs}{where_sql}"
+            plan.append((ts, tgt, list(ts.primary_key)))
+        sel = mask_into(", ".join(
+            f"{qual}.`{k}` AS `__t{i}_{k}`"
+            for i, (ts, qual, pk) in enumerate(plan) for k in pk), lits)
+        all_keys = self._select_masked(
+            f"{cte}SELECT {sel} FROM {refs}"
+            + (f" WHERE {where}" if where else ""), lits
         ).localCheckpoint(eager=True)
-        n_total = 0
-        prunes = []
+        victims = []
         for i, (ts, qual, pk) in enumerate(plan):
-            victims = all_keys.select(*[
-                F.col(f"__t{i}_{k}").alias(k) for k in pk]
+            keys = all_keys.select(*[
+                F.col(f"`__t{i}_{k}`").alias(k) for k in pk]
             ).dropDuplicates(pk)
-            doomed = ts.df.join(victims, pk, "left_semi")
-            n = doomed.count()
-            prunes.append((ts, victims, doomed, n, pk))
-            n_total += n
-        # MySQL reports matched rows of the first target for the
-        # multi-target statement count; apply deletions after all victim
-        # sets are pinned
-        for ts, victims, doomed, n, pk in prunes:
-            if n:
-                self._run_old_triggers(ts, doomed, "DELETE", "BEFORE")
-                self._apply_fk_on_delete(ts, doomed)
-            self._register(ts, ts.df.join(victims, pk, "left_anti")
-                           .localCheckpoint(eager=True))
-            if n:
-                self._run_old_triggers(ts, doomed, "DELETE")
-        return OkResult(prunes[0][3] if prunes else 0)
+            victims.append((ts, ts.df.join(keys, pk, "left_semi"),
+                            lambda cur, keys=keys, pk=pk:
+                            cur.join(keys, pk, "left_anti")))
+        return OkResult(self._delete_rows(victims)[0])
 
     @staticmethod
     def _fk_key_expr(parent_def, child_def, ref: str):

@@ -200,10 +200,14 @@ def kv(spark):
     ("INSERT INTO kv SET k = 5002, v = 5002, s = 'b'", 3),
     ("INSERT INTO kv VALUES (5003, 5003, 'c'), (5004, 5004, 'd')", 3),
     ("UPDATE kv SET s = 'u' WHERE k = 7", 2),
+    ("DELETE FROM kv WHERE k = 9", 3),
+    ("UPDATE kv JOIN kv AS o ON kv.k = o.k SET kv.s = 'j' WHERE o.k = 8",
+     9),
     # the distributed path: no more jobs than before the collect-once path
     ("INSERT INTO kv SELECT k + 10000, v + 10000, s FROM kv WHERE k < 3",
      9),
-], ids=["values", "set", "values_batch", "update_pk", "insert_select"])
+], ids=["values", "set", "values_batch", "update_pk", "delete_pk",
+        "update_join", "insert_select"])
 def test_dml_job_count(spark, kv, stmt, limit):
     n, res = _jobs(spark, lambda: kv.query(stmt))
     assert res.rows_affected in (1, 2, 3)

@@ -48,6 +48,10 @@ _FORMS = {
     "update": "UPDATE a SET s = 'u' WHERE id = 1",
     "update_join": "UPDATE a JOIN p ON a.id = p.id "
                    "SET a.s = 'j', p.v = p.v + 100",
+    "update_comma": "UPDATE a, p SET a.s = 'c', p.v = p.v + 1 "
+                    "WHERE a.id = p.id",
+    "update_ignore_join": "UPDATE IGNORE a JOIN p ON a.id = p.id "
+                          "SET a.s = 'i'",
     "update_fk": "UPDATE p SET id = 5 WHERE id = 2",
     "delete": "DELETE FROM a WHERE id = 1",
     "delete_subquery": "DELETE FROM a WHERE id IN "
@@ -255,6 +259,15 @@ def test_as_of_on_a_db_qualified_name(eng):
         assert rows(eng.query("SELECT COUNT(*) AS c FROM fi.h")) == [(2,)]
     finally:
         eng.query("USE fi")
+
+
+def test_as_of_three_part_column(eng):
+    """A 3-part column of an AS OF table binds to that table's version."""
+    _tables(eng, "CREATE TABLE h3 (i INT)", "INSERT INTO h3 VALUES (1)",
+            "INSERT INTO h3 VALUES (2)")
+    assert rows(eng.query("SELECT fi.h3.i FROM fi.h3 AS OF 1")) == [(1,)]
+    assert rows(eng.query(
+        "SELECT fi.h3.i FROM fi.h3 AS OF 2 ORDER BY i")) == [(1,), (2,)]
 
 
 def test_date_in_numeric_context(eng):

@@ -17,14 +17,14 @@ At 100 TB: the fold is a scan-side projection (no shuffle, pushdown keeps
 working on the raw column); a CI GROUP BY shuffles on the folded key,
 which also *merges* skew that differs only by case.
 
-`register_sql(spark)` exposes the same fold as a SQL-level function
+`declare(reg)` exposes the same fold as a SQL-level function
 (Spark 4 SQL UDF — a macro, not a Python UDF) and the transpiler rewrites
 `expr COLLATE utf8mb4_..._ci` to `mysql_ci_key(expr)`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # lower() runs first, so the table only needs lowercase forms. Generated
@@ -60,10 +60,8 @@ def ci_key_sql(expr: str) -> str:
     return f"translate(lower({expr}), '{ACCENT_SRC}', '{ACCENT_DST}')"
 
 
-def register_sql(spark: SparkSession) -> None:
+def declare(reg) -> None:
     """Expose the fold to SQL text as mysql_ci_key(s) — a Spark 4 SQL UDF,
     inlined by Catalyst (no Python round-trip)."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION mysql_ci_key(s STRING) "
-        f"RETURNS STRING RETURN translate(lower(s), '{ACCENT_SRC}', '{ACCENT_DST}')"
-    )
+    reg.macro("mysql_ci_key", "(s STRING)", "STRING",
+              f"translate(lower(s), '{ACCENT_SRC}', '{ACCENT_DST}')")

@@ -233,12 +233,12 @@ def zh_key_sql_body(var: str = "s") -> str:
             f"ascii(c) + {FALLBACK_OFFSET}))")
 
 
-def register_sql(spark: SparkSession) -> None:
+def declare(reg) -> None:
     """mysql_zh_key(s) — Spark SQL UDF (macro, Catalyst-inlined); the
-    transpiler routes `expr COLLATE utf8mb4_zh_0900_as_cs` here."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION mysql_zh_key(s STRING) "
-        "RETURNS ARRAY<INT> RETURN " + zh_key_sql_body())
+    transpiler routes `expr COLLATE utf8mb4_zh_0900_as_cs` here — and the
+    full-block key `mysql_zh_key_wide` (`register_wide_udf`)."""
+    reg.macro("mysql_zh_key", "(s STRING)", "ARRAY<INT>", zh_key_sql_body())
+    reg.add("mysql_zh_key_wide", register_wide_udf, yields=True)
 
 
 # ---- full-range weights (VERDICT r7 task 5) ---------------------------------

@@ -9,8 +9,6 @@ hand (no Python round-trip). Reference: sql/expression/function/time.go.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 _T2S = ("(CAST(split({t}, ':')[0] AS BIGINT) * 3600"
         " + CAST(split({t}, ':')[1] AS BIGINT) * 60"
         " + CAST(CAST(split({t}, ':')[2] AS DOUBLE) AS BIGINT))")
@@ -95,9 +93,6 @@ _MACROS = [
 ]
 
 
-def register_sql_macros(spark: SparkSession) -> None:
+def declare(reg) -> None:
     for name, params, rtype, body in _MACROS:
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{params} "
-            f"RETURNS {rtype} RETURN {body}"
-        )
+        reg.macro(name, params, rtype, body)

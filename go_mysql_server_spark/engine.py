@@ -37,10 +37,12 @@ from pyspark.sql import types as T
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from .dialect import transpiler as tp
+from .dialect.conversion import implicit_default, lenient_sql, str_literal
 from .dialect.transpiler import _find_close as _find_close_paren
 from .dialect.transpiler import (mask_into, mask_literals, on_text,
                                  transpile_select, unmask_literals)
-from .session import tune_session
+from .functions.sql_index import SqlFunctions
+from .session import select_exprs, tune_session
 
 
 class SqlError(Exception):
@@ -438,15 +440,6 @@ def _decode_str_literal(d: str) -> str:
     return "".join(out)
 
 
-def _encode_str_literal(value: str) -> str:
-    """A value → canonical single-quoted literal (backslash escapes, the
-    one spelling every downstream consumer — VALUES fill, SHOW CREATE,
-    the transpiler's masking — reads unambiguously)."""
-    return "'" + (value.replace("\\", "\\\\").replace("'", "\\'")
-                  .replace("\t", "\\t").replace("\n", "\\n")
-                  .replace("\r", "\\r")) + "'"
-
-
 def _canon_default(default: str | None, dtype, bounds) -> str | None:
     """Canonicalize a LITERAL default at DDL time the way MySQL does
     (reference sql/rowexec normalization; enginetest
@@ -472,7 +465,7 @@ def _canon_default(default: str | None, dtype, bounds) -> str | None:
     except decimal.InvalidOperation:
         # non-numeric string literal: canonical single-quoted spelling
         # (resolves '' doubling vs backslash-escape ambiguity once)
-        return _encode_str_literal(txt)
+        return str_literal(txt)
     if bounds is not None or isinstance(
             dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         return str(int(dec.to_integral_value(
@@ -480,7 +473,7 @@ def _canon_default(default: str | None, dtype, bounds) -> str | None:
     if isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType)):
         s = format(dec.normalize(), "f")
         return s
-    return _encode_str_literal(txt)
+    return str_literal(txt)
 
 
 def _default_display(c) -> str | None:
@@ -497,31 +490,16 @@ def _default_display(c) -> str | None:
     return d
 
 
-def _implicit_default(c: ColumnDef) -> Column:
-    """MySQL's implicit default of NOT NULL column `c`, which a NULL
-    takes outside strict mode: the first ENUM member, '', the zero date,
-    else 0."""
-    t = c.spark_type.simpleString()
-    if c.enum_values:
-        return F.lit(c.enum_values[0])
-    if t == "string":
-        return F.lit("")
-    if t in ("date", "timestamp"):
-        return F.lit("1970-01-01").cast(c.spark_type)
-    return F.lit(0).cast(c.spark_type)
-
-
-def _default_col(c, pipes_as_concat: bool) -> "F.Column":
-    """Column expression for a declared default, with MySQL's insert-time
+def _default_sql(c, transpile) -> str:
+    """SQL text of a declared default, with MySQL's insert-time
     conversion: numeric-string defaults ROUND into integer columns
     ('1.999' -> 2), not truncate (reference sql/types/number.go rounding
     on convert). The expression text is MySQL dialect — route it through
-    the transpiler so defaults like JSON_OBJECT() resolve."""
-    expr = F.expr(transpile_select(_normalize_default(c.default),
-                                   pipes_as_concat=pipes_as_concat))
+    the engine's `transpile` so defaults like JSON_OBJECT() resolve."""
+    expr = f"({transpile(_normalize_default(c.default))})"
     if c.int_bounds is not None:
-        return F.round(expr.cast("double")).cast(c.spark_type)
-    return expr.cast(c.spark_type)
+        expr = f"ROUND(CAST({expr} AS DOUBLE))"
+    return f"CAST({expr} AS {c.spark_type.simpleString()})"
 
 
 def _key_parts(body: str) -> tuple[str, ...]:
@@ -545,37 +523,35 @@ def _all_set(cols) -> Column:
     return out
 
 
-def _key_repr(parts) -> Column:
-    """A key — (column, type) parts — as one value that Python compares
-    as Spark's join compares the parts: strings as they are, binary as
-    hex, timestamps as microseconds, a floating zero without its sign,
-    anything else as its string. Several parts make a JSON array, NULL
-    when a part is NULL."""
+def _key_repr(parts) -> str:
+    """A key — (column, type) parts — as SQL text of one value that Python
+    compares as Spark's join compares the parts: strings as they are,
+    binary as hex, timestamps as microseconds, a floating zero without its
+    sign, anything else as its string. Several parts make a JSON array,
+    NULL when a part is NULL."""
     out = []
     for col, dtype in parts:
+        ref = f"`{col}`"
         if isinstance(dtype, T.StringType):
-            out.append(col)
+            out.append(ref)
         elif isinstance(dtype, T.BinaryType):
-            out.append(F.hex(col))
+            out.append(f"hex({ref})")
         elif isinstance(dtype, T.TimestampType):
-            out.append(F.unix_micros(col).cast("string"))
+            out.append(f"CAST(unix_micros({ref}) AS STRING)")
         elif isinstance(dtype, (T.FloatType, T.DoubleType)):
-            out.append((col + F.lit(0.0)).cast("string"))
+            out.append(f"CAST({ref} + 0.0D AS STRING)")
         else:
-            out.append(col.cast("string"))
+            out.append(f"CAST({ref} AS STRING)")
     if len(out) == 1:
         return out[0]
-    every = F.lit(True)
-    for col, _ in parts:
-        every = every & col.isNotNull()
-    return F.when(every, F.to_json(F.array(*out)))
+    every = " AND ".join(f"`{col}` IS NOT NULL" for col, _ in parts)
+    return f"CASE WHEN {every} THEN to_json(array({', '.join(out)})) END"
 
 
-def _key_reprs(ts, keys) -> list[Column]:
+def _key_reprs(ts, keys) -> list[str]:
     """Each of a table's keys — (name, columns) — as a `_key_repr`."""
     types = {c.name: c.spark_type for c in ts.columns}
-    return [_key_repr([(F.col(c), types[c]) for c in cols])
-            for _, cols in keys]
+    return [_key_repr([(c, types[c]) for c in cols]) for _, cols in keys]
 
 
 def _ordinal_kind(coldef) -> str | None:
@@ -849,26 +825,9 @@ class Engine:
     def __init__(self, spark: SparkSession, default_db: str = "mydb"):
         self.spark = tune_session(spark)
         self._no_args = spark._jvm.PythonUtils.toArray([])  # for _sql
-        # UDF / macro registration is idempotent per SparkSession but costs
-        # ~0.6 s of py4j round-trips — cache it on the session so the 2nd+
-        # Engine in a session (every dml_* catalog entry, most tests) skips
-        # it. Keyed via a session conf flag, not a module global, so a new
-        # session after a restart re-registers.
-        if spark.conf.get("spark.gms.fnRegistered", "") != "1":
-            from .functions import register_udfs
-
-            register_udfs(self.spark)  # UDF-backed MySQL fns for SQL text
-            from .dialect.collation import register_sql as _register_ci
-            _register_ci(self.spark)   # mysql_ci_key macro (COLLATE)
-            from .dialect.collation_ja import register_sql as _register_ja
-            _register_ja(self.spark)   # mysql_ja_key macro (ja collation)
-            from .dialect.collation_zh import register_sql as _register_zh
-            from .dialect.collation_zh import register_wide_udf
-            _register_zh(self.spark)   # mysql_zh_key macro (zh collation)
-            register_wide_udf(self.spark)  # full CJK-block weight table
-            from .dialect.sql_macros import register_sql_macros
-            register_sql_macros(self.spark)  # TIME/date shims for SQL text
-            spark.conf.set("spark.gms.fnRegistered", "1")
+        # the MySQL functions SQL text calls register when a statement
+        # first names them (`_statement`, `_sql`, `_transpile`)
+        self._fns = SqlFunctions(spark)
         self.databases: dict[str, dict[str, TableState]] = {default_db: {}}
         self._default_db = default_db
         self._conn_ids = itertools.count(1)
@@ -904,6 +863,7 @@ class Engine:
         (reference engine.go:116-122, sql/function.go). Row-at-a-time
         Python: fine for integrator extension points, never used by the
         engine's own hot paths."""
+        self._fns.claim(name)
         return self.spark.udf.register(name, fn, return_type)
 
     def register_aggregate(self, name: str, fn, return_type="double"):
@@ -919,6 +879,7 @@ class Engine:
         from pyspark.sql import functions as F
 
         udf = F.pandas_udf(fn, return_type, F.PandasUDFType.GROUPED_AGG)
+        self._fns.claim(name)
         self.spark.udf.register(name, udf)
         return udf
 
@@ -1390,6 +1351,10 @@ class Engine:
             raise SqlError(f"unsupported statement: {sql[:60]!r}")
         admin.run_due_events(self)  # in the event session
         self._bind_db()
+        # what the statement names: a table's DEFAULT, CHECK and generated
+        # expressions, trigger and routine bodies are evaluated later from
+        # the text their CREATE named
+        self._fns.need(sql)
         try:
             result = handler(sql)
         except BaseException:
@@ -1570,9 +1535,9 @@ class Engine:
         open_cost = self.spark._jsparkSession.sessionState().conf() \
             .filesOpenCostInBytes()
         cap = min(n, sc.defaultParallelism)
-        size = 0
+        size, rdd_id = 0, rdd.id()
         for i in range(n):
-            found = master.getLocationsAndStatus(block_id(rdd.id(), i), host)
+            found = master.getLocationsAndStatus(block_id(rdd_id, i), host)
             if found.isEmpty():
                 return df  # not persisted, or a block was dropped
             status = found.get().status()
@@ -1677,7 +1642,9 @@ class Engine:
                 or re.search(r"\bANSI\b", mode) is not None)
 
     def _transpile(self, sql: str) -> str:
-        return transpile_select(sql, pipes_as_concat=self._pipes_as_concat)
+        out = transpile_select(sql, pipes_as_concat=self._pipes_as_concat)
+        self._fns.need(out)
+        return out
 
     # ---- SELECT ------------------------------------------------------------
 
@@ -1842,6 +1809,12 @@ class Engine:
                  and (" AND " in m or " OR " in m))),
          lambda e, s, lits: tp.wrap_truthy_operands(tp.wrap_truthy_if(
              tp.wrap_truthy_case(tp.wrap_truthy_filters(s))), lits), True),
+        # a function the text names in a form the scan before `_sql`
+        # missed: register it and analyze again
+        ("unresolved_routine",
+         lambda e, m, f: ("UNRESOLVED_ROUTINE" in m
+                          and e._fns.need_refused(m)),
+         lambda e, s, lits: e._analyze(s, lits), True),
         # an inline table Spark refuses — a scalar subquery in a row, or a
         # column whose cells it will not widen to one type (MySQL coerces
         # them): one SELECT per row, unioned
@@ -1856,6 +1829,7 @@ class Engine:
         py4j's own return path, which PySpark leaves unpatched. A refused
         statement raises `_Rejected` when `probe` is set, else what
         spark.sql raises."""
+        self._fns.need(text)
         call = self.spark._jsparkSession.sql
         args, _ = call._build_args(text, self._no_args)
         answer = call.gateway_client.send_command(
@@ -2232,15 +2206,37 @@ class Engine:
             masked = re.sub(
                 rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\s*\.",
                 f"{view}.", masked, flags=re.I)
-        for db, tables in self.databases.items():
-            if db.lower() not in masked.lower():
+        named = [(rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\b", db, ts)
+                 for db, tables in self.databases.items()
+                 if db.lower() in masked.lower()
+                 for tbl, ts in tables.items()]
+        named = [n for n in named if re.search(n[0], masked, re.I)]
+        for pat, db, ts in named:
+            view = self._table_view(db, ts)
+            # an unaliased `db.t` is aliased as `t`, as MySQL lets `t.c`
+            # and `db.t.c` name its columns, unless another table of the
+            # statement answers to `t`
+            name = ts.name.lower()
+            if sum(t.name.lower() == name for _, _, t in named) > 1 \
+                    or re.search(rf"(?:\b(?:FROM|JOIN)\s+|,\s*)`?"
+                                 rf"{re.escape(ts.name)}`?(?![\w.`])",
+                                 masked, re.I):
+                masked = re.sub(pat, view, masked, flags=re.I)
                 continue
-            for tbl, ts in tables.items():
-                pat = rf"\b{re.escape(db)}\s*\.\s*{re.escape(tbl)}\b"
-                if re.search(pat, masked, re.I):
-                    masked = re.sub(pat, self._table_view(db, ts), masked,
-                                    flags=re.I)
+            bare = mask_into(f"`{ts.name}`", lits)
+            masked = re.sub(pat + r"\s*\.", f"{bare}.", masked, flags=re.I)
+            masked = re.sub(
+                pat + self._ALIASED,
+                lambda m: view + (m.group(1) or f" AS {bare}"), masked,
+                flags=re.I)
         return masked
+
+    # what follows a table reference when it has an alias
+    _ALIASED = (r"(\s+(?:AS\b|(?!(?:WHERE|ON|USING|JOIN|INNER|LEFT|RIGHT|"
+                r"FULL|CROSS|NATURAL|STRAIGHT_JOIN|GROUP|ORDER|HAVING|LIMIT|"
+                r"UNION|INTERSECT|EXCEPT|MINUS|WINDOW|FOR|LOCK|INTO|SET|"
+                r"PARTITION|USE|IGNORE|FORCE|TABLESAMPLE|LATERAL|AND|OR|NOT|"
+                r"RETURNING|VALUES|SELECT)\b)[A-Za-z_`\x00]))?")
 
     # information_schema synthesized from the engine catalog (reference
     # sql/information_schema/information_schema.go)
@@ -2835,6 +2831,7 @@ class Engine:
             # escape == quote is SQL-style doubling, already consumed by
             # the csv reader
             esc_lit = F.lit(escape)
+            self._fns.need("mysql_load_unescape(")
             for cname, dtype in df.dtypes:
                 if dtype == "string":
                     df = df.withColumn(
@@ -2933,6 +2930,7 @@ class Engine:
                 params.append(f"{toks[0].strip('`')} {self._udf_sql_type(toks[1])}")
         rtype = self._udf_sql_type(m.group(3))
         body = self._transpile(m.group(4).strip().rstrip(";"))
+        self._fns.claim(name)
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({', '.join(params)}) "
             f"RETURNS {rtype} RETURN {body}"
@@ -3124,7 +3122,7 @@ class Engine:
                 out = df
                 for c in cols:
                     if c.name.lower() not in sel_names:
-                        fill = (_default_col(c, self._pipes_as_concat)
+                        fill = (F.expr(_default_sql(c, self._transpile))
                                 if c.default else F.lit(None)).cast(c.spark_type)
                         out = out.withColumn(c.name, fill)
                     elif c.name.lower() in decl_by:
@@ -3421,7 +3419,7 @@ class Engine:
             # default, as a non-strict INSERT's do
             if not self._strict_mode():
                 ts.df = ts.df.withColumn(col.name, F.coalesce(
-                    F.col(col.name), _implicit_default(col)))
+                    F.col(col.name), F.expr(implicit_default(col))))
             elif ts.df.filter(F.col(col.name).isNull()).limit(1).count():
                 raise SqlError("Invalid use of NULL value", "22004", 1138)
         if col.auto_increment and not prev.auto_increment:
@@ -3709,7 +3707,11 @@ class Engine:
             new_rows = self._rows_relation([tp.rewrite_numeric_literals(
                 ", ".join(a.split("=", 1)[1].strip() for a in assigns))])
         else:
-            values_sql = tp.rewrite_numeric_literals(m.group(7).strip())
+            # MySQL's table value constructor spells a row ROW(...)
+            values_sql = ", ".join(
+                re.sub(r"^ROW\s*(?=\()", "", r.strip(), flags=re.I)
+                for r in _split_top_level(
+                    tp.rewrite_numeric_literals(m.group(7).strip())))
             # MySQL: VALUES () inserts a row of all defaults; spell the
             # row out (Spark's VALUES has no empty-tuple form). Only a
             # whole empty row counts — `(now())` contains `()` but is a
@@ -3757,8 +3759,9 @@ class Engine:
             + ", ".join(f"({r}, {i})" for i, r in enumerate(rows))))
         df = self._analyze(tp.transpile_masked(
             masked, lits, pipes_as_concat=self._pipes_as_concat), lits)
-        return df.toDF(*[f"_c{i}" for i in range(len(df.columns) - 1)],
-                       "__ord")
+        return select_exprs(
+            df, [f"_c{i}" for i in range(len(df.columns) - 1)] + ["__ord"],
+            "toDF")
 
     def _drop_generated_defaults(
             self, ts: TableState, values_sql: str,
@@ -3899,8 +3902,9 @@ class Engine:
             raise SqlError(
                 "the value specified for generated column is not allowed")
         # rows from _rows_relation carry their position as `__ord`
-        ordinal = ["__ord"] if new_rows.columns[-1:] == ["__ord"] else []
-        n_cells = len(new_rows.columns) - len(ordinal)
+        new_types = new_rows.dtypes  # one schema read
+        ordinal = ["__ord"] if new_types[-1][0] == "__ord" else []
+        n_cells = len(new_types) - len(ordinal)
         target_cols = col_list or [c.name for c in ts.columns if not (
             c.auto_increment and n_cells < len(ts.columns)
         ) and c.generated is None]
@@ -3908,64 +3912,65 @@ class Engine:
             raise SqlError(
                 f"column count mismatch: {n_cells} values for "
                 f"{len(target_cols)} columns")
-        named = new_rows.toDF(*target_cols, *ordinal)
+        named = select_exprs(new_rows, [*target_cols, *ordinal], "toDF")
+        src_types = dict(zip(target_cols, (t for _, t in new_types)))
 
         # fill defaults / auto-increment for omitted columns
         last_id = None
         counter = False  # an omitted AUTO_INCREMENT column counts the rows
         # INSERT IGNORE and non-strict sql_mode use lenient value conversion
         lenient = ignore or not self._strict_mode()
-        select_cols = []
+        # the row as one projection of SQL text over `named`
+        select_cols: list[str] = []
         deferred_defaults: list = []  # defaults referencing other columns
         # checks on the values before their cast: (predicate over `named`,
         # error), carried to the checks below as the columns `__pre<i>`
-        pre_checks: list[tuple[Column, SqlError]] = []
+        pre_checks: list[tuple[str, SqlError]] = []
         for c in ts.columns:
+            ref, t = f"`{c.name}`", c.spark_type.simpleString()
             if c.generated is not None:
                 # placeholder; computed in a second projection so the expr
                 # sees the row's final base-column values
-                select_cols.append(F.lit(None).cast(c.spark_type).alias(c.name))
+                select_cols.append(f"CAST(NULL AS {t}) AS {ref}")
             elif c.name in target_cols:
-                src = F.col(c.name)
-                if c.is_year and dict(named.dtypes).get(c.name) == "string":
+                src = ref
+                if c.is_year and src_types.get(c.name) == "string":
                     # YEAR: the STRINGS '0'/'00' mean 2000, while the
                     # NUMBER 0 means 0000 (reference sql/types/year.go) —
                     # resolve before the int cast erases the distinction
-                    src = (F.when(src.rlike("^00?$"), F.lit(2000))
-                           .otherwise(src.cast("int")))
-                if (c.spark_type.simpleString() == "string"
-                        and dict(named.dtypes).get(c.name) == "boolean"):
+                    src = (f"CASE WHEN {ref} RLIKE '^00?$' THEN 2000 "
+                           f"ELSE CAST({ref} AS INT) END")
+                if t == "string" and src_types.get(c.name) == "boolean":
                     # MySQL TRUE/FALSE are 1/0 — a boolean literal stored
                     # into a string column renders '1'/'0', not 'true'
-                    src = (F.when(src.isNull(), F.lit(None).cast("string"))
-                           .when(src, "1").otherwise("0"))
-                if (c.spark_type.simpleString() == "string"
-                        and dict(named.dtypes).get(c.name) == "binary"):
+                    src = (f"CASE WHEN {ref} IS NULL THEN CAST(NULL AS "
+                           f"STRING) WHEN {ref} THEN '1' ELSE '0' END")
+                if t == "string" and src_types.get(c.name) == "binary":
                     # binary → utf8mb4 column: strict mode rejects invalid
                     # byte sequences; non-strict keeps the longest valid
                     # prefix (reference sql/types/strings.go charset
                     # validation, enginetest "charset validation" scripts)
                     if not lenient:
                         pre_checks.append((
-                            F.expr(f"NOT mysql_utf8_valid(`{c.name}`)"),
+                            f"NOT mysql_utf8_valid({ref})",
                             SqlError("Incorrect string value for column "
                                      f"{c.name!r}", "HY000", 1366)))
-                    src = F.expr(f"mysql_utf8_lenient(`{c.name}`)")
-                base_val = (self._lenient_cast(c, src) if lenient
-                            else src.cast(c.spark_type))
+                    src = f"mysql_utf8_lenient({ref})"
+                base_val = (lenient_sql(c, src) if lenient
+                            else f"CAST({src} AS {t})")
                 if c.auto_increment:
-                    base_val, last_id = self._auto_increment(
+                    named, base_val, last_id = self._auto_increment(
                         ts, c, named, base_val, bool(ordinal))
-                select_cols.append(base_val.alias(c.name))
+                select_cols.append(f"{base_val} AS {ref}")
             elif c.auto_increment:
                 if ordinal:
-                    rn = F.col("__ord") + 1
+                    rn = "`__ord` + 1"
                 else:
                     named = named.withColumn("__rn", F.row_number().over(
                         Window.orderBy(F.monotonically_increasing_id())))
-                    rn = F.col("__rn")
-                select_cols.append((rn + F.lit(ts.auto_inc_next - 1))
-                                   .cast(c.spark_type).alias(c.name))
+                    rn = "`__rn`"
+                select_cols.append(
+                    f"CAST({rn} + {ts.auto_inc_next - 1} AS {t}) AS {ref}")
                 last_id = ts.auto_inc_next
                 counter = True
             elif c.default is not None:
@@ -3976,44 +3981,42 @@ class Engine:
                     # can read provided columns and earlier defaults
                     # (reference column defaults may reference other
                     # columns; enginetest 'Modify column ... add reference')
-                    select_cols.append(
-                        F.lit(None).cast(c.spark_type).alias(c.name))
+                    select_cols.append(f"CAST(NULL AS {t}) AS {ref}")
                     deferred_defaults.append(c)
                 else:
-                    select_cols.append(_default_col(
-                        c, self._pipes_as_concat).alias(c.name))
+                    select_cols.append(
+                        f"{_default_sql(c, self._transpile)} AS {ref}")
             elif c.enum_values and not c.nullable:
                 # NOT NULL ENUM without DEFAULT: implicit default is the
                 # first enumeration value (MySQL)
-                select_cols.append(
-                    F.lit(c.enum_values[0]).alias(c.name))
+                select_cols.append(f"{implicit_default(c)} AS {ref}")
             elif c.set_values is not None and not c.nullable:
                 # NOT NULL SET without DEFAULT: implicit default is the
                 # empty set (MySQL)
-                select_cols.append(F.lit("").alias(c.name))
+                select_cols.append(f"'' AS {ref}")
             else:
-                select_cols.append(F.lit(None).cast(c.spark_type).alias(c.name))
+                select_cols.append(f"CAST(NULL AS {t}) AS {ref}")
         # Strict-mode out-of-range check on PRE-cast values (a wrapped cast
         # would otherwise hide the violation; reference sql/types/number.go
         # Convert errors instead of wrapping). INSERT IGNORE and non-strict
-        # sql_mode clamp via _lenient_cast instead of erroring.
+        # sql_mode clamp via lenient_sql instead of erroring.
         if not lenient:
             pre_checks += self._int_bound_checks(
-                ts, {c.name: F.col(c.name) for c in ts.columns
-                     if c.name in target_cols})
+                ts, {c: f"`{c}`" for c in target_cols})
         pre = [f"__pre{i}" for i in range(len(pre_checks))]
-        incoming = named.select(*select_cols, *[
-            p.alias(n) for (p, _), n in zip(pre_checks, pre)])
+        self._fns.need(" ".join(select_cols + [p for p, _ in pre_checks]))
+        incoming = select_exprs(named, select_cols + [
+            f"({p}) AS {n}" for (p, _), n in zip(pre_checks, pre)])
         # cross-column defaults evaluate in TABLE ORDER over the assembled
         # row, so a default can read a provided column anywhere in the row
         # and the result of any default evaluated before it
         for c in deferred_defaults:
             incoming = incoming.withColumn(
-                c.name, _default_col(c, self._pipes_as_concat))
+                c.name, F.expr(_default_sql(c, self._transpile)))
         incoming = self._enum_set_normalize(ts, incoming)
         if gen_cols:
             incoming = self._compute_generated(ts, incoming)
-        checks = [(F.col(n), msg) for n, (_, msg) in zip(pre, pre_checks)]
+        checks = [(f"`{n}`", msg) for n, (_, msg) in zip(pre, pre_checks)]
         n_new = None
 
         def judge(df: DataFrame, local: bool, extra=()) -> list | None:
@@ -4036,37 +4039,37 @@ class Engine:
             # values before their cast run first
             if checks:
                 judge(incoming, self._is_local(incoming))
-            incoming = self._apply_insert_triggers(ts, incoming.drop(*pre),
-                                                   "BEFORE")
+            incoming = self._apply_insert_triggers(
+                ts, incoming.drop(*pre) if pre else incoming, "BEFORE")
             checks, pre = [], []
 
         if lenient:
             # IGNORE / non-strict: NULL into NOT NULL takes the implicit
             # default; invalid ENUM/SET values become '' (MySQL warning
             # semantics)
+            cols = []
             for c in ts.columns:
+                e = f"`{c.name}`"
                 if not c.nullable and c.generated is None and \
                         not c.auto_increment:
-                    incoming = incoming.withColumn(c.name, F.coalesce(
-                        F.col(c.name), _implicit_default(c)))
+                    e = f"coalesce({e}, {implicit_default(c)})"
                 if c.enum_values is not None:
-                    incoming = incoming.withColumn(
-                        c.name,
-                        F.when(F.col(c.name).isNotNull()
-                               & ~F.col(c.name).isin(*c.enum_values),
-                               F.lit("")).otherwise(F.col(c.name)))
+                    members = ", ".join(map(str_literal,
+                                            c.enum_values))
+                    e = (f"CASE WHEN {e} IS NOT NULL AND NOT {e} IN "
+                         f"({members}) THEN '' ELSE {e} END")
+                cols.append(f"{e} AS `{c.name}`")
+            incoming = select_exprs(incoming, cols + pre)
         kept = incoming
-        keep = F.lit(True)
+        keep = "TRUE"
         if ignore:
             # INSERT IGNORE skips (not errors on) rows violating CHECK
             # constraints or child-side FKs (MySQL warning semantics;
             # reference sql/plan/insert.go Ignore)
             for ci, chk in enumerate(ts.checks):
-                if not ts.check_enforced_at(ci):
-                    continue
-                keep = keep & F.coalesce(
-                    F.expr(self._transpile(chk)).cast("boolean"),
-                    F.lit(True))
+                if ts.check_enforced_at(ci):
+                    keep += (f" AND coalesce(CAST(({self._transpile(chk)})"
+                             " AS BOOLEAN), TRUE)")
             kept = kept.filter(keep)
             for fk in ts.foreign_keys:
                 parent = self._db(None).get(fk.parent_table)
@@ -4091,10 +4094,9 @@ class Engine:
         # rows that are literals are collected once with every check as a
         # column and decided on the driver; the snapshot is probed once
         rows = judge(incoming, self._is_local(kept), [
-            keep.alias("__keep"),
-            *[k.alias(f"__key{i}")
-              for i, k in enumerate(_key_reprs(ts, keys))],
-            *([F.col(uuid_col).alias("__uuid")] if uuid_col else [])])
+            f"{keep} AS __keep",
+            *[f"{k} AS __key{i}" for i, k in enumerate(_key_reprs(ts, keys))],
+            *([f"`{uuid_col}` AS __uuid"] if uuid_col else [])])
         if not ignore:
             for fk in ts.foreign_keys:
                 self._check_fk(ts, fk, incoming)
@@ -4103,11 +4105,14 @@ class Engine:
             verdict = self._probe_keys(ts, keys, rows)
         else:
             verdict = self._key_verdict(keys, kept, ts.df)
-        checked = incoming = kept.drop(*pre)
+        checked = incoming = kept.drop(*pre) if pre else kept
         existing, incoming, affected = self._apply_keys(
             ts, incoming, n_new, verb, ignore, odku, src_cols, target_cols,
             verdict)
-        self._register(ts, existing.unionByName(incoming).localCheckpoint(
+        # collected rows are a few literals: one partition, so the
+        # checkpoint runs one task for them and `_compact` reads one block
+        added = incoming.coalesce(1) if rows is not None else incoming
+        self._register(ts, existing.unionByName(added).localCheckpoint(
             eager=True))
         if ts.fulltext:
             # ODKU mutates existing rows without a threaded delta → lazy
@@ -4127,22 +4132,24 @@ class Engine:
         return OkResult(max(affected, 0), last_id), incoming
 
     def _auto_increment(self, ts: TableState, c, named: DataFrame,
-                        base_val: Column, ordered: bool) -> tuple:
+                        base_val: str, ordered: bool) -> tuple:
         """An AUTO_INCREMENT column the INSERT names: MySQL's counter is
         SEQUENTIAL within a batch. It starts at auto_inc_next, an explicit
         id moves it past itself, and NULL (and 0, unless
         NO_AUTO_VALUE_ON_ZERO) takes the counter. Rows that carry their
         position (`ordered`) are numbered on the driver; others by one
-        window pass. Returns the column and LAST_INSERT_ID (None when no
-        row took the counter); advances ts.auto_inc_next."""
+        window pass, as the column `__ai`. Returns `named`, the column's
+        SQL text and LAST_INSERT_ID (None when no row took the counter);
+        advances ts.auto_inc_next."""
         zero_gens = "NO_AUTO_VALUE_ON_ZERO" not in self._sql_mode
-        gen_flag = F.col(c.name).isNull() | (
-            (F.col(c.name).cast("bigint") == 0)
-            if zero_gens else F.lit(False))
+        ref, t = f"`{c.name}`", c.spark_type.simpleString()
+        flag = (f"({ref} IS NULL OR CAST({ref} AS BIGINT) = 0)" if zero_gens
+                else f"({ref} IS NULL)")
+        gen_flag = F.expr(flag)
         start = ts.auto_inc_next
         if ordered:
-            got = sorted(named.select("__ord", gen_flag, F.col(c.name).cast(
-                "bigint")).collect())
+            got = sorted(select_exprs(named, [
+                "__ord", flag, f"CAST({ref} AS BIGINT)"]).collect())
             ids, nxt = [], start
             for _, gen, ex in got:
                 ids.append(nxt if gen else None)
@@ -4152,11 +4159,11 @@ class Engine:
                     nxt = max(nxt, ex + 1)
             ts.auto_inc_next = nxt
             if all(i is None for i in ids):
-                return base_val, None
+                return named, base_val, None
             arr = ", ".join("NULL" if i is None else str(i) for i in ids)
-            gen_id = F.expr(f"element_at(array({arr}), __ord + 1)")
-            return F.when(gen_flag, gen_id.cast(c.spark_type)).otherwise(
-                base_val), start
+            return named, (f"CASE WHEN {flag} THEN CAST(element_at(array("
+                           f"{arr}), __ord + 1) AS {t}) ELSE {base_val} END"
+                           ), start
         # For a generated row i with g_i = #generated rows <= i and m_i =
         # max over explicit rows j < i of (ex_j - g_j):
         #   id_i = g_i + max(start - 1, m_i)
@@ -4176,7 +4183,7 @@ class Engine:
         mx = int(stats_ai["mx"] or 0)
         if not n_gen:
             ts.auto_inc_next = max(start, mx + 1)
-            return base_val, None
+            return named, base_val, None
         m = F.max(F.when(~gen_flag, F.col(c.name).cast("bigint") - g)
                   ).over(worder)
         gen_id = g + F.greatest(F.lit(start - 1),
@@ -4184,8 +4191,9 @@ class Engine:
         m_all = int(stats_ai["m_all"] if stats_ai["m_all"] is not None
                     else start - 1)
         ts.auto_inc_next = max(n_gen + max(start - 1, m_all), mx) + 1
-        return F.when(gen_flag, gen_id.cast(c.spark_type)).otherwise(
-            base_val), start
+        named = named.withColumn("__ai", gen_id)
+        return named, (f"CASE WHEN {flag} THEN CAST(`__ai` AS {t}) "
+                       f"ELSE {base_val} END"), start
 
     @staticmethod
     def _keys(ts: TableState) -> list[tuple[str, list[str]]]:
@@ -4362,9 +4370,10 @@ class Engine:
                               if cd is not None and cd.default else "NULL")
         for c in ts.columns:
             if c.name in assigns:
-                newv = F.expr(self._transpile(assigns[c.name]))
-                newv = (self._lenient_cast(c, newv) if lenient
-                        else newv.cast(c.spark_type))
+                newv = self._transpile(assigns[c.name])
+                newv = F.expr(
+                    lenient_sql(c, newv) if lenient
+                    else f"CAST(({newv}) AS {c.spark_type.simpleString()})")
                 out_cols.append(
                     F.when(F.col(f"__new_{key_cols[0]}").isNotNull(), newv)
                     .otherwise(F.col(c.name)).alias(c.name)
@@ -4498,24 +4507,26 @@ class Engine:
         """The checks a written row passes after its values' cast, as
         (predicate, error) pairs in the order MySQL reports them: NOT
         NULL, ENUM (not when `lenient`), SET and each enforced CHECK."""
-        checks: list[tuple[Column, SqlError]] = []
+        checks: list[tuple[str, SqlError]] = []
         for c in ts.columns:
+            ref = f"`{c.name}`"
             if not c.nullable:  # ER_BAD_NULL_ERROR
-                checks.append((F.col(c.name).isNull(), SqlError(
+                checks.append((f"{ref} IS NULL", SqlError(
                     f"column {c.name!r} cannot be null", "23000", 1048)))
             if c.enum_values is not None and not lenient:
+                members = ", ".join(map(str_literal, c.enum_values))
                 checks.append((
-                    F.col(c.name).isNotNull() & (F.col(c.name) != "")
-                    & ~F.col(c.name).isin(*c.enum_values),
+                    f"{ref} IS NOT NULL AND {ref} != '' "
+                    f"AND NOT {ref} IN ({members})",
                     SqlError(f"invalid ENUM value for column {c.name!r}",
                              "01000", 1265)))
             if c.set_values is not None:
                 members = ", ".join("'" + v.replace("'", "''") + "'"
                                     for v in c.set_values)
                 checks.append((
-                    F.col(c.name).isNotNull() & F.expr(
-                        f"size(filter(split({c.name}, ','), "
-                        f"x -> x != '' AND x NOT IN ({members}))) > 0"),
+                    f"{ref} IS NOT NULL AND "
+                    f"size(filter(split({c.name}, ','), "
+                    f"x -> x != '' AND x NOT IN ({members}))) > 0",
                     SqlError(f"invalid SET value for column {c.name!r}",
                              "01000", 1265)))
         for ci, chk in enumerate(ts.checks):
@@ -4523,29 +4534,32 @@ class Engine:
                 continue  # NOT ENFORCED: metadata only
             # NULL check result passes (MySQL CHECK semantics);
             # ER_CHECK_CONSTRAINT_VIOLATED
-            checks.append((F.expr(f"NOT ({chk})"), SqlError(
+            checks.append((f"NOT ({chk})", SqlError(
                 f"CHECK constraint violated: {chk}", "HY000", 3819)))
         return checks
 
     @staticmethod
     def _judge(df: DataFrame, checks: list, local: bool = False,
-               extra=(), where: Column | None = None) -> tuple:
+               extra=(), where: str = "TRUE") -> tuple:
         """Evaluate row checks — (predicate, error) pairs in the order
-        MySQL reports them — over `df` in one Spark action. Returns the
-        row count, the error of the first check a row breaks (None when
-        none is broken) and, for a `local` relation (`_is_local`), its
-        rows: it is collected once with every predicate and every `extra`
-        column projected, which runs no job on a LocalRelation. Any other
-        relation is one aggregate over its rows where `where` holds."""
+        MySQL reports them, each predicate SQL text — over `df` in one
+        Spark action. Returns the row count, the error of the first check
+        a row breaks (None when none is broken) and, for a `local` relation
+        (`_is_local`), its rows: it is collected once with every predicate
+        and every `extra` item projected, which runs no job on a
+        LocalRelation. Any other relation is one aggregate over its rows
+        where `where` holds."""
         if local:
-            rows = df.select(*[p.alias(f"__chk{i}") for i, (p, _)
-                               in enumerate(checks)], *extra).collect()
+            rows = select_exprs(df, [f"({p}) AS __chk{i}" for i, (p, _)
+                                     in enumerate(checks)] + list(extra)
+                                ).collect()
             n, hits = len(rows), [any(r[i] for r in rows)
                                   for i in range(len(checks))]
         else:
-            on = F.lit(True) if where is None else where
-            got = df.agg(F.count(F.when(on, 1)), *[
-                F.count(F.when(on & p, 1)) for p, _ in checks]).first()
+            got = select_exprs(df, [
+                f"count(CASE WHEN {where} THEN 1 END)", *[
+                    f"count(CASE WHEN ({where}) AND ({p}) THEN 1 END)"
+                    for p, _ in checks]]).first()
             n, hits, rows = got[0], got[1:], None
         return n, next((msg for (_, msg), hit in zip(checks, hits) if hit),
                        None), rows
@@ -4569,18 +4583,20 @@ class Engine:
                     rows: list) -> list[tuple]:
         """`_key_verdict` for collected rows, which hold each key as
         `__key<i>` (`_key_repr`): repeats are counted on the driver, and
-        one filter over the snapshot finds the rows already holding one of
-        the batch's keys."""
+        one filter over the snapshot — an IN list of the batch's keys, as
+        SQL text, so its size costs no py4j call — finds the rows already
+        holding one of them."""
         reprs = _key_reprs(ts, keys)
         vals = [[r[f"__key{i}"] for r in rows if r[f"__key{i}"] is not None]
                 for i in range(len(keys))]
         found: list[set] = [set() for _ in keys]
-        hit = F.lit(False)
-        for expr, v in zip(reprs, vals):
-            if v:
-                hit = hit | expr.isin(*set(v))
-        if any(vals):
-            for r in ts.df.filter(hit).select(*reprs).collect():
+        hit = " OR ".join(
+            f"{expr} IN ({', '.join(map(str_literal, set(v)))})"
+            for expr, v in zip(reprs, vals) if v)
+        if hit:
+            probe = select_exprs(ts.df.filter(hit),
+                                 [f"array({', '.join(reprs)}) AS k"])
+            for (r,) in probe.collect():
                 for f, v in zip(found, r):
                     f.add(v)
         return [(len(v) - len(set(v)), sum(x in f for x in v))
@@ -4728,64 +4744,22 @@ class Engine:
         sql/types/number.go consults the session's strict setting)."""
         return "STRICT_" in self._sql_mode
 
-    def _lenient_cast(self, c, expr: Column) -> Column:
-        """IGNORE-mode value conversion (reference sql/plan/update.go /
-        insert.go Ignore + types/number.go non-strict conversion): MySQL
-        downgrades errors to warnings — NULL into NOT NULL becomes the
-        type's implicit default, out-of-range integers clamp to the bound.
-        The clamp happens at a wide type BEFORE the destination cast (the
-        narrow cast would wrap first and the clamp would no-op)."""
-        if c.int_bounds is not None:
-            lo, hi = c.int_bounds
-            wide = "decimal(38,0)"
-            base = expr.cast(wide)
-            # bounds as string literals: BIGINT UNSIGNED's 2^64-1 doesn't
-            # fit a JVM long, so a raw-int lit would overflow in py4j
-            clamped = F.least(
-                F.greatest(base, F.lit(str(lo)).cast(wide)),
-                F.lit(str(hi)).cast(wide))
-            # greatest/least skip NULLs — keep NULL NULL (the NOT NULL
-            # implicit-default coalesce below handles it if needed). A
-            # non-NULL value whose wide cast is NULL ('abc' into INT) is
-            # MySQL's unparseable-string case: converts to 0, NOT to the
-            # type minimum that greatest(NULL, lo) would produce.
-            expr = F.when(expr.isNull(), F.lit(None).cast(wide)) \
-                .when(base.isNull(), F.lit(0).cast(wide)) \
-                .otherwise(clamped)
-        expr = expr.cast(c.spark_type)
-        if c.char_length is not None and \
-                c.spark_type.simpleString() == "string":
-            # over-length strings truncate to the declared CHAR/VARCHAR
-            # length with a warning in MySQL's non-strict path
-            expr = F.substring(expr, 1, c.char_length)
-        if not c.nullable:
-            t = c.spark_type.simpleString()
-            if t == "string":
-                dflt = F.lit("")
-            elif t == "date":
-                dflt = F.lit("1970-01-01").cast("date")
-            elif t == "timestamp":
-                dflt = F.lit("1970-01-01 00:00:00").cast("timestamp")
-            else:
-                dflt = F.lit(0).cast(c.spark_type)
-            expr = F.coalesce(expr, dflt)
-        return expr
-
     @staticmethod
-    def _int_bound_checks(ts: TableState, exprs: dict) -> list:
-        """A (predicate, error) pair per bounded integer column in `exprs`
-        (column → its value before the cast): out of the column's MySQL
-        range (strict mode; reference sql/types/number.go:40-94)."""
+    def _int_bound_checks(ts: TableState, refs: dict) -> list:
+        """A (predicate, error) pair per bounded integer column in `refs`
+        (column → the SQL name of its value before the cast): out of the
+        column's MySQL range (strict mode; reference
+        sql/types/number.go:40-94)."""
         checks = []
         for c in ts.columns:
-            if c.int_bounds is None or c.name not in exprs:
+            if c.int_bounds is None or c.name not in refs:
                 continue
-            lo, hi = c.int_bounds
-            v = exprs[c.name].cast("decimal(38,0)")
-            lo_l = F.lit(str(lo)).cast("decimal(38,0)")
-            hi_l = F.lit(str(hi)).cast("decimal(38,0)")
+            # bounds as string literals: BIGINT UNSIGNED's 2^64-1 is no
+            # long
+            v = f"CAST({refs[c.name]} AS DECIMAL(38,0))"
+            lo, hi = (f"CAST('{b}' AS DECIMAL(38,0))" for b in c.int_bounds)
             checks.append((
-                v.isNotNull() & ((v < lo_l) | (v > hi_l)),
+                f"{v} IS NOT NULL AND ({v} < {lo} OR {v} > {hi})",
                 SqlError(f"out of range value for column {c.name!r}",
                          "22003", 1264)))
         return checks
@@ -4822,17 +4796,14 @@ class Engine:
 
     def _one_ref(self, refs: str, lits: list[str]):
         """A masked table-references clause that names one table, `[db.]t
-        [[AS] a]`: its table, the clause to stage it from (an unaliased
-        `db.t` is aliased as `t`, so `t.c` binds) and the qualifiers its
-        columns may carry. None for any other clause."""
+        [[AS] a]`: its table, the clause to stage it from and the
+        qualifiers its columns may carry. None for any other clause."""
         m = self._ONE_REF.fullmatch(refs)
         if m is None:
             return None
         name = re.sub(r"[`\s]", "", unmask_literals(m.group(1), lits))
         ts = self._table(name)
         alias = m.group(2) and unmask_literals(m.group(2), lits).strip("`")
-        if alias is None and "." in name:
-            refs = f"{refs} AS {mask_into(f'`{ts.name}`', lits)}"
         return ts, refs, {q.lower() for q in (alias, ts.name, name) if q}
 
     def _first_victims(self, ts: TableState, cte: str, refs: str,
@@ -4999,16 +4970,17 @@ class Engine:
         (None when there are none) and a thunk running the AFTER UPDATE
         triggers."""
         names = [c.name for c in ts.columns]
-        matched = base.filter("__matched").select(*names)
+        refs = [f"`{c}`" for c in names]
+        matched = select_exprs(base.filter("__matched"), refs)
         if not assigned:
             # every assignment was a generated-column DEFAULT: nothing
             # changes, but the statement still reports matched rows
             return matched.count(), None, None, lambda: None
 
-        def new(c):
-            value = F.col(f"`__new_{c.name}`")
-            return (self._lenient_cast(c, value) if ignore
-                    else value.cast(c.spark_type))
+        def new(c) -> str:
+            value = f"`__new_{c.name}`"
+            return (lenient_sql(c, value) if ignore
+                    else f"CAST({value} AS {c.spark_type.simpleString()})")
 
         utrigs = [t for t in self.triggers.get(ts.name, [])
                   if t.event == "UPDATE"]
@@ -5021,16 +4993,16 @@ class Engine:
         # strict mode checks the assigned values before their cast, carried
         # as the columns `__pre<i>`
         pre_checks = [] if ignore else self._int_bound_checks(
-            ts, {c: F.col(f"`__new_{c}`") for c in assigned})
+            ts, {c: f"`__new_{c}`" for c in assigned})
         pre = [f"__pre{i}" for i in range(len(pre_checks))]
         # the old values ride along as `__old_<c>`: IGNORE's revert, the
         # foreign-key actions and row-at-a-time triggers read them
-        updated = base.select(*[
-            F.when(F.col("__matched"), new(c)).otherwise(F.col(c.name))
-            .alias(c.name) if c.name in assigned else F.col(c.name)
-            for c in ts.columns], "__matched",
-            *[F.col(c).alias(f"__old_{c}") for c in names],
-            *[p.alias(n) for (p, _), n in zip(pre_checks, pre)])
+        updated = select_exprs(base, [
+            f"CASE WHEN __matched THEN {new(c)} ELSE `{c.name}` END "
+            f"AS `{c.name}`" if c.name in assigned else f"`{c.name}`"
+            for c in ts.columns] + ["__matched"] + [
+            f"`{c}` AS `__old_{c}`" for c in names] + [
+            f"({p}) AS {n}" for (p, _), n in zip(pre_checks, pre)])
         if any(c.enum_values is not None or c.set_values is not None
                or c.fsp is not None or c.is_year for c in ts.columns):
             updated = self._enum_set_normalize(ts, updated)
@@ -5039,15 +5011,15 @@ class Engine:
         # one aggregate counts the matched rows and judges them: the checks
         # before the cast, then the row checks — after the BEFORE triggers
         # instead when there are any, as they may still change the rows
-        checks = [(F.col(n), msg) for n, (_, msg) in zip(pre, pre_checks)]
+        checks = [(n, msg) for n, (_, msg) in zip(pre, pre_checks)]
         row_checks = [] if ignore_kw else self._row_checks(ts)
         if not any(t.timing == "BEFORE" for t in utrigs):
             checks, row_checks = checks + row_checks, []
-        n_match, err, _ = self._judge(updated, checks,
-                                      where=F.col("__matched"))
+        n_match, err, _ = self._judge(updated, checks, where="__matched")
         if err:
             raise err
-        updated = updated.drop(*pre)
+        if pre:
+            updated = updated.drop(*pre)
         pairs = None
         if seq_rows and n_match:
             # MySQL row-at-a-time trigger sequencing over the matched rows
@@ -5080,7 +5052,7 @@ class Engine:
             updated = self._update_ignore_revert(ts, updated, assigned)
         else:
             err = row_checks and self._judge(
-                updated, row_checks, where=F.col("__matched"))[1]
+                updated, row_checks, where="__matched")[1]
             if err:
                 raise err
             for fk in ts.foreign_keys:
@@ -5108,7 +5080,7 @@ class Engine:
                     if t.timing == "AFTER":
                         ProcedureInterpreter(self).run_trigger(
                             t.body, new=row, old=old)
-        return n_match, updated.select(*names), fk_actions, after
+        return n_match, select_exprs(updated, refs), fk_actions, after
 
     _TRIG_SIGNAL_RE = re.compile(
         r"IF\s+(.*?)\s+THEN\s+SIGNAL\s+SQLSTATE(?:\s+VALUE)?\s+"
@@ -5166,21 +5138,28 @@ class Engine:
                     raise SqlError(
                         "BEFORE UPDATE triggers support SET NEW.col = expr "
                         "and IF…SIGNAL validation only")
-                cols = {c.name: F.col(c.name) for c in ts.columns}
-                for assign in _split_top_level(stmt.strip()[4:]):
-                    mm = re.match(r"NEW\.(\w+)\s*=\s*(.*)$", assign.strip(),
-                                  re.I | re.S)
-                    expr = re.sub(r"\bNEW\.(\w+)", r"\1", mm.group(2), flags=re.I)
-                    ctype = next(c.spark_type for c in ts.columns
-                                 if c.name == mm.group(1))
-                    cols[mm.group(1)] = (
-                        F.when(F.col("__matched"), F.expr(expr).cast(ctype))
-                        .otherwise(F.col(mm.group(1)))
-                    )
-                updated = updated.select(
-                    *[cols[c.name].alias(c.name) for c in ts.columns],
-                    *[c for c in updated.columns if c not in cols])
+                updated = self._set_new(ts, updated, stmt, "__matched")
         return updated
+
+    def _set_new(self, ts: TableState, df: DataFrame, stmt: str,
+                 matched: str | None = None) -> DataFrame:
+        """A trigger's `SET NEW.c = expr, ...` as one projection over `df`,
+        whose table columns are the NEW row; with `matched`, only where
+        that column holds. `df`'s other columns ride along."""
+        out = {c.name: f"`{c.name}`" for c in ts.columns}
+        for assign in _split_top_level(stmt.strip()[4:]):
+            mm = re.match(r"NEW\.(\w+)\s*=\s*(.*)$", assign.strip(),
+                          re.I | re.S)
+            if not mm:
+                raise SqlError(f"cannot parse trigger SET: {assign!r}")
+            name = mm.group(1)
+            ctype = next(c.spark_type for c in ts.columns if c.name == name)
+            expr = re.sub(r"\bNEW\.(\w+)", r"\1", mm.group(2), flags=re.I)
+            value = f"CAST(({expr}) AS {ctype.simpleString()})"
+            out[name] = (f"CASE WHEN {matched} THEN {value} ELSE `{name}` END"
+                         if matched else value)
+        return select_exprs(df, [f"{e} AS `{n}`" for n, e in out.items()] + [
+            f"`{c}`" for c in df.columns if c not in out])
 
     def _changeable_keys(self, ts: TableState, assigned) -> list:
         """The keys (`_keys`) an UPDATE can change: those with a column
@@ -5302,10 +5281,10 @@ class Engine:
             where = self._first_victims(ts, cte, refs, where, order_sql,
                                         limit_n, offset_n, lits)
         base = self._stage(ts, cte, refs, where, {}, lits)
-        names = [c.name for c in ts.columns]
-        gone = base.filter("__matched").select(*names) \
+        refs = [f"`{c.name}`" for c in ts.columns]
+        gone = select_exprs(base.filter("__matched"), refs) \
             .localCheckpoint(eager=True)
-        rest, snap, pk = (base.filter("NOT __matched").select(*names),
+        rest, snap, pk = (select_exprs(base.filter("NOT __matched"), refs),
                           ts.df, list(ts.primary_key))
 
         def keep(cur: DataFrame) -> DataFrame:
@@ -6087,20 +6066,7 @@ class Engine:
                         stmt, incoming):
                     continue
                 if timing == "BEFORE" and up.startswith("SET NEW."):
-                    cols = {c.name: F.col(c.name) for c in ts.columns}
-                    for assign in _split_top_level(stmt.strip()[4:]):
-                        mm = re.match(r"NEW\.(\w+)\s*=\s*(.*)$", assign.strip(),
-                                      re.I | re.S)
-                        if not mm:
-                            raise SqlError(f"cannot parse trigger SET: {assign!r}")
-                        expr = re.sub(r"\bNEW\.(\w+)", r"\1", mm.group(2), flags=re.I)
-                        cols[mm.group(1)] = F.expr(expr).cast(
-                            next(c.spark_type for c in ts.columns
-                                 if c.name == mm.group(1))
-                        )
-                    incoming = incoming.select(
-                        *[cols[c.name].alias(c.name) for c in ts.columns]
-                    )
+                    incoming = self._set_new(ts, incoming, stmt)
                 else:
                     # side-effect DML in the trigger body (BEFORE or
                     # AFTER): NEW.* binds to the whole batch via a view

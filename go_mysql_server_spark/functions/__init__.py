@@ -6,7 +6,8 @@ to a builder `(*Column) -> Column` producing idiomatic Spark expressions —
 JVM-side compositions of pyspark.sql.functions wherever possible; Python
 UDFs only for the few semantics Spark can't express (MySQL JSON mutation,
 compress). `mysql_fn(name, *cols)` is the uniform entry point;
-`register_udfs(spark)` makes the UDF-backed names callable from SQL text.
+`declare_sql` declares the UDF-backed names to the SQL-text index
+(`sql_index`), which registers each when a statement first calls it.
 
 Coverage philosophy: ~80% of MySQL names have same-name Spark builtins
 (SURVEY.md §2.9 table); those map 1:1. The rest are MySQL-specific
@@ -16,7 +17,7 @@ documented per-function.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 
 from . import datetime_fns, extra_fns, scalar_basic, spatial, special, wkb_fns
 
@@ -38,22 +39,24 @@ def names() -> list[str]:
     return sorted(REGISTRY)
 
 
-def register_udfs(spark: SparkSession) -> None:
-    """Register the Python-UDF-backed shims for SQL-text callers."""
-    special.register_udfs(spark)
-    from .udtf_fns import register_udtfs
-    register_udtfs(spark)
-    _register_udf_backed_builders(spark)
-    from .spatial_sql import register_spatial_sql
-    register_spatial_sql(spark)
-    _register_misc_sql(spark)
+def declare_sql(reg) -> None:
+    """Declare the SQL-text twins of the builders (`sql_index`): the JSON
+    UDFs, the table functions, the UDF-backed builders, spatial SQL and
+    the misc bridges, in that precedence order."""
+    special.declare_udfs(reg)
+    from .udtf_fns import declare_udtfs
+    declare_udtfs(reg)
+    _declare_udf_backed_builders(reg)
+    from .spatial_sql import declare_spatial_sql
+    declare_spatial_sql(reg)
+    _declare_misc_sql(reg)
 
 
-def _register_udf_backed_builders(spark: SparkSession) -> None:
+def _declare_udf_backed_builders(reg) -> None:
     """Generic SQL-text sweep: every REGISTRY builder created through
-    `_udfw` carries its underlying Python fn (`_py_fn`) — register it
+    `_udfw` carries its underlying Python fn (`_py_fn`) — declare it
     under the MySQL name so SQL-text callers resolve it, unless Spark (or
-    an earlier registration) already owns the name. r4 audit found 111 of
+    an earlier declaration) already owns the name. r4 audit found 111 of
     the 329 reference names were DataFrame-builder-only."""
     # Spark 4 owns some of these names with INCOMPATIBLE semantics (its
     # json_array_insert differs from MySQL's); force ours for those — a
@@ -61,14 +64,11 @@ def _register_udf_backed_builders(spark: SparkSession) -> None:
     force = {"json_array_insert"}
     for name, builder in REGISTRY.items():
         fn = getattr(builder, "_py_fn", None)
-        if fn is None:
-            continue
-        if name not in force and spark.catalog.functionExists(name):
-            continue  # never shadow a compatible Spark builtin
-        spark.udf.register(name, fn, builder._rtype)
+        if fn is not None:
+            reg.udf(name, fn, builder._rtype, yields=name not in force)
 
 
-def _register_misc_sql(spark: SparkSession) -> None:
+def _declare_misc_sql(reg) -> None:
     """Hand bridges for pure-Column builders whose SQL twins are small
     (reference registry.go names with no Spark builtin and no UDF body)."""
     import datetime as _dt
@@ -79,8 +79,7 @@ def _register_misc_sql(spark: SparkSession) -> None:
     from pyspark.sql import types as T
 
     def _reg(name, fn, rtype):
-        if not spark.catalog.functionExists(name):
-            spark.udf.register(name, fn, rtype)
+        reg.udf(name, fn, rtype, yields=True)
 
     def _convert_tz(ts, from_tz, to_tz):
         if ts is None or from_tz is None or to_tz is None:
@@ -152,11 +151,8 @@ def _register_misc_sql(spark: SparkSession) -> None:
     # volatile functions: registered asNondeterministic so Catalyst never
     # constant-folds or CSE-shares a call — a "deterministic" uuid_short
     # would return one value for every row of a scan
-    from pyspark.sql import functions as _F
-
     def _reg_volatile(name, fn, rtype):
-        if not spark.catalog.functionExists(name):
-            spark.udf.register(name, _F.udf(fn, rtype).asNondeterministic())
+        reg.udf(name, fn, rtype, yields=True, volatile=True)
 
     _reg_volatile(
         "utc_timestamp",

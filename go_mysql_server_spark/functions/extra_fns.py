@@ -38,8 +38,8 @@ def _udfw(fn, rtype):
     def call(*args):
         return u(*[_c(a) for a in args])
 
-    # expose for the SQL-text registration sweep (functions.register_udfs):
-    # a udf-backed builder's underlying Python fn registers directly
+    # expose for the SQL-text declaration sweep (functions.declare_sql):
+    # a udf-backed builder's underlying Python fn is declared directly
     call._py_fn, call._rtype = fn, rtype
     return call
 

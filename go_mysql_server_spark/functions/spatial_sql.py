@@ -29,7 +29,6 @@ import math
 import re
 import struct
 
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from .spatial import _geohash_decode, _geohash_encode
@@ -183,13 +182,13 @@ def _first_ring(g):
 # ---- registration ----------------------------------------------------------
 
 
-def register_spatial_sql(spark: SparkSession) -> None:
+def declare_spatial_sql(reg) -> None:
     def _reg(name, fn, rtype):
         # ALWAYS register: Spark 4 ships same-named geospatial builtins
         # behind a disabled feature flag — functionExists() is true for
         # them, but calling raises GEOSPATIAL_DISABLED. A registered temp
         # function shadows the builtin, and ours carry MySQL semantics.
-        spark.udf.register(name, fn, rtype)
+        reg.udf(name, fn, rtype)
 
     S, D, I, B = (T.StringType(), T.DoubleType(), T.IntegerType(),
                   T.BinaryType())

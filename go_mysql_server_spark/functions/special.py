@@ -17,7 +17,7 @@ import re
 import uuid as uuidlib
 import zlib
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,7 +45,7 @@ def _json_extract(doc, path) -> Column:
     _ensure_wild_registered()
     if isinstance(path, str) and "*" in path:
         # wildcard legs ($.*, $[*], $**.k) exceed get_json_object — route
-        # to the Python path evaluator (registered in register_udfs)
+        # to the Python path evaluator (declared in declare_udfs)
         return F.call_udf("json_extract_wild", _c(doc), F.lit(path))
     # NULL from get_json_object is ambiguous: missing key vs JSON null
     # value — the evaluator distinguishes (missing → NULL, null → 'null');
@@ -242,8 +242,8 @@ def _udfw(fn, rtype):
     def call(*args):
         return u(*[_c(a) for a in args])
 
-    # expose for the SQL-text registration sweep (functions.register_udfs):
-    # a udf-backed builder's underlying Python fn registers directly
+    # expose for the SQL-text declaration sweep (functions.declare_sql):
+    # a udf-backed builder's underlying Python fn is declared directly
     call._py_fn, call._rtype = fn, rtype
     return call
 
@@ -449,20 +449,20 @@ VECTOR_FNS = {
 FUNCTIONS = {**JSON_FNS, **CRYPTO_FNS, **NETWORK_FNS, **SYSTEM_FNS, **VECTOR_FNS}
 
 
-def register_udfs(spark: SparkSession) -> None:
-    """Make UDF-backed shims callable from SQL text (Engine does this)."""
-    spark.udf.register("json_set", lambda d, p, v: _mutate(d, p, v, "set"),
-                       T.StringType())
-    spark.udf.register("json_insert", lambda d, p, v: _mutate(d, p, v, "insert"),
-                       T.StringType())
-    spark.udf.register("json_replace", lambda d, p, v: _mutate(d, p, v, "replace"),
-                       T.StringType())
-    spark.udf.register("json_remove", lambda d, p: _mutate(d, p, None, "remove"),
-                       T.StringType())
-    spark.udf.register("json_merge_patch", _merge_patch, T.StringType())
+def declare_udfs(reg) -> None:
+    """Declare the UDF-backed shims SQL text calls (`sql_index`)."""
+    reg.udf("json_set", lambda d, p, v: _mutate(d, p, v, "set"),
+            T.StringType())
+    reg.udf("json_insert", lambda d, p, v: _mutate(d, p, v, "insert"),
+            T.StringType())
+    reg.udf("json_replace", lambda d, p, v: _mutate(d, p, v, "replace"),
+            T.StringType())
+    reg.udf("json_remove", lambda d, p: _mutate(d, p, None, "remove"),
+            T.StringType())
+    reg.udf("json_merge_patch", _merge_patch, T.StringType())
     # SQL-text spellings for the remaining JSON inspectors (reference
     # sql/expression/function/json/json_{depth,type,quote,search,length}.go)
-    spark.udf.register(
+    reg.udf(
         "json_depth",
         lambda s: None if s is None else _depth(json.loads(s)),
         T.IntegerType())
@@ -475,15 +475,15 @@ def register_udfs(spark: SparkSession) -> None:
             # an extracted string value arrives unquoted → STRING
             return "STRING"
 
-    spark.udf.register("json_type", _jtype_sql, T.StringType())
-    spark.udf.register(
+    reg.udf("json_type", _jtype_sql, T.StringType())
+    reg.udf(
         "json_quote",
         lambda s: None if s is None else json.dumps(s),
         T.StringType())
     from .extra_fns import _json_search
-    spark.udf.register("json_search", _json_search, T.StringType())
+    reg.udf("json_search", _json_search, T.StringType())
     # (json_length is a SQL macro — dialect/sql_macros.py — not a UDF)
-    spark.udf.register(
+    reg.udf(
         "json_contains",
         lambda doc, cand: None if doc is None or cand is None
         else int(_contains(json.loads(doc), json.loads(cand))),
@@ -491,10 +491,10 @@ def register_udfs(spark: SparkSession) -> None:
     # Runtime MySQL-%-token → Java DateTimeFormatter translation for the
     # dynamic-format branch of DATE_FORMAT/STR_TO_DATE (dialect/transpiler.py)
     from ..dialect.transpiler import translate_datetime_format as _tdf
-    spark.udf.register(
+    reg.udf(
         "mysql_datefmt_to_java",
         lambda f: None if f is None else _tdf(f), T.StringType())
-    spark.udf.register(
+    reg.udf(
         "mysql_datefmt_to_java_parse",
         lambda f: None if f is None else _tdf(f, parse=True), T.StringType())
-    spark.udf.register("json_extract_wild", _extract_wild, T.StringType())
+    reg.udf("json_extract_wild", _extract_wild, T.StringType())

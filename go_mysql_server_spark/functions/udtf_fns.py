@@ -59,11 +59,11 @@ class JsonEach:
                 yield str(i), json.dumps(v)
 
 
-def register_udtfs(spark) -> None:
-    spark.udtf.register("tokenize_text", TokenizeText)
-    spark.udtf.register("generate_series_tf", GenerateSeries)
-    spark.udtf.register("json_each", JsonEach)
-    spark.udtf.register("__json_table_rows", JsonTableRows)
+def declare_udtfs(reg) -> None:
+    reg.udtf("tokenize_text", TokenizeText)
+    reg.udtf("generate_series_tf", GenerateSeries)
+    reg.udtf("json_each", JsonEach)
+    reg.udtf("__json_table_rows", JsonTableRows)
 
 
 def _jt_path_get(obj, path: str):

@@ -22,9 +22,12 @@ cluster:
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -52,8 +55,32 @@ def build_session(app_name: str = "go-mysql-server-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column method and functions.* call to record
+        # its Python call site for DataFrame error context: a conf read, a
+        # JVM origin set and clear, and a stack walk per call. The engine
+        # reports its own errnos, not DataFrame call sites. Static conf.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+@functools.lru_cache(maxsize=2)
+def _splitter(jvm) -> tuple:
+    """A NUL-splitting Pattern and PythonUtils of one JVM: resolving a
+    class by name costs py4j calls, a held reference none."""
+    return jvm.java.util.regex.Pattern.compile("\x00"), jvm.PythonUtils
+
+
+def select_exprs(df: DataFrame, items: list[str],
+                 method: str = "selectExpr") -> DataFrame:
+    """`df.selectExpr(*items)`, or another `method` taking names, in a
+    fixed number of py4j calls: PySpark sends a list over py4j one
+    element per call, this one string."""
+    if not items or any("\x00" in i for i in items):
+        return getattr(df, method)(*items)
+    pattern, utils = _splitter(df.sparkSession._jvm)
+    seq = utils.toSeq(pattern.splitAsStream("\x00".join(items)).toList())
+    return ClassicDataFrame(getattr(df._jdf, method)(seq), df.sparkSession)
 
 
 def iter_checkpoint(df, eager: bool = True):
@@ -70,11 +97,8 @@ def iter_checkpoint(df, eager: bool = True):
     one process, sql/plan/recursive_cte.go.)
     """
     spark = df.sparkSession
-    try:
-        reliable = spark.conf.get("spark.gms.reliableCheckpoint", "false")
-    except Exception:
-        reliable = "false"
-    if str(reliable).lower() == "true":
+    reliable = spark.conf.get("spark.gms.reliableCheckpoint", "false")
+    if reliable.lower() == "true":
         sc = spark.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
             import tempfile
@@ -83,12 +107,28 @@ def iter_checkpoint(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
+# what setting a conf raises when the host session holds it fixed: a static
+# SQL conf, or a core conf that `spark.conf.set` may not change
+_LOCKED_CONF = {"CANNOT_MODIFY_STATIC_CONFIG", "CANNOT_MODIFY_CONFIG"}
+
+
+def _set_unless_locked(spark: SparkSession, key: str, value: str) -> None:
+    """Set a conf; a conf the host session locks keeps its value. Any
+    other failure raises."""
+    try:
+        spark.conf.set(key, value)
+    except AnalysisException as err:
+        if err.getCondition() not in _LOCKED_CONF:
+            raise
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session.
 
     The driver's verify harness creates its own SparkSession; every query
     builder calls this so semantics (timezone, ANSI) don't depend on who
-    built the session. Only runtime-mutable confs are touched.
+    built the session. Only runtime-mutable confs are touched, and a conf
+    the host session locks keeps the host's value.
     """
     import os as _os
 
@@ -98,21 +138,15 @@ def tune_session(spark: SparkSession) -> SparkSession:
     # driver should do almost no work on the query path). Nothing else in
     # the engine mutates these confs (session vars live in Session.sys_vars),
     # so re-applying them is a no-op re-spelled.
-    try:
-        if spark.conf.get("spark.gms.tuned", "") == "1":
-            # Re-assert the two cheap semantics-bearing confs every call:
-            # an external mid-session mutation (host harness, test code)
-            # must not silently change timestamp/coercion results. Two
-            # py4j set() calls — the memo still skips the other six.
-            for key, value in (("spark.sql.session.timeZone", "UTC"),
-                               ("spark.sql.ansi.enabled", "false")):
-                try:
-                    spark.conf.set(key, value)
-                except Exception:
-                    pass
-            return spark
-    except Exception:
-        pass
+    if spark.conf.get("spark.gms.tuned", "") == "1":
+        # Re-assert the two cheap semantics-bearing confs every call:
+        # an external mid-session mutation (host harness, test code)
+        # must not silently change timestamp/coercion results. Two
+        # py4j set() calls — the memo still skips the other six.
+        for key, value in (("spark.sql.session.timeZone", "UTC"),
+                           ("spark.sql.ansi.enabled", "false")):
+            _set_unless_locked(spark, key, value)
+        return spark
 
     cores = _os.cpu_count() or 8
     for key, value in (
@@ -128,13 +162,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         # read as long and rescale in sources/tables.py (DuckDB truncates
         # ns→µs the same way).
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+        ("spark.gms.tuned", "1"),
     ):
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            pass  # conf locked by the host session: keep going
-    try:
-        spark.conf.set("spark.gms.tuned", "1")
-    except Exception:
-        pass
+        _set_unless_locked(spark, key, value)
     return spark

@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..session import tune_session
 
@@ -43,6 +44,32 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _LOAD_MEMO: dict[tuple[int, str, str], DataFrame] = {}
 
 
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema `spark.read.parquet(path)` infers for one parquet file,
+    without the job inference runs: the file's footer, converted by Spark's
+    own converter under the session's conf. A Spark-written file keeps its
+    Spark schema under the row-metadata key, which the converter reads as
+    inference does. A directory, or a missing path, is inferred (or
+    refused) as Spark does it."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(conf)
+    if not fs.isFile(hpath):
+        return spark.read.parquet(path).schema
+    status = fs.getFileStatus(hpath)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        hpath, jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            conf, status, jvm.org.apache.parquet.format.converter
+            .ParquetMetadataConverter.NO_FILTER))
+    converter = parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf())
+    return T._parse_datatype_json_string(
+        parquet.ParquetFileFormat.readSchemaFromFooter(
+            footer, converter).json())
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Filter/column pruning pushdown is Spark-native."""
     tune_session(spark)
@@ -50,11 +77,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = _LOAD_MEMO.get(memo_key)
     if hit is not None:
         return hit
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
 
-        ts_type = dict(df.dtypes).get("ts", "")
+        ts_type = next((f.dataType.simpleString() for f in schema.fields
+                        if f.name == "ts"), "")
         if ts_type in ("bigint", "long"):
             # TIMESTAMP(NANOS) parquet read as long (nanosAsLong) —
             # rescale to µs timestamp with integer division, matching

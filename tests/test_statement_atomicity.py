@@ -270,6 +270,38 @@ def test_as_of_three_part_column(eng):
         "SELECT fi.h3.i FROM fi.h3 AS OF 2 ORDER BY i")) == [(1,), (2,)]
 
 
+def test_bare_table_name_qualifies_a_db_qualified_table(eng):
+    """An unaliased `db.t` answers to `t`, as in MySQL: `t.c` and `db.t.c`
+    name its columns, and an alias still replaces the name."""
+    _tables(eng, "CREATE TABLE hq (i INT, s VARCHAR(5))",
+            "INSERT INTO hq VALUES (1, 'a'), (2, 'b')")
+    assert rows(eng.query("SELECT hq.i FROM fi.hq ORDER BY i")) == \
+        [(1,), (2,)]
+    assert rows(eng.query(
+        "SELECT fi.hq.s FROM fi.hq WHERE hq.i = 2")) == [("b",)]
+    assert rows(eng.query(
+        "SELECT x.i FROM fi.hq x JOIN fi.hq ON x.i = hq.i "
+        "ORDER BY x.i")) == [(1,), (2,)]
+    # where another table answers to `hq`, `db.hq.c` still tells them apart
+    _tables(eng, "CREATE DATABASE fj", "CREATE TABLE fj.hq (i INT, s TEXT)",
+            "INSERT INTO fj.hq VALUES (2, 'z')")
+    assert rows(eng.query(
+        "SELECT fi.hq.s, fj.hq.s FROM fi.hq JOIN fj.hq "
+        "ON fi.hq.i = fj.hq.i")) == [("b", "z")]
+    assert rows(eng.query(
+        "SELECT fj.hq.s FROM fj.hq, hq WHERE hq.i = 1")) == [("z",)]
+
+
+def test_insert_values_row_constructor(eng):
+    """INSERT ... VALUES ROW(...), ROW(...) inserts one row per ROW, as
+    MySQL's table value constructor does."""
+    _tables(eng, "CREATE TABLE rr (a INT, b INT)",
+            "INSERT INTO rr VALUES ROW(1, 2), ROW(3, 4)",
+            "INSERT INTO rr (b, a) VALUES ROW(6, 5)")
+    assert rows(eng.query("SELECT a, b FROM rr ORDER BY a")) == \
+        [(1, 2), (3, 4), (5, 6)]
+
+
 def test_date_in_numeric_context(eng):
     """A DATE reads as its YYYYMMDD number, as in MySQL: in CAST AS
     DOUBLE and as a truthiness operand."""
